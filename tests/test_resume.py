@@ -3,6 +3,7 @@ committed partitions, final output identical to an uninterrupted run
 (north_rule: resumable from checkpoint with per-partition lineage)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from webextract.icetable import IceTable
 from webextract.pipeline import run_extract
@@ -109,3 +110,35 @@ def test_expire_orphans_path_normalization(spark, tmp_path):
     os.symlink(real, link)
     assert IceTable(link).expire_orphans() == 0
     assert IceTable(real).read(spark).count() == 40
+
+
+def _table_state(root):
+    """The head snapshot and every file under the table root."""
+    import os
+    return (IceTable(root).current_snapshot_id(),
+            sorted(os.path.join(d, f) for d, _, fs in os.walk(root)
+                   for f in fs))
+
+
+def test_resume_refuses_other_partitions_or_options(spark, tmp_path):
+    """A crashed run at partitions=8 resumed at partitions=16 would
+    commit part ids naming other url sets (220 rows for 200 urls); a
+    resume with other options would mix two option sets.  Both raise
+    before anything is written, naming both values."""
+    from webextract.options import ConvertOptions
+    pages = pages_df(spark, 200, parallelism=4)
+    root = str(tmp_path / "mismatch")
+    run_extract(spark, pages, root, partitions=8, waves=4, cpus=2,
+                fail_after_wave=0)
+    before = _table_state(root)
+    with pytest.raises(ValueError, match="partitions=8.*partitions=16"):
+        run_extract(spark, pages, root, partitions=16, waves=4, cpus=2)
+    assert _table_state(root) == before
+    other = ConvertOptions(to_formats=("md",))
+    with pytest.raises(ValueError, match=other.options_hash()):
+        run_extract(spark, pages, root, opt=other, partitions=8, waves=4,
+                    cpus=2)
+    assert _table_state(root) == before
+    # the matching resume still completes the table exactly once
+    run_extract(spark, pages, root, partitions=8, waves=4, cpus=2)
+    assert IceTable(root).read(spark).count() == 200

@@ -46,7 +46,7 @@ from .dom import (Block, _Parser, _RAWTEXT, _RAWTEXT_END, _TAGNAME, _TOKEN,
                   _parse_attrs, decode_html)
 from .extract import extract_document, finish_blocks, select_main
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import (EXTRACT_SCHEMA_DDL, _EXTRACT_ARROW, append_extracted,
+from .udfs import (Tally, append_extracted, extract_batch, extract_ddl,
                    new_extract_out)
 
 HTML_TARGET_CHARS = 1 * 1024 * 1024   # aim for ~1 MB decoded per segment
@@ -180,12 +180,13 @@ def parse_blocks_seeded(text: str, state_json: str | None) -> list[Block]:
 # ---------------------------------------------------------------------------
 
 _HSEG_DDL = ("url string, warc_ts timestamp, rid bigint, lang string, "
-             "seg_idx int, n_segs int, orig_bytes bigint, verdict string, "
-             "fmt string, error string, state string, seg string, "
-             "payload binary")
+             "part_id int, seg_idx int, n_segs int, orig_bytes bigint, "
+             "verdict string, fmt string, error string, state string, "
+             "seg string, payload binary")
 _HSEG_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
-    ("rid", pa.int64()), ("lang", pa.string()), ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
+    ("rid", pa.int64()), ("lang", pa.string()), ("part_id", pa.int32()),
+    ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
     ("orig_bytes", pa.int64()), ("verdict", pa.string()),
     ("fmt", pa.string()), ("error", pa.string()), ("state", pa.string()),
     ("seg", pa.large_string()), ("payload", pa.large_binary())])
@@ -196,12 +197,13 @@ _HSEG_ARROW = pa.schema([
 # ~4 s per 34k segments at sf0.1 vs near-free binary + C-speed
 # json loads/dumps
 _HSEGX_DDL = ("url string, warc_ts timestamp, rid bigint, lang string, "
-              "seg_idx int, n_segs int, orig_bytes bigint, verdict string, "
-              "fmt string, error string, payload binary, perr boolean, "
-              "blocks binary")
+              "part_id int, seg_idx int, n_segs int, orig_bytes bigint, "
+              "verdict string, fmt string, error string, payload binary, "
+              "perr boolean, blocks binary")
 _HSEGX_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
-    ("rid", pa.int64()), ("lang", pa.string()), ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
+    ("rid", pa.int64()), ("lang", pa.string()), ("part_id", pa.int32()),
+    ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
     ("orig_bytes", pa.int64()), ("verdict", pa.string()),
     ("fmt", pa.string()), ("error", pa.string()),
     ("payload", pa.large_binary()), ("perr", pa.bool_()),
@@ -237,6 +239,8 @@ def make_html_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
                 else [None] * len(urls)
             rids = cols["rid"].to_pylist() if "rid" in cols \
                 else [None] * len(urls)
+            pids = cols["part_id"].to_pylist() if "part_id" in cols \
+                else [None] * len(urls)
             out = {f.name: [] for f in _HSEG_ARROW}
             acc = 0   # pending output bytes; bounds worker memory to
             #           ~one oversized doc's segments, not a whole batch
@@ -248,6 +252,7 @@ def make_html_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
                 out["warc_ts"].append(ts[i])
                 out["rid"].append(rids[i])
                 out["lang"].append(langs[i])
+                out["part_id"].append(pids[i])
                 out["seg_idx"].append(seg_idx)
                 out["n_segs"].append(n_segs)
                 out["orig_bytes"].append(len(htmls[i]) if htmls[i] else 0)
@@ -341,31 +346,34 @@ def make_html_seg_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     return seg_batches
 
 
-def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
+def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
+                           tally=None):
     """mapInArrow merge over pre-aggregated rows: concatenated block
     list -> global select_main -> finish_blocks (the one-shot path's
-    own functions, so output is byte-identical)."""
+    own functions, so output is byte-identical).  ``tally``: as in
+    udfs.make_extract_kernel."""
 
     def merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .extract import Extracted
+        counts = Tally(tally) if tally is not None else None
         for batch in batches:
             cols = {n: batch.column(n).to_pylist()
                     for n in batch.schema.names}
             out = new_extract_out()
             for i in range(len(cols["url"])):
-                url, ts, lang = (cols["url"][i], cols["warc_ts"][i],
-                                 cols["lang"][i])
+                url, ts, lang, pid = (cols["url"][i], cols["warc_ts"][i],
+                                      cols["lang"][i], cols["part_id"][i])
                 nb = cols["orig_bytes"][i]
                 verdict, fmt, err = (cols["verdict"][i], cols["fmt"][i],
                                      cols["error"][i])
                 if verdict == "fallback":
                     r = extract_document(bytes(cols["payload"][i]), opt, url)
-                    append_extracted(out, r, url, ts, lang, nb)
+                    append_extracted(out, r, url, ts, lang, nb, pid)
                     continue
                 if verdict:
                     append_extracted(
                         out, Extracted(status=verdict, fmt=fmt, error=err),
-                        url, ts, lang, nb)
+                        url, ts, lang, nb, pid)
                     continue
                 blocks: list[Block] = []
                 stop = False
@@ -391,10 +399,10 @@ def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
                             src=src))
                 main = select_main(blocks, opt)
                 r = finish_blocks(main, "html", opt, url)
-                append_extracted(out, r, url, ts, lang, nb)
-            yield pa.RecordBatch.from_pydict(
-                {f.name: pa.array(out[f.name], f.type)
-                 for f in _EXTRACT_ARROW})
+                append_extracted(out, r, url, ts, lang, nb, pid)
+            yield extract_batch(out, counts)
+        if counts is not None:
+            counts.report()
 
     return merge_batches
 
@@ -409,10 +417,12 @@ def _html_fan_out(df: DataFrame, cpus: int) -> int:
 def extracted_html_split_branch(src: DataFrame,
                                 opt: ConvertOptions = DEFAULT_OPTIONS,
                                 cpus: int = 32,
-                                target_chars: int = HTML_TARGET_CHARS) -> DataFrame:
+                                target_chars: int = HTML_TARGET_CHARS,
+                                tally=None) -> DataFrame:
     """The html fan-out branch (callers route oversized non-PDF rows
     here; see split.extracted_split_df).  One payload repartition;
-    payload dropped before the merge aggregate except fallback rows."""
+    payload dropped before the merge aggregate except fallback rows.
+    ``tally``: as in pipeline.extracted_df."""
     segs = (src.withColumn("rid", F.monotonically_increasing_id())
             # rid uniquifies exact-duplicate (url, warc_ts) input rows
             # through the merge key (round-3 review finding)
@@ -423,6 +433,7 @@ def extracted_html_split_branch(src: DataFrame,
             .mapInArrow(make_html_seg_kernel(opt), _HSEGX_DDL))
     agg = (segs.groupBy("url", "warc_ts", "rid")
            .agg(F.first("lang").alias("lang"),
+                F.first("part_id").alias("part_id"),
                 F.first("orig_bytes").alias("orig_bytes"),
                 F.max("verdict").alias("verdict"),
                 F.max("fmt").alias("fmt"),
@@ -430,4 +441,5 @@ def extracted_html_split_branch(src: DataFrame,
                 F.first("payload", ignorenulls=True).alias("payload"),
                 F.sort_array(F.collect_list(
                     F.struct("seg_idx", "perr", "blocks"))).alias("segs")))
-    return agg.mapInArrow(make_html_merge_kernel(opt), EXTRACT_SCHEMA_DDL)
+    return agg.mapInArrow(make_html_merge_kernel(opt, tally),
+                          extract_ddl(tally))

@@ -1,4 +1,4 @@
-"""Plan builder: read -> admit -> tier/partition -> extract -> write+lineage.
+"""Plan builder: read -> admit -> partition -> extract -> write+lineage.
 
 The DataFrame plan is declared; Catalyst does column pruning (the naive
 ``text`` column never reaches the kernel), filter pushdown, and AQE
@@ -6,14 +6,15 @@ coalescing.  Explicit choices we make (SURVEY.md §4.2):
 
 * ``part_id = pmod(xxhash64(url), P)`` — deterministic url-hash
   partitioning; the resume anti-filter and per-partition lineage key.
-* size tiers: rows with payloads >= ``TIER_BYTES`` are repartitioned
-  wider so a skew-bomb document lands alone in its task (salting for
-  blob skew, north_rule); small rows stay at normal width.
+  It is computed once, on the source rows, and rides through the
+  kernels to the write.
 * extraction is one narrow mapInArrow pass (no shuffle); the only
-  shuffles are the two tier repartitions and the final write layout.
-* waves: part_ids are processed in W groups, each group committed
-  atomically to the IceTable manifest — a killed run resumes by
-  skipping committed part_ids (checkpoint-resume, north_rule).
+  shuffle is the final write layout.
+* waves: part_ids are processed in W groups, each group written by one
+  Spark action and committed atomically to the IceTable manifest — a
+  killed run resumes by skipping committed part_ids (checkpoint-resume,
+  north_rule).  The kernels tally each part's lineage counters as they
+  extract, so the commit reads nothing back.
 """
 
 from __future__ import annotations
@@ -28,10 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import EXTRACT_SCHEMA_DDL, make_extract_kernel, make_chunk_kernel, \
-    CHUNK_SCHEMA_DDL
+from .udfs import (CHUNK_SCHEMA_DDL, LINEAGE_COUNTERS, extract_ddl,
+                   extract_input_cols, make_chunk_kernel, make_extract_kernel,
+                   new_tally, part_counters)
 
-TIER_BYTES = 1 * 1024 * 1024      # payloads >= 1 MiB go to the wide tier
 DEFAULT_PARTITIONS = 64
 
 
@@ -41,37 +42,23 @@ def with_part_id(df: DataFrame, partitions: int = DEFAULT_PARTITIONS) -> DataFra
 
 
 def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
-                 cpus: int = 32, tier_bytes: int = TIER_BYTES,
-                 shuffle: bool = False) -> DataFrame:
+                 cpus: int = 32, tally=None) -> DataFrame:
     """pages(url, warc_ts, html, [text], [lang]) -> extracted frame.
 
-    Default shape is a pure narrow map: scan splits feed the Arrow
-    kernel directly — raw HTML is NEVER shuffled (at 100 TB the payload
-    shuffle IS the job cost; measured 1.5-3× wall locally too, plus the
-    old two-tier plan scanned the parquet twice).  Skew bombs are
-    defused inside the kernel by byte-budget rebatching, and scan-split
-    size is the knob for straggler bound
-    (spark.sql.files.maxPartitionBytes).
+    A pure narrow map: scan splits feed the Arrow kernel directly — raw
+    HTML is NEVER shuffled (at 100 TB the payload shuffle IS the job
+    cost; measured 1.5-3× wall locally too).  Skew bombs are defused
+    inside the kernel by byte-budget rebatching, and scan-split size is
+    the knob for straggler bound (spark.sql.files.maxPartitionBytes).
+    ``cpus`` is accepted for call-site compatibility and unused.
 
-    shuffle=True restores the explicit two-tier url-hash repartition for
-    pathological inputs (e.g. a source whose file layout is itself
-    skewed or unsplittable); the committed-table layout is produced
-    downstream by run_extract's part_id repartition of the *extracted*
-    (≈5× smaller) rows.
+    ``tally`` (udfs.new_tally): ``pages`` carries ``part_id``, the
+    output keeps it, and the kernel reports per-part lineage counters
+    into the accumulator (run_extract's wave commit).
     """
-    cols = ["url", "warc_ts", "lang", "html"] \
-        if "lang" in pages.columns else ["url", "warc_ts", "html"]
-    src = pages.select(*cols)  # column pruning: naive `text` never scanned
-    kernel = make_extract_kernel(opt)
-    if not shuffle:
-        return src.mapInArrow(kernel, EXTRACT_SCHEMA_DDL)
-    small = (src.filter(F.length("html") < tier_bytes)
-             .repartition(cpus * 2, F.col("url"))
-             .mapInArrow(kernel, EXTRACT_SCHEMA_DDL))
-    big = (src.filter(F.length("html") >= tier_bytes)
-           .repartition(cpus * 4, F.col("url"))
-           .mapInArrow(kernel, EXTRACT_SCHEMA_DDL))
-    return small.unionByName(big)
+    src = pages.select(*extract_input_cols(pages.columns, tally))
+    return src.mapInArrow(make_extract_kernel(opt, tally=tally),
+                          extract_ddl(tally))
 
 
 LINKS_SCHEMA_DDL = ("url string, link_no int, href string, "
@@ -278,42 +265,29 @@ def _wave_groups(parts: list[int], waves: int) -> list[list[int]]:
 
 def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
                  stage: str, expect_parts: list[int],
-                 opt: ConvertOptions, wall_ms: int) -> tuple[str, list[dict]]:
-    """Compute per-partition lineage counters from a written stage dir
-    and commit one atomic snapshot.  Counters come from a columnar scan
-    of the WRITTEN files (status/bytes only, no recompute) —
-    counters ≡ processing_meta
+                 opt: ConvertOptions, wall_ms: int,
+                 counters: dict[int, dict], partitions: int
+                 ) -> tuple[str, list[dict]]:
+    """Commit a written stage dir as one atomic snapshot with per-part
+    lineage counters — counters ≡ processing_meta
     (/root/reference/docling_serve/orchestrator_factory.py:104-106).
-    Shared by the batch wave driver and the streaming epoch sink."""
-    # an ALL-empty wave writes only _SUCCESS (partitionBy emits no
-    # files for zero rows) and spark.read.parquet would fail schema
-    # inference — and a resume would rebuild the identical wave and
-    # crash forever (round-3 review).  Zero rows still means the wave's
-    # parts are DONE: commit them with zero counters.
-    any_parquet = any(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(stage) for f in fs)
-    if any_parquet:
-        written = spark.read.parquet(stage)
-        rows = (written.groupBy("part_id").agg(
-            F.count("*").alias("num_docs"),
-            # processed ≡ attempted = every non-skipped row (skips are
-            # admission refusals that never entered a parse stage)
-            F.sum(F.when(F.col("status") != "skipped", 1).otherwise(0))
-            .alias("num_processed"),
-            F.sum(F.when(F.col("status") == "success", 1).otherwise(0)).alias("num_succeeded"),
-            F.sum(F.when(F.col("status") == "partial_success", 1).otherwise(0)).alias("num_partial"),
-            F.sum(F.when(F.col("status") == "failure", 1).otherwise(0)).alias("num_failed"),
-            F.sum(F.when(F.col("status") == "skipped", 1).otherwise(0)).alias("num_skipped"),
-            F.sum("bytes_in").alias("bytes_in"),
-            # octet_length: BYTES out, not codepoints (round-3 review —
-            # F.length undercounts non-ASCII corpora up to 4x)
-            F.sum(F.octet_length(F.col("text").cast("binary"))
-                  .cast("long")).alias("bytes_out"),
-        ).collect())
-        counters = {r["part_id"]: r.asDict() for r in rows}
-    else:
-        counters = {}
+    Shared by the batch wave driver and the streaming epoch sink.
+
+    ``counters`` ({part_id: {num_docs, ..., bytes_out}},
+    udfs.part_counters) were tallied by the extraction kernels while
+    they produced the rows, so no Spark job runs here: the only I/O is
+    the listing of the part dirs and IceTable.commit's footer reads.
+    They count each row exactly once because the lineage accumulator's
+    merge REPLACES per (stage_id, partition_id) instead of adding: a
+    task that runs again — a retry, a stage recomputed after a lost
+    shuffle, a speculative copy — reports under the same key and
+    overwrites its earlier tally, and the action that wrote the stage
+    has returned, so every task that produced its rows has reported.
+    A part with no rows (an all-empty wave writes no files at all) is
+    still DONE: it commits with zero counters.
+
+    ``partitions`` is recorded next to ``options_hash`` so a resume
+    with other parameters can be refused (run_extract)."""
     parts_meta = []
     for p in expect_parts:
         # glob.escape: a table root containing glob metacharacters
@@ -323,13 +297,7 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
         files = sorted(glob.glob(os.path.join(
             glob.escape(os.path.join(stage, f"part_id={p}")),
             "*.parquet")))
-        c = counters.get(p, {"part_id": p, "num_docs": 0,
-                             "num_processed": 0, "num_succeeded": 0,
-                             "num_partial": 0, "num_failed": 0,
-                             "num_skipped": 0,
-                             "bytes_in": 0, "bytes_out": 0})
-        c = {k: (v if v is not None else 0) for k, v in c.items()
-             if k != "part_id"}
+        c = dict(counters.get(p) or dict.fromkeys(LINEAGE_COUNTERS, 0))
         c["wall_ms"] = wall_ms
         parts_meta.append({"part_id": p, "files": files, "counters": c})
     from . import __version__
@@ -340,6 +308,7 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
                         datetime.datetime.utcnow().isoformat(),
                         versions={"webextract": __version__,
                                   "spark": spark.version,
+                                  "partitions": partitions,
                                   "options_hash": opt.options_hash(),
                                   "options": {k: repr(v) for k, v
                                               in opt.as_dict().items()}},
@@ -350,6 +319,28 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
                         # is what makes them disjoint)
                         stats_cols=("url",))
     return snap, parts_meta
+
+
+def check_resume(table: IceTable, partitions: int,
+                 opt: ConvertOptions) -> None:
+    """Refuse to resume a run whose snapshot heads the table with
+    another ``partitions`` or other options: part ids would name other
+    url sets (rows committed twice or never) or the table would mix
+    rows from two option sets.  A head without the ``partitions``
+    record — a table from before it, or a maintenance snapshot such as
+    a compaction — is not checked."""
+    head = table.latest_snapshot() or {}
+    have = head.get("versions") or {}
+    if "partitions" not in have:
+        return
+    if (have["partitions"], have.get("options_hash")) != (
+            partitions, opt.options_hash()):
+        raise ValueError(
+            f"cannot resume {table.root}: its last run committed with "
+            f"partitions={have['partitions']}, options_hash="
+            f"{have.get('options_hash')}; this run has partitions="
+            f"{partitions}, options_hash={opt.options_hash()}. Rerun "
+            f"with the table's parameters or into a new root.")
 
 
 def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
@@ -367,11 +358,17 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     and, with ``html_split`` also set, cut-point-split (HTML,
     htmlsplit.py) — across tasks instead of pinning one task; None
     keeps the pure no-shuffle plan.
-    Returns a summary with per-wave counters.
+    A resume (some parts already committed) with another ``partitions``
+    or other options than the table's last run raises ValueError before
+    anything is written.
+    Returns a summary with per-wave counters and phase times: ``wall_ms``
+    (plan, scan, kernels and write) and ``commit_ms`` (commit_stage).
     """
     table = IceTable(table_root)
     run_id = run_id or uuid.uuid4().hex[:12]
     committed = table.committed_parts()
+    if committed:
+        check_resume(table, partitions, opt)
     todo = [p for p in range(partitions) if p not in committed]
     pages_p = with_part_id(pages, partitions)
     summary = {"run_id": run_id, "partitions": partitions,
@@ -379,15 +376,16 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
 
     for wi, wave_parts in enumerate(_wave_groups(todo, waves)):
         t0 = time.time()
+        # a fresh accumulator per wave: its tallies are this wave's only
+        tally = new_tally(spark.sparkContext)
         wave_df = pages_p.filter(F.col("part_id").isin(wave_parts))
         if split_bytes is not None:
             from .split import extracted_split_df
-            out = extracted_split_df(wave_df.drop("part_id"), opt, cpus,
+            out = extracted_split_df(wave_df, opt, cpus,
                                      split_bytes=split_bytes,
-                                     html_split=html_split)
+                                     html_split=html_split, tally=tally)
         else:
-            out = extracted_df(wave_df.drop("part_id"), opt, cpus)
-        out = with_part_id(out, partitions)
+            out = extracted_df(wave_df, opt, cpus, tally=tally)
         stage = table.staging_dir(run_id, wi)
         # one shuffle, on the EXTRACTED rows (≈5× smaller than raw
         # HTML), into the committed url-hash layout: exactly one file
@@ -397,13 +395,17 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
         (out.repartition(max(1, len(wave_parts)), F.col("part_id"))
          .write.mode("overwrite").partitionBy("part_id").parquet(stage))
 
-        wall_ms = int((time.time() - t0) * 1000)
+        t1 = time.time()
+        wall_ms = int((t1 - t0) * 1000)
         snap, parts_meta = commit_stage(spark, table, run_id, stage,
-                                        wave_parts, opt, wall_ms)
+                                        wave_parts, opt, wall_ms,
+                                        part_counters(tally.value),
+                                        partitions)
         summary["waves"].append({
             "wave": wi, "snapshot_id": snap, "parts": wave_parts,
             "num_docs": sum(m["counters"]["num_docs"] for m in parts_meta),
-            "wall_ms": wall_ms})
+            "wall_ms": wall_ms,
+            "commit_ms": int((time.time() - t1) * 1000)})
         # abort_on_error=true (reference docs/usage.md:24): fail the JOB
         # on the first wave containing a failed document.  The wave's
         # snapshot is already committed, so a rerun after the fix

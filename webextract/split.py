@@ -43,31 +43,34 @@ from pyspark.sql import DataFrame, functions as F
 from . import pdfmini
 from .dom import Block, collapse_ws
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import EXTRACT_SCHEMA_DDL, make_extract_kernel
+from .udfs import (Tally, extract_batch, extract_ddl, extract_input_cols,
+                   make_extract_kernel, new_extract_out)
 
 SPLIT_BYTES = 8 * 1024 * 1024        # payloads >= this fan out by page
 
 # segment frame: original header/page numbers preserved in `html`
 _SEG_DDL = ("url string, warc_ts timestamp, rid bigint, lang string, "
-            "seg_idx int, n_segs int, orig_bytes bigint, verdict string, "
-            "error string, html binary")
+            "part_id int, seg_idx int, n_segs int, orig_bytes bigint, "
+            "verdict string, error string, html binary")
 _SEG_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
     ("rid", pa.int64()),
-    ("lang", pa.string()), ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
+    ("lang", pa.string()), ("part_id", pa.int32()),
+    ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
     ("orig_bytes", pa.int64()), ("verdict", pa.string()),
     ("error", pa.string()), ("html", pa.large_binary())])
 
 # extracted segment: blocks as structs, payload dropped (rows shrink ~5x
 # before the merge shuffle)
 _SEGX_DDL = ("url string, warc_ts timestamp, rid bigint, lang string, "
-             "seg_idx int, n_segs int, orig_bytes bigint, verdict string, "
-             "error string, "
+             "part_id int, seg_idx int, n_segs int, orig_bytes bigint, "
+             "verdict string, error string, "
              "blocks array<struct<page:int,text:string,level:int>>")
 _SEGX_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
     ("rid", pa.int64()),
-    ("lang", pa.string()), ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
+    ("lang", pa.string()), ("part_id", pa.int32()),
+    ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
     ("orig_bytes", pa.int64()), ("verdict", pa.string()),
     ("error", pa.string()),
     ("blocks", pa.list_(pa.struct([("page", pa.int32()),
@@ -128,6 +131,8 @@ def make_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
                 else [None] * len(urls)
             rids = cols["rid"].to_pylist() if "rid" in cols \
                 else [None] * len(urls)
+            pids = cols["part_id"].to_pylist() if "part_id" in cols \
+                else [None] * len(urls)
             out = {k: [] for k in _SEG_ARROW.names}
 
             def emit(i, seg_idx, n_segs, verdict, error, payload):
@@ -135,6 +140,7 @@ def make_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
                 out["warc_ts"].append(ts[i])
                 out["rid"].append(rids[i])
                 out["lang"].append(langs[i])
+                out["part_id"].append(pids[i])
                 out["seg_idx"].append(seg_idx)
                 out["n_segs"].append(n_segs)
                 out["orig_bytes"].append(len(htmls[i]) if htmls[i] else 0)
@@ -207,11 +213,12 @@ def make_seg_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     return seg_batches
 
 
-def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
+def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
     """mapInArrow merge over PRE-AGGREGATED rows (one row per url with
     its segment structs collected and sorted): rebuild the global block
     list in seg_idx order and re-serialize with extract_document's own
-    serializer functions (byte-identity by construction).
+    serializer functions (byte-identity by construction).  ``tally``:
+    as in udfs.make_extract_kernel.
 
     mapInArrow over collect_list-aggregated rows, NOT per-group
     applyInPandas: a grouped-map pays one pandas DataFrame round-trip
@@ -220,13 +227,13 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     from .extract import (serialize_doctags, serialize_html,
                           serialize_html_split_page, serialize_json,
                           serialize_md, serialize_text)
-    from .udfs import _EXTRACT_ARROW
 
     def merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        counts = Tally(tally) if tally is not None else None
         for batch in batches:
             cols = {n: batch.column(n).to_pylist()
                     for n in batch.schema.names}
-            out = {f.name: [] for f in _EXTRACT_ARROW}
+            out = new_extract_out()
 
             def emit(i, **kw):
                 row = {"url": cols["url"][i], "warc_ts": cols["warc_ts"][i],
@@ -235,7 +242,7 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
                        "doctags": "", "text_html": "", "text_html_split": "",
                        "text_json": "", "spans": [], "images": [],
                        "n_blocks": 0, "bytes_in": cols["orig_bytes"][i],
-                       "error": None}
+                       "error": None, "part_id": cols["part_id"][i]}
                 row.update(kw)
                 for k, v in row.items():
                     out[k].append(v)
@@ -278,9 +285,9 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
                 if "json" in opt.to_formats:
                     kw["text_json"] = serialize_json(blocks, cols["url"][i])
                 emit(i, **kw)
-            yield pa.RecordBatch.from_pydict(
-                {f.name: pa.array(out[f.name], f.type)
-                 for f in _EXTRACT_ARROW})
+            yield extract_batch(out, counts)
+        if counts is not None:
+            counts.report()
 
     return merge_batches
 
@@ -304,7 +311,8 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                        cpus: int = 32, split_bytes: int = SPLIT_BYTES,
                        pages_per_seg: int = 1,
                        html_split: bool = False,
-                       html_target_chars: int | None = None) -> DataFrame:
+                       html_target_chars: int | None = None,
+                       tally=None) -> DataFrame:
     """Extraction with the oversized-document fan-out tiers.
 
     Routing is declarative so Catalyst prunes every branch's scan:
@@ -314,10 +322,10 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     the cut-point tier (htmlsplit.py: structural scan -> seeded
     segment parses -> global select_main merge) instead of pinning one
     task.  All branches union to the same EXTRACT schema, so
-    downstream (waves, IceTable commit, chunkers) is tier-oblivious."""
-    cols = ["url", "warc_ts", "lang", "html"] \
-        if "lang" in pages.columns else ["url", "warc_ts", "html"]
-    src = pages.select(*cols)
+    downstream (waves, IceTable commit, chunkers) is tier-oblivious.
+    ``tally``: as in pipeline.extracted_df — each branch's final kernel
+    (plain, PDF merge, HTML merge) tallies the rows it emits."""
+    src = pages.select(*extract_input_cols(pages.columns, tally))
     # coalesce: a NULL html payload makes the predicates SQL NULL, which
     # every branch filter would drop — the row must take the normal
     # kernel path (which emits its skipped verdict).
@@ -329,7 +337,8 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     is_html_split = (F.coalesce(is_big & ~is_pdf, F.lit(False))
                      if html_split else F.lit(False))
     normal = (src.filter(~is_split & ~is_html_split)
-              .mapInArrow(make_extract_kernel(opt), EXTRACT_SCHEMA_DDL))
+              .mapInArrow(make_extract_kernel(opt, tally=tally),
+                          extract_ddl(tally)))
     segs = (src.filter(is_split)
             # rid: a physical per-row uniquifier for the merge key —
             # (url, warc_ts) alone would COLLAPSE exact-duplicate input
@@ -350,17 +359,19 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     # a failed SEGMENT's verdict over its siblings' "".
     agg = (segs.groupBy("url", "warc_ts", "rid")
            .agg(F.first("lang").alias("lang"),
+                F.first("part_id").alias("part_id"),
                 F.first("orig_bytes").alias("orig_bytes"),
                 F.max("verdict").alias("verdict"),
                 F.max("error").alias("error"),
                 F.sort_array(F.collect_list(
                     F.struct("seg_idx", "blocks"))).alias("segs")))
-    merged = agg.mapInArrow(make_merge_kernel(opt), EXTRACT_SCHEMA_DDL)
+    merged = agg.mapInArrow(make_merge_kernel(opt, tally),
+                            extract_ddl(tally))
     out = normal.unionByName(merged)
     if html_split:
         from .htmlsplit import (HTML_TARGET_CHARS,
                                 extracted_html_split_branch)
         out = out.unionByName(extracted_html_split_branch(
             src.filter(is_html_split), opt, cpus,
-            html_target_chars or HTML_TARGET_CHARS))
+            html_target_chars or HTML_TARGET_CHARS, tally))
     return out

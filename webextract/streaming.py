@@ -91,6 +91,7 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
 
     from .icetable import IceTable
     from .pipeline import commit_stage, with_part_id
+    from .udfs import new_tally, part_counters
 
     table = IceTable(table_root)
     # run_id = stream-<checkpoint-tag>-<epoch>: the tag scopes
@@ -126,8 +127,9 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
         if batch_df.isEmpty():
             return          # zero-row batch: nothing to stage/commit
         t0 = _time.time()
-        out = with_part_id(extracted_df(batch_df, opt, cpus=cpus),
-                           partitions)
+        tally = new_tally(spark.sparkContext)
+        out = extracted_df(with_part_id(batch_df, partitions), opt,
+                           cpus=cpus, tally=tally)
         stage = table.staging_dir(run_id, 0)
         (out.repartition(max(1, partitions // 4), F.col("part_id"))
          .write.mode("overwrite").partitionBy("part_id").parquet(stage))
@@ -136,7 +138,8 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
             for d in _glob.glob(os.path.join(_glob.escape(stage),
                                              "part_id=*")))
         commit_stage(spark, table, run_id, stage, present, opt,
-                     int((_time.time() - t0) * 1000))
+                     int((_time.time() - t0) * 1000),
+                     part_counters(tally.value), partitions)
         seen.add(run_id)
 
     return (pages_stream(spark, input_dir)

@@ -136,10 +136,11 @@ def test_html_split_tier_admission_and_fallback(spark):
 
 def test_html_split_spreads_segments(spark):
     """The point of the tier: one oversized doc becomes many segments."""
-    from webextract.htmlsplit import make_html_split_kernel, _HSEG_DDL
+    from webextract.htmlsplit import make_html_split_kernel
+    from webextract.split import SEG_SCHEMA
     pages = _pages_df(spark, [NASTY[0]])
     segs = (pages.select("url", "warc_ts", "lang", "html")
-            .mapInArrow(make_html_split_kernel(ALL_FORMATS, 64), _HSEG_DDL)
+            .mapInArrow(make_html_split_kernel(ALL_FORMATS, 64), SEG_SCHEMA)
             .collect())
     assert len(segs) > 3
     assert sorted(r.seg_idx for r in segs) == list(range(len(segs)))

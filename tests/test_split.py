@@ -117,10 +117,10 @@ def test_small_and_html_docs_stay_on_narrow_path(spark):
 def test_split_spreads_segments(spark):
     """The point of the tier: one oversized doc becomes many tasks.
     Segment frame must contain one row per non-empty page group."""
-    from webextract.split import make_split_kernel, _SEG_DDL
+    from webextract.split import make_split_kernel, SEG_SCHEMA
     pages = _pages_df(spark, [_mk_pdfs()[4]])  # 7 pages
     segs = (pages.select("url", "warc_ts", "lang", "html")
-            .mapInArrow(make_split_kernel(ALL_FORMATS, 1), _SEG_DDL))
+            .mapInArrow(make_split_kernel(ALL_FORMATS, 1), SEG_SCHEMA))
     rows = segs.collect()
     assert len(rows) == 7
     assert sorted(r.seg_idx for r in rows) == list(range(7))
@@ -219,3 +219,23 @@ def test_null_html_row_takes_normal_path(spark):
     from the committed table.  It must take the normal kernel path and
     come back as a skipped 'empty payload' row, identical to one-shot."""
     _assert_identical(spark, _mk_pdfs() + [None, b""], ALL_FORMATS)
+
+
+def test_split_kernel_flushes_at_byte_budget(monkeypatch):
+    """The split kernel bounds its output batches at SPLIT_FLUSH_BYTES
+    (a worker holds about one oversized doc's segments, not a whole
+    input batch's), with the same rows as one unbounded batch."""
+    import pyarrow as pa
+    from webextract import split
+    batch = pa.RecordBatch.from_pydict({
+        "url": [f"pdf://{i}" for i in range(5)], "warc_ts": [TS] * 5,
+        "html": _mk_pdfs()})
+
+    def run():
+        return list(split.make_split_kernel(ALL_FORMATS, 1)(iter([batch])))
+
+    ref = run()
+    monkeypatch.setattr(split, "SPLIT_FLUSH_BYTES", 300)
+    got = run()
+    assert len(ref) == 1 and len(got) > 1
+    assert [r for b in got for r in b.to_pylist()] == ref[0].to_pylist()

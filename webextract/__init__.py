@@ -17,8 +17,11 @@ batch extraction pipeline over Common-Crawl-style page tables:
                     per-partition commit log, resume)
 * ``chunk.py``    — hybrid/hierarchical chunkers (1->N explode; word or
                     subword token measure, merge_peers)
-* ``split.py``    — distributed oversized-PDF tier (page fan-out +
-                    byte-identical merge)
+* ``split.py``    — distributed oversized-document tier: split ->
+                    fan-out -> byte-identical merge, one chain for
+                    both formats; the mini-PDF page-group pieces
+* ``htmlsplit.py`` — its HTML pieces: cut-point scan, seeded segment
+                    parse, global select_main merge
 * ``formats.py``  — sniff + stdlib parsers for all 15 reference formats
 * ``sources.py``  — scheme-agnostic pages reader + object-store configs
 * ``synth.py``    — deterministic Common-Crawl-style page generator

@@ -49,13 +49,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--partitions", type=int, default=64)
     p.add_argument("--waves", type=int, default=4)
     p.add_argument("--cpus", type=int, default=32,
-                   help="parallelism hint for tier repartitions")
+                   help="accepted for compatibility; unused")
     p.add_argument("--run-id", default=None)
     p.add_argument("--fail-after-wave", type=int, default=None,
                    help="inject a crash after wave K (resume testing)")
     p.add_argument("--split-bytes", type=int, default=None,
-                   help="enable the oversized-PDF page fan-out tier for "
-                        "payloads >= this many bytes (split.py)")
+                   help="fan out oversized mini-PDFs (>= this many "
+                        "bytes) by page group across tasks (split.py)")
     p.add_argument("--html-split", action="store_true",
                    help="with --split-bytes: also fan out oversized "
                         "HTML via the cut-point tier (htmlsplit.py)")

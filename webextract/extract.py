@@ -473,7 +473,13 @@ def extract_document(payload: bytes, opt: ConvertOptions = DEFAULT_OPTIONS,
                              error="document timeout")
         return finish_blocks(main, fmt, opt, url, timed_out)
     except Exception as e:  # abort_on_error=false semantics
-        return Extracted(status="failure", error=f"{type(e).__name__}: {e}")
+        return failed(e)
+
+
+def failed(e: Exception) -> Extracted:
+    """The failure row of a document whose conversion raised ``e`` (fmt
+    stays the Extracted default)."""
+    return Extracted(status="failure", error=f"{type(e).__name__}: {e}")
 
 
 def finish_blocks(main: list[Block], fmt: str,
@@ -481,8 +487,8 @@ def finish_blocks(main: list[Block], fmt: str,
                   timed_out=lambda: False) -> Extracted:
     """Selected blocks -> Extracted: the shared post-parse tail of
     extract_document (serialize + images + output-format projection).
-    Factored out so the oversized-HTML split tier's merge produces
-    byte-identical rows by running the SAME code, not a copy."""
+    Factored out so the split tier's merge produces byte-identical
+    rows by running the SAME code, not a copy."""
     if not main:
         return Extracted(status="skipped", fmt=fmt, n_blocks=0,
                          error="no content")

@@ -353,11 +353,12 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     """The job driver: wave-committed, resumable extraction run.
 
     ``fail_after_wave`` injects a crash between commits (tests only).
-    ``split_bytes`` enables the oversized-document fan-out tiers:
-    payloads >= the threshold are page-split (mini-PDF, split.py) —
+    ``split_bytes`` enables the oversized-document fan-out tier
+    (split.py): payloads >= the threshold are page-split (mini-PDF) —
     and, with ``html_split`` also set, cut-point-split (HTML,
     htmlsplit.py) — across tasks instead of pinning one task; None
-    keeps the pure no-shuffle plan.
+    keeps the pure no-shuffle plan.  ``cpus`` is accepted for call-site
+    compatibility and unused.
     A resume (some parts already committed) with another ``partitions``
     or other options than the table's last run raises ValueError before
     anything is written.

@@ -167,10 +167,8 @@ def q_extract_pdf_split(spark, sf_dir):
     from .docpages import docs_to_pdf_pages
     from .split import extracted_split_df
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"))
-    # r6: one segment partition per core (see extract_html_split_tier)
-    tier_cpus = max(1, spark.sparkContext.defaultParallelism // 4)
-    return (_doc_id(extracted_split_df(pages, cpus=tier_cpus,
-                                       split_bytes=1, pages_per_seg=2))
+    return (_doc_id(extracted_split_df(pages, split_bytes=1,
+                                       pages_per_seg=2))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -266,13 +264,7 @@ def q_extract_html_split_tier(spark, sf_dir):
     not a semantic change)."""
     from .split import extracted_split_df
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
-    # r6: size the cut-tier fan-out to ONE segment partition per core
-    # (cpus*4 == defaultParallelism).  Measured at sf1.0: 16 parts
-    # 5.6 s, 32 parts 4.7 s, 128 parts 7.8 s — the stage is python-
-    # task-overhead-bound above ~1 partition/core.  Rows unchanged.
-    tier_cpus = max(1, spark.sparkContext.defaultParallelism // 4)
-    out = _doc_id(extracted_split_df(pages, cpus=tier_cpus,
-                                     split_bytes=1, html_split=True,
+    out = _doc_id(extracted_split_df(pages, split_bytes=1, html_split=True,
                                      html_target_chars=256))
     return (out.filter(F.col("status") == "success")
             .select("doc_id", "text"))

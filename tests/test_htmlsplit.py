@@ -58,6 +58,20 @@ NASTY = [
      b" farm</p></div><main>leading main text"
      b"<section><h3>Sec</h3><p>deep section words text</p>"
      b"loose section tail</section></main></body></html>"),
+    # block/container tags inside table cells (no cut may land inside a
+    # table: the cell text would leave the table block)
+    (b"<html><body><article><h2>Cells</h2><table><tr>"
+     b"<td><p>cell para one</p><p>cell para two</p></td>"
+     b"<td><div>cell div text</div></td></tr><tr>"
+     b"<td><ul><li>cell item a</li><li>cell item b</li></ul></td>"
+     b"<td>plain cell</td></tr></table>"
+     b"<p>after the table paragraph words</p></article></body></html>"),
+    # block/container tags inside skipped subtrees (no cut may land
+    # inside one: the seeded parse would keep the skipped text)
+    (b"<html><body><div class='content'><p>before the skip words</p>"
+     b"<noscript><div><p>noscript para text</p></div></noscript>"
+     b"<svg><g><p>svg para text</p></g></svg>"
+     b"<p>after the skip words here</p></div></body></html>"),
 ]
 
 

@@ -122,10 +122,30 @@ def test_options_hash_stable_and_picklable():
 
 
 def test_format_enums_consistent():
-    """options.INPUT_FORMATS (admission surface) and formats.ALL_FORMATS
-    (sniff surface) must stay the same 15-entry reference enum."""
-    from webextract.formats import ALL_FORMATS
-    assert INPUT_FORMATS == ALL_FORMATS
+    """options.INPUT_FORMATS (admission surface) is the one format enum:
+    formats.sniff (the sniff surface) names exactly its 15 entries."""
+    import io
+    import zipfile
+
+    from webextract.formats import sniff
+
+    def ooxml(part):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as z:
+            z.writestr(part, "<x/>")
+        return buf.getvalue()
+
+    samples = [
+        ooxml("word/document.xml"), ooxml("ppt/slides/slide1.xml"),
+        b"<html><body>x</body></html>", b"\x89PNG\r\n\x1a\nxxxx",
+        b"%PDF-1.4 ...", b"= Title\n\ntext", b"# Heading\n\ntext",
+        b"a,b,c\n1,2,3\n", ooxml("xl/worksheets/sheet1.xml"),
+        b'<?xml version="1.0"?><us-patent-grant/>',
+        b'<?xml version="1.0"?><article><front/></article>',
+        b'<?xml version="1.0"?><mets xmlns="m"/>',
+        b'{"schema_name":"WebExtractDocument","blocks":[]}',
+        b"ID3\x04\x00tag", b"WEBVTT\n\n00:00:00.000 --> 00:00:01.000\nhi"]
+    assert tuple(sniff(p) for p in samples) == INPUT_FORMATS
 
 
 def test_cli_chunk_stage(spark, tmp_path):

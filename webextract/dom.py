@@ -112,14 +112,16 @@ class _Parser(HTMLParser):
         #                           link_chars, in_cell, path, cpath, depth]
         self.tables: list[list] = []
         self.ol_stack: list[bool] = []  # True if current list is <ol>
+        # sibling counters of the top-level elements
+        self._root_counts: dict[str, int] = {}
+        # source offset of the start tag being handled (_fast_feed only)
+        self.tag_start = 0
 
     # -- path helpers ---------------------------------------------------
     def _child_seg(self, tag: str) -> str:
         counts = self.stack[-1][2] if self.stack else self._root_counts
         counts[tag] = counts.get(tag, 0) + 1
         return f"{tag}[{counts[tag]}]"
-
-    _root_counts: dict = None  # set in parse()
 
     def _path(self) -> str:
         return self.stack[-1][6] if self.stack else ""
@@ -410,9 +412,8 @@ _TOKEN = re.compile(
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"
     r"|<![^>]*>"                 # doctype / declarations
     r"|<\?[^>]*>"                # processing instructions
-    # start tag: name + body captured in place, so the scan loop never
-    # re-matches the token with a second regex (the old _TAGNAME pass
-    # cost one extra regex match per tag)
+    # start tag: name + body captured in place, so a tag costs one
+    # regex match
     r"|<(?P<s>[a-zA-Z][a-zA-Z0-9:-]*)(?P<sb>[^>]*)>"
     # end tag: html.parser accepts whitespace after '</'; an
     # unterminated '</name' at EOF is NOT an event — like html.parser,
@@ -422,7 +423,6 @@ _TOKEN = re.compile(
                                  # html5 bogus comment, consumed silently
     r"|(?P<t>[^<]+)",            # text runs
     re.S)
-_TAGNAME = re.compile(r"</?\s*([a-zA-Z][a-zA-Z0-9:-]*)")
 _ATTR = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?""")
 # only these tags' attributes are ever read by the handlers
@@ -498,6 +498,7 @@ def _fast_feed(p: _Parser, text: str) -> None:
                 continue
             name = m.group("s").lower()
             attrs = _parse_attrs(body) if name in want_attrs else []
+            p.tag_start = s
             handle_start(name, attrs)
             if body.endswith("/") and _is_startend(body):
                 # '<t .../>': html.parser fires handle_startendtag,
@@ -531,11 +532,10 @@ def _fast_feed(p: _Parser, text: str) -> None:
 import html as _html_mod  # noqa: E402  (entity table shared with html.parser)
 
 
-def _run_parser(payload: bytes | str, engine: str,
-                capture_anchors: bool = False) -> _Parser:
-    text = decode_html(payload) if isinstance(payload, bytes) else payload
-    p = _Parser(capture_anchors=capture_anchors)
-    p._root_counts = {}
+def _feed_all(p: _Parser, text: str, engine: str = "fast") -> bool:
+    """Parse all of ``text`` into ``p`` and flush; never raises.  False
+    means a handler raised mid-feed: ``p.blocks`` stops where the parse
+    did, with whatever was open at that point flushed."""
     try:
         if engine == "fast":
             _fast_feed(p, text)
@@ -543,12 +543,20 @@ def _run_parser(payload: bytes | str, engine: str,
         else:
             p.feed(text)
             p.close()
+        return True
     except Exception:
-        # guarantee the no-raise contract
         try:
             p._finalize()
         except Exception:
             pass
+        return False
+
+
+def _run_parser(payload: bytes | str, engine: str,
+                capture_anchors: bool = False) -> _Parser:
+    text = decode_html(payload) if isinstance(payload, bytes) else payload
+    p = _Parser(capture_anchors=capture_anchors)
+    _feed_all(p, text, engine)
     return p
 
 

@@ -55,18 +55,6 @@ class Extracted:
 
 
 # ---------------------------------------------------------------------------
-# format sniffing (reference: schema-on-read per-document format detection,
-# docs/usage.md:14; operator C1 in SURVEY.md §2.3).  Full 15-format
-# detection lives in webextract/formats.py; truly-unknown payloads are
-# marked "unknown" and SKIPPED by the kernel — never mangled through
-# the HTML parser (round-1 review fix).
-# ---------------------------------------------------------------------------
-
-def sniff_format(payload: bytes) -> str:
-    return sniff(payload)
-
-
-# ---------------------------------------------------------------------------
 # main-content selection (operator C3)
 # ---------------------------------------------------------------------------
 
@@ -378,23 +366,32 @@ def serialize_json(blocks: list[Block], url: str = "") -> str:
 
 def admit_payload(payload: bytes,
                   opt: ConvertOptions) -> tuple[str, Extracted | None]:
-    """(fmt, refusal) — the format-independent admission chain (empty,
-    max_file_size, sniff, from_formats) in its canonical order.  THE
-    single copy: the one-shot kernel and the split tiers' routers all
-    call this, so a new/reordered check or changed error string can
-    never silently break the tiers' row-identity contract (round-3
-    review)."""
+    """(fmt, refusal) — the admission chain (empty, max_file_size,
+    sniff, from_formats, then a PDF's max_num_pages) in its canonical
+    order.  THE single copy: the one-shot kernel and the split tiers'
+    split kernels all call this, so a new/reordered check or changed
+    error string can never silently break the tiers' row-identity
+    contract.
+
+    Sniffing (``formats.sniff``, operator C1 in SURVEY.md §2.3) is
+    schema-on-read per document, like the reference (docs/usage.md:14);
+    a truly-unknown payload is SKIPPED, never mangled through the HTML
+    parser.  The page cap (reference settings.py:74-75) is a
+    header-only peek, so a refused PDF never pays a parse."""
     if payload is None or len(payload) == 0:
         return "html", Extracted(status="skipped", error="empty payload")
     if len(payload) > opt.max_file_size:
         return "html", Extracted(status="skipped", error="file too large")
-    fmt = sniff_format(payload)
+    fmt = sniff(payload)
     if fmt == "unknown":
         return fmt, Extracted(status="skipped", fmt="unknown",
                               error="unknown format")
     if fmt not in opt.from_formats:
         return fmt, Extracted(status="skipped", fmt=fmt,
                               error=f"format {fmt} not admitted")
+    if fmt == "pdf" and pdfmini.peek_n_pages(payload) > opt.max_num_pages:
+        return fmt, Extracted(status="skipped", fmt=fmt,
+                              error="too many pages")
     return fmt, None
 
 
@@ -417,11 +414,6 @@ def extract_document(payload: bytes, opt: ConvertOptions = DEFAULT_OPTIONS,
         if refused is not None:
             return refused
         if fmt == "pdf":
-            # max_num_pages admission (reference settings.py:74-75):
-            # header-only peek, refused docs never pay a parse
-            if pdfmini.peek_n_pages(payload) > opt.max_num_pages:
-                return Extracted(status="skipped", fmt=fmt,
-                                 error="too many pages")
             # born-digital PDFs carry no boilerplate: all runs are content
             # (density clustering would truncate multi-page docs)
             main = pdfmini.parse_pdf_blocks(payload, opt.page_range)

@@ -38,10 +38,6 @@ import zipfile
 
 from .dom import Block, collapse_ws, decode_html
 
-ALL_FORMATS = ("docx", "pptx", "html", "image", "pdf", "asciidoc", "md",
-               "csv", "xlsx", "xml_uspto", "xml_jats", "mets_gbs",
-               "json_docling", "audio", "vtt")
-
 _MD_HEAD = re.compile(r"^#{1,6} \S")
 # control bytes counted by the binary-junk guard: 0-8 and 14-31
 _CTRL_DELETE = bytes(list(range(0, 9)) + list(range(14, 32)))

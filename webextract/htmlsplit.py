@@ -4,14 +4,15 @@ Boilerplate scoring is a document-GLOBAL decision, so a giant HTML page
 can only be split where semantics don't change — BETWEEN tag tokens,
 with the full parser state that crosses the cut carried along:
 
-* cut (``scan_cuts``, one task per oversized doc): a structural token
-  scan — the SAME regex tokenizer and the SAME ``_Parser`` handlers as
-  the real parse, but skipping every text token, so it costs a fraction
-  of a full parse.  At candidate cut tags (block/container start tags,
-  outside script/style/tables) it snapshots the crossing state: open
-  element stack with per-element child counts (sibling numbering!),
-  a/pre/blockquote depths, root counts.  A segment is a substring of
-  the decoded document plus its ~1 KB state.
+* cut (``scan_cuts``, one task per oversized doc): a structural pass —
+  the one-shot parse's own tokenizer (``dom._fast_feed``) driving its
+  own ``_Parser`` tag handlers, with text dropped.  It still tokenizes
+  every byte, so it costs about 0.7x a full parse (measured
+  in-process).  At candidate cut tags (block/container start tags,
+  outside skipped subtrees and tables) it snapshots the crossing state:
+  open element stack with per-element child counts (sibling
+  numbering!), a/pre/blockquote depths, root counts.  A segment is a
+  substring of the decoded document plus its ~1 KB state.
 * parse (``_parse_seeded``, in parallel): a ``_Parser`` SEEDED with the
   snapshot parses its slice; because the tokenizer restarts cleanly at
   a token boundary and flush-at-tag == flush-at-EOF for the block open
@@ -27,9 +28,8 @@ from __future__ import annotations
 
 import json
 
-from .dom import (Block, _Parser, _RAWTEXT, _RAWTEXT_END, _TAGNAME, _TOKEN,
-                  _WANT_ATTRS, _BLOCK, _CONTAINER, _is_startend,
-                  _parse_attrs, decode_html)
+from .dom import (Block, _BLOCK, _CONTAINER, _Parser, _fast_feed, _feed_all,
+                  decode_html)
 from .extract import Extracted, finish_blocks, select_main
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .split import merge_frame, seg_frame, split_frame
@@ -58,7 +58,6 @@ def seed_parser(state_json: str | None) -> _Parser:
     the cut (minus flushed content): stack, sibling counters, li
     numbering, boiler/semantic depths, list flavor stack."""
     p = _Parser()
-    p._root_counts = {}
     if state_json:
         st = json.loads(state_json)
         p._root_counts = st["root"]
@@ -77,60 +76,40 @@ def seed_parser(state_json: str | None) -> _Parser:
     return p
 
 
+class _CutScan(_Parser):
+    """The one-shot parse's tag handlers with text dropped, recording
+    each cut before the start tag it lands on is handled."""
+
+    def __init__(self, target_chars: int) -> None:
+        super().__init__()
+        self.target_chars = target_chars
+        self.next_cut = target_chars    # earliest offset of the next cut
+        self.cuts: list[tuple[int, str]] = []
+
+    def handle_data(self, data: str) -> None:
+        pass
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        s = self.tag_start
+        if (s >= self.next_cut and tag in CUT_TAGS and not self.skip
+                and not self.tables):
+            self.cuts.append((s, snapshot_state(self)))
+            self.next_cut = s + self.target_chars
+        super().handle_starttag(tag, attrs)
+
+
 def scan_cuts(text: str, target_chars: int) -> list[tuple[int, str]]:
     """[(cut_pos, state_json)] — structural pass over the token stream.
 
-    A positionally-aware variant of dom._fast_feed that SKIPS text
-    tokens (no unescape, no block assembly — the expensive 40%+ of a
-    real parse) and drives the genuine _Parser handlers for tags only,
-    so stack/sibling/flag bookkeeping cannot drift from the real parse
-    (test_htmlsplit parity tests pin this).  Cuts land on start tags of
-    block/container elements at least ``target_chars`` apart, never
-    inside script/style/svg (skip), rawtext, or tables."""
-    p = _Parser()
-    p._root_counts = {}
-    cuts: list[tuple[int, str]] = []
-    n = len(text)
-    pos = 0
-    last_cut = 0
-    while pos < n:
-        restart = False
-        for m in _TOKEN.finditer(text, pos):
-            tok = m.group(0)
-            s = m.start()
-            pos = m.end()
-            if tok[0] != "<":
-                continue                      # text: structural no-op
-            c1 = tok[1]
-            if c1 == "!" or c1 == "?":
-                continue
-            tm = _TAGNAME.match(tok)
-            if tm is None or "<" in tok[1:]:
-                continue
-            name = tm.group(1).lower()
-            if c1 == "/":
-                p.handle_endtag(name)
-                continue
-            if (s - last_cut >= target_chars and name in CUT_TAGS
-                    and not p.skip and not p.tables):
-                cuts.append((s, snapshot_state(p)))
-                last_cut = s
-            body = tok[tm.end():-1]
-            attrs = _parse_attrs(body) if name in _WANT_ATTRS else []
-            p.handle_starttag(name, attrs)
-            if body.endswith("/") and _is_startend(body):
-                # '<t .../>': start+end, same rule as dom._fast_feed
-                p.handle_endtag(name)
-                continue
-            if name in _RAWTEXT:
-                mm = _RAWTEXT_END[name].search(text, pos)
-                pos = n if mm is None else mm.end()
-                p.handle_endtag(name)
-                restart = True
-                break
-        if not restart:
-            pos = n
-    return cuts
+    ``dom._fast_feed`` drives the genuine _Parser handlers for tags, so
+    stack/sibling/flag bookkeeping cannot drift from the real parse
+    (test_htmlsplit parity tests pin this); text is tokenized and
+    dropped.  Cuts land on start tags of block/container elements at
+    least ``target_chars`` apart, never inside skipped subtrees
+    (script/style/svg/...) or tables.  Raises when a handler raises."""
+    p = _CutScan(target_chars)
+    _fast_feed(p, text)
+    return p.cuts
 
 
 def _parse_seeded(text: str, state_json: str | None) -> tuple[list[Block], bool]:
@@ -139,18 +118,8 @@ def _parse_seeded(text: str, state_json: str | None) -> tuple[list[Block], bool]
     mid-segment — the one-shot parse would have stopped THERE, so the
     merge must drop every later segment's blocks to stay
     byte-identical."""
-    from .dom import _fast_feed
     p = seed_parser(state_json)
-    ok = True
-    try:
-        _fast_feed(p, text)
-        p._finalize()
-    except Exception:
-        ok = False
-        try:
-            p._finalize()
-        except Exception:
-            pass
+    ok = _feed_all(p, text)
     return p.blocks, ok
 
 

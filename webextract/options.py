@@ -101,7 +101,6 @@ class ConvertOptions:
     link_char_penalty: float = 2.0     # container score: chars - p*link_chars
     boiler_damp: float = 0.05          # nav/header/footer/aside damping
     semantic_boost: float = 1.5        # <article>/<main> container boost
-    cluster_slack: float = 0.95        # prefer deepest container >= slack*max
 
     # per-document timeout seconds (reference: document_timeout
     # datamodel/convert.py:33-40); checked per Arrow batch

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import (CHUNK_SCHEMA_DDL, LINEAGE_COUNTERS, extract_ddl,
+from .udfs import (CHUNK_SCHEMA, LINEAGE_COUNTERS, extract_schema,
                    extract_input_cols, make_chunk_kernel, make_extract_kernel,
                    new_tally, part_counters)
 
@@ -58,7 +58,7 @@ def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     """
     src = pages.select(*extract_input_cols(pages.columns, tally))
     return src.mapInArrow(make_extract_kernel(opt, tally=tally),
-                          extract_ddl(tally))
+                          extract_schema(tally))
 
 
 LINKS_SCHEMA_DDL = ("url string, link_no int, href string, "
@@ -174,7 +174,7 @@ def chunks_df(extracted: DataFrame, chunker: str = "hybrid",
     return src.mapInArrow(
         make_chunk_kernel(chunker, max_tokens, tokenizer, merge_peers,
                           merges),
-        CHUNK_SCHEMA_DDL)
+        CHUNK_SCHEMA)
 
 
 def write_artifacts(extracted: DataFrame, out_dir: str) -> None:

@@ -46,7 +46,7 @@ from .dom import Block
 from .extract import (Extracted, admit_payload, extract_document, failed,
                       finish_blocks)
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import (Tally, append_extracted, extract_batch, extract_ddl,
+from .udfs import (Tally, append_extracted, extract_batch, extract_schema,
                    extract_input_cols, make_extract_kernel, new_extract_out)
 
 SPLIT_BYTES = 8 * 1024 * 1024         # payloads >= this fan out
@@ -79,9 +79,9 @@ _SEGX_SCHEMA = from_arrow_schema(_SEGX_ARROW)
 def split_frame(opt: ConvertOptions, fmt: str, cut):
     """mapInArrow 1->N: each oversized doc -> its segment rows.
     ``cut(payload)`` returns an admitted ``fmt`` payload's segments as
-    (state, seg, html) triples, or a refusal Extracted.  Output batches
-    flush at SPLIT_FLUSH_BYTES, which bounds worker memory to about one
-    oversized doc's segments, not a whole input batch's."""
+    (state, seg, html) triples.  Output batches flush at
+    SPLIT_FLUSH_BYTES, which bounds worker memory to about one oversized
+    doc's segments, not a whole input batch's."""
 
     def split_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -222,7 +222,7 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
                 F.first("payload", ignorenulls=True).alias("payload"),
                 F.sort_array(F.collect_list(
                     F.struct("seg_idx", "perr", "blocks"))).alias("segs")))
-    return agg.mapInArrow(merge_kernel, extract_ddl(tally))
+    return agg.mapInArrow(merge_kernel, extract_schema(tally))
 
 
 # ---------------------------------------------------------------------------
@@ -253,13 +253,6 @@ def _slice_pages(payload: bytes, pages_per_seg: int) -> list[bytes]:
     return out or [payload]  # zero-run doc: one whole segment
 
 
-def _cut_pdf(payload: bytes, opt: ConvertOptions, pages_per_seg: int):
-    # max_num_pages admission, after admit_payload as in extract_document
-    if pdfmini.peek_n_pages(payload) > opt.max_num_pages:
-        return Extracted(status="skipped", fmt="pdf", error="too many pages")
-    return [(None, None, seg) for seg in _slice_pages(payload, pages_per_seg)]
-
-
 def _finish_pdf(blocks: list[Block], opt: ConvertOptions,
                 url: str) -> Extracted:
     for b in blocks:    # the run index in a path is doc-global
@@ -270,8 +263,8 @@ def _finish_pdf(blocks: list[Block], opt: ConvertOptions,
 def make_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
                       pages_per_seg: int = 1):
     """mapInArrow 1->N: oversized mini-PDF -> page-group segments."""
-    return split_frame(opt, "pdf",
-                       lambda payload: _cut_pdf(payload, opt, pages_per_seg))
+    return split_frame(opt, "pdf", lambda payload: [
+        (None, None, seg) for seg in _slice_pages(payload, pages_per_seg)])
 
 
 def make_seg_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
@@ -318,7 +311,7 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                      if html_split else F.lit(False))
     normal = (src.filter(~is_split & ~is_html_split)
               .mapInArrow(make_extract_kernel(opt, tally=tally),
-                          extract_ddl(tally)))
+                          extract_schema(tally)))
     out = normal.unionByName(_fan_out(
         src.filter(is_split), make_split_kernel(opt, pages_per_seg),
         make_seg_extract_kernel(opt), make_merge_kernel(opt, tally), tally))

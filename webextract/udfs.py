@@ -30,6 +30,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from .chunk import chunk_blocks_from_spans
 from .extract import extract_document
@@ -44,14 +46,6 @@ SPAN_TYPE = pa.list_(pa.struct([
 IMAGE_TYPE = pa.list_(pa.struct([
     ("idx", pa.int32()), ("uri", pa.string()), ("data", pa.large_binary())]))
 
-EXTRACT_SCHEMA_DDL = (
-    "url string, warc_ts timestamp, lang string, status string, fmt string, "
-    "text string, text_md string, doctags string, text_html string, "
-    "text_html_split string, text_json string, "
-    "spans array<struct<start:bigint,end:bigint,kind:string,path:string>>, "
-    "images array<struct<idx:int,uri:string,data:binary>>, "
-    "n_blocks int, bytes_in bigint, error string")
-
 _EXTRACT_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
     ("lang", pa.string()), ("status", pa.string()), ("fmt", pa.string()),
@@ -63,8 +57,9 @@ _EXTRACT_ARROW = pa.schema([
 
 # a tallying kernel's output: the EXTRACT row plus the part_id it came
 # with, which the wave write partitions by
-EXTRACT_PART_DDL = EXTRACT_SCHEMA_DDL + ", part_id int"
 _EXTRACT_PART_ARROW = _EXTRACT_ARROW.append(pa.field("part_id", pa.int32()))
+EXTRACT_SCHEMA = from_arrow_schema(_EXTRACT_ARROW)
+EXTRACT_PART_SCHEMA = from_arrow_schema(_EXTRACT_PART_ARROW)
 
 LINEAGE_COUNTERS = ("num_docs", "num_processed", "num_succeeded",
                     "num_partial", "num_failed", "num_skipped",
@@ -149,8 +144,8 @@ def extract_input_cols(columns: list[str], tally) -> list[str]:
     return cols if tally is None else cols + ["part_id"]
 
 
-def extract_ddl(tally) -> str:
-    return EXTRACT_SCHEMA_DDL if tally is None else EXTRACT_PART_DDL
+def extract_schema(tally) -> StructType:
+    return EXTRACT_SCHEMA if tally is None else EXTRACT_PART_SCHEMA
 
 
 def new_extract_out() -> dict:
@@ -239,13 +234,11 @@ def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
     return extract_batches
 
 
-CHUNK_SCHEMA_DDL = ("url string, chunk_idx int, chunk_text string, "
-                    "heading string, n_tokens int")
-
 _CHUNK_ARROW = pa.schema([
     ("url", pa.large_string()), ("chunk_idx", pa.int32()),
     ("chunk_text", pa.large_string()), ("heading", pa.string()),
     ("n_tokens", pa.int32())])
+CHUNK_SCHEMA = from_arrow_schema(_CHUNK_ARROW)
 
 
 def make_chunk_kernel(chunker: str = "hybrid", max_tokens: int = 256,

@@ -124,7 +124,6 @@ def test_split_spreads_segments(spark):
     rows = segs.collect()
     assert len(rows) == 7
     assert sorted(r.seg_idx for r in rows) == list(range(7))
-    assert all(r.n_segs == 7 for r in rows)
     # every segment is a valid mini-PDF with the ORIGINAL page count
     for r in rows:
         assert pdfmini.peek_n_pages(bytes(r.html)) == 7
@@ -222,20 +221,20 @@ def test_null_html_row_takes_normal_path(spark):
 
 
 def test_split_kernel_flushes_at_byte_budget(monkeypatch):
-    """The split kernel bounds its output batches at SPLIT_FLUSH_BYTES
-    (a worker holds about one oversized doc's segments, not a whole
-    input batch's), with the same rows as one unbounded batch."""
+    """Every kernel's frame (udfs.row_kernel) bounds its output batches
+    at BATCH_BYTE_BUDGET — the plain extraction kernel and the split
+    kernel alike — with the same rows as one unbounded batch."""
     import pyarrow as pa
-    from webextract import split
+    from webextract import split, udfs
     batch = pa.RecordBatch.from_pydict({
         "url": [f"pdf://{i}" for i in range(5)], "warc_ts": [TS] * 5,
         "html": _mk_pdfs()})
-
-    def run():
-        return list(split.make_split_kernel(ALL_FORMATS, 1)(iter([batch])))
-
-    ref = run()
-    monkeypatch.setattr(split, "SPLIT_FLUSH_BYTES", 300)
-    got = run()
-    assert len(ref) == 1 and len(got) > 1
-    assert [r for b in got for r in b.to_pylist()] == ref[0].to_pylist()
+    kernels = (udfs.make_extract_kernel(ALL_FORMATS),
+               split.make_split_kernel(ALL_FORMATS, 1))
+    refs = [list(kernel(iter([batch]))) for kernel in kernels]
+    # the budget is read when a kernel runs, not when it is built
+    monkeypatch.setattr(udfs, "BATCH_BYTE_BUDGET", 300)
+    for kernel, ref in zip(kernels, refs):
+        got = list(kernel(iter([batch])))
+        assert len(ref) == 1 and len(got) > 1, kernel.__name__
+        assert [r for b in got for r in b.to_pylist()] == ref[0].to_pylist()

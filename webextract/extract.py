@@ -29,9 +29,6 @@ from .formats import BINARY_PARSERS, TEXT_PARSERS, sniff
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from . import pdfmini
 
-SPAN_KINDS = ("heading", "para", "list_item", "table", "code", "quote",
-              "caption")
-
 
 @dataclass
 class Extracted:

@@ -28,17 +28,24 @@ COLUMN_X = 300       # column index = x // COLUMN_X
 _HDR = struct.Struct(">HHHB I")
 
 
-def write_pdf(pages_runs: list[list[tuple[int, int, int, str]]]) -> bytes:
-    """Serialize [[(x, y, font_size, text), ...] per page] -> bytes.
-    Caller is responsible for shuffling run order before passing in."""
-    runs = [(pi + 1, x, y, fs, t.encode("utf-8"))
-            for pi, page in enumerate(pages_runs)
-            for (x, y, fs, t) in page]
-    out = [MAGIC, struct.pack(">II", len(pages_runs), len(runs))]
-    for page, x, y, fs, tb in runs:
+def pack_runs(n_pages: int, runs: list[tuple]) -> bytes:
+    """(n_pages, [(page, x, y, font_size, text), ...]) -> payload bytes,
+    runs in the given order — the one serializer (``parse_runs`` is its
+    inverse)."""
+    out = [MAGIC, struct.pack(">II", n_pages, len(runs))]
+    for page, x, y, fs, text in runs:
+        tb = text.encode("utf-8")
         out.append(_HDR.pack(page, x, y, fs, len(tb)))
         out.append(tb)
     return b"".join(out)
+
+
+def write_pdf(pages_runs: list[list[tuple[int, int, int, str]]]) -> bytes:
+    """Serialize [[(x, y, font_size, text), ...] per page] -> bytes.
+    Caller is responsible for shuffling run order before passing in."""
+    return pack_runs(len(pages_runs), [
+        (pi + 1, x, y, fs, t)
+        for pi, page in enumerate(pages_runs) for (x, y, fs, t) in page])
 
 
 def parse_runs(payload: bytes) -> tuple[int, list[tuple[int, int, int, int, str]]]:
@@ -74,15 +81,15 @@ def reading_order(runs: list[tuple[int, int, int, int, str]]):
 
 
 def run_level(font_size: int) -> int:
-    """Heading classification by font size — the single source of truth
-    shared with the split tier (split.py), so a threshold change can
-    never break split/unsplit byte-identity."""
+    """Heading classification by font size.  The split tier parses each
+    page group with ``parse_pdf_blocks`` too, so there is no second
+    classifier to keep in step."""
     return 1 if font_size >= 24 else (2 if font_size >= 18 else 0)
 
 
 def pdf_block(page: int, text: str, level: int, idx: int) -> Block:
-    """One ordered run -> Block row, shared with the split tier's merge
-    (global run index `idx` is the caller's concern)."""
+    """One ordered run -> Block row (the run index ``idx`` is the
+    caller's concern; the split tier's merge renumbers it doc-global)."""
     return Block(
         idx=idx, tag=f"h{level}" if level else "p",
         kind="heading" if level else "para",

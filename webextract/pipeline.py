@@ -25,13 +25,16 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from .dom import parse_anchors, parse_metadata
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .udfs import (CHUNK_SCHEMA, LINEAGE_COUNTERS, extract_schema,
                    extract_input_cols, make_chunk_kernel, make_extract_kernel,
-                   new_tally, part_counters)
+                   new_tally, part_counters, row_kernel)
 
 DEFAULT_PARTITIONS = 64
 
@@ -47,9 +50,12 @@ def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
 
     A pure narrow map: scan splits feed the Arrow kernel directly — raw
     HTML is NEVER shuffled (at 100 TB the payload shuffle IS the job
-    cost; measured 1.5-3× wall locally too).  Skew bombs are defused
-    inside the kernel by byte-budget rebatching, and scan-split size is
-    the knob for straggler bound (spark.sql.files.maxPartitionBytes).
+    cost; measured 1.5-3× wall locally too).  The kernel's byte budget
+    (udfs.row_kernel) bounds only its output batches: a skew bomb's
+    whole input batch (≤ maxRecordsPerBatch rows) is in worker memory
+    first.  Scan-split size is the knob for straggler bound
+    (spark.sql.files.maxPartitionBytes), and ``split_bytes``
+    (split.extracted_split_df) spreads a giant document over tasks.
     ``cpus`` is accepted for call-site compatibility and unused.
 
     ``tally`` (udfs.new_tally): ``pages`` carries ``part_id``, the
@@ -61,8 +67,10 @@ def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                           extract_schema(tally))
 
 
-LINKS_SCHEMA_DDL = ("url string, link_no int, href string, "
-                    "anchor string, boiler boolean, semantic boolean")
+_LINKS_ARROW = pa.schema([
+    ("url", pa.large_string()), ("link_no", pa.int32()),
+    ("href", pa.large_string()), ("anchor", pa.large_string()),
+    ("boiler", pa.bool_()), ("semantic", pa.bool_())])
 
 
 def links_df(pages: DataFrame) -> DataFrame:
@@ -79,43 +87,22 @@ def links_df(pages: DataFrame) -> DataFrame:
     document-order index (reference conversion keeps hyperlinks inside
     its document items; here the link surface is a first-class
     extraction output)."""
-    import pyarrow as pa
 
-    from .dom import parse_anchors
+    def links_row(row):
+        if row["html"]:
+            for i, (href, anchor, boiler, sem) in enumerate(
+                    parse_anchors(row["html"])):
+                yield {"url": row["url"], "link_no": i, "href": href,
+                       "anchor": anchor, "boiler": boiler,
+                       "semantic": sem}, len(href) + len(anchor)
 
-    src = pages.select("url", "html")
-
-    def kern(batches):
-        for b in batches:
-            urls = b.column("url").to_pylist()
-            htmls = b.column("html").to_pylist()
-            u_o, n_o, h_o, a_o, b_o, s_o = [], [], [], [], [], []
-            for u, payload in zip(urls, htmls):
-                if not payload:
-                    continue
-                for i, (href, anchor, boiler, sem) in enumerate(
-                        parse_anchors(payload)):
-                    u_o.append(u)
-                    n_o.append(i)
-                    h_o.append(href)
-                    a_o.append(anchor)
-                    b_o.append(boiler)
-                    s_o.append(sem)
-            yield pa.RecordBatch.from_pydict({
-                "url": pa.array(u_o, pa.large_string()),
-                "link_no": pa.array(n_o, pa.int32()),
-                "href": pa.array(h_o, pa.large_string()),
-                "anchor": pa.array(a_o, pa.large_string()),
-                "boiler": pa.array(b_o, pa.bool_()),
-                "semantic": pa.array(s_o, pa.bool_()),
-            })
-
-    return src.mapInArrow(kern, LINKS_SCHEMA_DDL)
+    return pages.select("url", "html").mapInArrow(
+        row_kernel(links_row, _LINKS_ARROW), from_arrow_schema(_LINKS_ARROW))
 
 
-META_SCHEMA_DDL = ("url string, title string, meta_description string, "
-                   "meta_robots string, og_title string, "
-                   "canonical_url string, html_lang string")
+_META_ARROW = pa.schema([(c, pa.large_string()) for c in (
+    "url", "title", "meta_description", "meta_robots", "og_title",
+    "canonical_url", "html_lang")])
 
 
 def metadata_df(pages: DataFrame) -> DataFrame:
@@ -131,35 +118,15 @@ def metadata_df(pages: DataFrame) -> DataFrame:
     hundred bytes — and the kernel's parse cost is hard-bounded to the
     <head> prefix (dom.parse_metadata), so a skew-bomb body costs
     nothing here."""
-    import pyarrow as pa
 
-    from .dom import parse_metadata
+    def meta_row(row):
+        if row["html"]:
+            vals = (row["url"], *parse_metadata(row["html"]))
+            yield (dict(zip(_META_ARROW.names, vals)),
+                   sum(len(v) for v in vals if v))
 
-    src = pages.select("url", "html")
-
-    def kern(batches):
-        for b in batches:
-            urls = b.column("url").to_pylist()
-            htmls = b.column("html").to_pylist()
-            cols = {k: [] for k in ("url", "title", "meta_description",
-                                    "meta_robots", "og_title",
-                                    "canonical_url", "html_lang")}
-            for u, payload in zip(urls, htmls):
-                if not payload:
-                    continue
-                t, d, r, og, canon, lang = parse_metadata(payload)
-                cols["url"].append(u)
-                cols["title"].append(t)
-                cols["meta_description"].append(d)
-                cols["meta_robots"].append(r)
-                cols["og_title"].append(og)
-                cols["canonical_url"].append(canon)
-                cols["html_lang"].append(lang)
-            yield pa.RecordBatch.from_pydict({
-                k: pa.array(v, pa.large_string())
-                for k, v in cols.items()})
-
-    return src.mapInArrow(kern, META_SCHEMA_DDL)
+    return pages.select("url", "html").mapInArrow(
+        row_kernel(meta_row, _META_ARROW), from_arrow_schema(_META_ARROW))
 
 
 def chunks_df(extracted: DataFrame, chunker: str = "hybrid",

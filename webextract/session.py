@@ -49,7 +49,9 @@ def get_spark(app: str = "webextract", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch size ≡ the reference's pipeline stage batching knob
         # (DOCLING_PERF_PAGE_BATCH_SIZE etc., settings.py:77-82) — but
-        # sized for throughput; byte-budget rebatching happens in udfs.py
+        # sized for throughput.  A kernel holds a whole input batch in
+        # memory: its byte budget (udfs.row_kernel) only caps the size
+        # of its output batches
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("WEBEXTRACT_DRIVER_MEM", "48g"))
         # Broadcast/shuffle blocks are only reclaimed when the JVM GCs,

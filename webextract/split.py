@@ -2,10 +2,12 @@
 
 Operator C11's scale path (SURVEY.md §2.3/§4.1; reference precedent
 examples/split_processing.py:73-118 — page-range fan-out followed by
-``DoclingDocument.concatenate``).  The in-kernel byte-budget rebatcher
-(udfs.py) bounds MEMORY per task, but a single 1 GB document still pins
-one task end-to-end; this tier spreads its parse across the cluster.
-It is one chain, parameterized by format:
+``DoclingDocument.concatenate``).  The kernels' byte budget (udfs.py)
+bounds only the size of their output batches: a single 1 GB document
+still pins one task end-to-end, and its whole input batch sits in that
+worker's memory; this tier spreads its parse across the cluster.
+It is one chain, parameterized by format; each kernel is a per-row
+function run by ``udfs.row_kernel``:
 
 1. split kernel (narrow 1->N mapInArrow): document-level admission runs
    HERE, once, on the whole payload, through the one-shot path's own
@@ -34,7 +36,6 @@ runs plain ``extract_document``.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import pyarrow as pa
 
@@ -46,11 +47,8 @@ from .dom import Block
 from .extract import (Extracted, admit_payload, extract_document, failed,
                       finish_blocks)
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .udfs import (Tally, append_extracted, extract_batch, extract_schema,
-                   extract_input_cols, make_extract_kernel, new_extract_out)
-
-SPLIT_BYTES = 8 * 1024 * 1024         # payloads >= this fan out
-SPLIT_FLUSH_BYTES = 64 * 1024 * 1024  # split-kernel output batch budget
+from .udfs import (extract_arrow, extract_input_cols, extract_schema,
+                   extracted_row, make_extract_kernel, row_kernel)
 
 # a segment row: its doc's carried columns, its place in the doc, the
 # doc's verdict (fmt/error only set with one), and the format's piece:
@@ -59,9 +57,8 @@ SPLIT_FLUSH_BYTES = 64 * 1024 * 1024  # split-kernel output batch budget
 _DOC_ARROW = [
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
     ("rid", pa.int64()), ("lang", pa.string()), ("part_id", pa.int32()),
-    ("seg_idx", pa.int32()), ("n_segs", pa.int32()),
-    ("orig_bytes", pa.int64()), ("verdict", pa.string()),
-    ("fmt", pa.string()), ("error", pa.string())]
+    ("seg_idx", pa.int32()), ("orig_bytes", pa.int64()),
+    ("verdict", pa.string()), ("fmt", pa.string()), ("error", pa.string())]
 _SEG_ARROW = pa.schema(_DOC_ARROW + [
     ("state", pa.string()), ("seg", pa.large_string()),
     ("html", pa.large_binary())])
@@ -79,73 +76,58 @@ _SEGX_SCHEMA = from_arrow_schema(_SEGX_ARROW)
 def split_frame(opt: ConvertOptions, fmt: str, cut):
     """mapInArrow 1->N: each oversized doc -> its segment rows.
     ``cut(payload)`` returns an admitted ``fmt`` payload's segments as
-    (state, seg, html) triples.  Output batches flush at
-    SPLIT_FLUSH_BYTES, which bounds worker memory to about one oversized
-    doc's segments, not a whole input batch's."""
+    (state, seg, html) triples.  A segment weighs the payload bytes it
+    carries, so an output batch holds about one budget of segments
+    however many an input batch's docs are cut into."""
 
-    def split_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows, acc = [], 0
-            for row in batch.to_pylist():
-                payload = row.pop("html")
-                row["orig_bytes"] = len(payload) if payload else 0
-                try:
-                    got, r = admit_payload(payload, opt)
-                    if r is None and got == fmt:
-                        r = cut(payload)
-                except Exception as e:
-                    # total-function contract (abort_on_error=false): a
-                    # corrupt payload becomes a failure ROW, never a
-                    # task failure — the one-shot kernel's row
-                    r = failed(e)
-                if isinstance(r, Extracted):
-                    segs = [{"verdict": r.status, "fmt": r.fmt,
-                             "error": r.error}]
-                elif r is None:
-                    segs = [{"verdict": "fallback", "fmt": got,
-                             "html": payload}]
-                else:
-                    segs = [{"verdict": "", "state": state, "seg": seg,
-                             "html": html} for state, seg, html in r]
-                for j, seg in enumerate(segs):
-                    rows.append(dict(row, seg_idx=j, n_segs=len(segs),
-                                     **seg))
-                    acc += len(seg.get("seg") or "") \
-                        + len(seg.get("html") or b"")
-                if acc >= SPLIT_FLUSH_BYTES:
-                    yield pa.RecordBatch.from_pylist(rows, _SEG_ARROW)
-                    rows, acc = [], 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, _SEG_ARROW)
+    def split_row(row):
+        payload = row.pop("html")
+        row["orig_bytes"] = len(payload) if payload else 0
+        try:
+            got, r = admit_payload(payload, opt)
+            if r is None and got == fmt:
+                r = cut(payload)
+        except Exception as e:
+            # total-function contract (abort_on_error=false): a corrupt
+            # payload becomes a failure ROW, never a task failure — the
+            # one-shot kernel's row
+            r = failed(e)
+        if isinstance(r, Extracted):
+            segs = [{"verdict": r.status, "fmt": r.fmt, "error": r.error}]
+        elif r is None:
+            segs = [{"verdict": "fallback", "fmt": got, "html": payload}]
+        else:
+            segs = [{"verdict": "", "state": state, "seg": seg, "html": html}
+                    for state, seg, html in r]
+        for j, seg in enumerate(segs):
+            yield (dict(row, seg_idx=j, **seg),
+                   len(seg.get("seg") or "") + len(seg.get("html") or b""))
 
-    return split_batches
+    return row_kernel(split_row, _SEG_ARROW)
 
 
 def seg_frame(parse):
     """mapInArrow: ``parse(row) -> (blocks, ok)`` each segment into a
-    block blob; ok=False means the parse stopped inside the segment."""
+    block blob; ok=False means the parse stopped inside the segment.
+    A row weighs its blob and fallback payload bytes."""
 
-    def seg_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = batch.to_pylist()
-            for r in rows:
-                blocks, ok = [], True
-                if not r["verdict"]:        # a doc's verdict rides along
-                    try:
-                        blocks, ok = parse(r)
-                    except Exception as e:  # total-function contract
-                        x = failed(e)
-                        r.update(verdict=x.status, fmt=x.fmt, error=x.error)
-                r["payload"] = r["html"] if r["verdict"] == "fallback" \
-                    else None
-                r["perr"] = not ok
-                # every Block field but idx, in declaration order
-                r["blocks"] = json.dumps(
-                    [list(vars(b).values())[1:] for b in blocks],
-                    separators=(",", ":")).encode("utf-8")
-            yield pa.RecordBatch.from_pylist(rows, _SEGX_ARROW)
+    def seg_row(r):
+        blocks, ok = [], True
+        if not r["verdict"]:        # a doc's verdict rides along
+            try:
+                blocks, ok = parse(r)
+            except Exception as e:  # total-function contract
+                x = failed(e)
+                r.update(verdict=x.status, fmt=x.fmt, error=x.error)
+        r["payload"] = r["html"] if r["verdict"] == "fallback" else None
+        r["perr"] = not ok
+        # every Block field but idx, in declaration order
+        r["blocks"] = json.dumps(
+            [list(vars(b).values())[1:] for b in blocks],
+            separators=(",", ":")).encode("utf-8")
+        yield r, len(r["blocks"]) + len(r["payload"] or b"")
 
-    return seg_batches
+    return row_kernel(seg_row, _SEGX_ARROW)
 
 
 def _merged_blocks(segs: list[dict]) -> list[Block]:
@@ -165,33 +147,25 @@ def _merged_blocks(segs: list[dict]) -> list[Block]:
 def merge_frame(opt: ConvertOptions, finish, tally=None):
     """mapInArrow merge over PRE-AGGREGATED rows (one row per doc with
     its segments collected and sorted): a verdict row, the fallback
-    lane, or ``finish(blocks, opt, url) -> Extracted``.  ``tally``: as
-    in udfs.make_extract_kernel.
+    lane, or ``finish(blocks, opt, url) -> Extracted``.  ``tally`` and
+    a row's weight (its doc's payload bytes): as in
+    udfs.make_extract_kernel.
 
     mapInArrow over collect_list-aggregated rows, NOT per-group
     applyInPandas: a grouped-map pays one pandas DataFrame round-trip
     PER DOCUMENT (measured ~7ms/doc — 35 s for a 5k-doc corpus), while
     one Arrow batch here carries hundreds of documents."""
 
-    def merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        counts = Tally(tally) if tally is not None else None
-        for batch in batches:
-            out = new_extract_out()
-            for r in batch.to_pylist():
-                if r["verdict"] == "fallback":
-                    x = extract_document(r["payload"], opt, r["url"])
-                elif r["verdict"]:
-                    x = Extracted(status=r["verdict"], fmt=r["fmt"],
-                                  error=r["error"])
-                else:
-                    x = finish(_merged_blocks(r["segs"]), opt, r["url"])
-                append_extracted(out, x, r["url"], r["warc_ts"], r["lang"],
-                                 r["orig_bytes"], r["part_id"])
-            yield extract_batch(out, counts)
-        if counts is not None:
-            counts.report()
+    def merge_row(r):
+        if r["verdict"] == "fallback":
+            x = extract_document(r["payload"], opt, r["url"])
+        elif r["verdict"]:
+            x = Extracted(status=r["verdict"], fmt=r["fmt"], error=r["error"])
+        else:
+            x = finish(_merged_blocks(r["segs"]), opt, r["url"])
+        yield extracted_row(x, r, r["orig_bytes"]), r["orig_bytes"]
 
-    return merge_batches
+    return row_kernel(merge_row, extract_arrow(tally), tally)
 
 
 def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
@@ -233,24 +207,15 @@ def _slice_pages(payload: bytes, pages_per_seg: int) -> list[bytes]:
     """Re-pack an admitted mini-PDF into per-page-group payloads that
     keep the ORIGINAL n_pages and page numbers (so page_range and the
     pdf/page[N] block paths are unchanged downstream)."""
-    import struct
     n_pages, runs = pdfmini.parse_runs(payload)
     by_page: dict[int, list] = {}
     for r in runs:
         by_page.setdefault(r[0], []).append(r)
     pages = sorted(by_page)
-    groups = [pages[i:i + pages_per_seg]
-              for i in range(0, len(pages), pages_per_seg)]
-    out = []
-    for grp in groups:
-        seg_runs = [r for p in grp for r in by_page[p]]
-        buf = [pdfmini.MAGIC, struct.pack(">II", n_pages, len(seg_runs))]
-        for page, x, y, fs, text in seg_runs:
-            tb = text.encode("utf-8")
-            buf.append(pdfmini._HDR.pack(page, x, y, fs, len(tb)))
-            buf.append(tb)
-        out.append(b"".join(buf))
-    return out or [payload]  # zero-run doc: one whole segment
+    return [pdfmini.pack_runs(n_pages, [r for p in pages[i:i + pages_per_seg]
+                                        for r in by_page[p]])
+            for i in range(0, len(pages), pages_per_seg)] \
+        or [payload]  # zero-run doc: one whole segment
 
 
 def _finish_pdf(blocks: list[Block], opt: ConvertOptions,
@@ -281,7 +246,7 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
 
 
 def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
-                       cpus: int = 32, split_bytes: int = SPLIT_BYTES,
+                       cpus: int = 32, *, split_bytes: int,
                        pages_per_seg: int = 1,
                        html_split: bool = False,
                        html_target_chars: int | None = None,

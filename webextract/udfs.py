@@ -8,18 +8,22 @@ SURVEY.md §7.4#1).  Strings/bytes are materialized from Arrow exactly
 once and results go back as large_string/large_binary arrays, so no
 pandas round-trip can alter bytes.
 
-Batch memory is bounded by a byte-budget rebatcher: a batch whose html
-payloads exceed ``BATCH_BYTE_BUDGET`` is split before processing, so one
-skew-bomb row cannot blow up Python worker memory (SURVEY.md §7.4#4);
-this mirrors the reference's stage batching knobs
-(/root/reference/docling_serve/settings.py:77-82).
+Every job-path kernel (here, split.py, htmlsplit.py, pipeline.py) is
+one frame, ``row_kernel``, around a per-row function.  The frame
+materializes each input batch (at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) as Python rows
+and flushes the output rows as one Arrow batch once their summed
+weight, in bytes as the per-row function counts them, reaches
+``BATCH_BYTE_BUDGET``.  The budget bounds the size of OUTPUT batches
+only: a skew-bomb row still costs its whole input batch in worker
+memory before any budget applies (SURVEY.md §7.4#4).
 
-Given a lineage accumulator (``new_tally``), the extraction kernels —
-this one and the split tiers' merge kernels — also tally each part's
-lineage counters (``LINEAGE_COUNTERS``) as they produce its rows: the
-pass that already holds every row's status, ``bytes_in`` and ``text``
-counts them, so a wave commit needs no second Spark pass over the
-written stage.  Each kernel reports its tallies once, when its
+Given a lineage accumulator (``new_tally``), the frame of the
+extraction kernel and of the split tiers' merge kernels also tallies
+each part's lineage counters (``LINEAGE_COUNTERS``) as it flushes its
+rows: the pass that already holds every row's status, ``bytes_in`` and
+``text`` counts them, so a wave commit needs no second Spark pass over
+the written stage.  Each kernel reports its tallies once, when its
 partition ends, under its task's ``(stage_id, partition_id)``.
 """
 
@@ -34,7 +38,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from .chunk import chunk_blocks_from_spans
-from .extract import extract_document
+from .extract import Extracted, extract_document
 from .options import ConvertOptions, DEFAULT_OPTIONS
 
 BATCH_BYTE_BUDGET = 64 * 1024 * 1024
@@ -58,8 +62,6 @@ _EXTRACT_ARROW = pa.schema([
 # a tallying kernel's output: the EXTRACT row plus the part_id it came
 # with, which the wave write partitions by
 _EXTRACT_PART_ARROW = _EXTRACT_ARROW.append(pa.field("part_id", pa.int32()))
-EXTRACT_SCHEMA = from_arrow_schema(_EXTRACT_ARROW)
-EXTRACT_PART_SCHEMA = from_arrow_schema(_EXTRACT_PART_ARROW)
 
 LINEAGE_COUNTERS = ("num_docs", "num_processed", "num_succeeded",
                     "num_partial", "num_failed", "num_skipped",
@@ -109,11 +111,10 @@ class Tally:
         self.acc = acc
         self.parts: dict[int, list[int]] = {}
 
-    def count(self, out: dict) -> None:
-        """Count the rows of an EXTRACT column-list dict."""
-        for part_id, status, bytes_in, text in zip(
-                out["part_id"], out["status"], out["bytes_in"],
-                out["text"]):
+    def count(self, rows: list[dict]) -> None:
+        """Count EXTRACT row dicts (with their part_id)."""
+        for row in rows:
+            part_id, status, text = row["part_id"], row["status"], row["text"]
             c = self.parts.get(part_id)
             if c is None:
                 c = self.parts[part_id] = [0] * len(LINEAGE_COUNTERS)
@@ -124,7 +125,7 @@ class Tally:
             slot = _STATUS_SLOT.get(status)
             if slot is not None:
                 c[slot] += 1
-            c[6] += bytes_in or 0
+            c[6] += row["bytes_in"] or 0
             # bytes, not codepoints: len(text) undercounts non-ASCII
             # text up to 4x
             if text:
@@ -133,6 +134,44 @@ class Tally:
     def report(self) -> None:
         ctx = TaskContext.get()
         self.acc.add({(ctx.stageId(), ctx.partitionId()): self.parts})
+
+
+def row_kernel(per_row, arrow_schema: pa.Schema, tally=None):
+    """The one mapInArrow frame.  ``per_row(row)`` yields
+    ``(out_row, n_bytes)`` pairs for each input row dict; the output
+    rows flush as one ``arrow_schema`` batch once their summed n_bytes
+    reach ``BATCH_BYTE_BUDGET`` (read when the kernel runs) and at the
+    end of every input batch.  With a ``tally`` accumulator the flushed
+    rows are EXTRACT rows with their part_id: the frame counts them and
+    reports once, when the partition ends.  The kernel is named after
+    ``per_row`` (``extract_row`` -> ``extract_batches``), which is the
+    name EXPLAIN shows."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        budget = BATCH_BYTE_BUDGET
+        counts = Tally(tally) if tally is not None else None
+
+        def flush(rows):
+            if counts is not None:
+                counts.count(rows)
+            return pa.RecordBatch.from_pylist(rows, arrow_schema)
+
+        for batch in batches:
+            rows, acc = [], 0
+            for row in batch.to_pylist():
+                for out, n_bytes in per_row(row):
+                    rows.append(out)
+                    acc += n_bytes
+                    if acc >= budget:
+                        yield flush(rows)
+                        rows, acc = [], 0
+            if rows:
+                yield flush(rows)
+        if counts is not None:
+            counts.report()
+
+    kernel.__name__ = per_row.__name__.removesuffix("_row") + "_batches"
+    return kernel
 
 
 def extract_input_cols(columns: list[str], tally) -> list[str]:
@@ -144,94 +183,47 @@ def extract_input_cols(columns: list[str], tally) -> list[str]:
     return cols if tally is None else cols + ["part_id"]
 
 
+def extract_arrow(tally) -> pa.Schema:
+    """An extraction kernel's output: a tallying one keeps part_id."""
+    return _EXTRACT_ARROW if tally is None else _EXTRACT_PART_ARROW
+
+
 def extract_schema(tally) -> StructType:
-    return EXTRACT_SCHEMA if tally is None else EXTRACT_PART_SCHEMA
+    return from_arrow_schema(extract_arrow(tally))
 
 
-def new_extract_out() -> dict:
-    """Fresh column-list dict for the EXTRACT schema (plus part_id)."""
-    return {f.name: [] for f in _EXTRACT_PART_ARROW}
+def extracted_row(r: Extracted, row: dict, bytes_in: int) -> dict:
+    """One Extracted result + the input row it came from (url, warc_ts,
+    lang, part_id) -> an EXTRACT row dict — the single place an
+    Extracted becomes a row (the plain kernel and the split tiers'
+    merge kernels both call this)."""
+    return {"url": row["url"], "warc_ts": row.get("warc_ts"),
+            "lang": row.get("lang"), "status": r.status, "fmt": r.fmt,
+            "text": r.text, "text_md": r.text_md, "doctags": r.doctags,
+            "text_html": r.text_html, "text_html_split": r.text_html_split,
+            "text_json": r.text_json,
+            "spans": [{"start": s, "end": e, "kind": k, "path": p}
+                      for (s, e, k, p) in r.spans],
+            "images": [{"idx": i, "uri": u, "data": d}
+                       for (i, u, d) in r.images],
+            "n_blocks": r.n_blocks, "bytes_in": bytes_in, "error": r.error,
+            "part_id": row.get("part_id")}
 
 
-def extract_batch(out: dict, counts: Tally | None) -> pa.RecordBatch:
-    """Column lists -> one output batch.  With ``counts`` the rows are
-    tallied and the batch keeps their part_id."""
-    schema = _EXTRACT_ARROW
-    if counts is not None:
-        counts.count(out)
-        schema = _EXTRACT_PART_ARROW
-    return pa.RecordBatch.from_pydict(
-        {f.name: pa.array(out[f.name], f.type) for f in schema})
-
-
-def append_extracted(out: dict, r, url, ts, lang, bytes_in,
-                     part_id) -> None:
-    """Append one Extracted result as a row into the column lists —
-    the single place an Extracted becomes an EXTRACT-schema row (the
-    batch kernel and the split tiers' merge kernels all call this)."""
-    out["url"].append(url)
-    out["warc_ts"].append(ts)
-    out["lang"].append(lang)
-    out["status"].append(r.status)
-    out["fmt"].append(r.fmt)
-    out["text"].append(r.text)
-    out["text_md"].append(r.text_md)
-    out["doctags"].append(r.doctags)
-    out["text_html"].append(r.text_html)
-    out["text_html_split"].append(r.text_html_split)
-    out["text_json"].append(r.text_json)
-    out["spans"].append([{"start": s, "end": e, "kind": k, "path": p}
-                         for (s, e, k, p) in r.spans])
-    out["images"].append([{"idx": i, "uri": u, "data": d}
-                          for (i, u, d) in r.images])
-    out["n_blocks"].append(r.n_blocks)
-    out["bytes_in"].append(bytes_in)
-    out["error"].append(r.error)
-    out["part_id"].append(part_id)
-
-
-def _split_by_budget(htmls: list, budget: int) -> Iterator[tuple[int, int]]:
-    """Yield (start, end) slices whose summed payload <= budget
-    (single oversized rows get their own slice)."""
-    start, acc = 0, 0
-    for i, h in enumerate(htmls):
-        n = len(h) if h is not None else 0
-        if acc and acc + n > budget:
-            yield start, i
-            start, acc = i, 0
-        acc += n
-    if start < len(htmls):
-        yield start, len(htmls)
-
-
-def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                        budget: int = BATCH_BYTE_BUDGET, tally=None):
+def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
     """Returns the mapInArrow function for the extract stage (operators
     C1-C4, C10 of SURVEY.md §2.3 fused into one narrow pass).  With a
     ``tally`` accumulator the input carries ``part_id``, which the
-    output keeps, and the kernel reports its lineage counters."""
+    output keeps, and the kernel reports its lineage counters.  A row
+    weighs its payload bytes."""
 
-    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        counts = Tally(tally) if tally is not None else None
-        for batch in batches:
-            cols = {n: batch.column(n) for n in batch.schema.names}
-            urls = cols["url"].to_pylist()
-            htmls = cols["html"].to_pylist()
-            ts = cols["warc_ts"].to_pylist() if "warc_ts" in cols else [None] * len(urls)
-            langs = cols["lang"].to_pylist() if "lang" in cols else [None] * len(urls)
-            pids = cols["part_id"].to_pylist() if "part_id" in cols else [None] * len(urls)
-            for lo, hi in _split_by_budget(htmls, budget):
-                out = new_extract_out()
-                for i in range(lo, hi):
-                    r = extract_document(htmls[i], opt, urls[i])
-                    append_extracted(out, r, urls[i], ts[i], langs[i],
-                                     len(htmls[i]) if htmls[i] else 0,
-                                     pids[i])
-                yield extract_batch(out, counts)
-        if counts is not None:
-            counts.report()
+    def extract_row(row):
+        html = row["html"]
+        bytes_in = len(html) if html else 0
+        yield extracted_row(extract_document(html, opt, row["url"]), row,
+                            bytes_in), bytes_in
 
-    return extract_batches
+    return row_kernel(extract_row, extract_arrow(tally), tally)
 
 
 _CHUNK_ARROW = pa.schema([
@@ -253,24 +245,12 @@ def make_chunk_kernel(chunker: str = "hybrid", max_tokens: int = 256,
     model-name-selects-vocab parameterization, app.py:1145-1150) —
     an n_merges-row catalog artifact shipped in the task closure."""
 
-    def chunk_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            texts = batch.column("text").to_pylist()
-            spans = batch.column("spans").to_pylist()
-            out = {"url": [], "chunk_idx": [], "chunk_text": [],
-                   "heading": [], "n_tokens": []}
-            for u, t, sp in zip(urls, texts, spans):
-                for c in chunk_blocks_from_spans(t or "", sp or [], chunker,
-                                                 max_tokens, tokenizer,
-                                                 merge_peers, merges):
-                    out["url"].append(u)
-                    out["chunk_idx"].append(c.idx)
-                    out["chunk_text"].append(c.text)
-                    out["heading"].append(c.heading)
-                    out["n_tokens"].append(c.n_tokens)
-            yield pa.RecordBatch.from_pydict(
-                {f.name: pa.array(out[f.name], f.type)
-                 for f in _CHUNK_ARROW})
+    def chunk_row(row):
+        for c in chunk_blocks_from_spans(row["text"] or "", row["spans"] or [],
+                                         chunker, max_tokens, tokenizer,
+                                         merge_peers, merges):
+            yield {"url": row["url"], "chunk_idx": c.idx,
+                   "chunk_text": c.text, "heading": c.heading,
+                   "n_tokens": c.n_tokens}, len(c.text)
 
-    return chunk_batches
+    return row_kernel(chunk_row, _CHUNK_ARROW)

@@ -137,7 +137,7 @@ def test_streaming_sink_counters(spark, tmp_path):
         .repartition(3).write.parquet(src)
     root = str(tmp_path / "ice")
     q = stream_extract_to_icetable(spark, src, root,
-                                   str(tmp_path / "ckpt"), cpus=2,
+                                   str(tmp_path / "ckpt"),
                                    partitions=8)
     assert q.awaitTermination(120), "stream did not drain in time"
     tbl = IceTable(root)

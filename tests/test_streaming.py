@@ -35,7 +35,7 @@ def _await(q, timeout=120):
 def test_stream_extract_matches_batch(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_extract(spark, pages_dir, out, ckpt, cpus=4)
+    q = stream_extract(spark, pages_dir, out, ckpt)
     _await(q)
     got = spark.read.parquet(out)
     assert got.count() == 120
@@ -50,7 +50,7 @@ def test_stream_extract_matches_batch(spark, pages_dir, tmp_path):
 
     # resume: no new input files → no new epochs, nothing reprocessed
     epochs_before = set(os.listdir(out))
-    q2 = stream_extract(spark, pages_dir, out, ckpt, cpus=4)
+    q2 = stream_extract(spark, pages_dir, out, ckpt)
     _await(q2)
     assert set(os.listdir(out)) == epochs_before
     assert spark.read.parquet(out).count() == 120
@@ -59,12 +59,12 @@ def test_stream_extract_matches_batch(spark, pages_dir, tmp_path):
 def test_stream_new_files_incremental(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out2")
     ckpt = str(tmp_path / "ckpt2")
-    _await(stream_extract(spark, pages_dir, out, ckpt, cpus=4))
+    _await(stream_extract(spark, pages_dir, out, ckpt))
     # a new crawl drop arrives
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .filter("doc_id >= 200 and doc_id < 240")
     docs_to_pages(docs).write.mode("append").parquet(pages_dir)
-    _await(stream_extract(spark, pages_dir, out, ckpt, cpus=4))
+    _await(stream_extract(spark, pages_dir, out, ckpt))
     assert spark.read.parquet(out).count() == 160
 
 
@@ -142,7 +142,7 @@ def test_stream_to_icetable_exactly_once(spark, pages_dir, tmp_path):
     from webextract.streaming import stream_extract_to_icetable
     root = str(tmp_path / "ice")
     ckpt = str(tmp_path / "ckpt_ice")
-    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt, cpus=4))
+    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt))
     tbl = IceTable(root)
     assert tbl.read(spark).count() == 120
     snaps1 = tbl.snapshots()
@@ -153,7 +153,7 @@ def test_stream_to_icetable_exactly_once(spark, pages_dir, tmp_path):
     assert snaps1[0]["versions"]["options_hash"]
 
     # restart, nothing new: no extra snapshots, count unchanged
-    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt, cpus=4))
+    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt))
     assert len(IceTable(root).snapshots()) == len(snaps1)
     assert tbl.read(spark).count() == 120
 
@@ -161,7 +161,7 @@ def test_stream_to_icetable_exactly_once(spark, pages_dir, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .limit(150).filter("doc_id >= 120")
     docs_to_pages(docs).repartition(2).write.mode("append").parquet(pages_dir)
-    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt, cpus=4))
+    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt))
     n_new = docs.count()
     assert tbl.read(spark).count() == 120 + n_new
     assert len(IceTable(root).snapshots()) == len(snaps1) + 1
@@ -177,11 +177,11 @@ def test_checkpoint_reset_recommits_fresh_run_ids(spark, pages_dir, tmp_path):
     from webextract.streaming import stream_extract_to_icetable
     root = str(tmp_path / "ice_reset")
     ckpt = str(tmp_path / "ckpt_reset")
-    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt, cpus=4))
+    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt))
     n1 = IceTable(root).read(spark).count()
     assert n1 > 0
     shutil.rmtree(ckpt)    # operator resets the checkpoint, table kept
-    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt, cpus=4))
+    _await(stream_extract_to_icetable(spark, pages_dir, root, ckpt))
     # the replayed input COMMITS (fresh run_ids) — a stream table
     # legitimately holds both deliveries; silent drop was the bug
     assert IceTable(root).read(spark).count() == 2 * n1

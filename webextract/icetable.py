@@ -7,6 +7,10 @@ same shape a real catalog would slot into:
 * data files live wherever they were written (``files/<run_id>/...``);
   the MANIFEST is the only source of truth — orphan files from a killed
   run are simply never referenced (exactly Iceberg's model).
+* ``IceTable.stage`` owns the staging layout: every writer stages its
+  frame into ``files/<run_id>/wave-NNNN/`` through it and commits the
+  data files it lists, and the orphan GC judges files with the same
+  data-file predicate, so a commit lists exactly what its write made.
 * a snapshot is a JSON manifest listing committed partitions, their data
   files, and per-partition lineage counters; snapshots chain via
   ``parent_id``.
@@ -23,8 +27,22 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
+from urllib.parse import unquote
+
+
+def _is_data_file(name: str) -> bool:
+    """A data file of Spark's parquet output; ``_SUCCESS`` and ``.crc``
+    markers are not."""
+    return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+def _literal(path: str) -> str:
+    """``path`` escaped for the Hadoop glob expansion every Spark read
+    applies, so a table root such as ``t[1]*`` names only itself."""
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
 
 
 class CommitConflict(RuntimeError):
@@ -192,7 +210,7 @@ class IceTable:
         newer than the file backfill NULL (typed)."""
         from pyspark.sql import functions as SF
         cur = self.current_schema()
-        df = spark.read.parquet(*files)
+        df = spark.read.parquet(*map(_literal, files))
         if cur is None:
             return df
         hist = self._schema(schema_id if schema_id is not None else 0)
@@ -275,7 +293,7 @@ class IceTable:
         (a delete written before a rename still applies)."""
         from pyspark.sql import functions as SF
         _, files, key_cols, dsid = delete
-        df = spark.read.parquet(*files)
+        df = spark.read.parquet(*map(_literal, files))
         cols = [SF.col(c).alias(self._current_name(c, dsid) or c)
                 for c in key_cols]
         return df.select(*cols)
@@ -317,12 +335,8 @@ class IceTable:
         whose ``key_cols`` tuple appears in ``keys_df`` disappear from
         every read surface; no data file is rewritten (merge-on-read —
         compaction applies deletes physically later)."""
-        out_dir = self.staging_dir(run_id, 0)
-        (keys_df.select(*key_cols).distinct()
-         .coalesce(1).write.mode("overwrite").parquet(out_dir))
-        files = sorted(
-            os.path.join(out_dir, fn) for fn in os.listdir(out_dir)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_")))
+        files = self.stage(keys_df.select(*key_cols).distinct().coalesce(1),
+                           run_id).get((), [])
         return self.commit(run_id, [], committed_at,
                            expected_parent=expected_parent,
                            delete={"files": files,
@@ -336,17 +350,10 @@ class IceTable:
         whose data files add the new rows — sequence numbers exempt the
         snapshot's own files from its own delete, so readers see either
         the old rows or the new ones, never both, never neither."""
-        out_dir = self.staging_dir(run_id, 1)
-        rows_df.write.mode("overwrite").parquet(out_dir)
-        data_files = sorted(
-            os.path.join(out_dir, fn) for fn in os.listdir(out_dir)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_")))
-        del_dir = self.staging_dir(run_id, 0)
-        (rows_df.select(*key_cols).distinct()
-         .coalesce(1).write.mode("overwrite").parquet(del_dir))
-        del_files = sorted(
-            os.path.join(del_dir, fn) for fn in os.listdir(del_dir)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_")))
+        data_files = self.stage(rows_df, run_id, 1).get((), [])
+        del_files = self.stage(
+            rows_df.select(*key_cols).distinct().coalesce(1),
+            run_id).get((), [])
         return self.commit(
             run_id,
             [{"part_id": part_id, "files": data_files, "counters": {}}],
@@ -423,7 +430,11 @@ class IceTable:
         without statistics is simply omitted (scan() then cannot prune
         on it — correct, never wrong)."""
         import pyarrow.parquet as pq
-        md = pq.ParquetFile(path).metadata
+        return IceTable._column_bounds(pq.ParquetFile(path).metadata, cols)
+
+    @staticmethod
+    def _column_bounds(md, cols: tuple[str, ...]) -> dict:
+        """file_column_stats over an already-read footer."""
         names = {md.schema.column(i).name: i
                  for i in range(md.num_columns)}
         out = {}
@@ -872,15 +883,12 @@ class IceTable:
         group's partition values + spec_id, ready for commit().
         Derived columns live only in directory names — data files
         keep exactly the source columns (hidden partitioning)."""
-        from urllib.parse import unquote
-
         from pyspark.sql import functions as SF
         cur = self.current_partition_spec()
         if cur is None:
             raise ValueError("no partition spec set")
         spec_id, fields = cur
-        out = self.staging_dir(run_id, wave)
-        names = [n for n, *_r in fields]
+        names = tuple(n for n, *_r in fields)
         numeric_types = ("tinyint", "smallint", "int", "bigint",
                          "float", "double")
         dtypes = dict(df.dtypes)
@@ -890,24 +898,11 @@ class IceTable:
                 numeric_types + ("decimal",))
             staged = staged.withColumn(
                 name, self.partition_expr(tf, src, param, numeric=num))
-        (staged.repartition(*[SF.col(n) for n in names])
-         .write.mode("overwrite").partitionBy(*names).parquet(out))
-        entries = []
-        for dirpath, _dirs, files in os.walk(out):
-            pq = [os.path.join(dirpath, fn) for fn in sorted(files)
-                  if fn.endswith(".parquet")
-                  and not fn.startswith((".", "_"))]
-            if not pq:
-                continue
-            vals = {}
-            for seg in os.path.relpath(dirpath, out).split(os.sep):
-                k, eq, v = seg.partition("=")
-                if eq:
-                    vals[k] = unquote(v)
-            entries.append({"part_id": part_id, "files": pq,
-                            "counters": {}, "partition": vals,
-                            "spec_id": spec_id})
-        return entries
+        staged = self.stage(staged.repartition(*[SF.col(n) for n in names]),
+                            run_id, wave, by=names)
+        return [{"part_id": part_id, "files": files, "counters": {},
+                 "partition": dict(zip(names, vals)), "spec_id": spec_id}
+                for vals, files in staged.items()]
 
     def data_files_with_partition(self, as_of: str | None = None
                                   ) -> dict:
@@ -1158,11 +1153,36 @@ class IceTable:
         path = self.artifact_dir(kind, snapshot_id)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             return None
-        return spark.read.parquet(path)
+        return spark.read.parquet(_literal(path))
 
     # -- write side -----------------------------------------------------
     def staging_dir(self, run_id: str, wave: int) -> str:
         return os.path.join(self.files_dir, run_id, f"wave-{wave:04d}")
+
+    def stage(self, df, run_id: str, wave: int = 0,
+              by: tuple[str, ...] = ()) -> dict[tuple[str, ...], list[str]]:
+        """Write ``df`` (overwrite; ``partitionBy(*by)`` when ``by`` is
+        given) into ``staging_dir(run_id, wave)`` and return its data
+        files, sorted, keyed by their partition values: the URL-unquoted
+        ``k=v`` directory values in ``by`` order, ``()`` without ``by``.
+        The only reader of Spark's output layout — every staged write
+        lists its files here, so a commit lists exactly the files its
+        write produced."""
+        out = self.staging_dir(run_id, wave)
+        writer = df.write.mode("overwrite")
+        if by:
+            writer = writer.partitionBy(*by)
+        writer.parquet(out)
+        staged = {}
+        for dirpath, _dirs, names in os.walk(out):
+            files = sorted(os.path.join(dirpath, n) for n in names
+                           if _is_data_file(n))
+            if files:
+                rel = os.path.relpath(dirpath, out)
+                staged[() if rel == os.curdir else tuple(
+                    unquote(seg.partition("=")[2])
+                    for seg in rel.split(os.sep))] = files
+        return dict(sorted(staged.items()))
 
     def _commit_lock(self):
         """Advisory O_EXCL lock around the _CURRENT read-modify-write:
@@ -1216,49 +1236,38 @@ class IceTable:
         chain, raise CommitConflict under the lock instead of silently
         dropping the interleaved snapshot's files from a rewrite's
         replacement list (round-4 review: compact TOCTOU)."""
-        if stats_cols:
-            # footer-only reads of exactly the files being committed —
-            # the writer-records-bounds contract (never a table scan).
-            # Columns the caller pre-populated (compact() copying
-            # bounds forward for carried files) are NOT re-read; only
-            # the tracked columns MISSING from a file's dict are
-            # footer-read and merged in, so a rewrite neither re-opens
-            # every kept footer (round-4 review) nor permanently
-            # strands kept files without bounds for a newly tracked
-            # column like a fresh sort_by (second-review).
-            for p in partitions:
-                fs = {k: dict(v)
-                      for k, v in (p.get("file_stats") or {}).items()}
-                for f in p["files"]:
-                    have = fs.get(f, {})
-                    missing = tuple(c for c in stats_cols
-                                    if c not in have)
-                    if not missing:
-                        continue
-                    st = self.file_column_stats(f, missing)
-                    if st:
-                        fs[f] = {**have, **st}
-                if fs:
-                    p["file_stats"] = fs
-        # per-file record counts (Iceberg data_file.record_count):
-        # carried files keep their committed count (a rewrite must not
-        # re-open every kept footer — the file_stats rule), only files
-        # new to the table get ONE footer-only read.  This is what
-        # makes count(*) a metadata-only answer (stats_agg).
-        prior_rows = self.data_file_rows()
+        # footer-only reads of exactly the files being committed — the
+        # writer-records-bounds contract (never a table scan): each
+        # file's footer is opened at most once, for the tracked
+        # ``stats_cols`` missing from its bounds and for its record
+        # count (Iceberg data_file.record_count, what makes count(*) a
+        # metadata-only answer: stats_agg).  Bounds and counts the
+        # caller passes (compact() copying them forward for carried
+        # files) are NOT re-read, so a rewrite neither re-opens every
+        # kept footer (round-4 review) nor permanently strands kept
+        # files without bounds for a newly tracked column like a fresh
+        # sort_by (second-review).
+        import pyarrow.parquet as pq
         for p in partitions:
+            fs = {k: dict(v) for k, v in (p.get("file_stats") or {}).items()}
             fr = dict(p.get("file_rows") or {})
             for f in p["files"]:
-                if f in fr:
-                    continue
-                if f in prior_rows:
-                    fr[f] = prior_rows[f]
+                have = fs.get(f, {})
+                missing = tuple(c for c in stats_cols if c not in have)
+                if not missing and f in fr:
                     continue
                 try:
-                    import pyarrow.parquet as pq
-                    fr[f] = pq.ParquetFile(f).metadata.num_rows
+                    md = pq.ParquetFile(f).metadata
                 except OSError:
-                    pass
+                    if missing:
+                        raise
+                    continue
+                fr.setdefault(f, md.num_rows)
+                st = self._column_bounds(md, missing)
+                if st:
+                    fs[f] = {**have, **st}
+            if fs:
+                p["file_stats"] = fs
             if fr:
                 p["file_rows"] = fr
         lock = self._commit_lock()
@@ -1467,7 +1476,6 @@ class IceTable:
         n_out = max(1, -(-sum(sizes[f] for f in small)
                          // target_file_bytes))
         run_id = "compact-" + uuid.uuid4().hex[:8]
-        out_dir = self.staging_dir(run_id, 0)
         # schema-mapped + delete-applying read: rewritten rows come out
         # under the CURRENT schema's names (rename applied, added
         # columns NULL-backfilled) with deleted keys physically gone —
@@ -1490,10 +1498,7 @@ class IceTable:
                   .sortWithinPartitions(sort_by))
         else:
             df = df.coalesce(n_out)
-        df.write.mode("overwrite").parquet(out_dir)
-        new_files = sorted(
-            os.path.join(out_dir, fn) for fn in os.listdir(out_dir)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_")))
+        new_files = self.stage(df, run_id).get((), [])
         if stats_cols is None:
             # stats keys are write-time names: map each through its
             # file's schema to the CURRENT name before unioning, so a
@@ -1520,15 +1525,19 @@ class IceTable:
                 new_stats[f] = st
         while True:
             prior = self.data_file_stats(as_of=base)
+            prior_rows = self.data_file_rows(as_of=base)
             try:
                 part = {"part_id": -1, "files": keep + new_files,
                         "counters": {},
-                        # kept files' bounds copied forward — commit()
-                        # footer-reads only columns still missing
+                        # kept files' bounds and row counts copied
+                        # forward — commit() footer-reads only what is
+                        # still missing
                         "file_stats": {
                             **{f: prior[f] for f in keep
                                if prior.get(f)},
-                            **new_stats}}
+                            **new_stats},
+                        "file_rows": {f: prior_rows[f] for f in keep
+                                      if f in prior_rows}}
                 # kept files keep their own write-time schema ids (the
                 # rewrite snapshot's schema_id covers only the files it
                 # actually rewrote under the current schema)
@@ -1551,8 +1560,9 @@ class IceTable:
                 # this rewrite's replacement list stale (it would
                 # resurrect the deleted rows); the staged outputs stay
                 # orphans until GC, the caller re-compacts.  The
-                # folded wave's stats are re-derived from the new
-                # head on the next pass (prior is rebuilt per attempt).
+                # folded wave's stats and row counts are re-derived
+                # from the new head on the next pass (prior and
+                # prior_rows are rebuilt per attempt).
                 folded = self.changed_files_with_schema(base, as_of=head)
                 keep.extend(f for f, _ in folded)
                 sid_of.update(folded)
@@ -1657,10 +1667,10 @@ class IceTable:
         ``grace_seconds`` skips files younger than the horizon —
         Iceberg's remove_orphan_files ``older_than`` contract: a live
         run's staged-but-uncommitted wave files are unreferenced by
-        construction, and GC'ing them mid-run makes the eventual
-        commit glob an empty staging dir and mark the part done with
-        no files (round-4 review).  Callers that cannot enumerate live
-        run_ids (the CLI) pass a grace window instead."""
+        construction, and GC'ing them mid-run deletes rows the run is
+        about to commit: its commit would list missing files, or none
+        for a part that had rows (round-4 review).  Callers that cannot
+        enumerate live run_ids (the CLI) pass a grace window instead."""
         referenced = self._all_referenced()
         horizon = time.time() - grace_seconds
         removed = 0
@@ -1671,9 +1681,7 @@ class IceTable:
             parts = set(os.path.relpath(dirpath, self.files_dir).split(os.sep))
             if keep_run_ids and parts & keep_run_ids:
                 continue
-            for fn in files:
-                if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                    continue  # _SUCCESS / .crc markers are not data files
+            for fn in filter(_is_data_file, files):
                 p = os.path.realpath(os.path.join(dirpath, fn))
                 if p not in referenced:
                     try:

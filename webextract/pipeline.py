@@ -20,8 +20,6 @@ coalescing.  Explicit choices we make (SURVEY.md §4.2):
 from __future__ import annotations
 
 import datetime
-import glob
-import os
 import time
 import uuid
 
@@ -231,19 +229,21 @@ def _wave_groups(parts: list[int], waves: int) -> list[list[int]]:
 
 
 def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
-                 stage: str, expect_parts: list[int],
-                 opt: ConvertOptions, wall_ms: int,
-                 counters: dict[int, dict], partitions: int
+                 files: dict[int, list[str]], opt: ConvertOptions,
+                 wall_ms: int, counters: dict[int, dict], partitions: int
                  ) -> tuple[str, list[dict]]:
-    """Commit a written stage dir as one atomic snapshot with per-part
+    """Commit one staged wave as one atomic snapshot with per-part
     lineage counters — counters ≡ processing_meta
     (/root/reference/docling_serve/orchestrator_factory.py:104-106).
-    Shared by the batch wave driver and the streaming epoch sink.
+    ``files`` ({part_id: data files}, from IceTable.stage's listing)
+    names every part the snapshot commits.  write_wave calls it once
+    per wave, batch wave or streaming epoch, through this module's
+    global (perfbench's tracer counts waves by its spans).
 
     ``counters`` ({part_id: {num_docs, ..., bytes_out}},
     udfs.part_counters) were tallied by the extraction kernels while
-    they produced the rows, so no Spark job runs here: the only I/O is
-    the listing of the part dirs and IceTable.commit's footer reads.
+    they produced the rows, so no Spark job runs here and the only I/O
+    is IceTable.commit's footer reads of the new files.
     They count each row exactly once because the lineage accumulator's
     merge REPLACES per (stage_id, partition_id) instead of adding: a
     task that runs again — a retry, a stage recomputed after a lost
@@ -256,17 +256,11 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
     ``partitions`` is recorded next to ``options_hash`` so a resume
     with other parameters can be refused (run_extract)."""
     parts_meta = []
-    for p in expect_parts:
-        # glob.escape: a table root containing glob metacharacters
-        # ('[..]', '*') must not silently match nothing — empty
-        # manifests would later read as an empty table and let
-        # expire_orphans delete live data (round-3 review)
-        files = sorted(glob.glob(os.path.join(
-            glob.escape(os.path.join(stage, f"part_id={p}")),
-            "*.parquet")))
+    for p, part_files in files.items():
         c = dict(counters.get(p) or dict.fromkeys(LINEAGE_COUNTERS, 0))
         c["wall_ms"] = wall_ms
-        parts_meta.append({"part_id": p, "files": files, "counters": c})
+        parts_meta.append({"part_id": p, "files": part_files,
+                           "counters": c})
     from . import __version__
     # lineage records WHICH options produced this snapshot (the
     # reference persists the request options with the task record);
@@ -286,6 +280,57 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
                         # is what makes them disjoint)
                         stats_cols=("url",))
     return snap, parts_meta
+
+
+def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
+               run_id: str, wave: int, opt: ConvertOptions,
+               partitions: int, parts: list[int] | None = None,
+               split_bytes: int | None = None,
+               html_split: bool = False) -> tuple[dict, list[dict]]:
+    """One wave, batch or streaming: extract the ``part_id``-carrying
+    ``pages_p`` rows, stage them under ``run_id``/``wave`` and commit
+    them as one snapshot (commit_stage).  ``parts`` are the part ids a
+    batch wave owns: the rows are filtered to them and every one
+    commits, a part without rows with zero counters.  A streaming epoch
+    passes ``parts=None``: it takes every row and commits the parts it
+    wrote.  ``split_bytes``/``html_split`` as in run_extract.
+
+    Returns the wave's summary entry and its committed parts."""
+    t0 = time.time()
+    # a fresh accumulator per wave: its tallies are this wave's only
+    tally = new_tally(spark.sparkContext)
+    if parts is not None:
+        pages_p = pages_p.filter(F.col("part_id").isin(parts))
+    if split_bytes is not None:
+        from .split import extracted_split_df
+        out = extracted_split_df(pages_p, opt, split_bytes=split_bytes,
+                                 html_split=html_split, tally=tally)
+    else:
+        out = extracted_df(pages_p, opt, tally=tally)
+    # one shuffle, on the EXTRACTED rows (≈5× smaller than raw HTML),
+    # into the committed url-hash layout.  Hashing on part_id puts each
+    # part in exactly one write task, so each part is exactly one file
+    # whatever the task count.  The count is min(parts,
+    # defaultParallelism): every core writes, and a write task's fixed
+    # JVM cost, paid whatever the task writes, is paid once per core,
+    # not once per part.  At cluster scale a real catalog would further
+    # split each partition by target file size.
+    n_tasks = min(partitions if parts is None else len(parts),
+                  spark.sparkContext.defaultParallelism)
+    staged = table.stage(out.repartition(n_tasks, F.col("part_id")),
+                         run_id, wave, by=("part_id",))
+    written = {int(p): fs for (p,), fs in staged.items()}
+    files = {p: written.get(p, [])
+             for p in (sorted(written) if parts is None else parts)}
+    t1 = time.time()
+    wall_ms = int((t1 - t0) * 1000)
+    snap, parts_meta = commit_stage(spark, table, run_id, files, opt,
+                                    wall_ms, part_counters(tally.value),
+                                    partitions)
+    return {"wave": wave, "snapshot_id": snap, "parts": list(files),
+            "num_docs": sum(m["counters"]["num_docs"] for m in parts_meta),
+            "wall_ms": wall_ms,
+            "commit_ms": int((time.time() - t1) * 1000)}, parts_meta
 
 
 def check_resume(table: IceTable, partitions: int,
@@ -343,37 +388,10 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
                "skipped_parts": sorted(committed), "waves": []}
 
     for wi, wave_parts in enumerate(_wave_groups(todo, waves)):
-        t0 = time.time()
-        # a fresh accumulator per wave: its tallies are this wave's only
-        tally = new_tally(spark.sparkContext)
-        wave_df = pages_p.filter(F.col("part_id").isin(wave_parts))
-        if split_bytes is not None:
-            from .split import extracted_split_df
-            out = extracted_split_df(wave_df, opt, cpus,
-                                     split_bytes=split_bytes,
-                                     html_split=html_split, tally=tally)
-        else:
-            out = extracted_df(wave_df, opt, cpus, tally=tally)
-        stage = table.staging_dir(run_id, wi)
-        # one shuffle, on the EXTRACTED rows (≈5× smaller than raw
-        # HTML), into the committed url-hash layout: exactly one file
-        # per part_id instead of tasks×parts small files.  At cluster
-        # scale a real catalog would further split each partition by
-        # target file size.
-        (out.repartition(max(1, len(wave_parts)), F.col("part_id"))
-         .write.mode("overwrite").partitionBy("part_id").parquet(stage))
-
-        t1 = time.time()
-        wall_ms = int((t1 - t0) * 1000)
-        snap, parts_meta = commit_stage(spark, table, run_id, stage,
-                                        wave_parts, opt, wall_ms,
-                                        part_counters(tally.value),
-                                        partitions)
-        summary["waves"].append({
-            "wave": wi, "snapshot_id": snap, "parts": wave_parts,
-            "num_docs": sum(m["counters"]["num_docs"] for m in parts_meta),
-            "wall_ms": wall_ms,
-            "commit_ms": int((time.time() - t1) * 1000)})
+        wave, parts_meta = write_wave(spark, table, pages_p, run_id, wi,
+                                      opt, partitions, wave_parts,
+                                      split_bytes, html_split)
+        summary["waves"].append(wave)
         # abort_on_error=true (reference docs/usage.md:24): fail the JOB
         # on the first wave containing a failed document.  The wave's
         # snapshot is already committed, so a rerun after the fix

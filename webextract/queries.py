@@ -383,7 +383,7 @@ def q_stream_epoch_sink(spark, sf_dir):
     shutil.rmtree(base, ignore_errors=True)
     in_dir, tbl, ckpt = (f"{base}/in", f"{base}/table", f"{base}/ckpt")
     docs_to_pages(_read(spark, sf_dir, "documents")).write.parquet(in_dir)
-    q = stream_extract_to_icetable(spark, in_dir, tbl, ckpt, cpus=4)
+    q = stream_extract_to_icetable(spark, in_dir, tbl, ckpt)
     q.awaitTermination()
     out = IceTable(tbl).read(spark)
     return (out.groupBy("lang", "status")
@@ -1152,12 +1152,8 @@ def q_table_scan_prune(spark, sf_dir):
                                     7, "0")).alias("url"),
         "text")
     def stage(w):
-        out = tbl.staging_dir(f"w{w}", 0)
-        (d.filter(F.col("doc_id") % 4 == w)
-         .coalesce(1).write.mode("overwrite").parquet(out))
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(d.filter(F.col("doc_id") % 4 == w).coalesce(1),
+                         f"w{w}").get((), [])
 
     staged = _overlap_jobs([lambda w=w: stage(w) for w in range(4)])
     for w, files in enumerate(staged):
@@ -1202,11 +1198,7 @@ def q_table_schema_evolution(spark, sf_dir):
                                     7, "0")).alias("url"))
 
     def stage(w, df):
-        out = tbl.staging_dir(f"w{w}", 0)
-        df.coalesce(1).write.mode("overwrite").parquet(out)
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(df.coalesce(1), f"w{w}").get((), [])
 
     def commit_files(w, files, stats):
         tbl.commit(f"w{w}", [{"part_id": w, "files": files,
@@ -1253,7 +1245,6 @@ def q_table_wap(spark, sf_dir):
     published state immutably while main keeps moving (a fourth wave).
     Four read surfaces as tagged unions against one oracle."""
     import hashlib
-    import os
     import shutil
 
     from .icetable import IceTable
@@ -1265,12 +1256,8 @@ def q_table_wap(spark, sf_dir):
     d = _read(spark, sf_dir, "documents").select("doc_id")
 
     def stage(w):
-        out = tbl.staging_dir(f"w{w}", 0)
-        (d.filter(F.col("doc_id") % 4 == w)
-         .coalesce(1).write.mode("overwrite").parquet(out))
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(d.filter(F.col("doc_id") % 4 == w).coalesce(1),
+                         f"w{w}").get((), [])
 
     def commit_files(w, files, branch=None):
         tbl.commit(f"w{w}", [{"part_id": w, "files": files,
@@ -1352,11 +1339,7 @@ def q_table_row_deletes(spark, sf_dir):
     d = _read(spark, sf_dir, "documents").select("doc_id", "text")
 
     def stage(w, df):
-        out = tbl.staging_dir(f"w{w}", 0)
-        df.coalesce(1).write.mode("overwrite").parquet(out)
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(df.coalesce(1), f"w{w}").get((), [])
 
     def commit_files(w, files):
         tbl.commit(f"w{w}", [{"part_id": w, "files": files,
@@ -2691,7 +2674,6 @@ def q_publish_wet_increment(spark, sf_dir):
     since the cursor must yield exactly the wave-1 docs back from the
     .wet.gz shards, text byte-identical."""
     import hashlib
-    import os
     import shutil
 
     from .icetable import IceTable
@@ -2705,11 +2687,7 @@ def q_publish_wet_increment(spark, sf_dir):
     d = _read(spark, sf_dir, "documents").select("doc_id", "text")
 
     def commit_wave(w, df):
-        out = tbl.staging_dir(f"w{w}", 0)
-        df.coalesce(1).write.mode("overwrite").parquet(out)
-        files = sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                       if fn.endswith(".parquet")
-                       and not fn.startswith((".", "_")))
+        files = tbl.stage(df.coalesce(1), f"w{w}").get((), [])
         tbl.commit(f"w{w}", [{"part_id": w, "files": files,
                               "counters": {}}], "t")
 
@@ -7438,12 +7416,8 @@ def q_table_stats_agg(spark, sf_dir):
         F.concat(F.lit("u"), F.lpad(F.col("doc_id").cast("string"),
                                     7, "0")).alias("url"))
     def stage(w):
-        out = tbl.staging_dir(f"w{w}", 0)
-        (d.filter(F.col("doc_id") % 4 == w)
-         .coalesce(1).write.mode("overwrite").parquet(out))
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(d.filter(F.col("doc_id") % 4 == w).coalesce(1),
+                         f"w{w}").get((), [])
 
     staged = _overlap_jobs([lambda w=w: stage(w) for w in range(4)])
     for w, files in enumerate(staged):
@@ -8063,12 +8037,8 @@ def q_table_zorder(spark, sf_dir):
         "doc_id", (F.col("doc_id") % 64).alias("a"),
         ((F.col("doc_id") / 64).cast("long") % 64).alias("b"), "text")
     def stage(w):
-        out = tbl.staging_dir(f"w{w}", 0)
-        (d.filter(F.col("doc_id") % 4 == w)
-         .coalesce(1).write.mode("overwrite").parquet(out))
-        return sorted(os.path.join(out, fn) for fn in os.listdir(out)
-                      if fn.endswith(".parquet")
-                      and not fn.startswith((".", "_")))
+        return tbl.stage(d.filter(F.col("doc_id") % 4 == w).coalesce(1),
+                         f"w{w}").get((), [])
 
     staged = _overlap_jobs([lambda w=w: stage(w) for w in range(4)])
     for w, files in enumerate(staged):

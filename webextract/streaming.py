@@ -6,7 +6,9 @@ continuous-ingest variant for a crawler that keeps appending page files
 to the input table.  Per the design note in SURVEY.md §2.6 it reuses
 the IDENTICAL batch stages via foreachBatch — zero operator changes:
 each micro-batch flows through extracted_df() (same tiering, same
-Arrow kernel, same byte-identity contract).
+Arrow kernel, same byte-identity contract), and the IceTable sink
+stages and commits each epoch through pipeline.write_wave, the
+function that writes run_extract's waves.
 
 Exactly-once: the checkpoint directory tracks consumed input files;
 foreachBatch output is idempotent per epoch_id (epoch subdirectory +
@@ -44,8 +46,7 @@ def pages_stream(spark: SparkSession, input_dir: str,
 
 def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
                    checkpoint_dir: str,
-                   opt: ConvertOptions = DEFAULT_OPTIONS,
-                   cpus: int = 8):
+                   opt: ConvertOptions = DEFAULT_OPTIONS):
     """readStream → foreachBatch(batch extraction) → parquet epochs.
 
     Returns the started StreamingQuery (availableNow trigger: drains all
@@ -56,7 +57,7 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extracted_df(batch_df, opt, cpus=cpus)
+        out = extracted_df(batch_df, opt)
         (out.write.mode("overwrite")
          .parquet(os.path.join(output_dir, f"epoch={epoch_id}")))
 
@@ -71,10 +72,12 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
 def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
                                table_root: str, checkpoint_dir: str,
                                opt: ConvertOptions = DEFAULT_OPTIONS,
-                               cpus: int = 8, partitions: int = 16):
+                               partitions: int = 16):
     """Continuous ingest committing each micro-batch as an ATOMIC
-    IceTable snapshot with full lineage counters — the streaming twin
-    of run_extract's wave commit (shared commit_stage helper).
+    IceTable snapshot with full lineage counters: each epoch is one
+    pipeline.write_wave, the function that writes and commits
+    run_extract's waves (same write fan-out, same commit_stage), and
+    commits the parts it wrote.
 
     Exactly-once end to end: the streaming checkpoint tracks consumed
     source files, and each epoch commits under run_id
@@ -86,12 +89,8 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
     across epochs (new data for that url-hash range), so
     ``committed_parts()`` batch-resume semantics do not apply to it —
     read it via the manifests like any other IceTable."""
-    import glob as _glob
-    import time as _time
-
     from .icetable import IceTable
-    from .pipeline import commit_stage, with_part_id
-    from .udfs import new_tally, part_counters
+    from .pipeline import with_part_id, write_wave
 
     table = IceTable(table_root)
     # run_id = stream-<checkpoint-tag>-<epoch>: the tag scopes
@@ -126,20 +125,8 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
             return          # redelivered epoch: already committed
         if batch_df.isEmpty():
             return          # zero-row batch: nothing to stage/commit
-        t0 = _time.time()
-        tally = new_tally(spark.sparkContext)
-        out = extracted_df(with_part_id(batch_df, partitions), opt,
-                           cpus=cpus, tally=tally)
-        stage = table.staging_dir(run_id, 0)
-        (out.repartition(max(1, partitions // 4), F.col("part_id"))
-         .write.mode("overwrite").partitionBy("part_id").parquet(stage))
-        present = sorted(
-            int(d.rsplit("=", 1)[1])
-            for d in _glob.glob(os.path.join(_glob.escape(stage),
-                                             "part_id=*")))
-        commit_stage(spark, table, run_id, stage, present, opt,
-                     int((_time.time() - t0) * 1000),
-                     part_counters(tally.value), partitions)
+        write_wave(spark, table, with_part_id(batch_df, partitions),
+                   run_id, 0, opt, partitions)
         seen.add(run_id)
 
     return (pages_stream(spark, input_dir)

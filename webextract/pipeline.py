@@ -30,6 +30,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from .dom import parse_anchors, parse_metadata
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
+from .session import cores
 from .udfs import (CHUNK_SCHEMA, LINEAGE_COUNTERS, extract_schema,
                    extract_input_cols, make_chunk_kernel, make_extract_kernel,
                    new_tally, part_counters, row_kernel)
@@ -310,13 +311,12 @@ def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
     # one shuffle, on the EXTRACTED rows (≈5× smaller than raw HTML),
     # into the committed url-hash layout.  Hashing on part_id puts each
     # part in exactly one write task, so each part is exactly one file
-    # whatever the task count.  The count is min(parts,
-    # defaultParallelism): every core writes, and a write task's fixed
-    # JVM cost, paid whatever the task writes, is paid once per core,
-    # not once per part.  At cluster scale a real catalog would further
-    # split each partition by target file size.
-    n_tasks = min(partitions if parts is None else len(parts),
-                  spark.sparkContext.defaultParallelism)
+    # whatever the task count.  The count is min(parts, cores): every
+    # core writes, and a write task's fixed JVM cost, paid whatever the
+    # task writes, is paid once per core, not once per part.  At
+    # cluster scale a real catalog would further split each partition
+    # by target file size.
+    n_tasks = min(partitions if parts is None else len(parts), cores(spark))
     staged = table.stage(out.repartition(n_tasks, F.col("part_id")),
                          run_id, wave, by=("part_id",))
     written = {int(p): fs for (p,), fs in staged.items()}

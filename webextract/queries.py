@@ -6512,7 +6512,10 @@ def _wp_oracle(n_rounds: int, final: str = "merges") -> str:
     truncate identically on positive operands), and the winner
     totalizes by (q desc, n desc, denominator asc, lhs, rhs).
     ``final='segmap'`` replays the trained segmentation over every
-    doc's words instead of returning the merge table."""
+    doc's words instead of returning the merge table.  Each s{i+1}
+    reads s{i} three times (directly and through u{i}/c{i}/b{i}), so
+    an engine that inlines CTEs does 3^rounds work; the round CTEs
+    are MATERIALIZED, which changes no result."""
     sym = "regexp_extract_all(seg, chr(1) || '([^' || chr(2) "\
           "|| ']+)' || chr(2), 1)"
     ctes = ["""toks AS (SELECT unnest(string_split(text, ' ')) AS w
@@ -6544,7 +6547,7 @@ def _wp_oracle(n_rounds: int, final: str = "merges") -> str:
              JOIN u{i} ur ON c.rhs = ur.s
              ORDER BY q DESC, c.n DESC, ul.ns * ur.ns ASC,
                       c.lhs, c.rhs LIMIT 1),
-    s{i + 1} AS (SELECT w, replace(seg,
+    s{i + 1} AS MATERIALIZED (SELECT w, replace(seg,
                  (SELECT chr(1) || lhs || chr(2) || chr(1) || rhs
                          || chr(2) FROM b{i}),
                  (SELECT chr(1) || lhs || rhs || chr(2) FROM b{i}))

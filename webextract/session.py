@@ -76,6 +76,14 @@ def get_spark(app: str = "webextract", cpus: int | None = None,
     return b.getOrCreate()
 
 
+def cores(spark: SparkSession) -> int:
+    """The job path's task fan-out, one task per core
+    (``defaultParallelism``, ``cpus`` under get_spark): the wave write
+    runs ``min(parts, cores)`` tasks and the split tier repartitions
+    its segments into ``cores`` partitions."""
+    return spark.sparkContext.defaultParallelism
+
+
 def est_plan_bytes(df) -> int:
     """Catalyst plan-stats sizeInBytes for a frame (r6) — the byte
     side of the est_scan_partitions probe, used by conditional spread

@@ -47,6 +47,7 @@ from .dom import Block
 from .extract import (Extracted, admit_payload, extract_document, failed,
                       finish_blocks)
 from .options import ConvertOptions, DEFAULT_OPTIONS
+from .session import cores
 from .udfs import (extract_arrow, extract_input_cols, extract_schema,
                    extracted_row, make_extract_kernel, row_kernel)
 
@@ -183,7 +184,7 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
     siblings' "" (their fmt/error are null)."""
     segs = (src.withColumn("rid", F.monotonically_increasing_id())
             .mapInArrow(split_kernel, SEG_SCHEMA)
-            .repartition(src.sparkSession.sparkContext.defaultParallelism,
+            .repartition(cores(src.sparkSession),
                          F.col("url"), F.col("seg_idx"))
             .mapInArrow(seg_kernel, _SEGX_SCHEMA))
     agg = (segs.groupBy("url", "warc_ts", "rid")

@@ -25,10 +25,16 @@ rows: the pass that already holds every row's status, ``bytes_in`` and
 ``text`` counts them, so a wave commit needs no second Spark pass over
 the written stage.  Each kernel reports its tallies once, when its
 partition ends, under its task's ``(stage_id, partition_id)``.
+
+The frame also trims the fixed cost of every Python task after a
+worker's first: it turns zipimporter cache invalidation into a no-op
+in that worker (``_stop_zip_rereads``).
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -136,6 +142,37 @@ class Tally:
         self.acc.add({(ctx.stageId(), ctx.partitionId()): self.parts})
 
 
+def _keep_zip_directory(self) -> None:
+    """A Python worker's ``zipimporter.invalidate_caches``: keep the
+    archive's directory as read (see ``_stop_zip_rereads``)."""
+
+
+def _stop_zip_rereads() -> None:
+    """In a Python worker process, inside a task, on Python < 3.13:
+    make ``zipimporter.invalidate_caches`` a no-op, once per process.
+
+    PySpark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` before every task, and before
+    3.13 each of the worker's zipimporters then re-reads the whole
+    central directory of its archive (``pyspark.zip`` has 1328
+    entries; a local-mode worker holds 16 importers, and one re-read
+    costs about 10 ms on a 4-vCPU x86 host).  This is safe: Spark never
+    rewrites an archive that is already on a worker's ``sys.path``
+    during one application, and a zip added later (``--py-files``,
+    ``addPyFile``) is a new path, so it gets a new importer that reads
+    its directory.  ``FileFinder`` invalidation is untouched, so the
+    files ``setup_spark_files`` puts in its ``add_path`` directory are
+    still found.  3.13's ``invalidate_caches`` only drops the cache,
+    so there is nothing to save.  The first task of each worker still
+    pays once, and the saving relies on Python worker reuse
+    (``spark.python.worker.reuse``, on by default).  The driver, where
+    ``TaskContext.get()`` is None, keeps the stock method."""
+    if (sys.version_info < (3, 13) and TaskContext.get() is not None
+            and zipimport.zipimporter.invalidate_caches
+            is not _keep_zip_directory):
+        zipimport.zipimporter.invalidate_caches = _keep_zip_directory
+
+
 def row_kernel(per_row, arrow_schema: pa.Schema, tally=None):
     """The one mapInArrow frame.  ``per_row(row)`` yields
     ``(out_row, n_bytes)`` pairs for each input row dict; the output
@@ -143,11 +180,13 @@ def row_kernel(per_row, arrow_schema: pa.Schema, tally=None):
     reach ``BATCH_BYTE_BUDGET`` (read when the kernel runs) and at the
     end of every input batch.  With a ``tally`` accumulator the flushed
     rows are EXTRACT rows with their part_id: the frame counts them and
-    reports once, when the partition ends.  The kernel is named after
+    reports once, when the partition ends.  In a worker the kernel
+    first calls ``_stop_zip_rereads``.  The kernel is named after
     ``per_row`` (``extract_row`` -> ``extract_batches``), which is the
     name EXPLAIN shows."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _stop_zip_rereads()
         budget = BATCH_BYTE_BUDGET
         counts = Tally(tally) if tally is not None else None
 

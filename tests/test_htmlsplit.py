@@ -104,6 +104,21 @@ def test_seeded_parse_identical_blocks(target):
                     (target, f, getattr(g, f), getattr(w, f))
 
 
+def test_scan_cuts_skips_text_no_cut_can_land_in(monkeypatch):
+    """A text no longer than the cut target (a payload the tier keeps
+    whole) returns no cuts without being tokenized."""
+    from webextract import dom, htmlsplit
+    calls = []
+
+    def counting(p, text):
+        calls.append(len(text))
+        return dom._fast_feed(p, text)
+    monkeypatch.setattr(htmlsplit, "_fast_feed", counting)
+    text = NASTY[0].decode("utf-8")
+    assert scan_cuts(text, len(text)) == [] and calls == []
+    assert scan_cuts(text, len(text) // 2) and calls == [len(text)]
+
+
 def _pages_df(spark, payloads):
     rows = [(f"doc://{i}", TS, p, "", "en") for i, p in enumerate(payloads)]
     return spark.createDataFrame(rows, PAGES_SCHEMA).repartition(3)
@@ -114,14 +129,13 @@ def _collect(df):
 
 
 def test_html_split_tier_byte_identical(spark):
-    """Whole corpus forced through the html tier (split_bytes=1,
-    target_chars=64): every column equals the one-shot kernel."""
+    """Whole corpus forced through the html tier (split_bytes=1: a cut
+    at every eligible tag): every column equals the one-shot kernel."""
     payloads = NASTY + _synth_pages(8)
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
     got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=1, html_split=True,
-                                      html_target_chars=64))
+                                      split_bytes=1))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -143,20 +157,20 @@ def test_html_split_tier_admission_and_fallback(spark):
                 ALL_FORMATS.with_(from_formats=("pdf",))):
         ref = _collect(extracted_df(pages, opt, cpus=2))
         got = _collect(extracted_split_df(pages, opt, cpus=2,
-                                          split_bytes=1, html_split=True,
-                                          html_target_chars=16))
+                                          split_bytes=1))
         assert got == ref, opt
 
 
 def test_html_split_spreads_segments(spark):
-    """The point of the tier: one oversized doc becomes many segments."""
+    """The point of the tier: one oversized doc becomes many segments,
+    at most L // split_bytes of them."""
     from webextract.htmlsplit import make_html_split_kernel
     from webextract.split import SEG_SCHEMA
     pages = _pages_df(spark, [NASTY[0]])
     segs = (pages.select("url", "warc_ts", "lang", "html")
             .mapInArrow(make_html_split_kernel(ALL_FORMATS, 64), SEG_SCHEMA)
             .collect())
-    assert len(segs) > 3
+    assert 3 < len(segs) <= len(NASTY[0]) // 64
     assert sorted(r.seg_idx for r in segs) == list(range(len(segs)))
     # segment text reassembles the decoded payload exactly
     joined = "".join(r.seg for r in sorted(segs, key=lambda r: r.seg_idx))
@@ -164,8 +178,8 @@ def test_html_split_spreads_segments(spark):
 
 
 def test_pdf_tier_still_works_with_html_split_on(spark):
-    """Both tiers active at once: oversized mini-PDFs keep taking the
-    page tier, html takes the cut tier, small docs the narrow path."""
+    """Both tiers at once: oversized mini-PDFs take the page tier,
+    oversized html the cut tier, small docs the narrow path."""
     from webextract import pdfmini
     pdf = pdfmini.write_pdf([[(10, 10, 11, "page one words")],
                              [(10, 10, 11, "page two words")]])
@@ -173,20 +187,19 @@ def test_pdf_tier_still_works_with_html_split_on(spark):
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
     got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=40, html_split=True,
-                                      html_target_chars=64))
+                                      split_bytes=40))
     assert got == ref
 
 
 def test_html_split_tier_plan_shape(spark):
     """Scale shape pinned: normal branch no-shuffle; each tier crosses
-    exactly ONE payload repartition; the decoded segment text and state
-    are DROPPED before the merge aggregate's exchange (only block
-    structs + the rare fallback payload cross it)."""
+    exactly ONE payload repartition; the raw payload, the decoded
+    segment text and state are DROPPED before the merge aggregate's
+    exchange (only block structs + the rare fallback payload cross
+    it)."""
     from webextract.synth import pages_df
     pages = pages_df(spark, 50, parallelism=4)
-    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024,
-                              html_split=True)
+    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024)
            ._jdf.queryExecution().optimizedPlan().toString())
     # one payload repartition per tier (pdf + html), none elsewhere
     assert opt.count("RepartitionByExpression") == 2, opt[:2000]
@@ -205,12 +218,13 @@ def test_html_split_tier_plan_shape(spark):
     for i in agg_is:
         child = lines[i + 1]
         out = child.rsplit("[", 1)[1]
-        assert " seg#" not in out and "state#" not in out, child
+        assert not any(c in out for c in ("html", " seg#", "state#")), child
 
 
 def test_run_extract_with_html_tier_matches_default(spark, tmp_path):
-    """Product surface: run_extract(html_split=True) commits the same
-    table as the default pipeline (synth corpus incl. skew bombs)."""
+    """Product surface: run_extract(split_bytes=...) commits the same
+    table as the default pipeline (synth corpus incl. skew bombs).
+    ``html_split`` is still accepted, and unused."""
     from webextract.icetable import IceTable
     from webextract.pipeline import run_extract
     from webextract.synth import pages_df
@@ -244,7 +258,6 @@ def test_exact_duplicate_rows_stay_separate(spark):
                  extracted_df(pages, ALL_FORMATS, cpus=2).collect())
     got = sorted((r["url"], r["status"], r["text"]) for r in
                  extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                    split_bytes=1, html_split=True,
-                                    html_target_chars=64).collect())
+                                    split_bytes=1).collect())
     assert len(got) == 4
     assert got == ref

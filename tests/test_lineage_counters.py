@@ -91,7 +91,7 @@ PATHS = {
     # mini-PDFs are 0.5-2.7 KB: most take the page-split tier
     "pdf_split": dict(n=200, job=dict(split_bytes=1024)),
     "html_split": dict(n=100, giant_every=25,
-                       job=dict(split_bytes=16 * 1024, html_split=True)),
+                       job=dict(split_bytes=16 * 1024)),
 }
 
 

@@ -196,30 +196,6 @@ def test_minhash_plan_is_projection_until_bucket_join(spark):
     assert tree.count("Exchange") <= 2, tree
 
 
-def test_split_tier_plan_shape(spark):
-    """Oversized-doc tier (split.py): the normal branch must stay a
-    no-shuffle scan->kernel map; the split branch must carry payload
-    through exactly ONE repartition (url, seg_idx) and must DROP the
-    payload before the merge aggregate's exchange (blocks only)."""
-    from webextract.split import extracted_split_df
-    from webextract.synth import pages_df
-    pages = pages_df(spark, 50, parallelism=4)
-    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024)
-           ._jdf.queryExecution().optimizedPlan().toString())
-    # one payload repartition in the whole union
-    assert opt.count("RepartitionByExpression") == 1, opt[:2000]
-    # normal branch = lines prefixed ':' under the Union: no exchange
-    normal = [ln for ln in opt.splitlines() if ln.startswith(":")]
-    assert normal and not any("Repartition" in ln or "Exchange" in ln
-                              for ln in normal), normal
-    # merge aggregate input must not contain the html payload column:
-    # the output attributes (last [...]) of the node under the Aggregate
-    lines = opt.splitlines()
-    agg_i = next(i for i, ln in enumerate(lines) if "Aggregate [url" in ln)
-    child = lines[agg_i + 1]
-    assert "html" not in child.rsplit("[", 1)[1], child
-
-
 def test_exploded_shingles_no_inlined_gram_filter(spark):
     """InferFiltersFromGenerate + pushdown must NOT inline the shingle
     expression into a scan-level Filter (measured 18×): the observe

@@ -65,11 +65,11 @@ def _collect(df):
     return rows
 
 
-def _assert_identical(spark, payloads, opt, **split_kw):
+def _assert_identical(spark, payloads, opt, split_bytes=1):
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, opt, cpus=2))
-    got = _collect(extracted_split_df(pages, opt, cpus=2, split_bytes=1,
-                                      **split_kw))
+    got = _collect(extracted_split_df(pages, opt, cpus=2,
+                                      split_bytes=split_bytes))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -81,8 +81,10 @@ def test_split_path_byte_identical_all_formats(spark):
     _assert_identical(spark, _mk_pdfs(), ALL_FORMATS)
 
 
-def test_split_path_pages_per_seg(spark):
-    _assert_identical(spark, _mk_pdfs(), ALL_FORMATS, pages_per_seg=3)
+def test_split_path_page_groups(spark):
+    """split_bytes=195 cuts doc 0 (422 B, 4 pages) into 2 page groups
+    and doc 4 (585 B, 7 pages) into 3; the small docs stay whole."""
+    _assert_identical(spark, _mk_pdfs(), ALL_FORMATS, split_bytes=195)
 
 
 def test_split_path_page_range(spark):
@@ -116,17 +118,22 @@ def test_small_and_html_docs_stay_on_narrow_path(spark):
 
 def test_split_spreads_segments(spark):
     """The point of the tier: one oversized doc becomes many tasks.
-    Segment frame must contain one row per non-empty page group."""
+    A payload of L bytes becomes L // split_bytes page groups (at most
+    one per page with runs), each a segment row."""
     from webextract.split import make_split_kernel, SEG_SCHEMA
-    pages = _pages_df(spark, [_mk_pdfs()[4]])  # 7 pages
-    segs = (pages.select("url", "warc_ts", "lang", "html")
-            .mapInArrow(make_split_kernel(ALL_FORMATS, 1), SEG_SCHEMA))
-    rows = segs.collect()
-    assert len(rows) == 7
-    assert sorted(r.seg_idx for r in rows) == list(range(7))
-    # every segment is a valid mini-PDF with the ORIGINAL page count
-    for r in rows:
-        assert pdfmini.peek_n_pages(bytes(r.html)) == 7
+    doc = _mk_pdfs()[4]  # 7 pages, 585 bytes
+    pages = _pages_df(spark, [doc])
+    for split_bytes, n in ((1, 7), (len(doc) // 3, 3), (len(doc) // 2, 2),
+                           (len(doc), 1)):
+        assert n == min(7, len(doc) // split_bytes)
+        segs = (pages.select("url", "warc_ts", "lang", "html")
+                .mapInArrow(make_split_kernel(ALL_FORMATS, split_bytes),
+                            SEG_SCHEMA))
+        rows = segs.collect()
+        assert sorted(r.seg_idx for r in rows) == list(range(n)), split_bytes
+        # every segment is a valid mini-PDF with the ORIGINAL page count
+        for r in rows:
+            assert pdfmini.peek_n_pages(bytes(r.html)) == 7
 
 
 def test_run_extract_with_split_tier_matches_default(spark, tmp_path):

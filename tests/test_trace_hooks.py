@@ -47,7 +47,7 @@ def test_kernel_factories_resolve_and_build_the_plan(spark, monkeypatch):
     pages = spark.createDataFrame(
         [("pdf://0", TS, PDF, "", "en"), ("html://1", TS, HTML, "", "en")],
         PAGES_SCHEMA)
-    split.extracted_split_df(pages, split_bytes=1, html_split=True)
+    split.extracted_split_df(pages, split_bytes=1)
     assert set(calls) == {a for _, a in SPLIT_FACTORIES}, calls
 
 

@@ -88,7 +88,7 @@ def test_one_file_per_part_and_write_tasks(spark, tmp_path, monkeypatch,
         sc.setJobGroup(groups[-1], "next wave")
         return res
     monkeypatch.setattr(pipeline, "commit_stage", commit_then_next_group)
-    kw = {"split_bytes": 1, "html_split": True} if split else {}
+    kw = {"split_bytes": 1} if split else {}
     sc.setJobGroup(groups[0], "first wave")
     try:
         s = run_extract(spark, pages_df(spark, 6 * partitions, parallelism=2),

@@ -54,11 +54,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--fail-after-wave", type=int, default=None,
                    help="inject a crash after wave K (resume testing)")
     p.add_argument("--split-bytes", type=int, default=None,
-                   help="fan out oversized mini-PDFs (>= this many "
-                        "bytes) by page group across tasks (split.py)")
-    p.add_argument("--html-split", action="store_true",
-                   help="with --split-bytes: also fan out oversized "
-                        "HTML via the cut-point tier (htmlsplit.py)")
+                   help="fan out every payload of at least this many "
+                        "bytes across tasks, cut into pieces of at least "
+                        "that size (split.py)")
     # --- conversion option surface (reference form fields, usage.md:14-41) ---
     p.add_argument("--to-formats", default=",".join(D.to_formats))
     p.add_argument("--from-formats", default=",".join(D.from_formats))
@@ -224,8 +222,7 @@ def main(argv: list[str] | None = None) -> int:
     summary = run_extract(
         spark, pages, args.output, opt=opt, partitions=args.partitions,
         waves=args.waves, cpus=args.cpus, run_id=args.run_id,
-        fail_after_wave=args.fail_after_wave, split_bytes=args.split_bytes,
-        html_split=args.html_split)
+        fail_after_wave=args.fail_after_wave, split_bytes=args.split_bytes)
     if args.chunk != "none":
         # chunk stage over the COMMITTED table (reads manifests, so a
         # resumed/partial run never chunks uncommitted rows); chunks

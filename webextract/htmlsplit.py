@@ -8,11 +8,12 @@ with the full parser state that crosses the cut carried along:
   the one-shot parse's own tokenizer (``dom._fast_feed``) driving its
   own ``_Parser`` tag handlers, with text dropped.  It still tokenizes
   every byte, so it costs about 0.7x a full parse (measured
-  in-process).  At candidate cut tags (block/container start tags,
-  outside skipped subtrees and tables) it snapshots the crossing state:
-  open element stack with per-element child counts (sibling
-  numbering!), a/pre/blockquote depths, root counts.  A segment is a
-  substring of the decoded document plus its ~1 KB state.
+  in-process), unless the doc is kept whole (split.n_segments).  At
+  candidate cut tags (block/container start tags, outside skipped
+  subtrees and tables) it snapshots the crossing state: open element
+  stack with per-element child counts (sibling numbering!),
+  a/pre/blockquote depths, root counts.  A segment is a substring of
+  the decoded document plus its ~1 KB state.
 * parse (``_parse_seeded``, in parallel): a ``_Parser`` SEEDED with the
   snapshot parses its slice; because the tokenizer restarts cleanly at
   a token boundary and flush-at-tag == flush-at-EOF for the block open
@@ -32,9 +33,7 @@ from .dom import (Block, _BLOCK, _CONTAINER, _Parser, _fast_feed, _feed_all,
                   decode_html)
 from .extract import Extracted, finish_blocks, select_main
 from .options import ConvertOptions, DEFAULT_OPTIONS
-from .split import merge_frame, seg_frame, split_frame
-
-HTML_TARGET_CHARS = 1 * 1024 * 1024   # aim for ~1 MB decoded per segment
+from .split import merge_frame, n_segments, seg_frame, split_frame
 
 CUT_TAGS = (_BLOCK | _CONTAINER) - {"html"}
 
@@ -106,7 +105,11 @@ def scan_cuts(text: str, target_chars: int) -> list[tuple[int, str]]:
     (test_htmlsplit parity tests pin this); text is tokenized and
     dropped.  Cuts land on start tags of block/container elements at
     least ``target_chars`` apart, never inside skipped subtrees
-    (script/style/svg/...) or tables.  Raises when a handler raises."""
+    (script/style/svg/...) or tables; none lands in a text no longer
+    than ``target_chars``, which is not tokenized.  Raises when a
+    handler raises."""
+    if len(text) <= target_chars:
+        return []
     p = _CutScan(target_chars)
     _fast_feed(p, text)
     return p.cuts
@@ -132,8 +135,9 @@ def parse_blocks_seeded(text: str, state_json: str | None) -> list[Block]:
 # the HTML pieces of the split tier (split.py): cut, parse, finish
 # ---------------------------------------------------------------------------
 
-def _cut_html(payload: bytes, target_chars: int):
+def _cut_html(payload: bytes, split_bytes: int):
     text = decode_html(payload)
+    target_chars = -(-len(text) // n_segments(payload, split_bytes))
     try:
         cuts = scan_cuts(text, target_chars)
     except Exception:
@@ -152,11 +156,10 @@ def _finish_html(blocks: list[Block], opt: ConvertOptions,
     return finish_blocks(select_main(blocks, opt), "html", opt, url)
 
 
-def make_html_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                           target_chars: int = HTML_TARGET_CHARS):
+def make_html_split_kernel(opt: ConvertOptions, split_bytes: int):
     """mapInArrow 1->N: oversized payload -> (state, slice) segments."""
     return split_frame(opt, "html",
-                       lambda payload: _cut_html(payload, target_chars))
+                       lambda payload: _cut_html(payload, split_bytes))
 
 
 def make_html_seg_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):

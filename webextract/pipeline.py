@@ -286,15 +286,14 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
 def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
                run_id: str, wave: int, opt: ConvertOptions,
                partitions: int, parts: list[int] | None = None,
-               split_bytes: int | None = None,
-               html_split: bool = False) -> tuple[dict, list[dict]]:
+               split_bytes: int | None = None) -> tuple[dict, list[dict]]:
     """One wave, batch or streaming: extract the ``part_id``-carrying
     ``pages_p`` rows, stage them under ``run_id``/``wave`` and commit
     them as one snapshot (commit_stage).  ``parts`` are the part ids a
     batch wave owns: the rows are filtered to them and every one
     commits, a part without rows with zero counters.  A streaming epoch
     passes ``parts=None``: it takes every row and commits the parts it
-    wrote.  ``split_bytes``/``html_split`` as in run_extract.
+    wrote.  ``split_bytes`` as in run_extract.
 
     Returns the wave's summary entry and its committed parts."""
     t0 = time.time()
@@ -305,7 +304,7 @@ def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
     if split_bytes is not None:
         from .split import extracted_split_df
         out = extracted_split_df(pages_p, opt, split_bytes=split_bytes,
-                                 html_split=html_split, tally=tally)
+                                 tally=tally)
     else:
         out = extracted_df(pages_p, opt, tally=tally)
     # one shuffle, on the EXTRACTED rows (≈5× smaller than raw HTML),
@@ -361,16 +360,16 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
                 cpus: int = 32, run_id: str | None = None,
                 fail_after_wave: int | None = None,
                 split_bytes: int | None = None,
-                html_split: bool = False) -> dict:
+                html_split: bool = True) -> dict:
     """The job driver: wave-committed, resumable extraction run.
 
     ``fail_after_wave`` injects a crash between commits (tests only).
     ``split_bytes`` enables the oversized-document fan-out tier
-    (split.py): payloads >= the threshold are page-split (mini-PDF) —
-    and, with ``html_split`` also set, cut-point-split (HTML,
-    htmlsplit.py) — across tasks instead of pinning one task; None
-    keeps the pure no-shuffle plan.  ``cpus`` is accepted for call-site
-    compatibility and unused.
+    (split.py): payloads >= the threshold are page-split (mini-PDF) or
+    cut-point-split (HTML, htmlsplit.py) across tasks, into pieces of
+    at least about ``split_bytes``, instead of pinning one task; None
+    keeps the pure no-shuffle plan.  ``cpus`` and ``html_split`` are
+    accepted for call-site compatibility and unused.
     A resume (some parts already committed) with another ``partitions``
     or other options than the table's last run raises ValueError before
     anything is written.
@@ -390,7 +389,7 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     for wi, wave_parts in enumerate(_wave_groups(todo, waves)):
         wave, parts_meta = write_wave(spark, table, pages_p, run_id, wi,
                                       opt, partitions, wave_parts,
-                                      split_bytes, html_split)
+                                      split_bytes)
         summary["waves"].append(wave)
         # abort_on_error=true (reference docs/usage.md:24): fail the JOB
         # on the first wave containing a failed document.  The wave's

@@ -167,8 +167,7 @@ def q_extract_pdf_split(spark, sf_dir):
     from .docpages import docs_to_pdf_pages
     from .split import extracted_split_df
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"))
-    return (_doc_id(extracted_split_df(pages, split_bytes=1,
-                                       pages_per_seg=2))
+    return (_doc_id(extracted_split_df(pages, split_bytes=1))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -258,14 +257,13 @@ def q_extract_mets_source(spark, sf_dir):
 def q_extract_html_split_tier(spark, sf_dir):
     """C11 html flavor (round-2 review item 9): the whole corpus forced
     through the oversized-HTML cut tier — structural scan, seeded
-    segment parses, global-score merge — with split_bytes=1 and a cut
-    every 256 chars.  Byte-identical to the one-shot kernel, so the
+    segment parses, global-score merge — with split_bytes=256, a cut
+    about every 256 chars.  Byte-identical to the one-shot kernel, so the
     oracle is extract_main_text's (the tier is an execution strategy,
     not a semantic change)."""
     from .split import extracted_split_df
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
-    out = _doc_id(extracted_split_df(pages, split_bytes=1, html_split=True,
-                                     html_target_chars=256))
+    out = _doc_id(extracted_split_df(pages, split_bytes=256))
     return (out.filter(F.col("status") == "success")
             .select("doc_id", "text"))
 

@@ -12,7 +12,7 @@ function run by ``udfs.row_kernel``:
 1. split kernel (narrow 1->N mapInArrow): document-level admission runs
    HERE, once, on the whole payload, through the one-shot path's own
    ``extract.admit_payload``; refused docs ship one verdict row.  An
-   admitted doc is cut into segments: mini-PDFs into page groups that
+   admitted doc is cut into n_segments: mini-PDFs into page groups that
    keep the ORIGINAL header and page numbers (this module), HTML
    between tag tokens with the crossing parser state (htmlsplit.py).
 2. ``repartition(url, seg_idx)`` — the ONE payload shuffle: it moves
@@ -72,6 +72,13 @@ _SEGX_ARROW = pa.schema(_DOC_ARROW + [
     ("blocks", pa.large_binary())])
 SEG_SCHEMA = from_arrow_schema(_SEG_ARROW)
 _SEGX_SCHEMA = from_arrow_schema(_SEGX_ARROW)
+
+
+def n_segments(payload: bytes, split_bytes: int) -> int:
+    """Segments an oversized payload is cut into: each carries at least
+    about ``split_bytes`` (a smaller piece only adds per-segment cost
+    after the fan-out), so a payload under twice that stays whole."""
+    return max(1, len(payload) // split_bytes)
 
 
 def split_frame(opt: ConvertOptions, fmt: str, cut):
@@ -204,8 +211,8 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
 # the mini-PDF pieces: cut by page group, parse, finish
 # ---------------------------------------------------------------------------
 
-def _slice_pages(payload: bytes, pages_per_seg: int) -> list[bytes]:
-    """Re-pack an admitted mini-PDF into per-page-group payloads that
+def _slice_pages(payload: bytes, split_bytes: int) -> list[bytes]:
+    """Re-pack an admitted mini-PDF into ``n_segments`` page groups that
     keep the ORIGINAL n_pages and page numbers (so page_range and the
     pdf/page[N] block paths are unchanged downstream)."""
     n_pages, runs = pdfmini.parse_runs(payload)
@@ -213,9 +220,10 @@ def _slice_pages(payload: bytes, pages_per_seg: int) -> list[bytes]:
     for r in runs:
         by_page.setdefault(r[0], []).append(r)
     pages = sorted(by_page)
-    return [pdfmini.pack_runs(n_pages, [r for p in pages[i:i + pages_per_seg]
+    per = -(-len(pages) // n_segments(payload, split_bytes)) or 1
+    return [pdfmini.pack_runs(n_pages, [r for p in pages[i:i + per]
                                         for r in by_page[p]])
-            for i in range(0, len(pages), pages_per_seg)] \
+            for i in range(0, len(pages), per)] \
         or [payload]  # zero-run doc: one whole segment
 
 
@@ -226,11 +234,10 @@ def _finish_pdf(blocks: list[Block], opt: ConvertOptions,
     return finish_blocks(blocks, "pdf", opt, url)
 
 
-def make_split_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                      pages_per_seg: int = 1):
+def make_split_kernel(opt: ConvertOptions, split_bytes: int):
     """mapInArrow 1->N: oversized mini-PDF -> page-group segments."""
     return split_frame(opt, "pdf", lambda payload: [
-        (None, None, seg) for seg in _slice_pages(payload, pages_per_seg)])
+        (None, None, seg) for seg in _slice_pages(payload, split_bytes)])
 
 
 def make_seg_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
@@ -248,45 +255,38 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
 
 def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                        cpus: int = 32, *, split_bytes: int,
-                       pages_per_seg: int = 1,
-                       html_split: bool = False,
-                       html_target_chars: int | None = None,
+                       html_split: bool = True,
                        tally=None) -> DataFrame:
     """Extraction with the oversized-document fan-out tier.
 
     Routing is declarative so Catalyst prunes every branch's scan:
     payloads under ``split_bytes`` take the normal no-shuffle kernel
-    path; oversized mini-PDFs take the page-split chain; with
-    ``html_split=True`` oversized NON-PDF payloads take the cut-point
-    chain (htmlsplit.py) instead of pinning one task.  All branches
+    path; oversized mini-PDFs take the page-split chain and all other
+    oversized payloads the cut-point chain (htmlsplit.py), cut into
+    pieces of at least about ``split_bytes`` (n_segments).  All branches
     union to the same EXTRACT schema, so downstream (waves, IceTable
-    commit, chunkers) is tier-oblivious.  ``cpus`` is accepted for
-    call-site compatibility and unused.  ``tally``: as in
-    pipeline.extracted_df — each branch's final kernel (plain, PDF
+    commit, chunkers) is tier-oblivious.  ``cpus`` and ``html_split``
+    are accepted for call-site compatibility and unused.  ``tally``: as
+    in pipeline.extracted_df — each branch's final kernel (plain, PDF
     merge, HTML merge) tallies the rows it emits."""
+    from . import htmlsplit
     src = pages.select(*extract_input_cols(pages.columns, tally))
-    # coalesce: a NULL html payload makes the predicates SQL NULL, which
+    # coalesce: a NULL html payload makes the predicate SQL NULL, which
     # every branch filter would drop — the row must take the normal
     # kernel path (which emits its skipped verdict).
     is_big = F.coalesce(F.length("html") >= F.lit(split_bytes),
                         F.lit(False))
     is_pdf = (F.substring(F.col("html").cast("binary"), 1,
                           len(pdfmini.MAGIC)) == F.lit(pdfmini.MAGIC))
-    is_split = F.coalesce(is_big & is_pdf, F.lit(False))
-    is_html_split = (F.coalesce(is_big & ~is_pdf, F.lit(False))
-                     if html_split else F.lit(False))
-    normal = (src.filter(~is_split & ~is_html_split)
+    normal = (src.filter(~is_big)
               .mapInArrow(make_extract_kernel(opt, tally=tally),
                           extract_schema(tally)))
-    out = normal.unionByName(_fan_out(
-        src.filter(is_split), make_split_kernel(opt, pages_per_seg),
-        make_seg_extract_kernel(opt), make_merge_kernel(opt, tally), tally))
-    if html_split:
-        from . import htmlsplit
-        out = out.unionByName(_fan_out(
-            src.filter(is_html_split),
-            htmlsplit.make_html_split_kernel(
-                opt, html_target_chars or htmlsplit.HTML_TARGET_CHARS),
-            htmlsplit.make_html_seg_kernel(opt),
-            htmlsplit.make_html_merge_kernel(opt, tally), tally))
-    return out
+    pdf = _fan_out(
+        src.filter(is_big & is_pdf), make_split_kernel(opt, split_bytes),
+        make_seg_extract_kernel(opt), make_merge_kernel(opt, tally), tally)
+    html = _fan_out(
+        src.filter(is_big & ~is_pdf),
+        htmlsplit.make_html_split_kernel(opt, split_bytes),
+        htmlsplit.make_html_seg_kernel(opt),
+        htmlsplit.make_html_merge_kernel(opt, tally), tally)
+    return normal.unionByName(pdf).unionByName(html)

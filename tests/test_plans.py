@@ -5,6 +5,8 @@ extraction plan (SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -194,6 +196,39 @@ def test_minhash_plan_is_projection_until_bucket_join(spark):
     assert below_generate.count("Exchange") <= 1, below_generate
     # band groupBy + spread barrier, nothing else
     assert tree.count("Exchange") <= 2, tree
+
+
+def test_split_tier_plan_shape(spark):
+    """Oversized-doc tier (split.py): the normal branch must stay a
+    no-shuffle scan->kernel map; the mini-PDF page-split branch must
+    carry payload through exactly ONE repartition (url, seg_idx) and
+    must DROP the payload before the merge aggregate's exchange (blocks
+    only).  The HTML chain's shape is pinned in test_htmlsplit."""
+    from webextract.split import extracted_split_df
+    from webextract.synth import pages_df
+    pages = pages_df(spark, 50, parallelism=4)
+    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024)
+           ._jdf.queryExecution().optimizedPlan().toString())
+    lines = opt.splitlines()
+    # union children: normal (':' lines before the first merge), the
+    # PDF chain (':' lines from it on), the HTML chain ('+-' and below)
+    first_merge = next(i for i, ln in enumerate(lines)
+                       if "merge_batches" in ln)
+    normal = [ln for ln in lines[:first_merge] if ln.startswith(":")]
+    assert normal and not any("Repartition" in ln or "Exchange" in ln
+                              for ln in normal), normal
+    pdf = [ln for ln in lines[first_merge:] if ln.startswith(":")]
+    assert any("0x255044462D4D494E490A)" in ln and "NOT (substring" not in ln
+               for ln in pdf if "Filter" in ln), pdf   # %PDF-MINI magic
+    # exactly one payload repartition in the PDF chain, keyed by segment
+    reparts = [ln for ln in pdf if "RepartitionByExpression" in ln]
+    assert len(reparts) == 1, pdf
+    assert re.search(r"\[url#\d+, seg_idx#\d+\]", reparts[0]), reparts[0]
+    # merge aggregate input must not contain the html payload column:
+    # the output attributes (last [...]) of the node under the Aggregate
+    agg_i = next(i for i, ln in enumerate(pdf) if "Aggregate [url" in ln)
+    child = pdf[agg_i + 1]
+    assert "html" not in child.rsplit("[", 1)[1], child
 
 
 def test_exploded_shingles_no_inlined_gram_filter(spark):

@@ -13,7 +13,7 @@ import pytest
 from webextract.dom import parse_blocks
 from webextract.docpages import PAGES_SCHEMA
 from webextract.extract import extract_document
-from webextract.htmlsplit import parse_blocks_seeded, scan_cuts
+from webextract.htmlsplit import _parse_seeded, scan_cuts
 from webextract.options import ConvertOptions
 from webextract.pipeline import extracted_df
 from webextract.split import extracted_split_df
@@ -94,7 +94,7 @@ def test_seeded_parse_identical_blocks(target):
         for j in range(len(bounds) - 1):
             start, state = bounds[j]
             end = bounds[j + 1][0]
-            got.extend(parse_blocks_seeded(text[start:end], state))
+            got.extend(_parse_seeded(text[start:end], state)[0])
         assert len(got) == len(want), (target, len(got), len(want))
         for g, w in zip(got, want):
             for f in ("tag", "kind", "path", "container_path", "depth",
@@ -102,21 +102,6 @@ def test_seeded_parse_identical_blocks(target):
                       "heading_level", "li_index", "cells", "src"):
                 assert getattr(g, f) == getattr(w, f), \
                     (target, f, getattr(g, f), getattr(w, f))
-
-
-def test_scan_cuts_skips_text_no_cut_can_land_in(monkeypatch):
-    """A text no longer than the cut target (a payload the tier keeps
-    whole) returns no cuts without being tokenized."""
-    from webextract import dom, htmlsplit
-    calls = []
-
-    def counting(p, text):
-        calls.append(len(text))
-        return dom._fast_feed(p, text)
-    monkeypatch.setattr(htmlsplit, "_fast_feed", counting)
-    text = NASTY[0].decode("utf-8")
-    assert scan_cuts(text, len(text)) == [] and calls == []
-    assert scan_cuts(text, len(text) // 2) and calls == [len(text)]
 
 
 def _pages_df(spark, payloads):
@@ -187,8 +172,42 @@ def test_pdf_tier_still_works_with_html_split_on(spark):
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
     got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=40))
+                                      split_bytes=20))
     assert got == ref
+
+
+def test_tier_takes_only_payloads_it_cuts(spark, monkeypatch):
+    """The routing bar is 2 * split_bytes, the smallest payload that
+    split.n_segments cuts: one byte under it yields no segment row (the
+    plain kernel extracts it), and at it the split kernel emits at
+    least 2 segments."""
+    from webextract import htmlsplit
+    segs = spark.sparkContext.accumulator(0)
+    make = htmlsplit.make_html_split_kernel
+
+    def counting(opt, split_bytes):
+        kernel = make(opt, split_bytes)
+
+        def run(batches):
+            for b in kernel(batches):
+                segs.add(b.num_rows)
+                yield b
+        return run
+    monkeypatch.setattr(htmlsplit, "make_html_split_kernel", counting)
+    split_bytes = 256
+    body = (b"<html><body><article>" + b"<p>alpha beta gamma delta</p>" * 20
+            + b"</article></body></html>")
+
+    def n_segs(size):
+        payload = body[:size]
+        assert len(payload) == size
+        segs.value = 0
+        (row,) = extracted_split_df(_pages_df(spark, [payload]), ALL_FORMATS,
+                                    split_bytes=split_bytes).collect()
+        assert row.text == extract_document(payload, ALL_FORMATS).text
+        return segs.value
+    assert n_segs(2 * split_bytes - 1) == 0
+    assert n_segs(2 * split_bytes) >= 2
 
 
 def test_html_split_tier_plan_shape(spark):

@@ -88,8 +88,9 @@ def assert_batch_lineage(spark, root, partitions):
 
 PATHS = {
     "plain": dict(n=200, job=dict()),
-    # mini-PDFs are 0.5-2.7 KB: most take the page-split tier
-    "pdf_split": dict(n=200, job=dict(split_bytes=1024)),
+    # mini-PDFs are 0.5-2.7 KB: those of at least 1 KB (2 * split_bytes)
+    # take the page-split tier
+    "pdf_split": dict(n=200, job=dict(split_bytes=512)),
     "html_split": dict(n=100, giant_every=25,
                        job=dict(split_bytes=16 * 1024)),
 }
@@ -112,7 +113,8 @@ def test_counters_equal_stage_aggregation(spark, tmp_path, path):
     assert len(text.encode("utf-8")) > len(text) > 0
     if "split_bytes" in cfg["job"]:
         # some documents did take the split tier under test
-        split = rows.filter(F.col("bytes_in") >= cfg["job"]["split_bytes"])
+        split = rows.filter(
+            F.col("bytes_in") >= 2 * cfg["job"]["split_bytes"])
         if path == "pdf_split":
             split = split.filter(F.col("fmt") == "pdf")
         assert split.count() > 0

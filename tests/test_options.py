@@ -154,7 +154,7 @@ def test_cli_chunk_stage(spark, tmp_path):
     from webextract.cli import main
     out = str(tmp_path / "cli_table")
     rc = main(["--synth", "40", "--output", out, "--partitions", "4",
-               "--waves", "1", "--cpus", "4",
+               "--waves", "1",
                "--chunk", "hybrid", "--chunk-max-tokens", "32",
                "--chunk-tokenizer", "subword"])
     assert rc == 0
@@ -176,7 +176,7 @@ def test_cli_chunk_trained_wordpiece(spark, tmp_path):
     from webextract.cli import main
     out = str(tmp_path / "cli_wp")
     rc = main(["--synth", "40", "--output", out, "--partitions", "4",
-               "--waves", "1", "--cpus", "4",
+               "--waves", "1",
                "--chunk", "hybrid", "--chunk-max-tokens", "32",
                "--chunk-tokenizer", "trained",
                "--chunk-trainer", "wordpiece",

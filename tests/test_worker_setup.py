@@ -134,7 +134,7 @@ def test_run_extract_byte_identical(spark, tmp_path):
     pages = pages_df(spark, n, parallelism=4, **giant)
     root = str(tmp_path / "t")
     run_extract(spark, pages, root, partitions=8, waves=2,
-                split_bytes=1024)
+                split_bytes=512)
     cols = ("status", "fmt", "text", "text_md", "doctags")
     got = {r.url: tuple(r[c] for c in cols)
            for r in IceTable(root).read(spark).collect()}

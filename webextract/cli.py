@@ -1,7 +1,9 @@
 """spark-submit entry point for the extraction job.
 
-Packaging contract (north_rule): ``spark-submit --py-files pkg.zip -m``
-on a multi-executor cluster.  The arg surface mirrors the reference's
+Packaging contract (north_rule): ``spark-submit --py-files pkg.zip
+webextract/cli.py`` on a multi-executor cluster; the extraction session
+takes the job's Spark settings (session.JOB_CONF) under any ``--conf``
+given to spark-submit.  The arg surface mirrors the reference's
 option record (ConvertDocumentsRequestOptions fields we honor,
 /root/reference/docling_serve/datamodel/convert.py:20-40) the way its
 FormDepends maps pydantic fields to CLI-ish form fields
@@ -23,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import fields
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +41,16 @@ def _bool(v: str) -> bool:
     raise argparse.ArgumentTypeError(f"not a boolean: {v!r}")
 
 
+def _csv(v: str) -> tuple[str, ...]:
+    """A comma list, e.g. md,text; empty items dropped."""
+    return tuple(x for x in v.split(",") if x)
+
+
+def _page_range(v: str) -> tuple[int, int]:
+    lo, hi = (int(x) for x in v.split(","))
+    return lo, hi
+
+
 def build_parser() -> argparse.ArgumentParser:
     from webextract.options import DEFAULT_OPTIONS as D
     p = argparse.ArgumentParser(prog="webextract")
@@ -48,21 +61,22 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True, help="IceTable root dir")
     p.add_argument("--partitions", type=int, default=64)
     p.add_argument("--waves", type=int, default=4)
-    p.add_argument("--cpus", type=int, default=32,
-                   help="accepted for compatibility; unused")
     p.add_argument("--run-id", default=None)
     p.add_argument("--fail-after-wave", type=int, default=None,
                    help="inject a crash after wave K (resume testing)")
     p.add_argument("--split-bytes", type=int, default=None,
-                   help="fan out every payload of at least this many "
-                        "bytes across tasks, cut into pieces of at least "
-                        "that size (split.py)")
-    # --- conversion option surface (reference form fields, usage.md:14-41) ---
-    p.add_argument("--to-formats", default=",".join(D.to_formats))
-    p.add_argument("--from-formats", default=",".join(D.from_formats))
+                   help="cut every payload of at least twice this many "
+                        "bytes into pieces of at least this many bytes, "
+                        "parsed across tasks (split.py)")
+    # --- conversion option surface (reference form fields, usage.md:14-41);
+    # each dest is its ConvertOptions field (options_from_args) ---
+    p.add_argument("--to-formats", type=_csv, default=",".join(D.to_formats))
+    p.add_argument("--from-formats", type=_csv,
+                   default=",".join(D.from_formats))
     p.add_argument("--max-file-size", type=int, default=D.max_file_size)
     p.add_argument("--max-num-pages", type=int, default=D.max_num_pages)
-    p.add_argument("--page-range", default=f"{D.page_range[0]},{D.page_range[1]}",
+    p.add_argument("--page-range", type=_page_range,
+                   default=f"{D.page_range[0]},{D.page_range[1]}",
                    help="inclusive 1-based page slice, e.g. 2,5")
     p.add_argument("--md-page-break-placeholder", default=D.md_page_break_placeholder)
     p.add_argument("--image-export-mode", default=D.image_export_mode,
@@ -75,7 +89,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--do-ocr", type=_bool, default=D.do_ocr)
     p.add_argument("--force-ocr", type=_bool, default=D.force_ocr)
     p.add_argument("--ocr-engine", default=D.ocr_engine)
-    p.add_argument("--ocr-lang", default="",
+    p.add_argument("--ocr-lang", type=_csv, default=",".join(D.ocr_lang),
                    help="comma list, e.g. en,fr")
     p.add_argument("--pdf-backend", default=D.pdf_backend)
     p.add_argument("--pipeline", default=D.pipeline)
@@ -150,36 +164,12 @@ def build_parser() -> argparse.ArgumentParser:
 
 def options_from_args(args) -> "ConvertOptions":
     """argparse namespace -> full ConvertOptions record (the reference's
-    FormDepends flattening, helper_functions.py:46-115)."""
+    FormDepends flattening, helper_functions.py:46-115): every parsed
+    value whose dest names a field; the rest keep their defaults."""
     from webextract.options import ConvertOptions
-    lo, hi = (int(x) for x in args.page_range.split(","))
-    return ConvertOptions(
-        from_formats=tuple(f for f in args.from_formats.split(",") if f),
-        to_formats=tuple(f for f in args.to_formats.split(",") if f),
-        max_file_size=args.max_file_size,
-        max_num_pages=args.max_num_pages,
-        page_range=(lo, hi),
-        md_page_break_placeholder=args.md_page_break_placeholder,
-        image_export_mode=args.image_export_mode,
-        include_images=args.include_images,
-        images_scale=args.images_scale,
-        document_timeout=args.document_timeout,
-        abort_on_error=args.abort_on_error,
-        do_ocr=args.do_ocr, force_ocr=args.force_ocr,
-        ocr_engine=args.ocr_engine,
-        ocr_lang=tuple(x for x in args.ocr_lang.split(",") if x),
-        pdf_backend=args.pdf_backend, pipeline=args.pipeline,
-        do_table_structure=args.do_table_structure,
-        table_mode=args.table_mode,
-        table_cell_matching=args.table_cell_matching,
-        do_code_enrichment=args.do_code_enrichment,
-        do_formula_enrichment=args.do_formula_enrichment,
-        do_picture_classification=args.do_picture_classification,
-        do_picture_description=args.do_picture_description,
-        picture_description_area_threshold=args.picture_description_area_threshold,
-        picture_description_local=args.picture_description_local,
-        picture_description_api=args.picture_description_api,
-    )
+    return ConvertOptions(**{f.name: getattr(args, f.name)
+                             for f in fields(ConvertOptions)
+                             if hasattr(args, f.name)})
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -208,20 +198,19 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     from webextract.pipeline import run_extract
+    from webextract.session import job_session
     from webextract.sources import read_pages
     from webextract.synth import pages_df
 
-    spark = (SparkSession.builder.appName("webextract")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
+    spark = job_session(SparkSession.builder.appName("webextract")
+                        .getOrCreate())
     opt = options_from_args(args)
     # scheme-agnostic (file://, s3a://, ...) with fail-fast contract check
     pages = (read_pages(spark, args.input) if args.input
              else pages_df(spark, args.synth, seed=args.seed))
     summary = run_extract(
         spark, pages, args.output, opt=opt, partitions=args.partitions,
-        waves=args.waves, cpus=args.cpus, run_id=args.run_id,
+        waves=args.waves, run_id=args.run_id,
         fail_after_wave=args.fail_after_wave, split_bytes=args.split_bytes)
     if args.chunk != "none":
         # chunk stage over the COMMITTED table (reads manifests, so a

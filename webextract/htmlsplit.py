@@ -4,11 +4,12 @@ Boilerplate scoring is a document-GLOBAL decision, so a giant HTML page
 can only be split where semantics don't change — BETWEEN tag tokens,
 with the full parser state that crosses the cut carried along:
 
-* cut (``scan_cuts``, one task per oversized doc): a structural pass —
-  the one-shot parse's own tokenizer (``dom._fast_feed``) driving its
-  own ``_Parser`` tag handlers, with text dropped.  It still tokenizes
-  every byte, so it costs about 0.7x a full parse (measured
-  in-process), unless the doc is kept whole (split.n_segments).  At
+* cut (``scan_cuts``, one task per oversized doc, i.e. one of at
+  least ``2 * split_bytes`` bytes, which split.n_segments cuts into 2
+  or more pieces): a structural pass — the one-shot parse's own
+  tokenizer (``dom._fast_feed``) driving its own ``_Parser`` tag
+  handlers, with text dropped.  It still tokenizes every byte, so it
+  costs about 0.7x a full parse (measured in-process).  At
   candidate cut tags (block/container start tags, outside skipped
   subtrees and tables) it snapshots the crossing state: open element
   stack with per-element child counts (sibling numbering!),
@@ -105,11 +106,7 @@ def scan_cuts(text: str, target_chars: int) -> list[tuple[int, str]]:
     (test_htmlsplit parity tests pin this); text is tokenized and
     dropped.  Cuts land on start tags of block/container elements at
     least ``target_chars`` apart, never inside skipped subtrees
-    (script/style/svg/...) or tables; none lands in a text no longer
-    than ``target_chars``, which is not tokenized.  Raises when a
-    handler raises."""
-    if len(text) <= target_chars:
-        return []
+    (script/style/svg/...) or tables.  Raises when a handler raises."""
     p = _CutScan(target_chars)
     _fast_feed(p, text)
     return p.cuts
@@ -124,11 +121,6 @@ def _parse_seeded(text: str, state_json: str | None) -> tuple[list[Block], bool]
     p = seed_parser(state_json)
     ok = _feed_all(p, text)
     return p.blocks, ok
-
-
-def parse_blocks_seeded(text: str, state_json: str | None) -> list[Block]:
-    """Blocks of one seeded segment (test/identity surface)."""
-    return _parse_seeded(text, state_json)[0]
 
 
 # ---------------------------------------------------------------------------

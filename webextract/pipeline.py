@@ -365,11 +365,12 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
 
     ``fail_after_wave`` injects a crash between commits (tests only).
     ``split_bytes`` enables the oversized-document fan-out tier
-    (split.py): payloads >= the threshold are page-split (mini-PDF) or
-    cut-point-split (HTML, htmlsplit.py) across tasks, into pieces of
-    at least about ``split_bytes``, instead of pinning one task; None
-    keeps the pure no-shuffle plan.  ``cpus`` and ``html_split`` are
-    accepted for call-site compatibility and unused.
+    (split.py): a payload of at least ``2 * split_bytes`` bytes is
+    page-split (mini-PDF) or cut-point-split (HTML, htmlsplit.py) into
+    pieces of at least about ``split_bytes``, parsed across tasks
+    instead of pinning one; smaller payloads and None keep the pure
+    no-shuffle plan.  ``cpus`` and ``html_split`` are accepted for
+    call-site compatibility and unused.
     A resume (some parts already committed) with another ``partitions``
     or other options than the table's last run raises ValueError before
     anything is written.

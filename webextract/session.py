@@ -1,9 +1,10 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""The job's Spark settings, defined once.
 
-Tests/bench use local[N]; the same config block is what we'd ship in
-spark-defaults for a 1000-executor cluster (AQE on, Arrow on, shuffle
-partitions sized to cores; on a real cluster shuffle partitions scale
-with total cores and input volume instead).
+``JOB_CONF`` is what we'd ship in spark-defaults for a 1000-executor
+cluster (AQE on, Arrow on with 2048-row batches, scan splits sized for
+the kernel).  ``get_spark`` builds a local[N] session with them for
+tests and benchmarks; ``job_session`` gives them to the session
+spark-submit built for the CLI, under whatever it was launched with.
 """
 
 from __future__ import annotations
@@ -13,46 +14,47 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app: str = "webextract", cpus: int | None = None,
-              shuffle_partitions: int | None = None,
-              profile: str = "kernel") -> SparkSession:
-    """profile="kernel" (default): scan-split sizing tuned for the
-    CPU-bound extraction kernel — the per-byte cost of extraction is
-    ~10^3× a columnar scan's, so splits must be much finer than the
-    128 MB I/O default or small corpora collapse to 1-2 tasks
-    (openCostInBytes=4 MB folds 64 small files into ~3 splits —
-    measured 1.85× speedup on 32 cores with the fine settings).  The
-    same knob bounds straggler size at 100 TB.
+# The job's settings: runtime SQL confs, so a session that is already
+# running (the spark-submit CLI's) can take them (job_session).
+JOB_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Arrow batch size ≡ the reference's pipeline stage batching knob
+    # (DOCLING_PERF_PAGE_BATCH_SIZE etc., settings.py:77-82) — but
+    # sized for throughput.  A kernel holds a whole input batch in
+    # memory: its byte budget (udfs.row_kernel) only caps the size of
+    # its output batches
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # scan splits sized for the CPU-bound extraction kernel: its
+    # per-byte cost is ~10^3× a columnar scan's, so splits must be much
+    # finer than the 128 MB I/O default or small corpora collapse to 1-2
+    # tasks (openCostInBytes=4 MB folds 64 small files into ~3 splits —
+    # measured 1.85× speedup on 32 cores with the fine settings).  The
+    # same knob bounds straggler size at 100 TB.  A pure-columnar SQL
+    # session over corpus tables wants the stock sizes instead
+    # (``--maintenance compact`` keeps them).
+    "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(128 * 1024),
+}
 
-    profile="analytics": stock Spark split sizing, for pure-columnar
-    SQL sessions over corpus tables — at 100 TB the kernel profile
-    would mean ~13M scan splits of pure scheduler overhead for queries
-    that never touch the kernel.  The two profiles are the deployment
-    story (spark-defaults per job class); a session is one or the
-    other.  Corpus operators are robust to either: their CPU-heavy
-    stages self-spread via corpus._spread when the scan layout
-    under-parallelizes."""
+
+def get_spark(app: str = "webextract", cpus: int | None = None) -> SparkSession:
+    """A local[cpus] session with the job settings (JOB_CONF) and the
+    local-mode ones: shuffle partitions and default parallelism sized
+    to the cores, driver memory, no UI, and the cleaner's periodic
+    concurrent GC."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = f"local[{cpus}]"
-    sp = shuffle_partitions or max(cpus, 8)
-    b = (
+    return (
         SparkSession.builder
-        .master(master)
+        .master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config(map=JOB_CONF)
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size ≡ the reference's pipeline stage batching knob
-        # (DOCLING_PERF_PAGE_BATCH_SIZE etc., settings.py:77-82) — but
-        # sized for throughput.  A kernel holds a whole input batch in
-        # memory: its byte budget (udfs.row_kernel) only caps the size
-        # of its output batches
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("WEBEXTRACT_DRIVER_MEM", "48g"))
         # Broadcast/shuffle blocks are only reclaimed when the JVM GCs,
         # and a 48g heap can go minutes without one — long sessions
@@ -62,18 +64,26 @@ def get_spark(app: str = "webextract", cpus: int | None = None,
         # ContextCleaner's periodic GC every minute (default 30min), and
         # make System.gc() a CONCURRENT G1 cycle — the default full STW
         # compaction of a 48g heap full of humongous Arrow/broadcast
-        # allocations pauses for seconds.
+        # allocations pauses for seconds.  Both stay here: a driver
+        # spark-submit already started cannot take the JVM flag.
         .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.driver.extraJavaOptions",
                 "-XX:+ExplicitGCInvokesConcurrent")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    if profile == "kernel":
-        b = (b.config("spark.sql.files.maxPartitionBytes",
-                      str(8 * 1024 * 1024))
-             .config("spark.sql.files.openCostInBytes", str(128 * 1024)))
-    return b.getOrCreate()
+
+
+def job_session(spark: SparkSession) -> SparkSession:
+    """``spark`` with each job setting (JOB_CONF) its driver was not
+    launched with: a value given to spark-submit (``--conf``,
+    spark-defaults.conf) wins over the job's."""
+    launched = spark.sparkContext.getConf()
+    for k, v in JOB_CONF.items():
+        if not launched.contains(k):
+            spark.conf.set(k, v)
+    return spark
 
 
 def cores(spark: SparkSession) -> int:

@@ -12,13 +12,15 @@ function run by ``udfs.row_kernel``:
 1. split kernel (narrow 1->N mapInArrow): document-level admission runs
    HERE, once, on the whole payload, through the one-shot path's own
    ``extract.admit_payload``; refused docs ship one verdict row.  An
-   admitted doc is cut into n_segments: mini-PDFs into page groups that
-   keep the ORIGINAL header and page numbers (this module), HTML
-   between tag tokens with the crossing parser state (htmlsplit.py).
+   admitted doc is cut into n_segments, at least 2 for a routed
+   payload: mini-PDFs into page groups that keep the ORIGINAL header
+   and page numbers (this module), HTML between tag tokens with the
+   crossing parser state (htmlsplit.py).
 2. ``repartition(url, seg_idx)`` — the ONE payload shuffle: it moves
-   only the oversized docs (everything under ``split_bytes`` stays on
-   the no-shuffle path) and turns a straggler doc into N parallel
-   tasks, one segment partition per core.
+   only the docs that get cut, those of at least ``2 * split_bytes``
+   bytes (everything smaller stays on the no-shuffle path), and turns
+   a straggler doc into N parallel tasks, one segment partition per
+   core.
 3. segment kernel (narrow): parses each segment into blocks and drops
    its payload, so only block blobs cross the merge shuffle.
 4. merge (groupBy(url, warc_ts, rid) + collect_list, then one batched
@@ -77,7 +79,8 @@ _SEGX_SCHEMA = from_arrow_schema(_SEGX_ARROW)
 def n_segments(payload: bytes, split_bytes: int) -> int:
     """Segments an oversized payload is cut into: each carries at least
     about ``split_bytes`` (a smaller piece only adds per-segment cost
-    after the fan-out), so a payload under twice that stays whole."""
+    after the fan-out), so a payload under twice that is not cut and
+    does not take the tier (extracted_split_df)."""
     return max(1, len(payload) // split_bytes)
 
 
@@ -259,11 +262,13 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                        tally=None) -> DataFrame:
     """Extraction with the oversized-document fan-out tier.
 
-    Routing is declarative so Catalyst prunes every branch's scan:
-    payloads under ``split_bytes`` take the normal no-shuffle kernel
-    path; oversized mini-PDFs take the page-split chain and all other
-    oversized payloads the cut-point chain (htmlsplit.py), cut into
-    pieces of at least about ``split_bytes`` (n_segments).  All branches
+    Routing is declarative so Catalyst prunes every branch's scan: a
+    payload of at least ``2 * split_bytes`` bytes, the smallest that
+    n_segments cuts, is oversized.  Oversized mini-PDFs take the
+    page-split chain and all other oversized payloads the cut-point
+    chain (htmlsplit.py), cut into pieces of at least about
+    ``split_bytes``; every smaller payload takes the normal no-shuffle
+    kernel path, whose scan task maxPartitionBytes bounds.  All branches
     union to the same EXTRACT schema, so downstream (waves, IceTable
     commit, chunkers) is tier-oblivious.  ``cpus`` and ``html_split``
     are accepted for call-site compatibility and unused.  ``tally``: as
@@ -271,10 +276,11 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     merge, HTML merge) tallies the rows it emits."""
     from . import htmlsplit
     src = pages.select(*extract_input_cols(pages.columns, tally))
-    # coalesce: a NULL html payload makes the predicate SQL NULL, which
-    # every branch filter would drop — the row must take the normal
-    # kernel path (which emits its skipped verdict).
-    is_big = F.coalesce(F.length("html") >= F.lit(split_bytes),
+    # a payload the tier cuts: n_segments >= 2.  coalesce: a NULL html
+    # payload makes the predicate SQL NULL, which every branch filter
+    # would drop — the row must take the normal kernel path (which
+    # emits its skipped verdict).
+    is_big = F.coalesce(F.length("html") >= F.lit(2 * split_bytes),
                         F.lit(False))
     is_pdf = (F.substring(F.col("html").cast("binary"), 1,
                           len(pdfmini.MAGIC)) == F.lit(pdfmini.MAGIC))

@@ -1,11 +1,12 @@
-"""Per-part lineage counters are tallied by the extraction kernels.
+"""Per-part lineage counters are counted by the write tasks.
 
 Every wave commit records, per part_id, the eight counters of
-``udfs.LINEAGE_COUNTERS``.  The kernels count them while they produce
-the rows; these tests pin them against the aggregation the commit used
-to run over each written stage (``stage_aggregation``), applied to the
-committed rows, on every path that commits: the plain kernel, the PDF
-and HTML split tiers, and the streaming sink.
+``udfs.LINEAGE_COUNTERS``.  The write task that writes a part counts
+them while it writes the part's file (``udfs.lineage_counters``); these
+tests pin them against the aggregation the commit once ran over each
+written stage (``stage_aggregation``), applied to the committed rows,
+on every path that commits: the plain kernel, the PDF and HTML split
+tiers, and the streaming sink.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 from webextract.icetable import IceTable
 from webextract.pipeline import run_extract
 from webextract.synth import PAGES_SCHEMA, pages_df
-from webextract.udfs import LINEAGE_COUNTERS, TallyParam, part_counters
+from webextract.udfs import LINEAGE_COUNTERS
 
 ZERO = dict.fromkeys(LINEAGE_COUNTERS, 0)
 
@@ -38,8 +39,8 @@ def with_unicode_page(spark, pages):
 
 
 def stage_aggregation(rows) -> dict[int, dict[str, int]]:
-    """The groupBy commit_stage ran over each written stage dir before
-    the kernels tallied the counters (the test oracle)."""
+    """The groupBy commit_stage once ran over each written stage dir
+    (the test oracle)."""
     agg = rows.groupBy("part_id").agg(
         F.count("*").alias("num_docs"),
         F.sum(F.when(F.col("status") != "skipped", 1).otherwise(0))
@@ -148,34 +149,23 @@ def test_streaming_sink_counters(spark, tmp_path):
     assert lineage_by_part(tbl) == want
 
 
-def test_rerun_task_tally_is_counted_once():
-    """A retried or speculative task reports under the same (stage,
-    partition) key: the merge replaces its tally, so totals hold."""
-    param = TallyParam()
-    first = {(3, 0): {5: [2, 2, 1, 0, 1, 0, 100, 40]}}
-    other = {(3, 1): {5: [1, 0, 0, 0, 0, 1, 7, 0], 6: [1] * 8}}
-    acc = param.addInPlace(param.zero(None), dict(first))
-    acc = param.addInPlace(acc, dict(other))
-    once = part_counters(acc)
-    acc = param.addInPlace(acc, dict(first))
-    assert part_counters(acc) == once
-    assert once[5] == dict(zip(LINEAGE_COUNTERS,
-                               [3, 2, 1, 0, 1, 1, 107, 40]))
-
-
 def test_plain_wave_is_one_write_action(spark, tmp_path):
-    """A plain-path wave launches the AQE shuffle-map job and the
-    write, nothing else: no pass re-reads the stage to count it."""
+    """A 4-wave plain run launches at most 2 Spark jobs in all, the AQE
+    shuffle-map job and the write: its waves share one action, no pass
+    re-reads the written parts to count them, and the commits run no
+    job."""
     sc = spark.sparkContext
     pages = pages_df(spark, 40, parallelism=2)
     group = "lineage-one-action"
-    sc.setJobGroup(group, "one plain wave")
+    sc.setJobGroup(group, "one plain run")
     try:
-        s = run_extract(spark, pages, str(tmp_path / "one"), partitions=4,
-                        waves=1, cpus=2)
+        s = run_extract(spark, pages, str(tmp_path / "one"), partitions=8,
+                        waves=4, cpus=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(s["waves"]) == 1 and s["waves"][0]["num_docs"] == 40
-    assert "commit_ms" in s["waves"][0]
+    assert len(s["waves"]) == 4
+    assert sum(w["num_docs"] for w in s["waves"]) == 40
+    assert all("commit_ms" in w for w in s["waves"])
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 2, jobs

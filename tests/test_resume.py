@@ -1,12 +1,23 @@
 """Checkpoint-resume lifecycle: kill between wave commits, rerun skips
 committed partitions, final output identical to an uninterrupted run
-(north_rule: resumable from checkpoint with per-partition lineage)."""
+(north_rule: resumable from checkpoint with per-partition lineage).
+
+A run writes all its parts in one Spark action and its write tasks
+publish each part before the driver commits the waves, so a run can
+also die mid-write, mid-commit or while a resume commits the parts it
+adopts; each such crash is followed by a resume that must read every
+url exactly once, byte-identical to an uninterrupted run, and never
+read what the crash left unpublished or uncommitted."""
+
+import datetime
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
+from webextract import icetable
 from webextract.icetable import IceTable
-from webextract.pipeline import run_extract
+from webextract.pipeline import run_extract, with_part_id
 from webextract.synth import pages_df
 
 N = 300
@@ -142,3 +153,200 @@ def test_resume_refuses_other_partitions_or_options(spark, tmp_path):
     # the matching resume still completes the table exactly once
     run_extract(spark, pages, root, partitions=8, waves=4, cpus=2)
     assert IceTable(root).read(spark).count() == 200
+
+
+class Crash(Exception):
+    """A crash injected into the driver or a write task."""
+
+
+@pytest.fixture(scope="module")
+def reference(spark, tmp_path_factory):
+    """The pages and the rows of one uninterrupted run, by url."""
+    pages = pages_df(spark, N, parallelism=8)
+    root = str(tmp_path_factory.mktemp("reference") / "t")
+    run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    return pages, _rows(spark, root)
+
+
+def _rows(spark, root) -> dict:
+    rows = IceTable(root).read(spark).collect()
+    by_url = {r.url: r for r in rows}
+    assert len(by_url) == len(rows)                 # every url once
+    return by_url
+
+
+def _published(root, run_id) -> set[int]:
+    run_dir = os.path.join(IceTable(root).files_dir, run_id)
+    return {int(m.group(1)) for m in map(icetable._RECORD.fullmatch,
+                                         os.listdir(run_dir)) if m}
+
+
+def _crash_on_pointer_swap(monkeypatch, root, nth: int) -> None:
+    """os.replace raises instead of swapping the table's _CURRENT
+    pointer on its ``nth`` call, after the snapshot file is written."""
+    real, calls = os.replace, []
+    current = os.path.join(root, "metadata", "_CURRENT")
+
+    def replace(src, dst, **kw):
+        if dst == current:
+            calls.append(dst)
+            if len(calls) == nth:
+                raise Crash("killed before the pointer swap")
+        return real(src, dst, **kw)
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def test_write_task_dies_after_publishing(spark, tmp_path, monkeypatch,
+                                          reference):
+    """Every write task dies at its second part, after publishing its
+    first: the action fails and nothing is committed.  The rerun adopts
+    the published parts and computes the rest; the files the dead
+    tasks wrote but never published are never read."""
+    pages, want = reference
+    root = str(tmp_path / "t")
+    seen = []
+
+    def die_at_second_part(part_id):
+        # unpickled afresh by each task: ``seen`` is the task's own (and
+        # a builtin exception, which a worker can unpickle)
+        seen.append(part_id)
+        if len(seen) == 2:
+            raise RuntimeError("write task killed")
+    monkeypatch.setattr(icetable, "_BEFORE_PUBLISH", die_at_second_part)
+    with pytest.raises(Exception, match="write task killed"):
+        run_extract(spark, pages, root, partitions=PARTS, waves=4,
+                    run_id="crashed")
+    monkeypatch.setattr(icetable, "_BEFORE_PUBLISH", None)
+    tbl = IceTable(root)
+    assert tbl.current_snapshot_id() is None
+    published = _published(root, "crashed")
+    unpublished = [fn for fn in os.listdir(os.path.join(tbl.files_dir,
+                                                        "crashed"))
+                   if fn.endswith(".parquet")
+                   and int(fn[5:10]) not in published]
+    assert published and unpublished
+
+    s = run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    assert s["skipped_parts"] == []
+    assert s["adopted_parts"] == sorted(published)
+    assert sorted(p for w in s["waves"] for p in w["parts"]) == \
+        list(range(PARTS))
+    assert _rows(spark, root) == want
+    live = {os.path.basename(f) for f in tbl.data_files()}
+    assert not live & set(unpublished)
+    assert tbl.expire_orphans() == len(unpublished)
+    assert _rows(spark, root) == want
+
+
+def test_crash_before_pointer_swap(spark, tmp_path, monkeypatch,
+                                   reference):
+    """The run dies in its second wave commit, after the snapshot file
+    is written and before _CURRENT swaps to it.  The rerun never reads
+    the dangling snapshot, adopts that wave's parts and the later ones,
+    and reads every url once."""
+    pages, want = reference
+    root = str(tmp_path / "t")
+    _crash_on_pointer_swap(monkeypatch, root, 2)
+    with pytest.raises(Crash):
+        run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    monkeypatch.undo()
+    tbl = IceTable(root)
+    head = tbl.current_snapshot_id()
+    snaps = {fn[5:-5] for fn in os.listdir(tbl.meta_dir)
+             if fn.startswith("snap-") and fn.endswith(".json")}
+    (dangling,) = snaps - {head}
+    committed = tbl.committed_parts()
+    assert 0 < len(committed) < PARTS
+
+    read, snapshot = [], IceTable._snapshot
+
+    def reading(self, snap_id):
+        read.append(snap_id)
+        return snapshot(self, snap_id)
+    monkeypatch.setattr(IceTable, "_snapshot", reading)
+    s = run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    assert s["skipped_parts"] == sorted(committed)
+    assert s["adopted_parts"] == sorted(set(range(PARTS)) - committed)
+    assert _rows(spark, root) == want
+    assert dangling not in read
+    assert dangling not in {x["snapshot_id"] for x in tbl.snapshots()}
+
+
+@pytest.mark.parametrize("where", ["pointer_swap", "unpublish"])
+def test_crash_during_adoption_commit(spark, tmp_path, monkeypatch,
+                                      reference, where):
+    """A resume dies while it commits the parts it adopts: before its
+    snapshot becomes the head, or after, before it drops the parts'
+    records.  A second resume reads every url exactly once."""
+    pages, want = reference
+    root = str(tmp_path / "t")
+    run_extract(spark, pages, root, partitions=PARTS, waves=4,
+                fail_after_wave=0)
+    tbl = IceTable(root)
+    committed = tbl.committed_parts()
+    if where == "pointer_swap":
+        _crash_on_pointer_swap(monkeypatch, root, 1)
+    else:
+        def unpublish(self, parts):
+            raise Crash("killed before the records were dropped")
+        monkeypatch.setattr(IceTable, "unpublish", unpublish)
+    with pytest.raises(Crash):
+        run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    monkeypatch.undo()
+    adopted_first = sorted(set(range(PARTS)) - committed)
+    assert tbl.committed_parts() == (committed if where == "pointer_swap"
+                                     else set(range(PARTS)))
+
+    s = run_extract(spark, pages, root, partitions=PARTS, waves=4)
+    assert s["adopted_parts"] == (adopted_first if where == "pointer_swap"
+                                  else [])
+    assert sorted(tbl.committed_parts()) == list(range(PARTS))
+    assert _rows(spark, root) == want
+    lin = tbl.lineage()
+    assert sorted(r["part_id"] for r in lin) == list(range(PARTS))
+    assert sum(r["num_docs"] for r in lin) == N
+
+
+def test_abort_unpublishes_the_groups_not_committed(spark, tmp_path):
+    """abort_on_error raises at the wave holding a failed document; the
+    later waves' parts were written but are unpublished, so a rerun on
+    the fixed input recomputes them instead of adopting rows of the old
+    input."""
+    from webextract.docpages import PAGES_SCHEMA
+    from webextract.options import ConvertOptions
+    opt = ConvertOptions(abort_on_error=True)
+    ts = datetime.datetime(2025, 3, 1, 12, 0, 0)
+
+    def pages(words: bytes, bad: str | None):
+        rows = [(f"doc://{i}", ts,
+                 b'{"schema_name": "other-schema", "blocks": [}'
+                 if f"doc://{i}" == bad else
+                 b"<html><body><article><p>" + words * 30
+                 + b"</p></article></body></html>", "", "en")
+                for i in range(30)]
+        return spark.createDataFrame(rows, PAGES_SCHEMA).repartition(4)
+
+    part_of = {r.url: r.part_id for r in with_part_id(
+        pages(b"x ", None), 8).select("url", "part_id").collect()}
+    bad = min(part_of, key=part_of.get)
+    assert part_of[bad] < 7
+    root = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="abort_on_error"):
+        run_extract(spark, pages(b"old words ", bad), root, opt=opt,
+                    partitions=8, waves=8)
+    tbl = IceTable(root)
+    committed = tbl.committed_parts()
+    assert part_of[bad] in committed and len(committed) < 8
+
+    s = run_extract(spark, pages(b"new words ", None), root, opt=opt,
+                    partitions=8, waves=8)
+    assert s["adopted_parts"] == []
+    assert s["skipped_parts"] == sorted(committed)
+    rows = _rows(spark, root)
+    assert len(rows) == 30
+    for url, r in rows.items():
+        old = part_of[url] in committed
+        assert (r.status == "failure") == (url == bad)
+        if url != bad:
+            assert ("old words" in r.text) == old
+            assert ("new words" in r.text) == (not old)

@@ -1,26 +1,31 @@
-"""One write path into the table.
+"""The write paths into the table.
 
-``IceTable.stage`` is the only code that writes a staged frame and lists
-its data files, and ``pipeline.write_wave`` stages and commits every
-wave, batch or streaming.  These tests pin what that path promises: a
+``IceTable.stage`` writes a staged frame and lists its data files;
+``IceTable.stage_parts`` writes a run's parts, one file each, and
+publishes them, and ``pipeline.write_wave`` writes and commits every
+run, batch or streaming.  These tests pin what those paths promise: a
 commit lists exactly the files its write produced (also under a table
-root full of glob metacharacters), each part is exactly one file, each
-wave's write runs ``min(parts, defaultParallelism)`` tasks, and a wave
-commit opens each new file's footer once without walking the snapshot
-chain.
+root full of glob metacharacters), each part is exactly one file, a
+run's write runs ``min(parts, defaultParallelism)`` tasks, a wave
+commit opens no footer and walks no snapshot chain, a retried attempt
+never adds a file to a part, and a published part is committed only
+while its file exists.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow.parquet as pq
 import pytest
 
-from webextract import pipeline
+from webextract import icetable, pipeline
 from webextract.icetable import IceTable
-from webextract.pipeline import run_extract
+from webextract.options import DEFAULT_OPTIONS
+from webextract.pipeline import extracted_df, run_extract, with_part_id
 from webextract.synth import pages_df
+from webextract.udfs import lineage_counters
 
 
 def _committed(tbl: IceTable) -> list[dict]:
@@ -70,35 +75,26 @@ def test_glob_metachar_root(spark, tmp_path):
 
 
 @pytest.mark.parametrize("split", [False, True], ids=["plain", "split_tier"])
-def test_one_file_per_part_and_write_tasks(spark, tmp_path, monkeypatch,
-                                           split):
-    """With more parts per wave than defaultParallelism, each wave's
-    write runs min(parts, defaultParallelism) tasks and still commits
-    exactly one data file per non-empty part."""
+def test_one_file_per_part_and_write_tasks(spark, tmp_path, split):
+    """With more parts than defaultParallelism, the run's one write
+    stage runs min(parts, defaultParallelism) tasks and each wave still
+    commits exactly one data file per non-empty part."""
     sc = spark.sparkContext
     dp = sc.defaultParallelism
     partitions, waves = 4 * dp, 2          # 2 * dp parts per wave
-    groups = ["write-tasks-0"]
-    commit = pipeline.commit_stage
-
-    def commit_then_next_group(*a, **k):
-        # each wave's jobs run under their own job group
-        res = commit(*a, **k)
-        groups.append(f"write-tasks-{len(groups)}")
-        sc.setJobGroup(groups[-1], "next wave")
-        return res
-    monkeypatch.setattr(pipeline, "commit_stage", commit_then_next_group)
+    group = "write-tasks"
     kw = {"split_bytes": 1} if split else {}
-    sc.setJobGroup(groups[0], "first wave")
+    sc.setJobGroup(group, "one run")
     try:
         s = run_extract(spark, pages_df(spark, 6 * partitions, parallelism=2),
                         str(tmp_path / "t"), partitions=partitions,
                         waves=waves, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(s["waves"]) == waves == len(groups) - 1
+    assert len(s["waves"]) == waves
 
     tbl = IceTable(str(tmp_path / "t"))
+    assert len(tbl.snapshots()) == waves
     metas = _committed(tbl)
     assert sorted(m["part_id"] for m in metas) == list(range(partitions))
     assert sum(m["counters"]["num_docs"] for m in metas) == 6 * partitions
@@ -107,16 +103,16 @@ def test_one_file_per_part_and_write_tasks(spark, tmp_path, monkeypatch,
 
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    for wave, group in zip(s["waves"], groups):
-        write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
-        assert write_job.status == "SUCCEEDED"
-        write_stage = tracker.getStageInfo(max(write_job.stageIds))
-        assert write_stage.numTasks == min(len(wave["parts"]), dp), wave
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    assert write_job.status == "SUCCEEDED"
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == min(partitions, dp)
 
 
 def test_wave_commit_reads_each_footer_once(spark, tmp_path, monkeypatch):
-    """A wave commit opens each new file's footer once (bounds and row
-    count together) and reads no snapshot of the chain."""
+    """A wave commit opens no parquet footer, because each file's
+    bounds and row count come from the write task that closed it, and
+    reads no snapshot of the chain."""
     opened, snapshots, per_wave = [], [], []
     counting = [False]
     parquet_file = pq.ParquetFile
@@ -154,9 +150,110 @@ def test_wave_commit_reads_each_footer_once(spark, tmp_path, monkeypatch):
                 str(tmp_path / "t"), partitions=8, waves=3)
     assert len(per_wave) == 3
     for opens, snaps, files in per_wave:
-        assert files and sorted(opens) == sorted(files)
+        assert files and opens == []
         assert snaps == []
     tbl = IceTable(str(tmp_path / "t"))
     rows = tbl.data_file_rows()
     assert set(rows) == set(tbl.data_files())
     assert sum(rows.values()) == 40
+    for f, n in rows.items():
+        assert pq.ParquetFile(f).metadata.num_rows == n
+    for f, bounds in tbl.data_file_stats().items():
+        assert bounds == IceTable.file_column_stats(f, ("url",)) != {}
+
+
+def _record(tbl: IceTable, run_id: str, part_id: int) -> str:
+    return os.path.join(tbl.files_dir, run_id, f"part-{part_id:05d}.json")
+
+
+def test_retried_attempt_and_orphans(spark, tmp_path):
+    """Two attempts of one part write two files with different names;
+    the commit lists only the files of the attempt the action returned,
+    one file for the part.  The orphan GC then removes the other
+    attempt's file, and a published but uncommitted part's file
+    together with its record; a commit refuses a file that is gone."""
+    tbl = IceTable(str(tmp_path / "t"))
+    rows = (extracted_df(with_part_id(pages_df(spark, 40, parallelism=2), 4))
+            .filter("part_id = 1").toArrow())
+    assert rows.num_rows > 0
+    run_dir = os.path.join(tbl.files_dir, "r")
+    os.makedirs(run_dir)
+    stamp = {"options_hash": DEFAULT_OPTIONS.options_hash(), "partitions": 4}
+    write = icetable._part_writer(run_dir, run_dir, "r", lineage_counters,
+                                  stamp, ("url",), None)
+
+    def attempt() -> dict:
+        out = list(write(iter(rows.to_batches())))
+        assert len(out) == 1 and out[0].column("part_id").to_pylist() == [1]
+        return json.loads(out[0].column("record")[0].as_py())
+
+    first, second = attempt(), attempt()
+    assert first["files"] != second["files"]
+    assert all(os.path.isfile(f) for f in first["files"] + second["files"])
+    with open(_record(tbl, "r", 1)) as f:
+        assert json.load(f) == second         # the last to publish
+    assert first["counters"] == second["counters"]
+    assert first["counters"]["num_docs"] == rows.num_rows
+
+    pipeline.commit_stage(spark, tbl, "r", {1: first}, DEFAULT_OPTIONS, 0, 4)
+    (meta,) = _committed(tbl)
+    assert meta["files"] == first["files"] and len(meta["files"]) == 1
+    assert not os.path.exists(_record(tbl, "r", 1))
+    assert tbl.expire_orphans() == 1
+    assert not os.path.exists(second["files"][0])
+    assert tbl.read(spark).count() == rows.num_rows
+
+    third = attempt()                         # published, never committed
+    assert tbl.published(set(), stamp) == {1: third}
+    assert tbl.expire_orphans() == 1
+    assert not os.path.exists(third["files"][0])
+    assert not os.path.exists(_record(tbl, "r", 1))
+    with pytest.raises(FileNotFoundError):    # never commit a lost file
+        pipeline.commit_stage(spark, tbl, "r", {1: third}, DEFAULT_OPTIONS,
+                              0, 4)
+    assert tbl.read(spark).count() == rows.num_rows
+
+
+def _crash_after_first_wave(spark, root: str, pages) -> tuple[str, set[int]]:
+    s = run_extract(spark, pages, root, partitions=8, waves=4,
+                    fail_after_wave=0)
+    assert s.get("injected_failure")
+    tbl = IceTable(root)
+    published = {p for p in range(8)
+                 if os.path.exists(_record(tbl, s["run_id"], p))}
+    assert published and not published & tbl.committed_parts()
+    return s["run_id"], published
+
+
+def test_resume_recomputes_parts_whose_files_are_gone(spark, tmp_path):
+    """A published part whose file is gone, deleted by hand or by an
+    orphan GC run between the crash and the resume, is recomputed; it
+    is never committed without its rows."""
+    pages = pages_df(spark, 40, parallelism=2)
+    want = sorted(r["url"] for r in pages.select("url").collect())
+
+    root = str(tmp_path / "by_hand")
+    run_id, published = _crash_after_first_wave(spark, root, pages)
+    tbl = IceTable(root)
+    lost = min(published)
+    with open(_record(tbl, run_id, lost)) as f:
+        os.remove(json.load(f)["files"][0])
+    s = run_extract(spark, pages, root, partitions=8, waves=4)
+    assert s["adopted_parts"] == sorted(published - {lost})
+    assert lost in {p for w in s["waves"] if not w.get("adopted")
+                    for p in w["parts"]}
+    assert sorted(r["url"] for r in tbl.read(spark).collect()) == want
+
+    root = str(tmp_path / "gc")
+    run_id, published = _crash_after_first_wave(spark, root, pages)
+    tbl = IceTable(root)
+    assert tbl.expire_orphans() == len(published)
+    assert not any(os.path.exists(_record(tbl, run_id, p))
+                   for p in published)
+    s = run_extract(spark, pages, root, partitions=8, waves=4)
+    assert s["adopted_parts"] == []
+    metas = _committed(tbl)
+    assert sorted(m["part_id"] for m in metas) == list(range(8))
+    for m in metas:
+        assert len(m["files"]) == (m["counters"]["num_docs"] > 0), m
+    assert sorted(r["url"] for r in tbl.read(spark).collect()) == want

@@ -156,9 +156,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--orphan-grace", type=float, default=86400.0,
                    help="expire: never GC unreferenced files younger "
                         "than this many seconds (Iceberg's older_than "
-                        "contract) — a live run's staged wave files are "
+                        "contract) — a live run's written part files are "
                         "unreferenced until their commit, and deleting "
-                        "them mid-run silently empties the part")
+                        "them mid-run fails its commit")
     return p
 
 

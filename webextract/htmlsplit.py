@@ -160,7 +160,7 @@ def make_html_seg_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
 
 
 def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                           tally=None):
+                           part_id: bool = False):
     """mapInArrow: a doc's concatenated blocks -> global select_main ->
     finish_blocks (the one-shot path's own functions)."""
-    return merge_frame(opt, _finish_html, tally)
+    return merge_frame(opt, _finish_html, part_id)

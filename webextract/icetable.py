@@ -7,10 +7,17 @@ same shape a real catalog would slot into:
 * data files live wherever they were written (``files/<run_id>/...``);
   the MANIFEST is the only source of truth — orphan files from a killed
   run are simply never referenced (exactly Iceberg's model).
-* ``IceTable.stage`` owns the staging layout: every writer stages its
-  frame into ``files/<run_id>/wave-NNNN/`` through it and commits the
+* ``IceTable`` owns the staging layout: a writer stages its frame
+  into ``files/<run_id>/wave-NNNN/`` through ``stage`` and commits the
   data files it lists, and the orphan GC judges files with the same
   data-file predicate, so a commit lists exactly what its write made.
+  The extraction job writes through ``stage_parts`` instead: one file
+  per part under ``files/<run_id>/``, each PUBLISHED by its write task
+  with a per-part record (``part-PPPPP.json``: its files, row counts,
+  bounds and counters) that a resume can commit without recomputing
+  the part (``published``); a commit drops the records it covered
+  (``unpublish``), and the orphan GC drops a record together with its
+  file.
 * a snapshot is a JSON manifest listing committed partitions, their data
   files, and per-partition lineage counters; snapshots chain via
   ``parent_id``.
@@ -37,6 +44,86 @@ def _is_data_file(name: str) -> bool:
     """A data file of Spark's parquet output; ``_SUCCESS`` and ``.crc``
     markers are not."""
     return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+# a publication record's name: files/<run_id>/part-PPPPP.json
+_RECORD = re.compile(r"part-(\d+)\.json")
+
+# Test hook: called in the write kernel with each part_id once the
+# part's data file is closed and before its record is published, so a
+# test can kill a write task between the two.
+_BEFORE_PUBLISH = None
+
+
+def _part_writer(out_dir: str, table_dir: str, run_id: str, count,
+                 stamp: dict, stats_cols: tuple[str, ...], before_publish):
+    """stage_parts' mapInArrow write kernel over rows sorted by
+    ``part_id``.  Each part's rows become one single-row-group snappy
+    parquet file in ``out_dir`` without the part_id column (a
+    timestamp column keeps the UTC zone Spark sends, so Spark reads it
+    back as TimestampType, not TimestampNTZType), named
+    ``part-PPPPP-<attempt>.parquet`` with a name unique to this
+    attempt; once the file is closed the part is published: its record
+    replaces ``part-PPPPP.json`` atomically (tmp + ``os.replace``).
+    The record names the file as the table spells it (``table_dir``),
+    with its row count and ``stats_cols`` bounds from the closed
+    writer's footer, ``count(rows)`` as its counters, and ``stamp``.
+    Yields one (part_id, record JSON) row per part."""
+
+    def publish(part_id: int, pieces: list) -> str:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        rows = pa.Table.from_batches(pieces).drop_columns(["part_id"])
+        name = f"part-{part_id:05d}-{uuid.uuid4().hex}.parquet"
+        # plain encoding and statistics of ``stats_cols`` only: most
+        # columns are extracted text, which neither a dictionary nor
+        # min/max values of kilobytes shrink or prune
+        writer = pq.ParquetWriter(os.path.join(out_dir, name), rows.schema,
+                                  compression="snappy", use_dictionary=False,
+                                  write_statistics=list(stats_cols),
+                                  store_schema=False)
+        writer.write_table(rows, row_group_size=max(1, rows.num_rows))
+        writer.close()
+        md = writer.writer.metadata
+        f = os.path.join(table_dir, name)
+        record = json.dumps({
+            "run_id": run_id, "part_id": part_id, "files": [f],
+            "file_rows": {f: md.num_rows},
+            "file_stats": {f: IceTable._column_bounds(md, stats_cols)},
+            "counters": count(rows), **stamp})
+        if before_publish is not None:
+            before_publish(part_id)
+        final = os.path.join(out_dir, f"part-{part_id:05d}.json")
+        tmp = os.path.join(out_dir, f".{name}.json.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(record)
+        os.replace(tmp, final)
+        return record
+
+    def write_batches(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        done, part, pieces = [], None, []
+        for batch in batches:
+            runs = pc.run_end_encode(batch.column("part_id"))
+            start = 0
+            for p, end in zip(runs.values.to_pylist(),
+                              runs.run_ends.to_pylist()):
+                if p != part and pieces:
+                    done.append((part, publish(part, pieces)))
+                    pieces = []
+                part = p
+                pieces.append(batch.slice(start, end - start))
+                start = end
+        if pieces:
+            done.append((part, publish(part, pieces)))
+        if done:
+            ids, records = zip(*done)
+            yield pa.RecordBatch.from_pydict(
+                {"part_id": pa.array(ids, pa.int32()),
+                 "record": pa.array(records, pa.string())})
+
+    return write_batches
 
 
 def _literal(path: str) -> str:
@@ -1184,6 +1271,81 @@ class IceTable:
                     for seg in rel.split(os.sep))] = files
         return dict(sorted(staged.items()))
 
+    def stage_parts(self, df, run_id: str, tasks: int, count,
+                    stamp: dict, stats_cols: tuple[str, ...]
+                    ) -> dict[int, dict]:
+        """Write ``df``, whose rows carry an int ``part_id``, in ONE Spark
+        action, one data file per part, and publish every part.
+
+        ``repartition(tasks, part_id)`` puts each part in exactly one
+        write task, which gets its rows sorted by part_id (the shuffle
+        and sort Spark's partitioned writer runs) and writes and
+        publishes each part (``_part_writer``): a parquet file under
+        ``files/<run_id>/`` whose name is unique to the attempt, so a
+        retried or speculative attempt never overwrites another's file,
+        then the part's record, ``count(rows)`` as its counters plus
+        ``stamp``, and each file's ``stats_cols`` bounds (the columns
+        that carry parquet statistics).  Returns {part_id: record} of
+        the attempts whose results the action returned: the files a
+        commit lists.  The record on disk may be another attempt's, the
+        last to publish; it is as complete."""
+        from pyspark.sql import functions as SF
+        out = os.path.join(self.files_dir, run_id)
+        os.makedirs(out, exist_ok=True)
+        kernel = _part_writer(os.path.abspath(out), out, run_id, count,
+                              stamp, stats_cols, _BEFORE_PUBLISH)
+        rows = (df.repartition(tasks, SF.col("part_id"))
+                .sortWithinPartitions("part_id")
+                .mapInArrow(kernel, "part_id int, record string")
+                .collect())
+        return {r.part_id: json.loads(r.record)
+                for r in sorted(rows, key=lambda r: r.part_id)}
+
+    def _records(self):
+        """(path, record) of every publication record in the table."""
+        for run in sorted(os.listdir(self.files_dir)):
+            d = os.path.join(self.files_dir, run)
+            if not os.path.isdir(d):
+                continue
+            for fn in sorted(os.listdir(d)):
+                if _RECORD.fullmatch(fn):
+                    path = os.path.join(d, fn)
+                    try:
+                        with open(path) as f:
+                            yield path, json.load(f)
+                    except FileNotFoundError:
+                        continue        # unpublished meanwhile
+
+    def published(self, exclude: set[int], stamp: dict) -> dict[int, dict]:
+        """{part_id: record} of the published parts outside ``exclude``
+        whose record carries ``stamp`` and whose files all exist — what
+        a resume can commit instead of recomputing.  Of several records
+        for one part (runs that each published it), the newest."""
+        found: dict[int, tuple[float, dict]] = {}
+        for path, rec in self._records():
+            p = rec["part_id"]
+            if (p in exclude
+                    or any(rec.get(k) != v for k, v in stamp.items())
+                    or not all(os.path.isfile(f) for f in rec["files"])):
+                continue
+            t = os.path.getmtime(path)
+            if p not in found or t > found[p][0]:
+                found[p] = (t, rec)
+        return {p: rec for p, (_, rec) in sorted(found.items())}
+
+    def unpublish(self, parts) -> None:
+        """Remove the publication records of ``parts``, (run_id,
+        part_id) pairs; their data files stay, for a commit or the
+        orphan GC.  Once a part is committed the manifest is its
+        truth, and a part that must not be committed any more must not
+        be adopted either."""
+        for run_id, part_id in parts:
+            try:
+                os.remove(os.path.join(self.files_dir, run_id,
+                                       f"part-{part_id:05d}.json"))
+            except FileNotFoundError:
+                pass
+
     def _commit_lock(self):
         """Advisory O_EXCL lock around the _CURRENT read-modify-write:
         two concurrent writers (multiple streams, stream + batch — an
@@ -1670,7 +1832,11 @@ class IceTable:
         construction, and GC'ing them mid-run deletes rows the run is
         about to commit: its commit would list missing files, or none
         for a part that had rows (round-4 review).  Callers that cannot
-        enumerate live run_ids (the CLI) pass a grace window instead."""
+        enumerate live run_ids (the CLI) pass a grace window instead.
+
+        A publication record (stage_parts) goes with its files: it is
+        removed once one of them is gone or all are committed, so a
+        resume never adopts a part whose file the GC took."""
         referenced = self._all_referenced()
         horizon = time.time() - grace_seconds
         removed = 0
@@ -1691,4 +1857,11 @@ class IceTable:
                     except FileNotFoundError:
                         continue        # raced with another GC
                     removed += 1
+        for path, rec in self._records():
+            if keep_run_ids and rec["run_id"] in keep_run_ids:
+                continue
+            files = [os.path.realpath(f) for f in rec["files"]]
+            if (not all(map(os.path.isfile, files))
+                    or all(f in referenced for f in files)):
+                self.unpublish([(rec["run_id"], rec["part_id"])])
         return removed

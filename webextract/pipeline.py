@@ -10,16 +10,20 @@ coalescing.  Explicit choices we make (SURVEY.md §4.2):
   kernels to the write.
 * extraction is one narrow mapInArrow pass (no shuffle); the only
   shuffle is the final write layout.
-* waves: part_ids are processed in W groups, each group written by one
-  Spark action and committed atomically to the IceTable manifest — a
-  killed run resumes by skipping committed part_ids (checkpoint-resume,
-  north_rule).  The kernels tally each part's lineage counters as they
-  extract, so the commit reads nothing back.
+* one Spark action per run: every part the run owns is extracted,
+  shuffled by part_id and written by a write task that also counts the
+  part's lineage counters and PUBLISHES the part (IceTable.stage_parts).
+  The driver then commits the parts in W wave-sized groups, each one
+  atomic snapshot of the IceTable manifest, so the commit reads nothing
+  back.  A killed run resumes by skipping committed part_ids and
+  committing ("adopting") the parts it had published but not committed
+  (checkpoint-resume, north_rule).
 """
 
 from __future__ import annotations
 
 import datetime
+import os
 import time
 import uuid
 
@@ -32,10 +36,12 @@ from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .session import cores
 from .udfs import (CHUNK_SCHEMA, LINEAGE_COUNTERS, extract_schema,
-                   extract_input_cols, make_chunk_kernel, make_extract_kernel,
-                   new_tally, part_counters, row_kernel)
+                   extract_input_cols, lineage_counters, make_chunk_kernel,
+                   make_extract_kernel, row_kernel)
 
 DEFAULT_PARTITIONS = 64
+# the columns whose per-file bounds the write records and a commit keeps
+STATS_COLS = ("url",)
 
 
 def with_part_id(df: DataFrame, partitions: int = DEFAULT_PARTITIONS) -> DataFrame:
@@ -44,7 +50,7 @@ def with_part_id(df: DataFrame, partitions: int = DEFAULT_PARTITIONS) -> DataFra
 
 
 def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
-                 cpus: int = 32, tally=None) -> DataFrame:
+                 cpus: int = 32) -> DataFrame:
     """pages(url, warc_ts, html, [text], [lang]) -> extracted frame.
 
     A pure narrow map: scan splits feed the Arrow kernel directly — raw
@@ -56,14 +62,13 @@ def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     (spark.sql.files.maxPartitionBytes), and ``split_bytes``
     (split.extracted_split_df) spreads a giant document over tasks.
     ``cpus`` is accepted for call-site compatibility and unused.
-
-    ``tally`` (udfs.new_tally): ``pages`` carries ``part_id``, the
-    output keeps it, and the kernel reports per-part lineage counters
-    into the accumulator (run_extract's wave commit).
+    When ``pages`` carries ``part_id`` the output keeps it (the run's
+    write groups by it).
     """
-    src = pages.select(*extract_input_cols(pages.columns, tally))
-    return src.mapInArrow(make_extract_kernel(opt, tally=tally),
-                          extract_schema(tally))
+    src = pages.select(*extract_input_cols(pages.columns))
+    keep = "part_id" in src.columns
+    return src.mapInArrow(make_extract_kernel(opt, keep),
+                          extract_schema(keep))
 
 
 _LINKS_ARROW = pa.schema([
@@ -230,38 +235,43 @@ def _wave_groups(parts: list[int], waves: int) -> list[list[int]]:
 
 
 def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
-                 files: dict[int, list[str]], opt: ConvertOptions,
-                 wall_ms: int, counters: dict[int, dict], partitions: int
-                 ) -> tuple[str, list[dict]]:
-    """Commit one staged wave as one atomic snapshot with per-part
+                 records: dict[int, dict | None], opt: ConvertOptions,
+                 wall_ms: int, partitions: int) -> tuple[str, list[dict]]:
+    """Commit one group of parts as one atomic snapshot with per-part
     lineage counters — counters ≡ processing_meta
-    (/root/reference/docling_serve/orchestrator_factory.py:104-106).
-    ``files`` ({part_id: data files}, from IceTable.stage's listing)
-    names every part the snapshot commits.  write_wave calls it once
-    per wave, batch wave or streaming epoch, through this module's
-    global (perfbench's tracer counts waves by its spans).
+    (/root/reference/docling_serve/orchestrator_factory.py:104-106) —
+    then drop the parts' publication records.  ``records`` ({part_id:
+    record}, IceTable.stage_parts or IceTable.published) names every
+    part the snapshot commits; a part without rows has no record and
+    is still DONE: it commits with no files and zero counters.
+    write_wave calls it once per wave-sized group, batch or streaming,
+    and run_extract once for the parts it adopts, always through this
+    module's global (perfbench's tracer counts waves by its spans).
 
-    ``counters`` ({part_id: {num_docs, ..., bytes_out}},
-    udfs.part_counters) were tallied by the extraction kernels while
-    they produced the rows, so no Spark job runs here and the only I/O
-    is IceTable.commit's footer reads of the new files.
-    They count each row exactly once because the lineage accumulator's
-    merge REPLACES per (stage_id, partition_id) instead of adding: a
-    task that runs again — a retry, a stage recomputed after a lost
-    shuffle, a speculative copy — reports under the same key and
-    overwrites its earlier tally, and the action that wrote the stage
-    has returned, so every task that produced its rows has reported.
-    A part with no rows (an all-empty wave writes no files at all) is
-    still DONE: it commits with zero counters.
+    Each record holds what the write task that wrote the part counted
+    and read: its counters, and each file's row count and url bounds
+    from the closed writer's footer, passed on to IceTable.commit as
+    ``file_rows``/``file_stats`` — so no Spark job runs here and no
+    parquet footer is opened.
 
     ``partitions`` is recorded next to ``options_hash`` so a resume
     with other parameters can be refused (run_extract)."""
     parts_meta = []
-    for p, part_files in files.items():
-        c = dict(counters.get(p) or dict.fromkeys(LINEAGE_COUNTERS, 0))
-        c["wall_ms"] = wall_ms
-        parts_meta.append({"part_id": p, "files": part_files,
-                           "counters": c})
+    for p, rec in records.items():
+        rec = rec or {"files": [], "counters": dict.fromkeys(
+            LINEAGE_COUNTERS, 0)}
+        meta = {"part_id": p, "files": rec["files"],
+                "counters": {**rec["counters"], "wall_ms": wall_ms}}
+        for k in ("file_rows", "file_stats"):
+            if k in rec:
+                meta[k] = rec[k]
+        parts_meta.append(meta)
+    # a stat, not a footer read: an orphan GC run without a grace window
+    # may have taken a file the run wrote, and the snapshot must not
+    # list it
+    gone = [f for m in parts_meta for f in m["files"] if not os.path.isfile(f)]
+    if gone:
+        raise FileNotFoundError(f"written files are gone: {gone[:3]}")
     from . import __version__
     # lineage records WHICH options produced this snapshot (the
     # reference persists the request options with the task record);
@@ -274,62 +284,82 @@ def commit_stage(spark: SparkSession, table: IceTable, run_id: str,
                                   "options_hash": opt.options_hash(),
                                   "options": {k: repr(v) for k, v
                                               in opt.as_dict().items()}},
-                        # writer-records-bounds: footer-only url stats
-                        # per wave file feed IceTable.scan's manifest
-                        # pruning (wave files are url-hash partitioned
-                        # so their bounds overlap; a sort_by compaction
-                        # is what makes them disjoint)
-                        stats_cols=("url",))
+                        # writer-records-bounds: url bounds per wave
+                        # file feed IceTable.scan's manifest pruning
+                        # (wave files are url-hash partitioned so their
+                        # bounds overlap; a sort_by compaction is what
+                        # makes them disjoint)
+                        stats_cols=STATS_COLS)
+    table.unpublish((r["run_id"], p) for p, r in records.items() if r)
     return snap, parts_meta
 
 
-def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
-               run_id: str, wave: int, opt: ConvertOptions,
-               partitions: int, parts: list[int] | None = None,
-               split_bytes: int | None = None) -> tuple[dict, list[dict]]:
-    """One wave, batch or streaming: extract the ``part_id``-carrying
-    ``pages_p`` rows, stage them under ``run_id``/``wave`` and commit
-    them as one snapshot (commit_stage).  ``parts`` are the part ids a
-    batch wave owns: the rows are filtered to them and every one
-    commits, a part without rows with zero counters.  A streaming epoch
-    passes ``parts=None``: it takes every row and commits the parts it
-    wrote.  ``split_bytes`` as in run_extract.
+def _commit_wave(spark: SparkSession, table: IceTable, run_id: str,
+                 records: dict[int, dict | None], opt: ConvertOptions,
+                 since: float, partitions: int) -> tuple[dict, list[dict]]:
+    """commit_stage over ``records`` -> (the snapshot's summary entry,
+    its committed parts); ``wall_ms`` runs from ``since``."""
+    t1 = time.time()
+    wall_ms = int((t1 - since) * 1000)
+    snap, parts_meta = commit_stage(spark, table, run_id, records, opt,
+                                    wall_ms, partitions)
+    return {"snapshot_id": snap, "parts": list(records),
+            "num_docs": sum(m["counters"]["num_docs"] for m in parts_meta),
+            "wall_ms": wall_ms,
+            "commit_ms": int((time.time() - t1) * 1000)}, parts_meta
 
-    Returns the wave's summary entry and its committed parts."""
+
+def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
+               run_id: str, opt: ConvertOptions, partitions: int,
+               groups: list[list[int]] | None = None,
+               split_bytes: int | None = None):
+    """The write of a batch run and of a streaming epoch: ONE Spark
+    action extracts the ``part_id``-carrying ``pages_p`` rows, shuffles
+    them by part_id and writes and publishes each part
+    (IceTable.stage_parts, stamped with ``options_hash`` and
+    ``partitions`` for a resume to check).  The write uses
+    min(parts, cores) tasks: every core writes, and a task's fixed cost
+    is paid once per core, not once per part.  Each part is one file
+    whatever the task count; at cluster scale a real catalog would
+    further split a part by target file size.
+
+    ``groups`` are the part ids of a batch run's waves: the rows are
+    filtered to them and the action writes them all.  A streaming
+    epoch passes ``groups=None``: it takes every row, and the parts it
+    wrote form its one group.  ``split_bytes`` as in run_extract.
+
+    Returns ``(write_ms, commits)``: the action's time, and an iterator
+    that commits the next group in order as one snapshot (commit_stage)
+    each step, yielding the wave's summary entry and its committed
+    parts.  Every part of a group commits, one without rows with zero
+    counters.  A group the caller does not iterate to is not committed;
+    its parts stay published (run_extract adopts them on resume)."""
     t0 = time.time()
-    # a fresh accumulator per wave: its tallies are this wave's only
-    tally = new_tally(spark.sparkContext)
+    parts = None if groups is None else [p for g in groups for p in g]
     if parts is not None:
         pages_p = pages_p.filter(F.col("part_id").isin(parts))
     if split_bytes is not None:
         from .split import extracted_split_df
-        out = extracted_split_df(pages_p, opt, split_bytes=split_bytes,
-                                 tally=tally)
+        out = extracted_split_df(pages_p, opt, split_bytes=split_bytes)
     else:
-        out = extracted_df(pages_p, opt, tally=tally)
-    # one shuffle, on the EXTRACTED rows (≈5× smaller than raw HTML),
-    # into the committed url-hash layout.  Hashing on part_id puts each
-    # part in exactly one write task, so each part is exactly one file
-    # whatever the task count.  The count is min(parts, cores): every
-    # core writes, and a write task's fixed JVM cost, paid whatever the
-    # task writes, is paid once per core, not once per part.  At
-    # cluster scale a real catalog would further split each partition
-    # by target file size.
+        out = extracted_df(pages_p, opt)
     n_tasks = min(partitions if parts is None else len(parts), cores(spark))
-    staged = table.stage(out.repartition(n_tasks, F.col("part_id")),
-                         run_id, wave, by=("part_id",))
-    written = {int(p): fs for (p,), fs in staged.items()}
-    files = {p: written.get(p, [])
-             for p in (sorted(written) if parts is None else parts)}
-    t1 = time.time()
-    wall_ms = int((t1 - t0) * 1000)
-    snap, parts_meta = commit_stage(spark, table, run_id, files, opt,
-                                    wall_ms, part_counters(tally.value),
-                                    partitions)
-    return {"wave": wave, "snapshot_id": snap, "parts": list(files),
-            "num_docs": sum(m["counters"]["num_docs"] for m in parts_meta),
-            "wall_ms": wall_ms,
-            "commit_ms": int((time.time() - t1) * 1000)}, parts_meta
+    records = table.stage_parts(
+        out, run_id, n_tasks, lineage_counters,
+        {"options_hash": opt.options_hash(), "partitions": partitions},
+        STATS_COLS)
+    write_ms = int((time.time() - t0) * 1000)
+
+    def commits():
+        since = t0
+        for group in [sorted(records)] if groups is None else groups:
+            wave = _commit_wave(spark, table, run_id,
+                                {p: records.get(p) for p in group}, opt,
+                                since, partitions)
+            since = time.time()
+            yield wave
+
+    return write_ms, commits()
 
 
 def check_resume(table: IceTable, partitions: int,
@@ -361,9 +391,17 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
                 fail_after_wave: int | None = None,
                 split_bytes: int | None = None,
                 html_split: bool = True) -> dict:
-    """The job driver: wave-committed, resumable extraction run.
+    """The job driver: resumable extraction run, written by one Spark
+    action and committed in ``waves`` snapshots (write_wave).
 
-    ``fail_after_wave`` injects a crash between commits (tests only).
+    A resume (a table with committed or published parts) first runs
+    check_resume, then commits, as its first snapshot, every part a
+    crashed run published but did not commit whose record has this
+    run's ``partitions`` and options and whose files all exist
+    (``adopted_parts``), and computes only the parts left.
+    ``fail_after_wave=k`` returns after committing wave k of the parts
+    computed, as a crash there would (tests only): the later waves'
+    parts stay published.
     ``split_bytes`` enables the oversized-document fan-out tier
     (split.py): a payload of at least ``2 * split_bytes`` bytes is
     page-split (mini-PDF) or cut-point-split (HTML, htmlsplit.py) into
@@ -371,38 +409,62 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     instead of pinning one; smaller payloads and None keep the pure
     no-shuffle plan.  ``cpus`` and ``html_split`` are accepted for
     call-site compatibility and unused.
-    A resume (some parts already committed) with another ``partitions``
-    or other options than the table's last run raises ValueError before
-    anything is written.
-    Returns a summary with per-wave counters and phase times: ``wall_ms``
-    (plan, scan, kernels and write) and ``commit_ms`` (commit_stage).
+    A resume with another ``partitions`` or other options than the
+    table's last run raises ValueError before anything is written.
+    Returns a summary: ``skipped_parts`` (committed when the run
+    started), ``adopted_parts``, ``write_ms`` (the run's action) and
+    one entry per snapshot in ``waves`` (the adoption's first, marked
+    ``adopted``), each with its counters, ``wall_ms`` (from the end of
+    the previous commit, or the run's start, to its own commit: plan,
+    scan, kernels and write for the first wave written) and
+    ``commit_ms`` (commit_stage).
     """
+    t0 = time.time()
     table = IceTable(table_root)
     run_id = run_id or uuid.uuid4().hex[:12]
     committed = table.committed_parts()
     if committed:
         check_resume(table, partitions, opt)
-    todo = [p for p in range(partitions) if p not in committed]
+    adopted = table.published(committed, {
+        "options_hash": opt.options_hash(), "partitions": partitions})
+    todo = [p for p in range(partitions)
+            if p not in committed and p not in adopted]
     pages_p = with_part_id(pages, partitions)
     summary = {"run_id": run_id, "partitions": partitions,
-               "skipped_parts": sorted(committed), "waves": []}
+               "skipped_parts": sorted(committed),
+               "adopted_parts": sorted(adopted), "write_ms": 0,
+               "waves": []}
+    groups = _wave_groups(todo, waves)
 
-    for wi, wave_parts in enumerate(_wave_groups(todo, waves)):
-        wave, parts_meta = write_wave(spark, table, pages_p, run_id, wi,
-                                      opt, partitions, wave_parts,
-                                      split_bytes)
-        summary["waves"].append(wave)
+    def check_abort(parts_meta, what, later: list[int]):
         # abort_on_error=true (reference docs/usage.md:24): fail the JOB
-        # on the first wave containing a failed document.  The wave's
-        # snapshot is already committed, so a rerun after the fix
-        # resumes from here — abort is a stop, not a rollback.
-        if opt.abort_on_error:
-            n_failed = sum(m["counters"]["num_failed"] for m in parts_meta)
-            if n_failed:
-                raise RuntimeError(
-                    f"abort_on_error: wave {wi} contains {n_failed} "
-                    f"failed document(s); committed snapshots are kept "
-                    f"(resume after fixing the input)")
+        # on the first snapshot holding a failed document.  Committed
+        # snapshots are kept, so a rerun after the fix resumes from
+        # here — abort is a stop, not a rollback — but the later
+        # groups' parts are unpublished: a rerun recomputes them from
+        # the fixed input instead of adopting rows of the old one.
+        n_failed = sum(m["counters"]["num_failed"] for m in parts_meta)
+        if opt.abort_on_error and n_failed:
+            table.unpublish((run_id, p) for p in later)
+            raise RuntimeError(
+                f"abort_on_error: {what} contains {n_failed} failed "
+                f"document(s); committed snapshots are kept (resume "
+                f"after fixing the input)")
+
+    if adopted:
+        wave, parts_meta = _commit_wave(spark, table, run_id, adopted, opt,
+                                        t0, partitions)
+        summary["waves"].append({"wave": 0, "adopted": True, **wave})
+        check_abort(parts_meta, "the adopted parts", [])
+    if not groups:
+        return summary
+    summary["write_ms"], commits = write_wave(
+        spark, table, pages_p, run_id, opt, partitions, groups, split_bytes)
+    for wi, (wave, parts_meta) in enumerate(commits):
+        wave = {"wave": len(summary["waves"]), **wave}
+        summary["waves"].append(wave)
+        check_abort(parts_meta, f"wave {wave['wave']}",
+                    [p for g in groups[wi + 1:] for p in g])
         if fail_after_wave is not None and wi >= fail_after_wave:
             summary["injected_failure"] = True
             return summary

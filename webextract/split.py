@@ -155,10 +155,10 @@ def _merged_blocks(segs: list[dict]) -> list[Block]:
     return blocks
 
 
-def merge_frame(opt: ConvertOptions, finish, tally=None):
+def merge_frame(opt: ConvertOptions, finish, part_id: bool = False):
     """mapInArrow merge over PRE-AGGREGATED rows (one row per doc with
     its segments collected and sorted): a verdict row, the fallback
-    lane, or ``finish(blocks, opt, url) -> Extracted``.  ``tally`` and
+    lane, or ``finish(blocks, opt, url) -> Extracted``.  ``part_id`` and
     a row's weight (its doc's payload bytes): as in
     udfs.make_extract_kernel.
 
@@ -176,11 +176,11 @@ def merge_frame(opt: ConvertOptions, finish, tally=None):
             x = finish(_merged_blocks(r["segs"]), opt, r["url"])
         yield extracted_row(x, r, r["orig_bytes"]), r["orig_bytes"]
 
-    return row_kernel(merge_row, extract_arrow(tally), tally)
+    return row_kernel(merge_row, extract_arrow(part_id))
 
 
 def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
-             tally) -> DataFrame:
+             part_id: bool) -> DataFrame:
     """split kernel -> repartition(url, seg_idx) -> segment kernel ->
     one aggregated row per doc -> merge kernel.
 
@@ -207,7 +207,7 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
                 F.first("payload", ignorenulls=True).alias("payload"),
                 F.sort_array(F.collect_list(
                     F.struct("seg_idx", "perr", "blocks"))).alias("segs")))
-    return agg.mapInArrow(merge_kernel, extract_schema(tally))
+    return agg.mapInArrow(merge_kernel, extract_schema(part_id))
 
 
 # ---------------------------------------------------------------------------
@@ -251,15 +251,15 @@ def make_seg_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
         pdfmini.parse_pdf_blocks(r["html"], opt.page_range), True))
 
 
-def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
+def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
+                      part_id: bool = False):
     """mapInArrow: a doc's page-group blocks -> its EXTRACT row."""
-    return merge_frame(opt, _finish_pdf, tally)
+    return merge_frame(opt, _finish_pdf, part_id)
 
 
 def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                        cpus: int = 32, *, split_bytes: int,
-                       html_split: bool = True,
-                       tally=None) -> DataFrame:
+                       html_split: bool = True) -> DataFrame:
     """Extraction with the oversized-document fan-out tier.
 
     Routing is declarative so Catalyst prunes every branch's scan: a
@@ -271,11 +271,12 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     kernel path, whose scan task maxPartitionBytes bounds.  All branches
     union to the same EXTRACT schema, so downstream (waves, IceTable
     commit, chunkers) is tier-oblivious.  ``cpus`` and ``html_split``
-    are accepted for call-site compatibility and unused.  ``tally``: as
-    in pipeline.extracted_df — each branch's final kernel (plain, PDF
-    merge, HTML merge) tallies the rows it emits."""
+    are accepted for call-site compatibility and unused.  Each branch's
+    final kernel (plain, PDF merge, HTML merge) keeps ``part_id`` when
+    ``pages`` has it, as pipeline.extracted_df does."""
     from . import htmlsplit
-    src = pages.select(*extract_input_cols(pages.columns, tally))
+    src = pages.select(*extract_input_cols(pages.columns))
+    keep = "part_id" in src.columns
     # a payload the tier cuts: n_segments >= 2.  coalesce: a NULL html
     # payload makes the predicate SQL NULL, which every branch filter
     # would drop — the row must take the normal kernel path (which
@@ -285,14 +286,14 @@ def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     is_pdf = (F.substring(F.col("html").cast("binary"), 1,
                           len(pdfmini.MAGIC)) == F.lit(pdfmini.MAGIC))
     normal = (src.filter(~is_big)
-              .mapInArrow(make_extract_kernel(opt, tally=tally),
-                          extract_schema(tally)))
+              .mapInArrow(make_extract_kernel(opt, keep),
+                          extract_schema(keep)))
     pdf = _fan_out(
         src.filter(is_big & is_pdf), make_split_kernel(opt, split_bytes),
-        make_seg_extract_kernel(opt), make_merge_kernel(opt, tally), tally)
+        make_seg_extract_kernel(opt), make_merge_kernel(opt, keep), keep)
     html = _fan_out(
         src.filter(is_big & ~is_pdf),
         htmlsplit.make_html_split_kernel(opt, split_bytes),
         htmlsplit.make_html_seg_kernel(opt),
-        htmlsplit.make_html_merge_kernel(opt, tally), tally)
+        htmlsplit.make_html_merge_kernel(opt, keep), keep)
     return normal.unionByName(pdf).unionByName(html)

@@ -76,8 +76,8 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
     """Continuous ingest committing each micro-batch as an ATOMIC
     IceTable snapshot with full lineage counters: each epoch is one
     pipeline.write_wave, the function that writes and commits
-    run_extract's waves (same write fan-out, same commit_stage), and
-    commits the parts it wrote.
+    run_extract's waves (one Spark action, same write fan-out, same
+    commit_stage), and commits the parts it wrote as one snapshot.
 
     Exactly-once end to end: the streaming checkpoint tracks consumed
     source files, and each epoch commits under run_id
@@ -125,8 +125,11 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
             return          # redelivered epoch: already committed
         if batch_df.isEmpty():
             return          # zero-row batch: nothing to stage/commit
-        write_wave(spark, table, with_part_id(batch_df, partitions),
-                   run_id, 0, opt, partitions)
+        _, commits = write_wave(spark, table,
+                                with_part_id(batch_df, partitions),
+                                run_id, opt, partitions)
+        for _ in commits:   # the epoch's one snapshot
+            pass
         seen.add(run_id)
 
     return (pages_stream(spark, input_dir)

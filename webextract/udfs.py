@@ -18,13 +18,11 @@ weight, in bytes as the per-row function counts them, reaches
 only: a skew-bomb row still costs its whole input batch in worker
 memory before any budget applies (SURVEY.md §7.4#4).
 
-Given a lineage accumulator (``new_tally``), the frame of the
-extraction kernel and of the split tiers' merge kernels also tallies
-each part's lineage counters (``LINEAGE_COUNTERS``) as it flushes its
-rows: the pass that already holds every row's status, ``bytes_in`` and
-``text`` counts them, so a wave commit needs no second Spark pass over
-the written stage.  Each kernel reports its tallies once, when its
-partition ends, under its task's ``(stage_id, partition_id)``.
+The extraction kernel and the split tiers' merge kernels carry
+``part_id`` through when their input has it (``extract_input_cols``):
+the run's write kernel (``IceTable.stage_parts``) groups the rows by
+it and counts each part's lineage counters (``lineage_counters``) as
+it writes the part's file, so a commit needs no Spark pass of its own.
 
 The frame also trims the fixed cost of every Python task after a
 worker's first: it turns zipimporter cache invalidation into a no-op
@@ -38,8 +36,8 @@ import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -65,81 +63,33 @@ _EXTRACT_ARROW = pa.schema([
     ("spans", SPAN_TYPE), ("images", IMAGE_TYPE), ("n_blocks", pa.int32()),
     ("bytes_in", pa.int64()), ("error", pa.string())])
 
-# a tallying kernel's output: the EXTRACT row plus the part_id it came
-# with, which the wave write partitions by
+# the EXTRACT row plus the part_id it came with, which the run's write
+# partitions by
 _EXTRACT_PART_ARROW = _EXTRACT_ARROW.append(pa.field("part_id", pa.int32()))
 
 LINEAGE_COUNTERS = ("num_docs", "num_processed", "num_succeeded",
                     "num_partial", "num_failed", "num_skipped",
                     "bytes_in", "bytes_out")
-_STATUS_SLOT = {"success": 2, "partial_success": 3, "failure": 4,
-                "skipped": 5}
 
 
-class TallyParam(AccumulatorParam):
-    """Lineage accumulator value: ``{(stage_id, partition_id): {part_id:
-    [counter, ...]}}``.  The merge REPLACES the entry of a task key
-    instead of adding to it, so a task that runs again (a retry, a
-    recomputed stage, a speculative copy) overwrites its own tallies
-    and is counted once."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, value1, value2):
-        value1.update(value2)
-        return value1
-
-
-def new_tally(sc):
-    """A fresh lineage accumulator for one wave's kernels."""
-    return sc.accumulator({}, TallyParam())
-
-
-def part_counters(tallies: dict) -> dict[int, dict[str, int]]:
-    """Per-task tallies (a ``TallyParam`` value) -> ``{part_id:
-    {counter: total}}`` over every task."""
-    sums: dict[int, list[int]] = {}
-    for parts in tallies.values():
-        for part_id, c in parts.items():
-            t = sums.setdefault(part_id, [0] * len(LINEAGE_COUNTERS))
-            for i, v in enumerate(c):
-                t[i] += v
-    return {p: dict(zip(LINEAGE_COUNTERS, t)) for p, t in sums.items()}
-
-
-class Tally:
-    """One kernel partition's lineage counters per part_id, in
-    ``LINEAGE_COUNTERS`` order; ``report`` sends them to the
-    accumulator once, when the partition is done."""
-
-    def __init__(self, acc) -> None:
-        self.acc = acc
-        self.parts: dict[int, list[int]] = {}
-
-    def count(self, rows: list[dict]) -> None:
-        """Count EXTRACT row dicts (with their part_id)."""
-        for row in rows:
-            part_id, status, text = row["part_id"], row["status"], row["text"]
-            c = self.parts.get(part_id)
-            if c is None:
-                c = self.parts[part_id] = [0] * len(LINEAGE_COUNTERS)
-            c[0] += 1
-            # processed = attempted: every row but an admission refusal
-            if status != "skipped":
-                c[1] += 1
-            slot = _STATUS_SLOT.get(status)
-            if slot is not None:
-                c[slot] += 1
-            c[6] += row["bytes_in"] or 0
-            # bytes, not codepoints: len(text) undercounts non-ASCII
-            # text up to 4x
-            if text:
-                c[7] += len(text.encode("utf-8"))
-
-    def report(self) -> None:
-        ctx = TaskContext.get()
-        self.acc.add({(ctx.stageId(), ctx.partitionId()): self.parts})
+def lineage_counters(rows: pa.Table) -> dict[str, int]:
+    """One part's EXTRACT rows -> its ``LINEAGE_COUNTERS``: documents,
+    those attempted (every row but an admission refusal), per status,
+    payload bytes in, and UTF-8 bytes of ``text`` out (bytes, not
+    codepoints: a codepoint count undercounts non-ASCII text up to
+    4x)."""
+    by_status = {v["values"]: v["counts"] for v in
+                 pc.value_counts(rows.column("status")).to_pylist()}
+    n = rows.num_rows
+    return {"num_docs": n,
+            "num_processed": n - by_status.get("skipped", 0),
+            "num_succeeded": by_status.get("success", 0),
+            "num_partial": by_status.get("partial_success", 0),
+            "num_failed": by_status.get("failure", 0),
+            "num_skipped": by_status.get("skipped", 0),
+            "bytes_in": pc.sum(rows.column("bytes_in")).as_py() or 0,
+            "bytes_out": pc.sum(pc.binary_length(
+                rows.column("text"))).as_py() or 0}
 
 
 def _keep_zip_directory(self) -> None:
@@ -173,28 +123,19 @@ def _stop_zip_rereads() -> None:
         zipimport.zipimporter.invalidate_caches = _keep_zip_directory
 
 
-def row_kernel(per_row, arrow_schema: pa.Schema, tally=None):
+def row_kernel(per_row, arrow_schema: pa.Schema):
     """The one mapInArrow frame.  ``per_row(row)`` yields
     ``(out_row, n_bytes)`` pairs for each input row dict; the output
     rows flush as one ``arrow_schema`` batch once their summed n_bytes
     reach ``BATCH_BYTE_BUDGET`` (read when the kernel runs) and at the
-    end of every input batch.  With a ``tally`` accumulator the flushed
-    rows are EXTRACT rows with their part_id: the frame counts them and
-    reports once, when the partition ends.  In a worker the kernel
-    first calls ``_stop_zip_rereads``.  The kernel is named after
+    end of every input batch.  In a worker the kernel first calls
+    ``_stop_zip_rereads``.  The kernel is named after
     ``per_row`` (``extract_row`` -> ``extract_batches``), which is the
     name EXPLAIN shows."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _stop_zip_rereads()
         budget = BATCH_BYTE_BUDGET
-        counts = Tally(tally) if tally is not None else None
-
-        def flush(rows):
-            if counts is not None:
-                counts.count(rows)
-            return pa.RecordBatch.from_pylist(rows, arrow_schema)
-
         for batch in batches:
             rows, acc = [], 0
             for row in batch.to_pylist():
@@ -202,33 +143,32 @@ def row_kernel(per_row, arrow_schema: pa.Schema, tally=None):
                     rows.append(out)
                     acc += n_bytes
                     if acc >= budget:
-                        yield flush(rows)
+                        yield pa.RecordBatch.from_pylist(rows, arrow_schema)
                         rows, acc = [], 0
             if rows:
-                yield flush(rows)
-        if counts is not None:
-            counts.report()
+                yield pa.RecordBatch.from_pylist(rows, arrow_schema)
 
     kernel.__name__ = per_row.__name__.removesuffix("_row") + "_batches"
     return kernel
 
 
-def extract_input_cols(columns: list[str], tally) -> list[str]:
+def extract_input_cols(columns: list[str]) -> list[str]:
     """The source columns an extraction plan reads (column pruning: a
-    naive ``text`` column is never scanned); a tallying plan also
-    reads ``part_id``."""
+    naive ``text`` column is never scanned), ``part_id`` when the
+    source has it."""
     cols = ["url", "warc_ts", "lang", "html"] \
         if "lang" in columns else ["url", "warc_ts", "html"]
-    return cols if tally is None else cols + ["part_id"]
+    return cols + ["part_id"] if "part_id" in columns else cols
 
 
-def extract_arrow(tally) -> pa.Schema:
-    """An extraction kernel's output: a tallying one keeps part_id."""
-    return _EXTRACT_ARROW if tally is None else _EXTRACT_PART_ARROW
+def extract_arrow(part_id: bool) -> pa.Schema:
+    """An extraction kernel's output, with the input's part_id when
+    ``part_id``."""
+    return _EXTRACT_PART_ARROW if part_id else _EXTRACT_ARROW
 
 
-def extract_schema(tally) -> StructType:
-    return from_arrow_schema(extract_arrow(tally))
+def extract_schema(part_id: bool) -> StructType:
+    return from_arrow_schema(extract_arrow(part_id))
 
 
 def extracted_row(r: Extracted, row: dict, bytes_in: int) -> dict:
@@ -249,12 +189,12 @@ def extracted_row(r: Extracted, row: dict, bytes_in: int) -> dict:
             "part_id": row.get("part_id")}
 
 
-def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
+def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
+                        part_id: bool = False):
     """Returns the mapInArrow function for the extract stage (operators
-    C1-C4, C10 of SURVEY.md §2.3 fused into one narrow pass).  With a
-    ``tally`` accumulator the input carries ``part_id``, which the
-    output keeps, and the kernel reports its lineage counters.  A row
-    weighs its payload bytes."""
+    C1-C4, C10 of SURVEY.md §2.3 fused into one narrow pass).  With
+    ``part_id`` the input carries ``part_id`` and the output keeps it.
+    A row weighs its payload bytes."""
 
     def extract_row(row):
         html = row["html"]
@@ -262,7 +202,7 @@ def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS, tally=None):
         yield extracted_row(extract_document(html, opt, row["url"]), row,
                             bytes_in), bytes_in
 
-    return row_kernel(extract_row, extract_arrow(tally), tally)
+    return row_kernel(extract_row, extract_arrow(part_id))
 
 
 _CHUNK_ARROW = pa.schema([

@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     Common-Crawl-style pages derived from /root/testdata/sf0.001."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     pages = docs_to_pages(docs)
-    return extracted_df(pages, cpus=4).select(
+    return extracted_df(pages).select(
         "url", "status", "fmt", "text", "text_md", "n_blocks", "bytes_in")
 
 

@@ -213,7 +213,7 @@ def main() -> None:
             walls.append(time.time() - t0)
         return min(walls)
 
-    extract_sec = _timed(lambda: extracted_df(pages, cpus=cpus))
+    extract_sec = _timed(lambda: extracted_df(pages))
     timings["extract_synth"] = round(extract_sec, 3)
     docs_per_sec = round(n_synth / extract_sec, 1)
 
@@ -268,11 +268,10 @@ def main() -> None:
     # one-giant-HTML-family twin: every doc on host site0 (doc_id%200==0,
     # i.e. ONE host) becomes a 60k-word page so that host carries ~25-30%
     # of corpus bytes; both variants run the split-tier pipeline
-    # (extracted_split_df, html_split=True, 256 KiB threshold) so the
+    # (extracted_df with split_bytes, 256 KiB threshold) so the
     # giant family fans out over cut-point segments instead of pinning
     # tasks.  Blowup is PER-BYTE (the twin is a bigger corpus by
     # construction): (t_skew/bytes_skew) / (t_uni/bytes_uni).
-    from webextract.split import extracted_split_df
     skew_pages_pq = synth_pages_path(spark, sf_tag, n_synth, cpus,
                                      giant_every=200)
     skew_pages = spark.read.parquet(skew_pages_pq)
@@ -282,9 +281,7 @@ def main() -> None:
         F.sum(F.length("html"))).collect()[0][0] or 1
 
     def xsplit(src):
-        return extracted_split_df(src, cpus=cpus,
-                                  split_bytes=256 * 1024,
-                                  html_split=True)
+        return extracted_df(src, split_bytes=256 * 1024)
 
     tx_uni = tx_skew = float("inf")
     for _sweep in range(2):  # interleaved A/B, same drift guard as above

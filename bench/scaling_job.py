@@ -46,7 +46,7 @@ def main() -> None:
 
     def run(df) -> float:
         t0 = time.time()
-        (extracted_df(df, cpus=cpus)
+        (extracted_df(df)
          .write.format("noop").mode("overwrite").save())
         return time.time() - t0
 

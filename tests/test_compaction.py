@@ -102,7 +102,7 @@ def test_expire_refuses_delta_only_history(spark, tmp_path):
 
 
 def test_expire_clamps_to_newest_rewrite(spark, tmp_path):
-    """With waves appended AFTER a compaction, expiry may only reach
+    """With deltas committed AFTER a compaction, expiry may only reach
     history strictly below the rewrite snapshot: the post-rewrite
     deltas are not superseded by any full manifest."""
     root = str(tmp_path / "tbl")
@@ -110,13 +110,16 @@ def test_expire_clamps_to_newest_rewrite(spark, tmp_path):
                 partitions=4, waves=2, cpus=8, run_id="r1")
     tbl = IceTable(root)
     tbl.compact(spark, target_file_bytes=64 << 20, committed_at="t-c")
-    run_extract(spark, pages_df(spark, 320, parallelism=8), root,
-                partitions=8, waves=2, cpus=8, run_id="r2")
+    # two deltas: table rows copied under new urls, one snapshot each
+    for p in (4, 5):
+        _commit_frame(tbl, spark, tbl.read(spark).limit(7).withColumn(
+            "url", F.concat(F.lit(f"d{p}:"), F.col("url"))), p)
     before = _urls(tbl.read(spark))
+    assert len(before) == 214
     parts = tbl.committed_parts()
     # keep=1 would cut into the post-rewrite deltas; the clamp holds
     out = tbl.expire_snapshots(keep=1)
-    assert out["skipped_unsafe"] == 2        # the two r2 wave deltas
+    assert out["skipped_unsafe"] == 2        # the two deltas
     assert _urls(tbl.read(spark)) == before
     assert tbl.committed_parts() == parts
 

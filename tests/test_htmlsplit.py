@@ -16,7 +16,6 @@ from webextract.extract import extract_document
 from webextract.htmlsplit import _parse_seeded, scan_cuts
 from webextract.options import ConvertOptions
 from webextract.pipeline import extracted_df
-from webextract.split import extracted_split_df
 from webextract.synth import gen_page
 
 ALL_FORMATS = ConvertOptions(
@@ -118,9 +117,8 @@ def test_html_split_tier_byte_identical(spark):
     at every eligible tag): every column equals the one-shot kernel."""
     payloads = NASTY + _synth_pages(8)
     pages = _pages_df(spark, payloads)
-    ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
-    got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=1))
+    ref = _collect(extracted_df(pages, ALL_FORMATS))
+    got = _collect(extracted_df(pages, ALL_FORMATS, split_bytes=1))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -140,9 +138,8 @@ def test_html_split_tier_admission_and_fallback(spark):
     pages = _pages_df(spark, payloads)
     for opt in (ALL_FORMATS, ALL_FORMATS.with_(max_file_size=30),
                 ALL_FORMATS.with_(from_formats=("pdf",))):
-        ref = _collect(extracted_df(pages, opt, cpus=2))
-        got = _collect(extracted_split_df(pages, opt, cpus=2,
-                                          split_bytes=1))
+        ref = _collect(extracted_df(pages, opt))
+        got = _collect(extracted_df(pages, opt, split_bytes=1))
         assert got == ref, opt
 
 
@@ -170,9 +167,8 @@ def test_pdf_tier_still_works_with_html_split_on(spark):
                              [(10, 10, 11, "page two words")]])
     payloads = [pdf, NASTY[0], b"<p>tiny</p>"]
     pages = _pages_df(spark, payloads)
-    ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
-    got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=20))
+    ref = _collect(extracted_df(pages, ALL_FORMATS))
+    got = _collect(extracted_df(pages, ALL_FORMATS, split_bytes=20))
     assert got == ref
 
 
@@ -202,8 +198,8 @@ def test_tier_takes_only_payloads_it_cuts(spark, monkeypatch):
         payload = body[:size]
         assert len(payload) == size
         segs.value = 0
-        (row,) = extracted_split_df(_pages_df(spark, [payload]), ALL_FORMATS,
-                                    split_bytes=split_bytes).collect()
+        (row,) = extracted_df(_pages_df(spark, [payload]), ALL_FORMATS,
+                              split_bytes=split_bytes).collect()
         assert row.text == extract_document(payload, ALL_FORMATS).text
         return segs.value
     assert n_segs(2 * split_bytes - 1) == 0
@@ -215,10 +211,12 @@ def test_html_split_tier_plan_shape(spark):
     exactly ONE payload repartition; the raw payload, the decoded
     segment text and state are DROPPED before the merge aggregate's
     exchange (only block structs + the rare fallback payload cross
-    it)."""
+    it).  No kernel and no merge aggregate takes the write's part key,
+    even from a source that carries one."""
+    from webextract.pipeline import with_part_id
     from webextract.synth import pages_df
-    pages = pages_df(spark, 50, parallelism=4)
-    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024)
+    pages = with_part_id(pages_df(spark, 50, parallelism=4), 4)
+    opt = (extracted_df(pages, split_bytes=1024)
            ._jdf.queryExecution().optimizedPlan().toString())
     # one payload repartition per tier (pdf + html), none elsewhere
     assert opt.count("RepartitionByExpression") == 2, opt[:2000]
@@ -238,6 +236,13 @@ def test_html_split_tier_plan_shape(spark):
         child = lines[i + 1]
         out = child.rsplit("[", 1)[1]
         assert not any(c in out for c in ("html", " seg#", "state#")), child
+        assert "part_id" not in lines[i] + child, lines[i]
+    # the extraction kernels: plain + 3 per chain (the synth source is
+    # a generator kernel of its own)
+    kernels = [ln for ln in lines
+               if "MapInArrow" in ln and "gen_batches" not in ln]
+    assert len(kernels) == 7, kernels
+    assert not any("part_id" in ln for ln in kernels), kernels
 
 
 def test_run_extract_with_html_tier_matches_default(spark, tmp_path):
@@ -274,9 +279,8 @@ def test_exact_duplicate_rows_stay_separate(spark):
             ("dup://p", TS, pdf, "", "en")]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA).repartition(2)
     ref = sorted((r["url"], r["status"], r["text"]) for r in
-                 extracted_df(pages, ALL_FORMATS, cpus=2).collect())
+                 extracted_df(pages, ALL_FORMATS).collect())
     got = sorted((r["url"], r["status"], r["text"]) for r in
-                 extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                    split_bytes=1).collect())
+                 extracted_df(pages, ALL_FORMATS, split_bytes=1).collect())
     assert len(got) == 4
     assert got == ref

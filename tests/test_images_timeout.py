@@ -71,8 +71,7 @@ def test_artifact_sink_invariant(spark, tmp_path):
             })
 
     pages = spark.range(0, 6, 1, 2).mapInArrow(gen, PAGES_SCHEMA)
-    out = extracted_df(pages, ConvertOptions(image_export_mode="referenced"),
-                       cpus=2)
+    out = extracted_df(pages, ConvertOptions(image_export_mode="referenced"))
     d = str(tmp_path / "artifacts")
     write_artifacts(out, d)
     docs = sorted(glob.glob(os.path.join(d, "*", "doc.md")))
@@ -107,8 +106,7 @@ def test_zip_sink_invariant(spark, tmp_path):
             })
 
     pages = spark.range(0, 6, 1, 3).mapInArrow(gen, PAGES_SCHEMA)
-    out = extracted_df(pages, ConvertOptions(image_export_mode="referenced"),
-                       cpus=2)
+    out = extracted_df(pages, ConvertOptions(image_export_mode="referenced"))
     d = str(tmp_path / "zips")
     write_zip_artifacts(out, d)
     zips = sorted(glob.glob(os.path.join(d, "part-*.zip")))

@@ -28,7 +28,7 @@ def test_extraction_scan_prunes_naive_text(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
     docs_to_pages(docs).write.mode("overwrite").parquet(pages_dir)
-    out = extracted_df(spark.read.parquet(pages_dir), cpus=4)
+    out = extracted_df(spark.read.parquet(pages_dir))
     plan = _plan(out)
     scan = plan[plan.index("Scan parquet"):]
     schema_line = next(l for l in scan.splitlines()
@@ -48,7 +48,7 @@ def test_extraction_plan_has_no_shuffle(spark, tmp_path):
     pages_dir = str(tmp_path / "pages_ns")
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
     docs_to_pages(docs).write.mode("overwrite").parquet(pages_dir)
-    out = extracted_df(spark.read.parquet(pages_dir), cpus=4)
+    out = extracted_df(spark.read.parquet(pages_dir))
     assert "Exchange" not in _plan(out)
 
 
@@ -59,7 +59,7 @@ def test_docpages_spread_exchanges_no_payload(spark):
     from webextract.docpages import docs_to_pages
     from webextract.pipeline import extracted_df
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(extracted_df(docs_to_pages(docs), cpus=4))
+    plan = _plan(extracted_df(docs_to_pages(docs)))
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, tree
     scan = plan[plan.index("Scan parquet"):]
@@ -203,11 +203,13 @@ def test_split_tier_plan_shape(spark):
     no-shuffle scan->kernel map; the mini-PDF page-split branch must
     carry payload through exactly ONE repartition (url, seg_idx) and
     must DROP the payload before the merge aggregate's exchange (blocks
-    only).  The HTML chain's shape is pinned in test_htmlsplit."""
-    from webextract.split import extracted_split_df
+    only).  No kernel and no merge aggregate takes the write's part key,
+    even from a source that carries one.  The HTML chain's shape is
+    pinned in test_htmlsplit."""
+    from webextract.pipeline import extracted_df, with_part_id
     from webextract.synth import pages_df
-    pages = pages_df(spark, 50, parallelism=4)
-    opt = (extracted_split_df(pages, cpus=4, split_bytes=1024)
+    pages = with_part_id(pages_df(spark, 50, parallelism=4), 4)
+    opt = (extracted_df(pages, split_bytes=1024)
            ._jdf.queryExecution().optimizedPlan().toString())
     lines = opt.splitlines()
     # union children: normal (':' lines before the first merge), the
@@ -229,6 +231,13 @@ def test_split_tier_plan_shape(spark):
     agg_i = next(i for i, ln in enumerate(pdf) if "Aggregate [url" in ln)
     child = pdf[agg_i + 1]
     assert "html" not in child.rsplit("[", 1)[1], child
+    assert not any("part_id" in ln for ln in pdf[agg_i:agg_i + 2]), pdf
+    # the extraction kernels: plain + 3 per chain (the synth source is
+    # a generator kernel of its own)
+    kernels = [ln for ln in lines
+               if "MapInArrow" in ln and "gen_batches" not in ln]
+    assert len(kernels) == 7, kernels
+    assert not any("part_id" in ln for ln in kernels), kernels
 
 
 def test_exploded_shingles_no_inlined_gram_filter(spark):

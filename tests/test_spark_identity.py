@@ -31,7 +31,7 @@ def test_pages_df_matches_gen_page(spark):
 
 def test_extract_byte_identity(spark):
     pages = pages_df(spark, N, parallelism=8)
-    out = extracted_df(pages, cpus=4).collect()
+    out = extracted_df(pages).collect()
     assert len(out) == N
     seen = set()
     for r in out:
@@ -52,14 +52,14 @@ def test_extract_plan_shape(spark):
     """Plan sanity: no shuffle between repartition and kernel; naive
     `text` column pruned from the scan side of the plan."""
     pages = pages_df(spark, 10, parallelism=2)
-    plan = extracted_df(pages, cpus=2)._jdf.queryExecution().executedPlan().toString()
+    plan = extracted_df(pages)._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
     assert plan.count("Exchange") <= 4  # 2 tier repartitions (+AQE reads)
 
 
 def test_chunk_kernel_identity(spark):
     pages = pages_df(spark, 80, parallelism=4)
-    ex = extracted_df(pages, cpus=4)
+    ex = extracted_df(pages)
     got = chunks_df(ex, "hybrid", 64).collect()
     # oracle
     want = {}

@@ -13,7 +13,6 @@ from webextract import pdfmini
 from webextract.docpages import PAGES_SCHEMA
 from webextract.options import ConvertOptions
 from webextract.pipeline import extracted_df
-from webextract.split import extracted_split_df
 
 ALL_FORMATS = ConvertOptions(
     to_formats=("md", "text", "doctags", "html", "html_split_page", "json"),
@@ -67,9 +66,8 @@ def _collect(df):
 
 def _assert_identical(spark, payloads, opt, split_bytes=1):
     pages = _pages_df(spark, payloads)
-    ref = _collect(extracted_df(pages, opt, cpus=2))
-    got = _collect(extracted_split_df(pages, opt, cpus=2,
-                                      split_bytes=split_bytes))
+    ref = _collect(extracted_df(pages, opt))
+    got = _collect(extracted_df(pages, opt, split_bytes=split_bytes))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -109,11 +107,22 @@ def test_small_and_html_docs_stay_on_narrow_path(spark):
             + b"</p></article></body></html>")
     payloads = _mk_pdfs() + [html]
     pages = _pages_df(spark, payloads)
-    ref = _collect(extracted_df(pages, ALL_FORMATS, cpus=2))
-    got = _collect(extracted_split_df(pages, ALL_FORMATS, cpus=2,
-                                      split_bytes=1 << 30))
+    ref = _collect(extracted_df(pages, ALL_FORMATS))
+    got = _collect(extracted_df(pages, ALL_FORMATS, split_bytes=1 << 30))
     assert got == ref
     assert got["pdf://5"]["fmt"] == "html"
+
+
+def test_extracted_df_schema_is_extract_schema(spark):
+    """extracted_df emits EXTRACT_SCHEMA on the plain and the tier plan,
+    whether or not the source carries the write's part key."""
+    from webextract.pipeline import with_part_id
+    from webextract.udfs import EXTRACT_SCHEMA
+    pages = _pages_df(spark, _mk_pdfs())
+    for src in (pages, with_part_id(pages, 4)):
+        for split_bytes in (None, 1):
+            out = extracted_df(src, ALL_FORMATS, split_bytes=split_bytes)
+            assert out.schema == EXTRACT_SCHEMA, (src.columns, split_bytes)
 
 
 def test_split_spreads_segments(spark):
@@ -204,7 +213,7 @@ def test_same_url_different_warc_ts_stay_separate(spark):
     rows = [("pdf://same", datetime.datetime(2025, 1, 1), docs[0], "", "en"),
             ("pdf://same", datetime.datetime(2025, 6, 1), docs[4], "", "en")]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
-    got = (extracted_split_df(pages, ALL_FORMATS, cpus=2, split_bytes=1)
+    got = (extracted_df(pages, ALL_FORMATS, split_bytes=1)
            .select("url", "warc_ts", "text").collect())
     assert len(got) == 2
     texts = {r.warc_ts.month: r.text for r in got}

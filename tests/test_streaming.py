@@ -41,7 +41,7 @@ def test_stream_extract_matches_batch(spark, pages_dir, tmp_path):
     assert got.count() == 120
     # byte-identity vs the batch path on the same input
     from webextract.pipeline import extracted_df
-    batch = extracted_df(spark.read.parquet(pages_dir), cpus=4)
+    batch = extracted_df(spark.read.parquet(pages_dir))
     s = {r["url"]: (r["text"], r["text_md"]) for r in
          got.select("url", "text", "text_md").collect()}
     b = {r["url"]: (r["text"], r["text_md"]) for r in

@@ -12,7 +12,7 @@ from collections import Counter
 
 import pyarrow as pa
 
-from webextract import htmlsplit, pdfmini, split
+from webextract import htmlsplit, pdfmini, pipeline, split
 from webextract.docpages import PAGES_SCHEMA
 from webextract.extract import extract_document
 from webextract.options import DEFAULT_OPTIONS
@@ -47,7 +47,7 @@ def test_kernel_factories_resolve_and_build_the_plan(spark, monkeypatch):
     pages = spark.createDataFrame(
         [("pdf://0", TS, PDF, "", "en"), ("html://1", TS, HTML, "", "en")],
         PAGES_SCHEMA)
-    split.extracted_split_df(pages, split_bytes=1)
+    pipeline.extracted_df(pages, split_bytes=1)
     assert set(calls) == {a for _, a in SPLIT_FACTORIES}, calls
 
 
@@ -56,7 +56,7 @@ def _run_chain(make_split, make_seg, make_merge, payload):
     sort_array(collect_list) between segment and merge done by hand."""
     batch = pa.RecordBatch.from_pydict(
         {"url": ["u://0"], "warc_ts": [TS], "lang": ["en"], "rid": [0],
-         "part_id": [3], "html": [payload]})
+         "html": [payload]})
     segs = [r for b in make_seg()(make_split()(iter([batch])))
             for r in b.to_pylist()]
     doc = dict(segs[0], segs=sorted(

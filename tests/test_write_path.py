@@ -173,7 +173,7 @@ def test_retried_attempt_and_orphans(spark, tmp_path):
     attempt's file, and a published but uncommitted part's file
     together with its record; a commit refuses a file that is gone."""
     tbl = IceTable(str(tmp_path / "t"))
-    rows = (extracted_df(with_part_id(pages_df(spark, 40, parallelism=2), 4))
+    rows = (with_part_id(extracted_df(pages_df(spark, 40, parallelism=2)), 4)
             .filter("part_id = 1").toArrow())
     assert rows.num_rows > 0
     run_dir = os.path.join(tbl.files_dir, "r")

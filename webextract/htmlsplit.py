@@ -159,8 +159,7 @@ def make_html_seg_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     return seg_frame(lambda r: _parse_seeded(r["seg"], r["state"]))
 
 
-def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                           part_id: bool = False):
+def make_html_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     """mapInArrow: a doc's concatenated blocks -> global select_main ->
     finish_blocks (the one-shot path's own functions)."""
-    return merge_frame(opt, _finish_html, part_id)
+    return merge_frame(opt, _finish_html)

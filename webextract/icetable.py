@@ -480,6 +480,16 @@ class IceTable:
             sid = s.get("parent_id")
         return out
 
+    def _run_record(self, as_of: str | None) -> dict:
+        """The run parameters a resume checks (pipeline.check_resume),
+        from the newest snapshot at ``as_of`` that recorded them."""
+        for s in self.snapshots(as_of):
+            v = s.get("versions") or {}
+            if "partitions" in v:
+                return {k: v[k] for k in ("partitions", "options_hash",
+                                          "options") if k in v}
+        return {}
+
     def latest_snapshot(self) -> dict | None:
         sid = self.current_snapshot_id()
         return self._snapshot(sid) if sid else None
@@ -1597,6 +1607,11 @@ class IceTable:
         small-files problem).  Old files stay on disk for time travel
         until expire_snapshots.
 
+        The rewrite snapshot records, next to ``versions``, the run
+        parameters of the newest run in its base chain, so a resume's
+        check holds with it at the head, also once expire_snapshots
+        drops the history below it.
+
         ``sort_by``: cluster the rewritten data on a column (Iceberg's
         sort-order rewrite): range-repartition into the output files +
         sort within each, so every output file covers a DISJOINT value
@@ -1708,8 +1723,9 @@ class IceTable:
                 if fsch:
                     part["file_schemas"] = fsch
                 snap_id = self.commit(
-                    run_id, [part],
-                    committed_at, versions, rewrite=True,
+                    run_id, [part], committed_at,
+                    {**self._run_record(base), **(versions or {})},
+                    rewrite=True,
                     carried_parts=sorted(self.committed_parts(as_of=base)),
                     expected_parent=base,
                     stats_cols=cols)

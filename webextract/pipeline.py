@@ -4,12 +4,13 @@ The DataFrame plan is declared; Catalyst does column pruning (the naive
 ``text`` column never reaches the kernel), filter pushdown, and AQE
 coalescing.  Explicit choices we make (SURVEY.md §4.2):
 
-* ``part_id = pmod(xxhash64(url), P)`` — deterministic url-hash
-  partitioning; the resume anti-filter and per-partition lineage key.
-  It is computed once, on the source rows, and rides through the
-  kernels to the write.
-* extraction is one narrow mapInArrow pass (no shuffle); the only
-  shuffle is the final write layout.
+* ``part_id = pmod(xxhash64(url), P)`` (``part_expr``) — deterministic
+  url-hash partitioning; the resume anti-filter and per-partition
+  lineage key.  The write computes it from ``url``, which the kernels
+  pass through unchanged, so extraction carries nothing of the write.
+* extraction is one narrow mapInArrow pass (no shuffle) outside the
+  oversized-document tier (split.py); the only other shuffle is the
+  final write layout.
 * one Spark action per run: every part the run owns is extracted,
   shuffled by part_id and written by a write task that also counts the
   part's lineage counters and PUBLISHES the part (IceTable.stage_parts).
@@ -35,7 +36,8 @@ from .dom import parse_anchors, parse_metadata
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .session import cores
-from .udfs import (CHUNK_SCHEMA, LINEAGE_COUNTERS, extract_schema,
+from .split import tier_df
+from .udfs import (CHUNK_SCHEMA, EXTRACT_SCHEMA, LINEAGE_COUNTERS,
                    extract_input_cols, lineage_counters, make_chunk_kernel,
                    make_extract_kernel, row_kernel)
 
@@ -44,14 +46,18 @@ DEFAULT_PARTITIONS = 64
 STATS_COLS = ("url",)
 
 
+def part_expr(partitions: int = DEFAULT_PARTITIONS):
+    """A row's part: ``pmod(xxhash64(url), partitions)`` as an int."""
+    return F.pmod(F.xxhash64("url"), F.lit(partitions)).cast("int")
+
+
 def with_part_id(df: DataFrame, partitions: int = DEFAULT_PARTITIONS) -> DataFrame:
-    return df.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(partitions)).cast("int"))
+    return df.withColumn("part_id", part_expr(partitions))
 
 
 def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
-                 cpus: int = 32) -> DataFrame:
-    """pages(url, warc_ts, html, [text], [lang]) -> extracted frame.
+                 split_bytes: int | None = None) -> DataFrame:
+    """pages(url, warc_ts, html, [text], [lang], ...) -> EXTRACT_SCHEMA.
 
     A pure narrow map: scan splits feed the Arrow kernel directly — raw
     HTML is NEVER shuffled (at 100 TB the payload shuffle IS the job
@@ -59,16 +65,23 @@ def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
     (udfs.row_kernel) bounds only its output batches: a skew bomb's
     whole input batch (≤ maxRecordsPerBatch rows) is in worker memory
     first.  Scan-split size is the knob for straggler bound
-    (spark.sql.files.maxPartitionBytes), and ``split_bytes``
-    (split.extracted_split_df) spreads a giant document over tasks.
-    ``cpus`` is accepted for call-site compatibility and unused.
-    When ``pages`` carries ``part_id`` the output keeps it (the run's
-    write groups by it).
-    """
+    (spark.sql.files.maxPartitionBytes).
+
+    ``split_bytes`` spreads a giant document over tasks: a payload of
+    at least ``2 * split_bytes`` bytes takes the fan-out tier
+    (split.tier_df), every other one this kernel."""
     src = pages.select(*extract_input_cols(pages.columns))
-    keep = "part_id" in src.columns
-    return src.mapInArrow(make_extract_kernel(opt, keep),
-                          extract_schema(keep))
+    tier = None
+    if split_bytes is not None:
+        # coalesce: a NULL payload makes the predicate SQL NULL, which
+        # both filters would drop; it takes the kernel, which emits its
+        # skipped verdict
+        is_big = F.coalesce(F.length("html") >= F.lit(2 * split_bytes),
+                            F.lit(False))
+        tier = tier_df(src.filter(is_big), opt, split_bytes)
+        src = src.filter(~is_big)
+    out = src.mapInArrow(make_extract_kernel(opt), EXTRACT_SCHEMA)
+    return out if tier is None else out.unionByName(tier)
 
 
 _LINKS_ARROW = pa.schema([
@@ -309,13 +322,13 @@ def _commit_wave(spark: SparkSession, table: IceTable, run_id: str,
             "commit_ms": int((time.time() - t1) * 1000)}, parts_meta
 
 
-def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
+def write_wave(spark: SparkSession, table: IceTable, pages: DataFrame,
                run_id: str, opt: ConvertOptions, partitions: int,
                groups: list[list[int]] | None = None,
                split_bytes: int | None = None):
     """The write of a batch run and of a streaming epoch: ONE Spark
-    action extracts the ``part_id``-carrying ``pages_p`` rows, shuffles
-    them by part_id and writes and publishes each part
+    action extracts the ``pages`` rows, gives each its ``part_id`` from
+    its url, shuffles them by part_id and writes and publishes each part
     (IceTable.stage_parts, stamped with ``options_hash`` and
     ``partitions`` for a resume to check).  The write uses
     min(parts, cores) tasks: every core writes, and a task's fixed cost
@@ -323,8 +336,8 @@ def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
     whatever the task count; at cluster scale a real catalog would
     further split a part by target file size.
 
-    ``groups`` are the part ids of a batch run's waves: the rows are
-    filtered to them and the action writes them all.  A streaming
+    ``groups`` are the part ids of a batch run's waves: the source rows
+    are filtered to them and the action writes them all.  A streaming
     epoch passes ``groups=None``: it takes every row, and the parts it
     wrote form its one group.  ``split_bytes`` as in run_extract.
 
@@ -337,12 +350,8 @@ def write_wave(spark: SparkSession, table: IceTable, pages_p: DataFrame,
     t0 = time.time()
     parts = None if groups is None else [p for g in groups for p in g]
     if parts is not None:
-        pages_p = pages_p.filter(F.col("part_id").isin(parts))
-    if split_bytes is not None:
-        from .split import extracted_split_df
-        out = extracted_split_df(pages_p, opt, split_bytes=split_bytes)
-    else:
-        out = extracted_df(pages_p, opt)
+        pages = pages.filter(part_expr(partitions).isin(parts))
+    out = with_part_id(extracted_df(pages, opt, split_bytes), partitions)
     n_tasks = min(partitions if parts is None else len(parts), cores(spark))
     records = table.stage_parts(
         out, run_id, n_tasks, lineage_counters,
@@ -367,9 +376,10 @@ def check_resume(table: IceTable, partitions: int,
     """Refuse to resume a run whose snapshot heads the table with
     another ``partitions`` or other options: part ids would name other
     url sets (rows committed twice or never) or the table would mix
-    rows from two option sets.  A head without the ``partitions``
-    record — a table from before it, or a maintenance snapshot such as
-    a compaction — is not checked."""
+    rows from two option sets.  A compaction's rewrite snapshot carries
+    the record of the run it compacted (IceTable.compact).  A head
+    without the record (a table from before it, a row-level delete or
+    upsert) is not checked."""
     head = table.latest_snapshot() or {}
     have = head.get("versions") or {}
     if "partitions" not in have:
@@ -407,7 +417,8 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     page-split (mini-PDF) or cut-point-split (HTML, htmlsplit.py) into
     pieces of at least about ``split_bytes``, parsed across tasks
     instead of pinning one; smaller payloads and None keep the pure
-    no-shuffle plan.  ``cpus`` and ``html_split`` are accepted for
+    no-shuffle plan.  A row's part comes from its url at the write
+    (write_wave).  ``cpus`` and ``html_split`` are accepted for
     call-site compatibility and unused.
     A resume with another ``partitions`` or other options than the
     table's last run raises ValueError before anything is written.
@@ -429,7 +440,6 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
         "options_hash": opt.options_hash(), "partitions": partitions})
     todo = [p for p in range(partitions)
             if p not in committed and p not in adopted]
-    pages_p = with_part_id(pages, partitions)
     summary = {"run_id": run_id, "partitions": partitions,
                "skipped_parts": sorted(committed),
                "adopted_parts": sorted(adopted), "write_ms": 0,
@@ -459,7 +469,7 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     if not groups:
         return summary
     summary["write_ms"], commits = write_wave(
-        spark, table, pages_p, run_id, opt, partitions, groups, split_bytes)
+        spark, table, pages, run_id, opt, partitions, groups, split_bytes)
     for wi, (wave, parts_meta) in enumerate(commits):
         wave = {"wave": len(summary["waves"]), **wave}
         summary["waves"].append(wave)

@@ -75,7 +75,7 @@ def _extract(spark: SparkSession, sf_dir: str, para_tokens: int = 0,
              empty_mod: int = 0) -> DataFrame:
     pages = docs_to_pages(_read(spark, sf_dir, "documents"),
                           para_tokens=para_tokens, empty_mod=empty_mod)
-    return _doc_id(extracted_df(pages, cpus=4))
+    return _doc_id(extracted_df(pages))
 
 
 # ---------------------------------------------------------------------------
@@ -102,7 +102,7 @@ def q_extract_html_split(spark, sf_dir):
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
     opt = DEFAULT_OPTIONS.with_(
         to_formats=("text", "html", "html_split_page"))
-    return (_doc_id(extracted_df(pages, opt, cpus=4))
+    return (_doc_id(extracted_df(pages, opt))
             .filter(F.col("status") == "success")
             .select("doc_id", "text_html", "text_html_split"))
 
@@ -129,7 +129,7 @@ def q_extract_doctags(spark, sf_dir):
     from .options import DEFAULT_OPTIONS
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
     opt = DEFAULT_OPTIONS.with_(to_formats=("text", "doctags"))
-    return (_doc_id(extracted_df(pages, opt, cpus=4))
+    return (_doc_id(extracted_df(pages, opt))
             .filter(F.col("status") == "success")
             .select("doc_id", "doctags"))
 
@@ -142,7 +142,7 @@ def q_extract_json(spark, sf_dir):
     from .options import DEFAULT_OPTIONS
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
     opt = DEFAULT_OPTIONS.with_(to_formats=("text", "json"))
-    return (_doc_id(extracted_df(pages, opt, cpus=4))
+    return (_doc_id(extracted_df(pages, opt))
             .filter(F.col("status") == "success")
             .select("doc_id", "text_json"))
 
@@ -154,7 +154,7 @@ def q_extract_pdf_text(spark, sf_dir):
     restores reading order."""
     from .docpages import docs_to_pdf_pages
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"))
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -165,9 +165,8 @@ def q_extract_pdf_split(spark, sf_dir):
     reproduce the one-shot conversion byte-identically — same oracle as
     extract_pdf_text (reference examples/split_processing.py:73-118)."""
     from .docpages import docs_to_pdf_pages
-    from .split import extracted_split_df
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"))
-    return (_doc_id(extracted_split_df(pages, split_bytes=1))
+    return (_doc_id(extracted_df(pages, split_bytes=1))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -180,7 +179,7 @@ def q_extract_pdf_page_slice(spark, sf_dir):
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"),
                               run_tokens=2)
     opt = DEFAULT_OPTIONS.with_(page_range=(2, 3))
-    return (_doc_id(extracted_df(pages, opt, cpus=4))
+    return (_doc_id(extracted_df(pages, opt))
             .filter(F.col("status") == "success")
             .select("doc_id", "text"))
 
@@ -191,7 +190,7 @@ def q_extract_md_source(spark, sf_dir):
     markdown parser; the md serializer round-trips the source
     byte-identically (heading + paragraph)."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "md")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text", "text_md"))
 
@@ -200,7 +199,7 @@ def q_extract_csv_source(spark, sf_dir):
     """csv input format: whole file → one table block; cell text must
     survive csv quoting round-trip byte-identically."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "csv")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -210,7 +209,7 @@ def q_extract_json_docling(spark, sf_dir):
     IR — blocks rebuild losslessly (the reference's json_docling
     round-trip analogue)."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "json")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -222,7 +221,7 @@ def q_extract_rich_blocks(spark, sf_dir):
     markdown renderings (``` fences, > quotes, -/1. items, md pipes)
     must match the oracle exactly after boilerplate removal."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "rich")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "text", "text_md"))
 
@@ -231,7 +230,7 @@ def q_extract_jats_source(spark, sf_dir):
     """xml_jats input format: JATS article-title + abstract parse
     (reference InputFormat enum, docs/usage.md:14)."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "jats")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -240,7 +239,7 @@ def q_extract_uspto_source(spark, sf_dir):
     """xml_uspto input format: invention-title + abstract + description
     paragraphs in document order."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "uspto")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -249,7 +248,7 @@ def q_extract_mets_source(spark, sf_dir):
     """mets_gbs input format: MODS title + abstract (inline-metadata
     subset; companion ALTO files are out of payload scope)."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "mets")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -261,9 +260,8 @@ def q_extract_html_split_tier(spark, sf_dir):
     about every 256 chars.  Byte-identical to the one-shot kernel, so the
     oracle is extract_main_text's (the tier is an execution strategy,
     not a semantic change)."""
-    from .split import extracted_split_df
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
-    out = _doc_id(extracted_split_df(pages, split_bytes=256))
+    out = _doc_id(extracted_df(pages, split_bytes=256))
     return (out.filter(F.col("status") == "success")
             .select("doc_id", "text"))
 
@@ -274,7 +272,7 @@ def q_extract_asciidoc_source(spark, sf_dir):
     a paragraph must each survive byte-identically."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"),
                                  "asciidoc")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -283,7 +281,7 @@ def q_extract_vtt_source(spark, sf_dir):
     """vtt input format: cue payload text survives; cue ids, timestamp
     lines, and NOTE blocks are stripped."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "vtt")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -292,7 +290,7 @@ def q_extract_docx_source(spark, sf_dir):
     """docx input format: OOXML container sniff (word/ part probe),
     Heading1 style → heading, split <w:t> runs concatenated."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "docx")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -301,7 +299,7 @@ def q_extract_pptx_source(spark, sf_dir):
     """pptx input format: slides in part-name order, one para per
     <a:p>."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "pptx")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -310,7 +308,7 @@ def q_extract_xlsx_source(spark, sf_dir):
     """xlsx input format: sharedStrings (t="s") AND numeric cells in
     one table block; md-pipe rendering matches the csv table shape."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "xlsx")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .filter(F.col("status") == "success")
             .select("doc_id", "fmt", "text"))
 
@@ -321,7 +319,7 @@ def q_extract_mixed_formats(spark, sf_dir):
     parser, and UNKNOWN payloads must be SKIPPED (never parsed as
     HTML — the round-1 review's silent-mangling fix)."""
     pages = docs_to_format_pages(_read(spark, sf_dir, "documents"), "mixed")
-    return (_doc_id(extracted_df(pages, cpus=4))
+    return (_doc_id(extracted_df(pages))
             .groupBy("fmt", "status")
             .agg(F.count("*").cast("long").alias("n_docs")))
 
@@ -2122,7 +2120,7 @@ def q_extract_image_ocr(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.col("media").alias("html"),
         F.lit("").alias("text"), F.lit("en").alias("lang"))
-    out = extracted_df(pages, cpus=4)
+    out = extracted_df(pages)
     return (out.withColumn("doc_id",
                            F.substring("url", 7, 20).cast("bigint"))
             .filter(F.col("status") == "success")
@@ -2168,7 +2166,7 @@ def q_extract_audio_source(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.col("media").alias("html"),
         F.lit("").alias("text"), F.lit("en").alias("lang"))
-    out = extracted_df(pages, cpus=4)
+    out = extracted_df(pages)
     return (out.withColumn("doc_id",
                            F.substring("url", 7, 20).cast("bigint"))
             .filter(F.col("status") == "success")
@@ -2529,7 +2527,7 @@ def q_extract_warc_source(spark, sf_dir):
     shutil.rmtree(root, ignore_errors=True)
     write_warc(pages, root)
     back = read_warc(spark, f"{root}/*.warc.gz")
-    out = _doc_id(extracted_df(back, cpus=4))
+    out = _doc_id(extracted_df(back))
     return (out.filter(F.col("status") == "success")
             .select("doc_id", "text"))
 
@@ -2639,7 +2637,7 @@ def q_cdx_fetch(spark, sf_dir):
     idx = index_warc(spark, f"{root}/*.warc.gz")
     caps = corpus.parse_cdx(idx)
     back = fetch_by_cdx(caps)
-    out = _doc_id(extracted_df(back, cpus=4))
+    out = _doc_id(extracted_df(back))
     return (out.filter(F.col("status") == "success")
             .select("doc_id", "text"))
 

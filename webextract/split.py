@@ -6,8 +6,11 @@ examples/split_processing.py:73-118 — page-range fan-out followed by
 bounds only the size of their output batches: a single 1 GB document
 still pins one task end-to-end, and its whole input batch sits in that
 worker's memory; this tier spreads its parse across the cluster.
-It is one chain, parameterized by format; each kernel is a per-row
-function run by ``udfs.row_kernel``:
+``pipeline.extracted_df(split_bytes=...)`` routes every payload of at
+least ``2 * split_bytes`` bytes here (``tier_df``).  The tier is one
+chain, parameterized by format; each kernel is a per-row function run
+by ``udfs.row_kernel``, and the merge emits plain EXTRACT rows (the
+write computes their part key from ``url``):
 
 1. split kernel (narrow 1->N mapInArrow): document-level admission runs
    HERE, once, on the whole payload, through the one-shot path's own
@@ -50,8 +53,7 @@ from .extract import (Extracted, admit_payload, extract_document, failed,
                       finish_blocks)
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .session import cores
-from .udfs import (extract_arrow, extract_input_cols, extract_schema,
-                   extracted_row, make_extract_kernel, row_kernel)
+from .udfs import EXTRACT_ARROW, EXTRACT_SCHEMA, extracted_row, row_kernel
 
 # a segment row: its doc's carried columns, its place in the doc, the
 # doc's verdict (fmt/error only set with one), and the format's piece:
@@ -59,8 +61,8 @@ from .udfs import (extract_arrow, extract_input_cols, extract_schema,
 # the raw payload (fallback lane)
 _DOC_ARROW = [
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
-    ("rid", pa.int64()), ("lang", pa.string()), ("part_id", pa.int32()),
-    ("seg_idx", pa.int32()), ("orig_bytes", pa.int64()),
+    ("rid", pa.int64()), ("lang", pa.string()), ("seg_idx", pa.int32()),
+    ("orig_bytes", pa.int64()),
     ("verdict", pa.string()), ("fmt", pa.string()), ("error", pa.string())]
 _SEG_ARROW = pa.schema(_DOC_ARROW + [
     ("state", pa.string()), ("seg", pa.large_string()),
@@ -80,7 +82,7 @@ def n_segments(payload: bytes, split_bytes: int) -> int:
     """Segments an oversized payload is cut into: each carries at least
     about ``split_bytes`` (a smaller piece only adds per-segment cost
     after the fan-out), so a payload under twice that is not cut and
-    does not take the tier (extracted_split_df)."""
+    does not take the tier (pipeline.extracted_df)."""
     return max(1, len(payload) // split_bytes)
 
 
@@ -155,12 +157,11 @@ def _merged_blocks(segs: list[dict]) -> list[Block]:
     return blocks
 
 
-def merge_frame(opt: ConvertOptions, finish, part_id: bool = False):
+def merge_frame(opt: ConvertOptions, finish):
     """mapInArrow merge over PRE-AGGREGATED rows (one row per doc with
     its segments collected and sorted): a verdict row, the fallback
-    lane, or ``finish(blocks, opt, url) -> Extracted``.  ``part_id`` and
-    a row's weight (its doc's payload bytes): as in
-    udfs.make_extract_kernel.
+    lane, or ``finish(blocks, opt, url) -> Extracted``.  A row weighs
+    its doc's payload bytes, as in udfs.make_extract_kernel.
 
     mapInArrow over collect_list-aggregated rows, NOT per-group
     applyInPandas: a grouped-map pays one pandas DataFrame round-trip
@@ -176,11 +177,11 @@ def merge_frame(opt: ConvertOptions, finish, part_id: bool = False):
             x = finish(_merged_blocks(r["segs"]), opt, r["url"])
         yield extracted_row(x, r, r["orig_bytes"]), r["orig_bytes"]
 
-    return row_kernel(merge_row, extract_arrow(part_id))
+    return row_kernel(merge_row, EXTRACT_ARROW)
 
 
-def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
-             part_id: bool) -> DataFrame:
+def _fan_out(src: DataFrame, split_kernel, seg_kernel,
+             merge_kernel) -> DataFrame:
     """split kernel -> repartition(url, seg_idx) -> segment kernel ->
     one aggregated row per doc -> merge kernel.
 
@@ -199,7 +200,6 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
             .mapInArrow(seg_kernel, _SEGX_SCHEMA))
     agg = (segs.groupBy("url", "warc_ts", "rid")
            .agg(F.first("lang").alias("lang"),
-                F.first("part_id").alias("part_id"),
                 F.first("orig_bytes").alias("orig_bytes"),
                 F.max("verdict").alias("verdict"),
                 F.max("fmt").alias("fmt"),
@@ -207,7 +207,7 @@ def _fan_out(src: DataFrame, split_kernel, seg_kernel, merge_kernel,
                 F.first("payload", ignorenulls=True).alias("payload"),
                 F.sort_array(F.collect_list(
                     F.struct("seg_idx", "perr", "blocks"))).alias("segs")))
-    return agg.mapInArrow(merge_kernel, extract_schema(part_id))
+    return agg.mapInArrow(merge_kernel, EXTRACT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -251,49 +251,29 @@ def make_seg_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
         pdfmini.parse_pdf_blocks(r["html"], opt.page_range), True))
 
 
-def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                      part_id: bool = False):
+def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     """mapInArrow: a doc's page-group blocks -> its EXTRACT row."""
-    return merge_frame(opt, _finish_pdf, part_id)
+    return merge_frame(opt, _finish_pdf)
 
 
-def extracted_split_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
-                       cpus: int = 32, *, split_bytes: int,
-                       html_split: bool = True) -> DataFrame:
-    """Extraction with the oversized-document fan-out tier.
-
-    Routing is declarative so Catalyst prunes every branch's scan: a
-    payload of at least ``2 * split_bytes`` bytes, the smallest that
-    n_segments cuts, is oversized.  Oversized mini-PDFs take the
-    page-split chain and all other oversized payloads the cut-point
-    chain (htmlsplit.py), cut into pieces of at least about
-    ``split_bytes``; every smaller payload takes the normal no-shuffle
-    kernel path, whose scan task maxPartitionBytes bounds.  All branches
-    union to the same EXTRACT schema, so downstream (waves, IceTable
-    commit, chunkers) is tier-oblivious.  ``cpus`` and ``html_split``
-    are accepted for call-site compatibility and unused.  Each branch's
-    final kernel (plain, PDF merge, HTML merge) keeps ``part_id`` when
-    ``pages`` has it, as pipeline.extracted_df does."""
+def tier_df(big: DataFrame, opt: ConvertOptions, split_bytes: int
+            ) -> DataFrame:
+    """The tier's EXTRACT rows for ``big``, the source rows that
+    pipeline.extracted_df routes here (at least ``2 * split_bytes``
+    bytes, the smallest payload n_segments cuts).  Mini-PDFs take the
+    page-split chain and all other payloads the cut-point chain
+    (htmlsplit.py), cut into pieces of at least about ``split_bytes``.
+    Both chains end in EXTRACT_SCHEMA, so downstream (waves, IceTable
+    commit, chunkers) is tier-oblivious."""
     from . import htmlsplit
-    src = pages.select(*extract_input_cols(pages.columns))
-    keep = "part_id" in src.columns
-    # a payload the tier cuts: n_segments >= 2.  coalesce: a NULL html
-    # payload makes the predicate SQL NULL, which every branch filter
-    # would drop — the row must take the normal kernel path (which
-    # emits its skipped verdict).
-    is_big = F.coalesce(F.length("html") >= F.lit(2 * split_bytes),
-                        F.lit(False))
     is_pdf = (F.substring(F.col("html").cast("binary"), 1,
                           len(pdfmini.MAGIC)) == F.lit(pdfmini.MAGIC))
-    normal = (src.filter(~is_big)
-              .mapInArrow(make_extract_kernel(opt, keep),
-                          extract_schema(keep)))
     pdf = _fan_out(
-        src.filter(is_big & is_pdf), make_split_kernel(opt, split_bytes),
-        make_seg_extract_kernel(opt), make_merge_kernel(opt, keep), keep)
+        big.filter(is_pdf), make_split_kernel(opt, split_bytes),
+        make_seg_extract_kernel(opt), make_merge_kernel(opt))
     html = _fan_out(
-        src.filter(is_big & ~is_pdf),
+        big.filter(~is_pdf),
         htmlsplit.make_html_split_kernel(opt, split_bytes),
         htmlsplit.make_html_seg_kernel(opt),
-        htmlsplit.make_html_merge_kernel(opt, keep), keep)
-    return normal.unionByName(pdf).unionByName(html)
+        htmlsplit.make_html_merge_kernel(opt))
+    return pdf.unionByName(html)

@@ -90,7 +90,7 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
     ``committed_parts()`` batch-resume semantics do not apply to it —
     read it via the manifests like any other IceTable."""
     from .icetable import IceTable
-    from .pipeline import with_part_id, write_wave
+    from .pipeline import write_wave
 
     table = IceTable(table_root)
     # run_id = stream-<checkpoint-tag>-<epoch>: the tag scopes
@@ -125,9 +125,8 @@ def stream_extract_to_icetable(spark: SparkSession, input_dir: str,
             return          # redelivered epoch: already committed
         if batch_df.isEmpty():
             return          # zero-row batch: nothing to stage/commit
-        _, commits = write_wave(spark, table,
-                                with_part_id(batch_df, partitions),
-                                run_id, opt, partitions)
+        _, commits = write_wave(spark, table, batch_df, run_id, opt,
+                                partitions)
         for _ in commits:   # the epoch's one snapshot
             pass
         seen.add(run_id)

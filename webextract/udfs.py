@@ -18,11 +18,13 @@ weight, in bytes as the per-row function counts them, reaches
 only: a skew-bomb row still costs its whole input batch in worker
 memory before any budget applies (SURVEY.md §7.4#4).
 
-The extraction kernel and the split tiers' merge kernels carry
-``part_id`` through when their input has it (``extract_input_cols``):
-the run's write kernel (``IceTable.stage_parts``) groups the rows by
-it and counts each part's lineage counters (``lineage_counters``) as
-it writes the part's file, so a commit needs no Spark pass of its own.
+The extraction kernel and the split tiers' merge kernels all emit one
+schema, ``EXTRACT_SCHEMA``, and carry nothing of the write: the run's
+part key is computed from ``url`` by the plan above them
+(``pipeline.with_part_id``), and the write kernel
+(``IceTable.stage_parts``) counts each part's lineage counters
+(``lineage_counters``) as it writes the part's file, so a commit needs
+no Spark pass of its own.
 
 The frame also trims the fixed cost of every Python task after a
 worker's first: it turns zipimporter cache invalidation into a no-op
@@ -39,7 +41,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StructType
 
 from .chunk import chunk_blocks_from_spans
 from .extract import Extracted, extract_document
@@ -54,7 +55,7 @@ SPAN_TYPE = pa.list_(pa.struct([
 IMAGE_TYPE = pa.list_(pa.struct([
     ("idx", pa.int32()), ("uri", pa.string()), ("data", pa.large_binary())]))
 
-_EXTRACT_ARROW = pa.schema([
+EXTRACT_ARROW = pa.schema([
     ("url", pa.large_string()), ("warc_ts", pa.timestamp("us")),
     ("lang", pa.string()), ("status", pa.string()), ("fmt", pa.string()),
     ("text", pa.large_string()), ("text_md", pa.large_string()),
@@ -62,10 +63,7 @@ _EXTRACT_ARROW = pa.schema([
     ("text_html_split", pa.large_string()), ("text_json", pa.large_string()),
     ("spans", SPAN_TYPE), ("images", IMAGE_TYPE), ("n_blocks", pa.int32()),
     ("bytes_in", pa.int64()), ("error", pa.string())])
-
-# the EXTRACT row plus the part_id it came with, which the run's write
-# partitions by
-_EXTRACT_PART_ARROW = _EXTRACT_ARROW.append(pa.field("part_id", pa.int32()))
+EXTRACT_SCHEMA = from_arrow_schema(EXTRACT_ARROW)
 
 LINEAGE_COUNTERS = ("num_docs", "num_processed", "num_succeeded",
                     "num_partial", "num_failed", "num_skipped",
@@ -154,26 +152,14 @@ def row_kernel(per_row, arrow_schema: pa.Schema):
 
 def extract_input_cols(columns: list[str]) -> list[str]:
     """The source columns an extraction plan reads (column pruning: a
-    naive ``text`` column is never scanned), ``part_id`` when the
-    source has it."""
-    cols = ["url", "warc_ts", "lang", "html"] \
+    naive ``text`` column is never scanned)."""
+    return ["url", "warc_ts", "lang", "html"] \
         if "lang" in columns else ["url", "warc_ts", "html"]
-    return cols + ["part_id"] if "part_id" in columns else cols
-
-
-def extract_arrow(part_id: bool) -> pa.Schema:
-    """An extraction kernel's output, with the input's part_id when
-    ``part_id``."""
-    return _EXTRACT_PART_ARROW if part_id else _EXTRACT_ARROW
-
-
-def extract_schema(part_id: bool) -> StructType:
-    return from_arrow_schema(extract_arrow(part_id))
 
 
 def extracted_row(r: Extracted, row: dict, bytes_in: int) -> dict:
     """One Extracted result + the input row it came from (url, warc_ts,
-    lang, part_id) -> an EXTRACT row dict — the single place an
+    lang) -> an EXTRACT row dict — the single place an
     Extracted becomes a row (the plain kernel and the split tiers'
     merge kernels both call this)."""
     return {"url": row["url"], "warc_ts": row.get("warc_ts"),
@@ -185,16 +171,13 @@ def extracted_row(r: Extracted, row: dict, bytes_in: int) -> dict:
                       for (s, e, k, p) in r.spans],
             "images": [{"idx": i, "uri": u, "data": d}
                        for (i, u, d) in r.images],
-            "n_blocks": r.n_blocks, "bytes_in": bytes_in, "error": r.error,
-            "part_id": row.get("part_id")}
+            "n_blocks": r.n_blocks, "bytes_in": bytes_in, "error": r.error}
 
 
-def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
-                        part_id: bool = False):
+def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
     """Returns the mapInArrow function for the extract stage (operators
-    C1-C4, C10 of SURVEY.md §2.3 fused into one narrow pass).  With
-    ``part_id`` the input carries ``part_id`` and the output keeps it.
-    A row weighs its payload bytes."""
+    C1-C4, C10 of SURVEY.md §2.3 fused into one narrow pass).  A row
+    weighs its payload bytes."""
 
     def extract_row(row):
         html = row["html"]
@@ -202,7 +185,7 @@ def make_extract_kernel(opt: ConvertOptions = DEFAULT_OPTIONS,
         yield extracted_row(extract_document(html, opt, row["url"]), row,
                             bytes_in), bytes_in
 
-    return row_kernel(extract_row, extract_arrow(part_id))
+    return row_kernel(extract_row, EXTRACT_ARROW)
 
 
 _CHUNK_ARROW = pa.schema([

@@ -122,3 +122,35 @@ def test_partition_truncate_numeric_and_string(spark, tmp_path):
     df, scanned2, _ = tbl.scan_by_partition(spark, "event_type", "view")
     assert _ids(df) == _ids(ev.filter(F.col("event_type") == "view"))
     assert scanned2 < total
+
+
+def test_partition_prune_holds_after_compaction_keeps_files(spark,
+                                                            tmp_path):
+    """A compaction that keeps files carries their partition values
+    forward: results still equal the plain filter, and no kept file
+    whose bucket cannot hold the value is scanned.  Without the values
+    a kept file looks unpartitioned and is always scanned (64 of 64
+    files, and no partition metadata left)."""
+    import os
+    import statistics
+    tbl = _make(spark, tmp_path)
+    ev = _events(spark)
+    extra = spark.createDataFrame(ev.limit(50).collect(), ev.schema)
+    tbl.commit("w1", tbl.write_partitioned(spark, extra, "w1",
+                                           part_id=1), "t1")
+    both = ev.unionByName(extra)
+    sizes = [os.path.getsize(f) for f in tbl.data_files()]
+    res = tbl.compact(spark, int(2 * statistics.median(sizes)),
+                      committed_at="tc")
+    assert res["snapshot_id"] and res["kept"] > 0
+    pinfo = tbl.data_files_with_partition()
+    assert len(pinfo) == res["kept"]
+    df, scanned, total = tbl.scan_by_partition(spark, "event_type",
+                                               "click")
+    assert _ids(df) == _ids(both.filter(F.col("event_type") == "click"))
+    bucket = IceTable._partition_value_of("bucket", 8, "click")
+    can_match = sum(pv["b"] in (bucket, "__HIVE_DEFAULT_PARTITION__")
+                    for pv, _ in pinfo.values())
+    # the rewritten outputs mix buckets and are scanned; of the kept
+    # files, only those whose bucket can hold the value
+    assert scanned == total - res["kept"] + can_match < total

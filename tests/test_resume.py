@@ -156,36 +156,52 @@ def test_resume_refuses_other_partitions_or_options(spark, tmp_path):
 
 
 def test_resume_refusal_holds_after_compaction(spark, tmp_path):
-    """A compaction's rewrite snapshot heads the table and carries the
-    compacted run's partitions and options, so a resume with other
-    parameters is still refused, also once expiry dropped every
-    snapshot below the rewrite.  Unchecked, a partitions=8 rerun of
-    320 pages over a compacted partitions=4 table of 200 skipped parts
-    0-3 as done and read back 363 rows for 252 urls."""
+    """A row-level delete, an upsert or a compaction at the head does
+    not hide the last run's partitions and options, so a resume with
+    other parameters is still refused, also once expiry dropped every
+    snapshot below the compaction's rewrite.  Unchecked, a partitions=8
+    rerun of 320 pages over a compacted partitions=4 table of 200
+    skipped parts 0-3 as done and read back 363 rows for 252 urls; over
+    one whose head was a delete of one url, 362 rows for 251 urls."""
     from webextract.options import ConvertOptions
     root = str(tmp_path / "compacted")
     run_extract(spark, pages_df(spark, 200, parallelism=4), root,
                 partitions=4, waves=2, cpus=2)
     tbl = IceTable(root)
-    assert tbl.compact(spark, target_file_bytes=64 << 20)["snapshot_id"]
+    first, second = (r.url for r in tbl.read(spark).select("url")
+                     .orderBy("url").limit(2).collect())
+    heads = {
+        "delete_where": lambda: tbl.delete_where(
+            spark, spark.createDataFrame([(first,)], "url string"),
+            ("url",), "delete", "t-delete"),
+        "upsert": lambda: tbl.upsert(
+            spark, tbl.read(spark).filter(F.col("url") == second),
+            ("url",), "upsert", "t-upsert"),
+        "compact": lambda: tbl.compact(
+            spark, target_file_bytes=64 << 20)["snapshot_id"]}
     pages = pages_df(spark, 320, parallelism=4)
     other = ConvertOptions(to_formats=("md",))
-    for expire in (False, True):
-        if expire:
-            tbl.expire_snapshots(keep=1)
-            assert len(tbl.snapshots()) == 1
-        before = _table_state(root)
-        with pytest.raises(ValueError, match="partitions=4.*partitions=8"):
-            run_extract(spark, pages, root, partitions=8, waves=2, cpus=2)
-        with pytest.raises(ValueError, match=other.options_hash()):
-            run_extract(spark, pages, root, opt=other, partitions=4,
-                        waves=2, cpus=2)
-        assert _table_state(root) == before
+    for head, commit in heads.items():
+        assert commit()
+        for expire in (False, True) if head == "compact" else (False,):
+            if expire:
+                tbl.expire_snapshots(keep=1)
+                assert len(tbl.snapshots()) == 1
+            before = _table_state(root)
+            with pytest.raises(ValueError,
+                               match="partitions=4.*partitions=8"):
+                run_extract(spark, pages, root, partitions=8, waves=2,
+                            cpus=2)
+            with pytest.raises(ValueError, match=other.options_hash()):
+                run_extract(spark, pages, root, opt=other, partitions=4,
+                            waves=2, cpus=2)
+            assert _table_state(root) == before
     # the table's own parameters: every part is done, nothing recomputed
+    # (part -2 holds the upsert's rows)
     s = run_extract(spark, pages, root, partitions=4, waves=2, cpus=2)
-    assert s["skipped_parts"] == [0, 1, 2, 3] and s["waves"] == []
+    assert s["skipped_parts"] == [-2, 0, 1, 2, 3] and s["waves"] == []
     urls = [r.url for r in tbl.read(spark).select("url").collect()]
-    assert len(urls) == len(set(urls)) == 200
+    assert len(urls) == len(set(urls)) == 199 and first not in urls
 
 
 class Crash(Exception):

@@ -926,34 +926,29 @@ def ensure_band_keys(tbl, spark, n: int = 3, k: int = 16,
                      rows_per_band: int = 4,
                      as_of: str | None = None) -> DataFrame:
     """The committed corpus' band-key frame, assembled from the
-    per-snapshot artifacts: walk the chain newest->oldest unioning
-    artifacts, stopping at a rewrite snapshot (whose artifact covers
-    everything it replaced — the compaction hook below).  Self-healing:
-    a snapshot missing its artifact (pre-feature history, a compaction
-    that landed without the hook) gets it computed from that
-    snapshot's OWN files and stored, so the recompute happens at most
-    once per snapshot, not once per admission run.  Returns the union
-    frame to pass as ``old_band_keys``."""
+    per-snapshot artifacts: the union of the artifacts of the snapshots
+    that list live files (IceTable.manifest), newest first, down to the
+    newest rewrite snapshot, whose files are the whole live set it
+    replaced.  Self-healing: a snapshot missing its artifact
+    (pre-feature history, a compaction that landed without the hook)
+    gets it computed from that snapshot's OWN files and stored, so the
+    recompute happens at most once per snapshot, not once per
+    admission run.  Returns the union frame to pass as
+    ``old_band_keys``."""
+    by_snapshot: dict[str, list] = {}
+    for e in tbl.manifest(as_of).files:
+        by_snapshot.setdefault(e.snapshot_id, []).append(
+            (e.path, e.schema_id))
     parts = []
-    for s in tbl.snapshots(as_of):
-        sid = s["snapshot_id"]
+    for sid, fws in by_snapshot.items():
         df = tbl.read_artifact_df(spark, BAND_KEYS_ARTIFACT, sid)
         if df is None:
-            if s.get("rewrite"):
-                # a rewrite's artifact spans its full live set
-                docs = tbl.read(spark, as_of=sid)
-            else:
-                fws = [(f, p.get("file_schemas", {}).get(
-                    f, s.get("schema_id")))
-                    for p in s["partitions"] for f in p["files"]]
-                docs = tbl._read_mapped(spark, fws)
             tbl.write_artifact_df(
-                lsh_band_keys(docs, n, k, rows_per_band),
+                lsh_band_keys(tbl._read_mapped(spark, fws), n, k,
+                              rows_per_band),
                 BAND_KEYS_ARTIFACT, sid)
             df = tbl.read_artifact_df(spark, BAND_KEYS_ARTIFACT, sid)
         parts.append(df)
-        if s.get("rewrite"):
-            break
     if not parts:
         raise FileNotFoundError(f"no committed snapshot in {tbl.root}")
     out = parts[0]

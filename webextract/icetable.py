@@ -21,6 +21,13 @@ same shape a real catalog would slot into:
 * a snapshot is a JSON manifest listing committed partitions, their data
   files, and per-partition lineage counters; snapshots chain via
   ``parent_id``.
+* ONE walk reads the chain (``IceTable.manifest``): a per-snapshot
+  decoder (``_decode``) turns each part entry into per-file entries
+  (``LiveFile``: write-time schema, column bounds, row count, partition
+  values), and the walk adds the live deletes, the committed part ids
+  and the newest run record.  Every reader (``data_files``, ``scan``,
+  ``committed_parts``, ``files_df``, ...) is a projection of it, and
+  ``compact`` writes each kept file forward from its entry whole.
 * commits are atomic: manifest written to a temp file then ``os.replace``
   onto the ``_CURRENT`` pointer — readers see the old or the new
   snapshot, never a partial one.
@@ -32,11 +39,13 @@ same shape a real catalog would slot into:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import unquote
 
 
@@ -132,6 +141,96 @@ def _literal(path: str) -> str:
     return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
 
 
+def _durable_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically and durably: a temp
+    file, flushed and fsynced, then ``os.replace`` onto ``path`` —
+    readers see the old content or the new, never a partial one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+class LiveFile(NamedTuple):
+    """What the manifest records about one data file (``_decode``)."""
+    path: str
+    part_id: int
+    schema_id: int | None     # write-time schema: the part's
+    #                           file_schemas override, else the snapshot's
+    stats: dict               # {write-time column: [min, max]}
+    rows: int | None          # record count, None when not recorded
+    partition: dict | None    # partition values ...
+    spec_id: int | None       # ... and the spec they were derived under
+    snapshot_id: str
+    seq: int                  # chain position, newest highest: a
+    #                           delete applies to files of lower seq
+
+
+class Manifest(NamedTuple):
+    """One walk of the snapshot chain (``IceTable.manifest``)."""
+    files: list[LiveFile]     # live data files, newest snapshot first
+    deletes: list[tuple]      # live deletes (seq, files, key_cols,
+    #                           schema_id), newest first
+    parts: set[int]           # committed part ids, carried ones too
+    run: dict                 # newest run record (_RUN_KEYS), or {}
+
+
+# the run parameters a resume checks (pipeline.check_resume)
+_RUN_KEYS = ("partitions", "options_hash", "options")
+
+
+def _decode(snap: dict, seq: int) -> list[LiveFile]:
+    """The one reader of what a snapshot's part entries say about their
+    data files: one entry per listed file, in listing order.  Per-file
+    facts live in the part's ``file_schemas`` / ``file_stats`` /
+    ``file_rows`` maps, keyed by path (a rewrite in the older shape
+    lists every kept file in one part with such maps); ``partition``
+    and ``spec_id`` hold for all the part's files."""
+    out = []
+    for p in snap["partitions"]:
+        schemas = p.get("file_schemas") or {}
+        stats = p.get("file_stats") or {}
+        rows = p.get("file_rows") or {}
+        out.extend(LiveFile(f, p["part_id"],
+                            schemas.get(f, snap.get("schema_id")),
+                            stats.get(f, {}), rows.get(f),
+                            p.get("partition"), p.get("spec_id"),
+                            snap["snapshot_id"], seq)
+                   for f in p["files"])
+    return out
+
+
+def _file_part(e: LiveFile) -> dict:
+    """``e`` as a one-file part entry for a commit: ``_decode`` of it
+    gives back ``e`` but for the snapshot id, the sequence number and
+    a missing schema id (the new snapshot's fills it), so a rewrite
+    carries a kept file forward whole.  Its counters are empty: the
+    file's documents were counted when first committed."""
+    part = {"part_id": e.part_id, "files": [e.path], "counters": {}}
+    if e.schema_id is not None:
+        part["file_schemas"] = {e.path: e.schema_id}
+    if e.stats:
+        part["file_stats"] = {e.path: e.stats}
+    if e.rows is not None:
+        part["file_rows"] = {e.path: e.rows}
+    if e.partition is not None:
+        part["partition"] = e.partition
+    if e.spec_id is not None:
+        part["spec_id"] = e.spec_id
+    return part
+
+
+def _by_path(files: list[LiveFile]) -> dict[str, LiveFile]:
+    """{path: entry} in listing order; a path listed twice keeps its
+    newest entry."""
+    out: dict[str, LiveFile] = {}
+    for e in files:
+        out.setdefault(e.path, e)
+    return out
+
+
 class CommitConflict(RuntimeError):
     """Optimistic-concurrency failure: the table head moved between a
     writer's read of the chain and its commit (Iceberg's
@@ -184,19 +283,9 @@ class IceTable:
         """Atomic schema append + pointer swap (same discipline as
         snapshot commit; callers hold the commit lock)."""
         sid = schema["schema_id"]
-        path = os.path.join(self.meta_dir, f"schema-{sid}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(schema, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        ptmp = self._schema_ptr + ".tmp"
-        with open(ptmp, "w") as f:
-            f.write(str(sid))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptmp, self._schema_ptr)
+        _durable_write(os.path.join(self.meta_dir, f"schema-{sid}.json"),
+                       json.dumps(schema))
+        _durable_write(self._schema_ptr, str(sid))
         return sid
 
     def init_schema(self, fields: list[tuple[str, str]]) -> int:
@@ -204,21 +293,14 @@ class IceTable:
         assigned 1..n in order."""
         if self.current_schema_id() is not None:
             raise ValueError("schema already initialized")
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             return self._write_schema({
                 "schema_id": 0,
                 "fields": [{"id": i + 1, "name": n, "type": t}
                            for i, (n, t) in enumerate(fields)]})
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def _evolve(self, mutate) -> int:
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             cur = self.current_schema()
             if cur is None:
                 raise ValueError("init_schema first")
@@ -226,11 +308,6 @@ class IceTable:
             mutate(fields)
             return self._write_schema(
                 {"schema_id": cur["schema_id"] + 1, "fields": fields})
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def add_column(self, name: str, dtype: str) -> int:
         """Schema evolution: append a column (fresh field id).  Old
@@ -331,15 +408,7 @@ class IceTable:
                                ) -> list[tuple[str, int | None]]:
         """Live (file, write-time schema_id) pairs — the schema-aware
         twin of data_files()."""
-        out = []
-        for s in self.snapshots(as_of):
-            sid = s.get("schema_id")
-            for p in s["partitions"]:
-                fsch = p.get("file_schemas") or {}
-                out.extend((f, fsch.get(f, sid)) for f in p["files"])
-            if s.get("rewrite"):
-                break
-        return out
+        return [(e.path, e.schema_id) for e in self.manifest(as_of).files]
 
     # -- row-level deletes (Iceberg v2 merge-on-read, equality deletes) --
     # A snapshot may carry {"files": [...], "key_cols": [...],
@@ -354,26 +423,9 @@ class IceTable:
     # carries delete state.
 
     def _live_set(self, as_of: str | None = None):
-        """([(file, schema_id, seq)], [(seq, files, key_cols,
-        schema_id)]) — live data files and delete frames with their
-        snapshot sequence numbers (chain position; newer = higher).
-        The walk stops at a rewrite, same as data_files()."""
-        chain = self.snapshots(as_of)
-        data, deletes = [], []
-        for i, s in enumerate(chain):
-            seq = len(chain) - i          # newest gets the highest seq
-            sid = s.get("schema_id")
-            d = s.get("delete")
-            if d:
-                deletes.append((seq, d["files"], tuple(d["key_cols"]),
-                                d.get("schema_id")))
-            for p in s["partitions"]:
-                fsch = p.get("file_schemas") or {}
-                data.extend((f, fsch.get(f, sid), seq)
-                            for f in p["files"])
-            if s.get("rewrite"):
-                break
-        return data, deletes
+        """(live files, live deletes) of the manifest walk."""
+        m = self.manifest(as_of)
+        return m.files, m.deletes
 
     def delete_keys_frame(self, spark, delete) -> "object":
         """One delete's key tuples projected to CURRENT column names
@@ -385,8 +437,7 @@ class IceTable:
                 for c in key_cols]
         return df.select(*cols)
 
-    def _grouped_read(self, spark,
-                      picked: list[tuple[str, int | None, int]],
+    def _grouped_read(self, spark, picked: list[LiveFile],
                       deletes) -> "object":
         """Union of mapped reads grouped by (write-time schema, set of
         applicable deletes); each group anti-joins the union of delete
@@ -394,11 +445,11 @@ class IceTable:
         construction — so the anti-join broadcasts."""
         from pyspark.sql import functions as SF
         groups: dict = {}
-        for f, sid, seq in picked:
+        for e in picked:
             applicable = tuple(sorted(
                 i for i, (dseq, *_rest) in enumerate(deletes)
-                if dseq > seq))
-            groups.setdefault((sid, applicable), []).append(f)
+                if dseq > e.seq))
+            groups.setdefault((e.schema_id, applicable), []).append(e.path)
         dfs = []
         for (sid, applicable), fs in sorted(
                 groups.items(),
@@ -480,15 +531,36 @@ class IceTable:
             sid = s.get("parent_id")
         return out
 
-    def _run_record(self, as_of: str | None) -> dict:
-        """The run parameters a resume checks (pipeline.check_resume),
-        from the newest snapshot at ``as_of`` that recorded them."""
-        for s in self.snapshots(as_of):
+    def manifest(self, as_of: str | None = None) -> Manifest:
+        """The one walk of the chain from ``as_of`` (default: the head),
+        every reader's source.  Live files (``_decode``) and deletes
+        come from the snapshots down to the newest rewrite, whose file
+        list REPLACES everything older (Iceberg's rewrite_data_files);
+        the committed part ids (a rewrite's ``carried_parts`` too) and
+        the run record — the ``_RUN_KEYS`` of the newest snapshot whose
+        ``versions`` recorded them — from the whole chain, so a
+        row-level delete or upsert at the head, which records none,
+        does not hide the run's."""
+        chain = self.snapshots(as_of)
+        m = Manifest([], [], set(), {})
+        live = True
+        for i, s in enumerate(chain):
+            if live:
+                seq = len(chain) - i      # newest gets the highest seq
+                m.files.extend(_decode(s, seq))
+                d = s.get("delete")
+                if d:
+                    m.deletes.append((seq, d["files"],
+                                      tuple(d["key_cols"]),
+                                      d.get("schema_id")))
+                live = not s.get("rewrite")
+            m.parts.update(p["part_id"] for p in s["partitions"])
+            m.parts.update(s.get("carried_parts", ()))
             v = s.get("versions") or {}
-            if "partitions" in v:
-                return {k: v[k] for k in ("partitions", "options_hash",
-                                          "options") if k in v}
-        return {}
+            if not m.run and "partitions" in v:
+                m.run.update((k, v[k]) for k in _RUN_KEYS if k in v)
+        m.parts.discard(-1)   # the rewrite snapshot's synthetic part
+        return m
 
     def latest_snapshot(self) -> dict | None:
         sid = self.current_snapshot_id()
@@ -499,24 +571,13 @@ class IceTable:
         """Part ids covered by the table — the resume anti-join's right
         side.  Rewrite (compaction) snapshots carry the part ids they
         replaced forward, so resume survives history expiry."""
-        parts: set[int] = set()
-        for s in self.snapshots(as_of):
-            parts.update(p["part_id"] for p in s["partitions"])
-            parts.update(s.get("carried_parts", ()))
-        parts.discard(-1)   # the rewrite snapshot's synthetic part
-        return parts
+        return self.manifest(as_of).parts
 
     def data_files(self, as_of: str | None = None) -> list[str]:
         """Live data files at a snapshot.  A rewrite (compaction)
         snapshot's file list REPLACES everything older, so the walk
         stops there — exactly Iceberg's rewrite_data_files semantics."""
-        out = []
-        for s in self.snapshots(as_of):
-            for p in s["partitions"]:
-                out.extend(p["files"])
-            if s.get("rewrite"):
-                break
-        return out
+        return [e.path for e in self.manifest(as_of).files]
 
     @staticmethod
     def file_column_stats(path: str, cols: tuple[str, ...]) -> dict:
@@ -554,28 +615,15 @@ class IceTable:
     def data_file_stats(self, as_of: str | None = None) -> dict:
         """{file: {col: [min, max]}} for the live files — the manifest
         walk twin of data_files()."""
-        stats: dict = {}
-        for s in self.snapshots(as_of):
-            for p in s["partitions"]:
-                for f in p["files"]:
-                    stats.setdefault(f, (p.get("file_stats") or {})
-                                     .get(f, {}))
-            if s.get("rewrite"):
-                break
-        return stats
+        return {f: e.stats
+                for f, e in _by_path(self.manifest(as_of).files).items()}
 
     def data_file_rows(self, as_of: str | None = None) -> dict:
         """{file: record_count} for the live files — the row-count
         twin of data_file_stats (Iceberg data_file.record_count)."""
-        rows: dict = {}
-        for s in self.snapshots(as_of):
-            for p in s["partitions"]:
-                for f in p["files"]:
-                    if f in (p.get("file_rows") or {}):
-                        rows.setdefault(f, p["file_rows"][f])
-            if s.get("rewrite"):
-                break
-        return rows
+        return {f: e.rows
+                for f, e in _by_path(self.manifest(as_of).files).items()
+                if e.rows is not None}
 
     def stats_agg(self, spark, cols: tuple[str, ...] = (),
                   as_of: str | None = None):
@@ -595,23 +643,21 @@ class IceTable:
         (metadata_only=false) — the answer is always correct, metadata
         is purely a cost lever (the scan() contract)."""
         from pyspark.sql import functions as SF
-        data, deletes = self._live_set(as_of)
-        rows_map = self.data_file_rows(as_of)
-        stats = self.data_file_stats(as_of)
-        meta_ok = not deletes and all(f in rows_map for f, _, _ in data)
+        m = self.manifest(as_of)
+        meta_ok = not m.deletes and all(e.rows is not None
+                                        for e in m.files)
         bounds: dict = {}
         if meta_ok:
             for c in cols:
                 mn = mx = None
-                for f, sid, _seq in data:
-                    wname = self._resolve_name(c, sid)
+                for e in m.files:
+                    wname = self._resolve_name(c, e.schema_id)
                     if wname is None:
                         continue           # NULL backfill: no bound
-                    st = stats.get(f, {})
-                    if wname not in st:
+                    if wname not in e.stats:
                         meta_ok = False
                         break
-                    fmn, fmx = st[wname]
+                    fmn, fmx = e.stats[wname]
                     mn = fmn if mn is None else min(mn, fmn)
                     mx = fmx if mx is None else max(mx, fmx)
                 if not meta_ok:
@@ -620,12 +666,12 @@ class IceTable:
         names = ["n_rows"] + [f"{w}_{c}" for c in cols
                               for w in ("min", "max")]
         if meta_ok:
-            vals = [sum(rows_map[f] for f, _, _ in data)]
+            vals = [sum(e.rows for e in m.files)]
             for c in cols:
                 vals.extend(bounds[c])
             row = spark.createDataFrame([tuple(vals)], names)
         else:
-            df = self._grouped_read(spark, data, deletes)
+            df = self._grouped_read(spark, m.files, m.deletes)
             aggs = [SF.count("*").alias("n_rows")]
             for c in cols:
                 aggs += [SF.min(c).alias(f"min_{c}"),
@@ -647,25 +693,24 @@ class IceTable:
         (returns (df, files_scanned, files_total) — callers/tests read
         the prune ratio)."""
         from pyspark.sql import functions as SF
-        stats = self.data_file_stats(as_of)
-        data, deletes = self._live_set(as_of)
+        m = self.manifest(as_of)
         picked = []
-        for f, sid, seq in data:
-            wname = self._resolve_name(col, sid)
+        for e in m.files:
+            wname = self._resolve_name(col, e.schema_id)
             if wname is None:
                 # field added after this file was written: every row
                 # backfills NULL, which a range predicate can't match —
                 # prune the whole file (exactly Iceberg's behavior)
                 continue
-            st = stats.get(f, {})
+            st = e.stats
             if wname not in st or not (st[wname][1] < lo
                                        or st[wname][0] > hi):
-                picked.append((f, sid, seq))
+                picked.append(e)
         if not picked:
-            return None, 0, len(data)
-        df = (self._grouped_read(spark, picked, deletes)
+            return None, 0, len(m.files)
+        df = (self._grouped_read(spark, picked, m.deletes)
               .filter(SF.col(col).between(lo, hi)))
-        return df, len(picked), len(data)
+        return df, len(picked), len(m.files)
 
     def scan_box(self, spark, preds: list[tuple], as_of: str | None = None):
         """Multi-column stats-pruned read: open ONLY files whose
@@ -680,29 +725,28 @@ class IceTable:
         the exact residual filter rides on top, so the result is
         always correct and pruning stays a pure cost lever."""
         from pyspark.sql import functions as SF
-        stats = self.data_file_stats(as_of)
-        data, deletes = self._live_set(as_of)
+        m = self.manifest(as_of)
         picked = []
-        for f, sid, seq in data:
+        for e in m.files:
             keep = True
             for col, lo, hi in preds:
-                wname = self._resolve_name(col, sid)
+                wname = self._resolve_name(col, e.schema_id)
                 if wname is None:
                     keep = False
                     break
-                st = stats.get(f, {})
+                st = e.stats
                 if wname in st and (st[wname][1] < lo
                                     or st[wname][0] > hi):
                     keep = False
                     break
             if keep:
-                picked.append((f, sid, seq))
+                picked.append(e)
         if not picked:
-            return None, 0, len(data)
-        df = self._grouped_read(spark, picked, deletes)
+            return None, 0, len(m.files)
+        df = self._grouped_read(spark, picked, m.deletes)
         for col, lo, hi in preds:
             df = df.filter(SF.col(col).between(lo, hi))
-        return df, len(picked), len(data)
+        return df, len(picked), len(m.files)
 
     def read(self, spark, as_of: str | None = None):
         """Read the table (optionally time-traveled to snapshot id
@@ -710,10 +754,10 @@ class IceTable:
         listing, so orphans from killed runs are invisible.  With a
         declared schema, every file is projected to the CURRENT
         schema (field-id rename resolution + NULL backfill)."""
-        data, deletes = self._live_set(as_of)
-        if not data:
+        m = self.manifest(as_of)
+        if not m.files:
             raise FileNotFoundError(f"no committed snapshot in {self.root}")
-        return self._grouped_read(spark, data, deletes)
+        return self._grouped_read(spark, m.files, m.deletes)
 
     def lineage(self) -> list[dict]:
         """Per-partition lineage rows (FIXTURES.md §5) across snapshots.
@@ -759,12 +803,8 @@ class IceTable:
                    kind: str) -> None:
         path = self._ref_path(name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"type": kind, "snapshot_id": snap_id}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
+        _durable_write(path, json.dumps({"type": kind,
+                                         "snapshot_id": snap_id}))
 
     def _read_ref(self, name: str) -> dict | None:
         if name == "main":
@@ -786,31 +826,19 @@ class IceTable:
 
     def create_branch(self, name: str, at: str | None = None) -> None:
         """New mutable branch at ``at`` (default: main's head)."""
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             if self._read_ref(name) is not None:
                 raise ValueError(f"ref {name!r} exists")
             self._write_ref(name, at if at is not None
                             else self.current_snapshot_id(), "branch")
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def create_tag(self, name: str, at: str | None = None) -> None:
         """Immutable named snapshot (release/audit marker)."""
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             if self._read_ref(name) is not None:
                 raise ValueError(f"ref {name!r} exists")
             self._write_ref(name, at if at is not None
                             else self.current_snapshot_id(), "tag")
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def _is_ancestor(self, maybe_ancestor: str | None,
                      head: str | None) -> bool:
@@ -834,8 +862,7 @@ class IceTable:
         (CommitConflict) when the target has moved past the branch
         point: the branch must rebase (re-commit its waves on the new
         head) rather than silently dropping the interleaved history."""
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             src = self._read_ref(branch)
             if src is None or src["type"] != "branch":
                 raise ValueError(f"{branch!r} is not a branch")
@@ -852,20 +879,10 @@ class IceTable:
                     f"{into!r} moved past the branch point of "
                     f"{branch!r}; rebase the branch and re-publish")
             if into == "main":
-                ptmp = self._current_path + ".tmp"
-                with open(ptmp, "w") as f:
-                    f.write(head or "")
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(ptmp, self._current_path)
+                _durable_write(self._current_path, head or "")
             else:
                 self._write_ref(into, head, "branch")
             return head
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     # -- hidden partitioning (Iceberg partition-spec transforms) ----------
     # A partition spec derives partition values FROM data columns via
@@ -906,27 +923,14 @@ class IceTable:
             if tf in ("bucket", "truncate") and not (
                     isinstance(param, int) and param > 0):
                 raise ValueError(f"{tf} needs a positive int param")
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             cur = self.current_partition_spec()
             spec_id = 0 if cur is None else cur[0] + 1
-            path = os.path.join(self.meta_dir, f"pspec-{spec_id}.json")
-            with open(path + ".tmp", "w") as f:
-                json.dump({"fields": [list(x) for x in fields]}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(path + ".tmp", path)
-            with open(self._pspec_ptr() + ".tmp", "w") as f:
-                f.write(str(spec_id))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(self._pspec_ptr() + ".tmp", self._pspec_ptr())
+            _durable_write(
+                os.path.join(self.meta_dir, f"pspec-{spec_id}.json"),
+                json.dumps({"fields": [list(x) for x in fields]}))
+            _durable_write(self._pspec_ptr(), str(spec_id))
             return spec_id
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     @staticmethod
     def partition_expr(transform: str, source: str, param,
@@ -1006,16 +1010,9 @@ class IceTable:
         """{file: (partition_values, spec_id)} for live files that
         carry partition metadata (files from plain commits simply
         don't appear — scans keep them conservatively)."""
-        out = {}
-        for s in self.snapshots(as_of):
-            for p in s["partitions"]:
-                pv, sid = p.get("partition"), p.get("spec_id")
-                if pv is not None and sid is not None:
-                    for f in p["files"]:
-                        out[f] = (pv, sid)
-            if s.get("rewrite"):
-                break
-        return out
+        return {f: (e.partition, e.spec_id)
+                for f, e in _by_path(self.manifest(as_of).files).items()
+                if e.partition is not None and e.spec_id is not None}
 
     def scan_by_partition(self, spark, col: str, lo, hi=None,
                           as_of: str | None = None):
@@ -1030,15 +1027,13 @@ class IceTable:
         purely a cost lever.  Returns (df, files_scanned, files_total)
         like scan()."""
         from pyspark.sql import functions as SF
-        pinfo = self.data_files_with_partition(as_of)
-        data, deletes = self._live_set(as_of)
+        m = self.manifest(as_of)
         specs: dict[int, list] = {}
         picked = []
-        for f, sid, seq in data:
-            meta = pinfo.get(f)
+        for e in m.files:
             keep = True
-            if meta is not None:
-                pv, spec_id = meta
+            if e.partition is not None and e.spec_id is not None:
+                pv, spec_id = e.partition, e.spec_id
                 if spec_id not in specs:
                     specs[spec_id] = self._pspec(spec_id)
                 for name, tf, src, param in specs[spec_id]:
@@ -1065,13 +1060,13 @@ class IceTable:
                     if not keep:
                         break
             if keep:
-                picked.append((f, sid, seq))
+                picked.append(e)
         if not picked:
-            return None, 0, len(data)
-        df = self._grouped_read(spark, picked, deletes)
+            return None, 0, len(m.files)
+        df = self._grouped_read(spark, picked, m.deletes)
         residual = (SF.col(col) == lo if hi is None
                     else SF.col(col).between(lo, hi))
-        return df.filter(residual), len(picked), len(data)
+        return df.filter(residual), len(picked), len(m.files)
 
     # -- metadata tables (Iceberg's SELECT * FROM t.files / .snapshots /
     # .history / .refs) — the operational introspection surface: which
@@ -1084,22 +1079,14 @@ class IceTable:
         """(file_path, part_id, schema_id, spec_id, partition,
         size_bytes, snapshot_id) for every live data file."""
         rows = []
-        for s in self.snapshots(as_of):
-            sid = s.get("schema_id")
-            for p in s["partitions"]:
-                fsch = p.get("file_schemas") or {}
-                for f in p["files"]:
-                    try:
-                        size = os.path.getsize(f)
-                    except OSError:
-                        size = None
-                    rows.append((f, p.get("part_id"),
-                                 fsch.get(f, sid), p.get("spec_id"),
-                                 json.dumps(p.get("partition"))
-                                 if p.get("partition") else None,
-                                 size, s["snapshot_id"]))
-            if s.get("rewrite"):
-                break
+        for e in self.manifest(as_of).files:
+            try:
+                size = os.path.getsize(e.path)
+            except OSError:
+                size = None
+            rows.append((e.path, e.part_id, e.schema_id, e.spec_id,
+                         json.dumps(e.partition) if e.partition else None,
+                         size, e.snapshot_id))
         return spark.createDataFrame(
             rows, "file_path string, part_id int, schema_id int, "
                   "spec_id int, partition string, size_bytes long, "
@@ -1157,16 +1144,10 @@ class IceTable:
         """Delete a branch or tag pointer (Iceberg drop_branch/drop_tag).
         The snapshots it pinned become expirable on the next
         expire_snapshots run — the pointer is the retention lease."""
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             if self._read_ref(name) is None:
                 raise ValueError(f"no such ref {name!r}")
             os.remove(self._ref_path(name))
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def rollback_to(self, snapshot_id: str) -> None:
         """Move main's head back to an ANCESTOR snapshot (Iceberg
@@ -1176,8 +1157,7 @@ class IceTable:
         re-publishable) until expiry.  Refuses a non-ancestor target:
         that would be set_current_snapshot, a history REWRITE, which
         this table format deliberately does not offer."""
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             try:
                 self._snapshot(snapshot_id)     # must exist
             except FileNotFoundError:
@@ -1186,17 +1166,7 @@ class IceTable:
                                      self.current_snapshot_id()):
                 raise ValueError(
                     f"{snapshot_id!r} is not an ancestor of main's head")
-            ptmp = self._current_path + ".tmp"
-            with open(ptmp, "w") as f:
-                f.write(snapshot_id)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(ptmp, self._current_path)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
+            _durable_write(self._current_path, snapshot_id)
 
     def _ref_reachable(self) -> set[str]:
         """Snapshot ids reachable from ANY named ref — the expiry pin
@@ -1356,8 +1326,10 @@ class IceTable:
             except FileNotFoundError:
                 pass
 
+    @contextlib.contextmanager
     def _commit_lock(self):
-        """Advisory O_EXCL lock around the _CURRENT read-modify-write:
+        """Advisory O_EXCL lock, held for the ``with`` body, around the
+        _CURRENT read-modify-write:
         two concurrent writers (multiple streams, stream + batch — an
         explicitly supported shape) would otherwise both read the same
         parent and one snapshot would fall off the chain, making its
@@ -1372,7 +1344,7 @@ class IceTable:
                 fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
                 os.write(fd, str(_time.time()).encode())
                 os.close(fd)
-                return lock
+                break
             except FileExistsError:
                 try:
                     age = _time.time() - float(open(lock).read() or 0)
@@ -1387,6 +1359,13 @@ class IceTable:
                 if _time.time() > deadline:
                     raise TimeoutError(f"commit lock busy: {lock}")
                 _time.sleep(0.05)
+        try:
+            yield
+        finally:
+            try:
+                os.remove(lock)
+            except OSError:
+                pass
 
     def commit(self, run_id: str, partitions: list[dict],
                committed_at: str, versions: dict | None = None,
@@ -1442,8 +1421,7 @@ class IceTable:
                 p["file_stats"] = fs
             if fr:
                 p["file_rows"] = fr
-        lock = self._commit_lock()
-        try:
+        with self._commit_lock():
             if branch is None:
                 head = self.current_snapshot_id()
             else:
@@ -1477,28 +1455,15 @@ class IceTable:
             if rewrite:
                 snap["rewrite"] = True
                 snap["carried_parts"] = sorted(carried_parts or [])
-            path = os.path.join(self.meta_dir, f"snap-{snap_id}.json")
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)
+            # the snapshot is durable before any pointer names it
+            _durable_write(
+                os.path.join(self.meta_dir, f"snap-{snap_id}.json"),
+                json.dumps(snap))
             if branch is None:
-                ptmp = self._current_path + ".tmp"
-                with open(ptmp, "w") as f:
-                    f.write(snap_id)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(ptmp, self._current_path)  # the atomic swap
+                _durable_write(self._current_path, snap_id)  # the swap
             else:
                 self._write_ref(branch, snap_id, "branch")
             return snap_id
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def changed_files(self, since: str | None,
                       as_of: str | None = None) -> list[str]:
@@ -1538,10 +1503,8 @@ class IceTable:
                     f"{s['snapshot_id']}; append-only CDC cannot "
                     f"represent deletes — re-read the full table "
                     f"(Iceberg's incremental append scan contract)")
-            sid = s.get("schema_id")
-            for p in s["partitions"]:
-                fsch = p.get("file_schemas") or {}
-                out.extend((f, fsch.get(f, sid)) for f in p["files"])
+            # no delete in the window: no sequence number is read
+            out.extend((e.path, e.schema_id) for e in _decode(s, 0))
         raise ValueError(f"snapshot {since} not in the current "
                          f"chain (expired?)")
 
@@ -1633,24 +1596,23 @@ class IceTable:
         footer read of the kept files, the price of making them
         prunable on it (second-review)."""
         base = self.current_snapshot_id()
-        data, deletes = self._live_set(as_of=base)
-        sid_of = {f: sid for f, sid, _ in data}
-        seq_of = {f: seq for f, _, seq in data}
-        files = [f for f, _, _ in data]
-        sizes = {f: os.path.getsize(f) for f in files}
+        m = self.manifest(base)
+        sizes = {e.path: os.path.getsize(e.path) for e in m.files}
         # files any pending equality-delete applies to are FORCED into
         # the rewrite regardless of size: the rewrite applies deletes
         # physically and its snapshot carries no delete state, so kept
         # files must have none pending
-        affected = {f for f in files
-                    if any(dseq > seq_of[f] for dseq, *_ in deletes)}
-        small = [f for f in files
-                 if sizes[f] < target_file_bytes // 2 or f in affected]
+        affected = {e.path for e in m.files
+                    if any(dseq > e.seq for dseq, *_ in m.deletes)}
+        small = [e for e in m.files
+                 if sizes[e.path] < target_file_bytes // 2
+                 or e.path in affected]
         if len(small) < 2 and not affected:
-            return {"rewritten": 0, "kept": len(files),
+            return {"rewritten": 0, "kept": len(m.files),
                     "snapshot_id": None}
-        keep = [f for f in files if f not in set(small)]
-        n_out = max(1, -(-sum(sizes[f] for f in small)
+        rewritten = {e.path for e in small}
+        keep = [e.path for e in m.files if e.path not in rewritten]
+        n_out = max(1, -(-sum(sizes[e.path] for e in small)
                          // target_file_bytes))
         run_id = "compact-" + uuid.uuid4().hex[:8]
         # schema-mapped + delete-applying read: rewritten rows come out
@@ -1658,8 +1620,7 @@ class IceTable:
         # columns NULL-backfilled) with deleted keys physically gone —
         # compaction is where old-schema files and merge-on-read
         # deletes converge
-        df = self._grouped_read(
-            spark, [(f, sid_of[f], seq_of[f]) for f in small], deletes)
+        df = self._grouped_read(spark, small, m.deletes)
         if zorder_by:
             # range-cluster on the interleaved Z-value, then project it
             # away (narrow — within-partition order survives): every
@@ -1680,10 +1641,9 @@ class IceTable:
             # stats keys are write-time names: map each through its
             # file's schema to the CURRENT name before unioning, so a
             # renamed tracked column stays tracked under its new name
-            prior_all = self.data_file_stats(as_of=base)
             tracked = tuple(sorted({
-                cn for f, st in prior_all.items() for c in st
-                if (cn := self._current_name(c, sid_of.get(f)))}))
+                cn for e in m.files for c in e.stats
+                if (cn := self._current_name(c, e.schema_id))}))
         else:
             tracked = stats_cols
         # a rewrite snapshot STOPS the stats walk, so it must
@@ -1701,34 +1661,19 @@ class IceTable:
             if st:
                 new_stats[f] = st
         while True:
-            prior = self.data_file_stats(as_of=base)
-            prior_rows = self.data_file_rows(as_of=base)
+            # each kept file is written forward whole from its entry
+            # (write-time schema id, bounds, row count, partition
+            # values): commit() footer-reads only what is still missing
+            live = _by_path(m.files)
+            parts = [_file_part(live[f]) for f in keep]
+            parts.append({"part_id": -1, "files": new_files,
+                          "counters": {}, "file_stats": new_stats})
             try:
-                part = {"part_id": -1, "files": keep + new_files,
-                        "counters": {},
-                        # kept files' bounds and row counts copied
-                        # forward — commit() footer-reads only what is
-                        # still missing
-                        "file_stats": {
-                            **{f: prior[f] for f in keep
-                               if prior.get(f)},
-                            **new_stats},
-                        "file_rows": {f: prior_rows[f] for f in keep
-                                      if f in prior_rows}}
-                # kept files keep their own write-time schema ids (the
-                # rewrite snapshot's schema_id covers only the files it
-                # actually rewrote under the current schema)
-                fsch = {f: sid_of[f] for f in keep
-                        if sid_of.get(f) is not None}
-                if fsch:
-                    part["file_schemas"] = fsch
                 snap_id = self.commit(
-                    run_id, [part], committed_at,
-                    {**self._run_record(base), **(versions or {})},
-                    rewrite=True,
-                    carried_parts=sorted(self.committed_parts(as_of=base)),
-                    expected_parent=base,
-                    stats_cols=cols)
+                    run_id, parts, committed_at,
+                    {**m.run, **(versions or {})},
+                    rewrite=True, carried_parts=sorted(m.parts),
+                    expected_parent=base, stats_cols=cols)
                 break
             except CommitConflict:
                 head = self.current_snapshot_id()
@@ -1738,13 +1683,11 @@ class IceTable:
                 # this rewrite's replacement list stale (it would
                 # resurrect the deleted rows); the staged outputs stay
                 # orphans until GC, the caller re-compacts.  The
-                # folded wave's stats and row counts are re-derived
-                # from the new head on the next pass (prior and
-                # prior_rows are rebuilt per attempt).
-                folded = self.changed_files_with_schema(base, as_of=head)
-                keep.extend(f for f, _ in folded)
-                sid_of.update(folded)
+                # folded wave's entries come from the walk at the new
+                # head on the next pass.
+                keep.extend(self.changed_files(base, as_of=head))
                 base = head
+                m = self.manifest(base)
         return {"rewritten": len(small), "kept": len(keep),
                 "new_files": len(new_files), "snapshot_id": snap_id}
 

@@ -373,16 +373,16 @@ def write_wave(spark: SparkSession, table: IceTable, pages: DataFrame,
 
 def check_resume(table: IceTable, partitions: int,
                  opt: ConvertOptions) -> None:
-    """Refuse to resume a run whose snapshot heads the table with
+    """Refuse to resume into a table whose last run committed with
     another ``partitions`` or other options: part ids would name other
     url sets (rows committed twice or never) or the table would mix
-    rows from two option sets.  A compaction's rewrite snapshot carries
-    the record of the run it compacted (IceTable.compact).  A head
-    without the record (a table from before it, a row-level delete or
-    upsert) is not checked."""
-    head = table.latest_snapshot() or {}
-    have = head.get("versions") or {}
-    if "partitions" not in have:
+    rows from two option sets.  The last run is the newest run record
+    in the table's chain (IceTable.manifest), so a row-level delete or
+    upsert at the head does not hide it, and a compaction's rewrite
+    snapshot carries it past history expiry (IceTable.compact).  A
+    table without a run record (one from before it) is not checked."""
+    have = table.manifest().run
+    if not have:
         return
     if (have["partitions"], have.get("options_hash")) != (
             partitions, opt.options_hash()):

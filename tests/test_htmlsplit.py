@@ -237,10 +237,8 @@ def test_html_split_tier_plan_shape(spark):
         out = child.rsplit("[", 1)[1]
         assert not any(c in out for c in ("html", " seg#", "state#")), child
         assert "part_id" not in lines[i] + child, lines[i]
-    # the extraction kernels: plain + 3 per chain (the synth source is
-    # a generator kernel of its own)
-    kernels = [ln for ln in lines
-               if "MapInArrow" in ln and "gen_batches" not in ln]
+    # the extraction kernels: plain + 3 per chain
+    kernels = [ln for ln in lines if "MapInArrow" in ln]
     assert len(kernels) == 7, kernels
     assert not any("part_id" in ln for ln in kernels), kernels
 

@@ -52,6 +52,25 @@ def test_extraction_plan_has_no_shuffle(spark, tmp_path):
     assert "Exchange" not in _plan(out)
 
 
+def test_synth_source_does_not_share_the_kernel_stage(spark):
+    """pages_df returns its pages materialized on the executors, so the
+    extraction kernel over them runs alone in its stage: one MapInArrow,
+    ``extract_batches``.  Chained to the ``gen_batches`` generator, each
+    of the stage's tasks held two Python workers at once."""
+    from webextract.pipeline import extracted_df
+    from webextract.synth import pages_df
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    pages = pages_df(spark, 8, parallelism=2)
+    assert pages.rdd.getNumPartitions() == 2
+    assert "MapInArrow" not in executed(pages), executed(pages)
+    kernels = [ln for ln in executed(extracted_df(pages)).splitlines()
+               if "MapInArrow" in ln]
+    assert len(kernels) == 1 and "extract_batches" in kernels[0], kernels
+
+
 def test_docpages_spread_exchanges_no_payload(spark):
     """The documents→pages gate adapter repartitions for parallelism,
     but the exchange may carry only the tiny doc rows: the html payload
@@ -232,10 +251,8 @@ def test_split_tier_plan_shape(spark):
     child = pdf[agg_i + 1]
     assert "html" not in child.rsplit("[", 1)[1], child
     assert not any("part_id" in ln for ln in pdf[agg_i:agg_i + 2]), pdf
-    # the extraction kernels: plain + 3 per chain (the synth source is
-    # a generator kernel of its own)
-    kernels = [ln for ln in lines
-               if "MapInArrow" in ln and "gen_batches" not in ln]
+    # the extraction kernels: plain + 3 per chain
+    kernels = [ln for ln in lines if "MapInArrow" in ln]
     assert len(kernels) == 7, kernels
     assert not any("part_id" in ln for ln in kernels), kernels
 

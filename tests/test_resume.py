@@ -197,9 +197,9 @@ def test_resume_refusal_holds_after_compaction(spark, tmp_path):
                             waves=2, cpus=2)
             assert _table_state(root) == before
     # the table's own parameters: every part is done, nothing recomputed
-    # (part -2 holds the upsert's rows)
+    # (the upsert's rows, committed as part -2, are not a part of the run)
     s = run_extract(spark, pages, root, partitions=4, waves=2, cpus=2)
-    assert s["skipped_parts"] == [-2, 0, 1, 2, 3] and s["waves"] == []
+    assert s["skipped_parts"] == [0, 1, 2, 3] and s["waves"] == []
     urls = [r.url for r in tbl.read(spark).select("url").collect()]
     assert len(urls) == len(set(urls)) == 199 and first not in urls
 

@@ -422,8 +422,9 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     call-site compatibility and unused.
     A resume with another ``partitions`` or other options than the
     table's last run raises ValueError before anything is written.
-    Returns a summary: ``skipped_parts`` (committed when the run
-    started), ``adopted_parts``, ``write_ms`` (the run's action) and
+    Returns a summary: ``skipped_parts`` (the run's own parts, 0 to
+    ``partitions - 1``, committed when it started; an upsert's part is
+    not one), ``adopted_parts``, ``write_ms`` (the run's action) and
     one entry per snapshot in ``waves`` (the adoption's first, marked
     ``adopted``), each with its counters, ``wall_ms`` (from the end of
     the previous commit, or the run's start, to its own commit: plan,
@@ -434,6 +435,8 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     table = IceTable(table_root)
     run_id = run_id or uuid.uuid4().hex[:12]
     committed = table.committed_parts()
+    # every committed part, not only the run's own: a table committed
+    # with more partitions than this run's is refused too
     if committed:
         check_resume(table, partitions, opt)
     adopted = table.published(committed, {
@@ -441,7 +444,8 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     todo = [p for p in range(partitions)
             if p not in committed and p not in adopted]
     summary = {"run_id": run_id, "partitions": partitions,
-               "skipped_parts": sorted(committed),
+               "skipped_parts": sorted(p for p in committed
+                                       if 0 <= p < partitions),
                "adopted_parts": sorted(adopted), "write_ms": 0,
                "waves": []}
     groups = _wave_groups(todo, waves)

@@ -11,7 +11,11 @@ included) — deliberately different from extracted main content.
 
 Generation is DISTRIBUTED: ``pages_df`` builds the table with
 mapInArrow over ``spark.range`` so a 10^12-row variant would synthesize
-on executors, never the driver.
+on executors, never the driver.  It returns the pages MATERIALIZED on
+the executors, so the Python kernel a consumer runs over them does not
+share a stage (and so two Python workers per task) with the generator.
+A lost checkpoint block fails the job instead of regenerating; that is
+fine for a synthetic source (real runs read ``--input``).
 """
 
 from __future__ import annotations
@@ -250,7 +254,16 @@ PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
 def pages_df(spark, n: int, seed: int = 42, parallelism: int | None = None,
              giant_every: int | None = None, giant_words: int = 60_000):
     """Synthesize the page table on executors; one Arrow batch per input
-    batch of ids. Generator runs where the data lives — scales linearly."""
+    batch of ids. Generator runs where the data lives — scales linearly.
+
+    The pages come back materialized on the executors, in
+    ``parallelism`` partitions (an eager ``localCheckpoint``: one Spark
+    job here, and the plan a consumer sees is a scan of that RDD).  A
+    consumer's kernel therefore runs alone in its stage, with one
+    Python worker per task, instead of chained to ``gen_batches`` with
+    two.  A lazy checkpoint would materialize inside the consumer's
+    first job, in the same stage, and a repartition would shuffle
+    ``html``."""
     import pyarrow as pa
 
     def gen_batches(it):
@@ -268,4 +281,5 @@ def pages_df(spark, n: int, seed: int = 42, parallelism: int | None = None,
             })
 
     rng_df = spark.range(0, n, 1, parallelism or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInArrow(gen_batches, PAGES_SCHEMA)
+    pages = rng_df.mapInArrow(gen_batches, PAGES_SCHEMA)
+    return pages.localCheckpoint(eager=True)

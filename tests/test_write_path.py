@@ -8,7 +8,8 @@ commit lists exactly the files its write produced (also under a table
 root full of glob metacharacters), each part is exactly one file, a
 run's write runs ``min(parts, defaultParallelism)`` tasks, a wave
 commit opens no footer and walks no snapshot chain, a retried attempt
-never adds a file to a part, and a published part is committed only
+never adds a file to a part, a part's file and record are durable
+before the record is published, and a published part is committed only
 while its file exists.
 """
 
@@ -16,7 +17,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -212,6 +215,60 @@ def test_retried_attempt_and_orphans(spark, tmp_path):
         pipeline.commit_stage(spark, tbl, "r", {1: third}, DEFAULT_OPTIONS,
                               0, 4)
     assert tbl.read(spark).count() == rows.num_rows
+
+    # a writer killed between its temp file and the os.replace leaves
+    # the temp file; the GC removes it once it is past the grace window
+    litter = [os.path.join(run_dir, "part-00001.json.dead.tmp"),
+              os.path.join(tbl.meta_dir, "_CURRENT.dead.tmp")]
+    for path in litter:
+        with open(path, "w") as f:
+            f.write("torn")
+    assert tbl.expire_orphans(grace_seconds=3600) == 0
+    assert all(map(os.path.exists, litter))
+    for path in litter:
+        os.utime(path, (time.time() - 7200,) * 2)
+    assert tbl.expire_orphans(grace_seconds=3600) == 0
+    assert not any(map(os.path.exists, litter))
+    assert tbl.read(spark).count() == rows.num_rows
+
+
+def test_publish_makes_file_and_record_durable_first(tmp_path, monkeypatch):
+    """Each part's data file is fsynced, then its record's temp file,
+    before the record's os.replace: a host crash cannot leave a
+    published record naming a torn file."""
+    run_dir = os.path.realpath(tmp_path / "r")
+    os.makedirs(run_dir)
+    events = []
+    fsync, replace = os.fsync, os.replace
+
+    def recording_fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        fsync(fd)
+
+    def recording_replace(src, dst, **kw):
+        events.append(("replace", src, dst))
+        replace(src, dst, **kw)
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    monkeypatch.setattr(os, "replace", recording_replace)
+    batch = pa.RecordBatch.from_pydict({
+        "part_id": pa.array([1, 1, 2], pa.int32()),
+        "url": ["http://a/1", "http://a/2", "http://b/1"]})
+    write = icetable._part_writer(run_dir, run_dir, "r",
+                                  lambda t: {"num_docs": t.num_rows}, {},
+                                  ("url",), None)
+    (out,) = write(iter([batch]))
+    records = dict(zip(out.column("part_id").to_pylist(),
+                       map(json.loads, out.column("record").to_pylist())))
+    assert sorted(records) == [1, 2]
+    want = []
+    for p, rec in sorted(records.items()):
+        final = os.path.join(run_dir, f"part-{p:05d}.json")
+        (tmp,) = [e[1] for e in events if e[0] == "replace" and e[2] == final]
+        want += [("fsync", rec["files"][0]), ("fsync", tmp),
+                 ("replace", tmp, final)]
+        with open(final) as f:
+            assert json.load(f) == rec
+    assert events == want
 
 
 def _crash_after_first_wave(spark, root: str, pages) -> tuple[str, set[int]]:

@@ -40,6 +40,7 @@ same shape a real catalog would slot into:
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import re
@@ -72,8 +73,8 @@ def _part_writer(out_dir: str, table_dir: str, run_id: str, count,
     timestamp column keeps the UTC zone Spark sends, so Spark reads it
     back as TimestampType, not TimestampNTZType), named
     ``part-PPPPP-<attempt>.parquet`` with a name unique to this
-    attempt; once the file is closed the part is published: its record
-    replaces ``part-PPPPP.json`` atomically (tmp + ``os.replace``).
+    attempt; once the file is closed and fsynced the part is published:
+    its record replaces ``part-PPPPP.json`` through ``_durable_write``.
     The record names the file as the table spells it (``table_dir``),
     with its row count and ``stats_cols`` bounds from the closed
     writer's footer, ``count(rows)`` as its counters, and ``stamp``.
@@ -84,15 +85,18 @@ def _part_writer(out_dir: str, table_dir: str, run_id: str, count,
         import pyarrow.parquet as pq
         rows = pa.Table.from_batches(pieces).drop_columns(["part_id"])
         name = f"part-{part_id:05d}-{uuid.uuid4().hex}.parquet"
+        path = os.path.join(out_dir, name)
         # plain encoding and statistics of ``stats_cols`` only: most
         # columns are extracted text, which neither a dictionary nor
         # min/max values of kilobytes shrink or prune
-        writer = pq.ParquetWriter(os.path.join(out_dir, name), rows.schema,
+        writer = pq.ParquetWriter(path, rows.schema,
                                   compression="snappy", use_dictionary=False,
                                   write_statistics=list(stats_cols),
                                   store_schema=False)
         writer.write_table(rows, row_group_size=max(1, rows.num_rows))
         writer.close()
+        with open(path, "rb") as fh:    # durable before its record
+            os.fsync(fh.fileno())
         md = writer.writer.metadata
         f = os.path.join(table_dir, name)
         record = json.dumps({
@@ -102,11 +106,8 @@ def _part_writer(out_dir: str, table_dir: str, run_id: str, count,
             "counters": count(rows), **stamp})
         if before_publish is not None:
             before_publish(part_id)
-        final = os.path.join(out_dir, f"part-{part_id:05d}.json")
-        tmp = os.path.join(out_dir, f".{name}.json.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(record)
-        os.replace(tmp, final)
+        _durable_write(os.path.join(out_dir, f"part-{part_id:05d}.json"),
+                       record)
         return record
 
     def write_batches(batches):
@@ -144,8 +145,11 @@ def _literal(path: str) -> str:
 def _durable_write(path: str, text: str) -> None:
     """Replace ``path`` with ``text`` atomically and durably: a temp
     file, flushed and fsynced, then ``os.replace`` onto ``path`` —
-    readers see the old content or the new, never a partial one."""
-    tmp = path + ".tmp"
+    readers see the old content or the new, never a partial one.  The
+    temp file's name is unique to the call, so two writers of one path
+    never share it; a crash between the two steps leaves it for
+    ``IceTable.expire_orphans``."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
         f.write(text)
         f.flush()
@@ -1328,44 +1332,23 @@ class IceTable:
 
     @contextlib.contextmanager
     def _commit_lock(self):
-        """Advisory O_EXCL lock, held for the ``with`` body, around the
-        _CURRENT read-modify-write:
-        two concurrent writers (multiple streams, stream + batch — an
+        """Exclusive ``flock`` on ``metadata/_COMMIT_LOCK``, held for the
+        ``with`` body, around the _CURRENT read-modify-write: two
+        concurrent writers (multiple streams, stream + batch — an
         explicitly supported shape) would otherwise both read the same
         parent and one snapshot would fall off the chain, making its
-        committed files look like orphans (round-3 review).  Stale
-        locks (crashed writer) are stolen after 60 s.  A real catalog
-        would use its conditional-swap primitive here."""
-        import time as _time
-        lock = os.path.join(self.meta_dir, "_COMMIT_LOCK")
-        deadline = _time.time() + 120
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(_time.time()).encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    age = _time.time() - float(open(lock).read() or 0)
-                except (OSError, ValueError):
-                    age = 0.0
-                if age > 60:
-                    try:
-                        os.remove(lock)   # stale: writer died mid-commit
-                    except OSError:
-                        pass
-                    continue
-                if _time.time() > deadline:
-                    raise TimeoutError(f"commit lock busy: {lock}")
-                _time.sleep(0.05)
-        try:
+        committed files look like orphans (round-3 review).
+
+        Blocks until the lock is free.  The kernel releases it when its
+        holder dies, so a killed writer costs the next commit nothing
+        and a slow live one is never robbed of it.  The file is never
+        deleted; it is opened afresh on every acquisition because a
+        flock belongs to the open file, so two threads sharing one
+        IceTable exclude each other too.  Local filesystem only: a real
+        catalog would use its conditional-swap primitive here."""
+        with open(os.path.join(self.meta_dir, "_COMMIT_LOCK"), "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)
             yield
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def commit(self, run_id: str, partitions: list[dict],
                committed_at: str, versions: dict | None = None,
@@ -1795,9 +1778,23 @@ class IceTable:
 
         A publication record (stage_parts) goes with its files: it is
         removed once one of them is gone or all are committed, so a
-        resume never adopts a part whose file the GC took."""
+        resume never adopts a part whose file the GC took.  The temp
+        file of a ``_durable_write`` whose writer died before its
+        ``os.replace`` goes too, under ``files/`` and ``metadata/``,
+        once older than the grace window.  Returns the number of data
+        files removed."""
         referenced = self._all_referenced()
         horizon = time.time() - grace_seconds
+
+        def remove_old(path: str) -> bool:
+            try:
+                if os.path.getmtime(path) > horizon:
+                    return False        # inside the grace window
+                os.remove(path)
+            except FileNotFoundError:
+                return False            # raced with another GC
+            return True
+
         removed = 0
         for dirpath, _, files in os.walk(self.files_dir):
             # keep-filter matches the run_id as a whole path COMPONENT
@@ -1806,16 +1803,16 @@ class IceTable:
             parts = set(os.path.relpath(dirpath, self.files_dir).split(os.sep))
             if keep_run_ids and parts & keep_run_ids:
                 continue
-            for fn in filter(_is_data_file, files):
+            for fn in files:
                 p = os.path.realpath(os.path.join(dirpath, fn))
-                if p not in referenced:
-                    try:
-                        if os.path.getmtime(p) > horizon:
-                            continue    # inside the grace window
-                        os.remove(p)
-                    except FileNotFoundError:
-                        continue        # raced with another GC
-                    removed += 1
+                if fn.endswith(".tmp"):
+                    remove_old(p)
+                elif _is_data_file(fn) and p not in referenced:
+                    removed += remove_old(p)
+        for dirpath, _, files in os.walk(self.meta_dir):
+            for fn in files:
+                if fn.endswith(".tmp"):
+                    remove_old(os.path.join(dirpath, fn))
         for path, rec in self._records():
             if keep_run_ids and rec["run_id"] in keep_run_ids:
                 continue

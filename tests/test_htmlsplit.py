@@ -1,12 +1,16 @@
-"""Oversized-HTML split tier (r2 item 9): seeded-parser segments must be
+"""Oversized-HTML cut chain (r2 item 9): seeded-parser segments must be
 byte-identical to the one-shot parse for every column — paths, sibling
 indexes, li numbering, boiler flags, spans, all six serializers — with
 cuts forced across every structural feature (target_chars=1 puts a cut
-at EVERY eligible tag)."""
+at EVERY eligible tag).  The job spreads oversized pages whole
+(pipeline.extracted_df); ``cutchain.cut_df`` runs the cut chain
+(split.tier_df) on the rows the job routes."""
 
 from __future__ import annotations
 
 import datetime
+import re
+import uuid
 
 import pytest
 
@@ -17,6 +21,8 @@ from webextract.htmlsplit import _parse_seeded, scan_cuts
 from webextract.options import ConvertOptions
 from webextract.pipeline import extracted_df
 from webextract.synth import gen_page
+
+from cutchain import cut_df
 
 ALL_FORMATS = ConvertOptions(
     to_formats=("md", "text", "doctags", "html", "html_split_page", "json"))
@@ -113,12 +119,13 @@ def _collect(df):
 
 
 def test_html_split_tier_byte_identical(spark):
-    """Whole corpus forced through the html tier (split_bytes=1: a cut
-    at every eligible tag): every column equals the one-shot kernel."""
+    """Whole corpus forced through the html cut chain (split_bytes=1:
+    a cut at every eligible tag): every column equals the one-shot
+    kernel."""
     payloads = NASTY + _synth_pages(8)
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, ALL_FORMATS))
-    got = _collect(extracted_df(pages, ALL_FORMATS, split_bytes=1))
+    got = _collect(cut_df(pages, ALL_FORMATS, 1))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -139,7 +146,7 @@ def test_html_split_tier_admission_and_fallback(spark):
     for opt in (ALL_FORMATS, ALL_FORMATS.with_(max_file_size=30),
                 ALL_FORMATS.with_(from_formats=("pdf",))):
         ref = _collect(extracted_df(pages, opt))
-        got = _collect(extracted_df(pages, opt, split_bytes=1))
+        got = _collect(cut_df(pages, opt, 1))
         assert got == ref, opt
 
 
@@ -160,22 +167,49 @@ def test_html_split_spreads_segments(spark):
 
 
 def test_pdf_tier_still_works_with_html_split_on(spark):
-    """Both tiers at once: oversized mini-PDFs take the page tier,
-    oversized html the cut tier, small docs the narrow path."""
+    """Both cut chains at once: oversized mini-PDFs take the page
+    chain, oversized html the cut-point chain, small docs the narrow
+    path."""
     from webextract import pdfmini
     pdf = pdfmini.write_pdf([[(10, 10, 11, "page one words")],
                              [(10, 10, 11, "page two words")]])
     payloads = [pdf, NASTY[0], b"<p>tiny</p>"]
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, ALL_FORMATS))
-    got = _collect(extracted_df(pages, ALL_FORMATS, split_bytes=20))
+    got = _collect(cut_df(pages, ALL_FORMATS, 20))
     assert got == ref
+
+
+def _collect_jobs(spark, df):
+    """``df.collect()``'s rows and the ids of the Spark jobs it ran,
+    once the status store has seen them end."""
+    sc = spark.sparkContext
+    group = f"collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "the jobs of one collect")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _shuffled_rows(spark, df):
+    """``df.collect()``'s rows and the rows its jobs wrote to shuffles,
+    read from the status store."""
+    rows, jobs = _collect_jobs(spark, df)
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    return rows, sum(store.lastStageAttempt(st).shuffleWriteRecords()
+                     for job in jobs
+                     for st in tracker.getJobInfo(job).stageIds)
 
 
 def test_tier_takes_only_payloads_it_cuts(spark, monkeypatch):
     """The routing bar is 2 * split_bytes, the smallest payload that
-    split.n_segments cuts: one byte under it yields no segment row (the
-    plain kernel extracts it), and at it the split kernel emits at
+    split.n_segments cuts: one byte under it takes the plain branch,
+    whose plan has no shuffle, and at it the payload crosses the
+    spread's shuffle.  tier_df, given the routed row, cuts it into at
     least 2 segments."""
     from webextract import htmlsplit
     segs = spark.sparkContext.accumulator(0)
@@ -194,39 +228,82 @@ def test_tier_takes_only_payloads_it_cuts(spark, monkeypatch):
     body = (b"<html><body><article>" + b"<p>alpha beta gamma delta</p>" * 20
             + b"</article></body></html>")
 
-    def n_segs(size):
+    def pages(size):
         payload = body[:size]
         assert len(payload) == size
-        segs.value = 0
-        (row,) = extracted_df(_pages_df(spark, [payload]), ALL_FORMATS,
-                              split_bytes=split_bytes).collect()
+        # no repartition: the spread's is the only shuffle
+        return payload, spark.createDataFrame(
+            [("doc://0", TS, payload, "", "en")], PAGES_SCHEMA)
+
+    for size, shuffled in ((2 * split_bytes - 1, 0), (2 * split_bytes, 1)):
+        payload, src = pages(size)
+        df = extracted_df(src, ALL_FORMATS, split_bytes=split_bytes)
+        (row,), n = _shuffled_rows(spark, df)
+        assert n == shuffled, size
         assert row.text == extract_document(payload, ALL_FORMATS).text
-        return segs.value
-    assert n_segs(2 * split_bytes - 1) == 0
-    assert n_segs(2 * split_bytes) >= 2
+    payload, src = pages(2 * split_bytes)
+    segs.value = 0
+    (row,) = cut_df(src, ALL_FORMATS, split_bytes).collect()
+    assert row.text == extract_document(payload, ALL_FORMATS).text
+    assert segs.value >= 2
 
 
 def test_html_split_tier_plan_shape(spark):
-    """Scale shape pinned: normal branch no-shuffle; each tier crosses
+    """Scale shape pinned, as the job runs it (AQE's final plan): the
+    plain branch has no exchange; the payloads at the bar cross exactly
+    ONE exchange, hashed by url into ``cores`` partitions, into the
+    same kernel; two kernels, and none takes the write's part key, even
+    from a source that carries one.  AQE does not coalesce the spread:
+    the union's stage runs the source's tasks plus one per core."""
+    from webextract.pipeline import with_part_id
+    from webextract.synth import pages_df
+    src = pages_df(spark, 50, parallelism=4)
+    df = extracted_df(with_part_id(src, 4), split_bytes=1024)
+    dp = spark.sparkContext.defaultParallelism
+    rows, jobs = _collect_jobs(spark, df)
+    assert len(rows) == 50
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple")
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    plain = [ln for ln in lines if ln.lstrip().startswith(":")]
+    assert plain and not any("Exchange" in ln for ln in plain), plain
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    assert len(exchanges) == 1 and exchanges[0] not in plain, final
+    assert re.search(rf"hashpartitioning\(url#\d+, {dp}\), REPARTITION_BY_NUM",
+                     exchanges[0]), exchanges[0]
+    kernels = [ln for ln in lines if "MapInArrow" in ln]
+    assert len(kernels) == 2, kernels
+    assert not any("part_id" in ln for ln in kernels), kernels
+    tracker = spark.sparkContext.statusTracker()
+    job = tracker.getJobInfo(max(jobs))
+    stage = tracker.getStageInfo(max(job.stageIds))
+    assert stage.numTasks == src.rdd.getNumPartitions() + dp
+
+
+def test_html_cut_chain_plan_shape(spark):
+    """The cut chain (split.tier_df) on the rows the job routes
+    (cut_df): the plain branch has no shuffle; each chain crosses
     exactly ONE payload repartition; the raw payload, the decoded
     segment text and state are DROPPED before the merge aggregate's
     exchange (only block structs + the rare fallback payload cross
     it).  No kernel and no merge aggregate takes the write's part key,
     even from a source that carries one."""
+    from webextract.options import DEFAULT_OPTIONS
     from webextract.pipeline import with_part_id
     from webextract.synth import pages_df
     pages = with_part_id(pages_df(spark, 50, parallelism=4), 4)
-    opt = (extracted_df(pages, split_bytes=1024)
+    opt = (cut_df(pages, DEFAULT_OPTIONS, 1024)
            ._jdf.queryExecution().optimizedPlan().toString())
-    # one payload repartition per tier (pdf + html), none elsewhere
+    # one payload repartition per chain (pdf + html), none elsewhere
     assert opt.count("RepartitionByExpression") == 2, opt[:2000]
-    # normal branch (first union child, ':-' prefixed lines before the
+    # plain branch (first union child, ':-' prefixed lines before the
     # first merge) carries no exchange
     first_merge = opt.index("merge_batches")
-    normal = [ln for ln in opt[:first_merge].splitlines()
-              if ln.startswith(":")]
-    assert normal and not any("Repartition" in ln or "Exchange" in ln
-                              for ln in normal), normal
+    plain = [ln for ln in opt[:first_merge].splitlines()
+             if ln.startswith(":")]
+    assert plain and not any("Repartition" in ln or "Exchange" in ln
+                             for ln in plain), plain
     # every merge Aggregate's input excludes the segment text and
     # parser state: the output attributes (last [...]) of its child
     lines = opt.splitlines()
@@ -267,7 +344,7 @@ def test_run_extract_with_html_tier_matches_default(spark, tmp_path):
 def test_exact_duplicate_rows_stay_separate(spark):
     """r3 review finding: two input rows with the SAME (url, warc_ts)
     — an outright duplicate crawl record — must come out as two rows
-    through BOTH fan-out tiers (the rid uniquifier in the merge key),
+    through BOTH cut chains (the rid uniquifier in the merge key),
     exactly like the 1:1 normal path."""
     from webextract import pdfmini
     pdf = pdfmini.write_pdf([[(10, 10, 11, "dup page words")]])
@@ -279,6 +356,6 @@ def test_exact_duplicate_rows_stay_separate(spark):
     ref = sorted((r["url"], r["status"], r["text"]) for r in
                  extracted_df(pages, ALL_FORMATS).collect())
     got = sorted((r["url"], r["status"], r["text"]) for r in
-                 extracted_df(pages, ALL_FORMATS, split_bytes=1).collect())
+                 cut_df(pages, ALL_FORMATS, 1).collect())
     assert len(got) == 4
     assert got == ref

@@ -5,8 +5,9 @@ the same code, so a kernel rewrite would move that oracle with it.
 ``kernel_golden.json`` holds one sha256 per document over (status, fmt,
 error, text, text_md, spans), written once from the kernel as it was and
 never regenerated by these tests.  A change that alters any of those
-columns for any document here fails, whichever path (the one-shot kernel
-or the oversized-document tier) the document takes.
+columns for any document here fails, whichever path (the one-shot kernel,
+the job's spread of oversized documents, or the cut chain) the document
+takes.
 """
 
 from __future__ import annotations
@@ -16,11 +17,13 @@ import json
 import os
 
 from webextract.extract import extract_document
+from webextract.options import DEFAULT_OPTIONS
 from webextract.synth import gen_page
 
 GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                       "kernel_golden.json")
 SEED = 1
+SPLIT_BYTES = 64 << 10
 # (doc id, byte offset): torn payloads — empty, cut mid-tag, cut
 # mid-PDF (id 3 is a mini-PDF), and a cut piece of the id-9 skew bomb
 TRUNCATED = [(1, 0), (1, 100), (1, 1000), (3, 100), (3, 1000),
@@ -65,24 +68,42 @@ def test_kernel_matches_golden():
         assert got == golden[key], key
 
 
+def _digests(rows) -> dict[str, str]:
+    return {r.url: digest(r.status, r.fmt, r.error, r.text, r.text_md,
+                          [(s.start, s.end, s.kind, s.path) for s in r.spans])
+            for r in rows}
+
+
+def _pages(spark):
+    from webextract.docpages import PAGES_SCHEMA
+    return spark.createDataFrame(
+        [(k, None, p, "", "en") for k, p in corpus()], PAGES_SCHEMA)
+
+
 def test_split_tier_job_matches_golden(spark, tmp_path):
     """The job's committed rows match the golden with the bomb and both
-    giant pages cut by the oversized-document tier (split_bytes=64 KiB:
-    a payload of at least 128 KiB is cut)."""
-    from webextract.docpages import PAGES_SCHEMA
+    giant pages spread to tasks of their own (split_bytes=64 KiB: a
+    payload of at least 128 KiB is spread)."""
     from webextract.icetable import IceTable
     from webextract.pipeline import run_extract
-    golden = _golden()
-    docs = corpus()
-    big = [k for k, p in docs if len(p) >= 2 * (64 << 10)]
+    big = [k for k, p in corpus() if len(p) >= 2 * SPLIT_BYTES]
     assert {"synth/9", "giant200/0", "giant200/200"} <= set(big)
-    pages = spark.createDataFrame(
-        [(k, None, p, "", "en") for k, p in docs], PAGES_SCHEMA)
     root = str(tmp_path / "t")
-    run_extract(spark, pages, root, partitions=4, waves=1,
-                split_bytes=64 << 10)
+    run_extract(spark, _pages(spark), root, partitions=4, waves=1,
+                split_bytes=SPLIT_BYTES)
     rows = IceTable(root).read(spark).collect()
-    got = {r.url: digest(r.status, r.fmt, r.error, r.text, r.text_md,
-                         [(s.start, s.end, s.kind, s.path) for s in r.spans])
-           for r in rows}
-    assert len(rows) == len(docs) and got == golden
+    assert len(rows) == len(corpus()) and _digests(rows) == _golden()
+
+
+def test_cut_chain_matches_golden(spark):
+    """The cut chain (split.tier_df) over the rows the job routes at
+    split_bytes=64 KiB matches the golden: the bomb and both giant
+    pages cut into pieces and merged."""
+    from webextract.pipeline import oversized
+    from webextract.split import tier_df
+    routed = _pages(spark).filter(oversized(SPLIT_BYTES))
+    got = _digests(tier_df(routed, DEFAULT_OPTIONS, SPLIT_BYTES).collect())
+    golden = _golden()
+    assert {"synth/9", "giant200/0", "giant200/200"} <= set(got)
+    assert got == {k: golden[k] for k in got}
+    assert set(got) == {k for k, p in corpus() if len(p) >= 2 * SPLIT_BYTES}

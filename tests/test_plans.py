@@ -218,26 +218,56 @@ def test_minhash_plan_is_projection_until_bucket_join(spark):
 
 
 def test_split_tier_plan_shape(spark):
-    """Oversized-doc tier (split.py): the normal branch must stay a
-    no-shuffle scan->kernel map; the mini-PDF page-split branch must
-    carry payload through exactly ONE repartition (url, seg_idx) and
-    must DROP the payload before the merge aggregate's exchange (blocks
-    only).  No kernel and no merge aggregate takes the write's part key,
-    even from a source that carries one.  The HTML chain's shape is
-    pinned in test_htmlsplit."""
+    """Oversized-doc spread (pipeline.extracted_df): the plain branch
+    must stay a no-shuffle scan->kernel map; the payloads at the bar
+    cross exactly ONE repartition, keyed by url into ``cores``
+    partitions, into the same kernel.  No aggregate (no cut chain's
+    merge), two kernels, and none takes the write's part key, even from
+    a source that carries one."""
     from webextract.pipeline import extracted_df, with_part_id
     from webextract.synth import pages_df
     pages = with_part_id(pages_df(spark, 50, parallelism=4), 4)
     opt = (extracted_df(pages, split_bytes=1024)
            ._jdf.queryExecution().optimizedPlan().toString())
     lines = opt.splitlines()
-    # union children: normal (':' lines before the first merge), the
+    # union children: the plain branch (':' lines), the spread ('+-'
+    # and below)
+    plain = [ln for ln in lines if ln.startswith(":")]
+    assert plain and not any("Repartition" in ln or "Exchange" in ln
+                             for ln in plain), plain
+    reparts = [ln for ln in lines if "RepartitionByExpression" in ln]
+    assert len(reparts) == 1 and reparts[0] not in plain, opt
+    assert re.search(rf"\[url#\d+\], {spark.sparkContext.defaultParallelism}$",
+                     reparts[0]), reparts[0]
+    assert "Aggregate" not in opt, opt
+    kernels = [ln for ln in lines if "MapInArrow" in ln]
+    assert len(kernels) == 2, kernels
+    assert not any("part_id" in ln for ln in kernels), kernels
+
+
+def test_cut_chain_plan_shape(spark):
+    """The cut chain (split.tier_df) on the rows the job routes
+    (cutchain.cut_df): the plain branch stays a no-shuffle scan->kernel
+    map; the mini-PDF page-split chain carries the payload through
+    exactly ONE repartition (url, seg_idx) and DROPS it before the
+    merge aggregate's exchange (blocks only).  No kernel and no merge
+    aggregate takes the write's part key, even from a source that
+    carries one.  The HTML chain's shape is pinned in test_htmlsplit."""
+    from webextract.options import DEFAULT_OPTIONS
+    from webextract.pipeline import with_part_id
+    from webextract.synth import pages_df
+    from cutchain import cut_df
+    pages = with_part_id(pages_df(spark, 50, parallelism=4), 4)
+    opt = (cut_df(pages, DEFAULT_OPTIONS, 1024)
+           ._jdf.queryExecution().optimizedPlan().toString())
+    lines = opt.splitlines()
+    # union children: plain (':' lines before the first merge), the
     # PDF chain (':' lines from it on), the HTML chain ('+-' and below)
     first_merge = next(i for i, ln in enumerate(lines)
                        if "merge_batches" in ln)
-    normal = [ln for ln in lines[:first_merge] if ln.startswith(":")]
-    assert normal and not any("Repartition" in ln or "Exchange" in ln
-                              for ln in normal), normal
+    plain = [ln for ln in lines[:first_merge] if ln.startswith(":")]
+    assert plain and not any("Repartition" in ln or "Exchange" in ln
+                             for ln in plain), plain
     pdf = [ln for ln in lines[first_merge:] if ln.startswith(":")]
     assert any("0x255044462D4D494E490A)" in ln and "NOT (substring" not in ln
                for ln in pdf if "Filter" in ln), pdf   # %PDF-MINI magic

@@ -1,8 +1,14 @@
-"""Distributed oversized-doc tier (VERDICT item 7): the split path's
-output must be byte-identical to the unsplit kernel for every column,
-every to_format, and every admission outcome — the reference's
-split_processing precedent (examples/split_processing.py:73-118) where
-page-range fan-out + concatenate must reproduce the one-shot convert.
+"""Oversized documents (VERDICT item 7): the job's spread and the cut
+chain must both be byte-identical to the plain kernel for every
+column, every to_format, and every admission outcome.
+
+``pipeline.extracted_df(split_bytes=...)`` spreads the payloads at the
+bar over one task per core, each parsed whole; the ``run_extract``
+tests here pin it.  ``split.tier_df`` cuts them instead — the
+reference's split_processing precedent
+(examples/split_processing.py:73-118), where page-range fan-out +
+concatenate must reproduce the one-shot convert.  The job no longer
+runs it; ``cutchain.cut_df`` runs it on the rows the job routes.
 """
 
 from __future__ import annotations
@@ -13,6 +19,8 @@ from webextract import pdfmini
 from webextract.docpages import PAGES_SCHEMA
 from webextract.options import ConvertOptions
 from webextract.pipeline import extracted_df
+
+from cutchain import cut_df
 
 ALL_FORMATS = ConvertOptions(
     to_formats=("md", "text", "doctags", "html", "html_split_page", "json"),
@@ -67,7 +75,7 @@ def _collect(df):
 def _assert_identical(spark, payloads, opt, split_bytes=1):
     pages = _pages_df(spark, payloads)
     ref = _collect(extracted_df(pages, opt))
-    got = _collect(extracted_df(pages, opt, split_bytes=split_bytes))
+    got = _collect(cut_df(pages, opt, split_bytes))
     assert set(got) == set(ref)
     for url in ref:
         for k in ref[url]:
@@ -100,9 +108,9 @@ def test_split_path_admission(spark):
 
 
 def test_small_and_html_docs_stay_on_narrow_path(spark):
-    """Routing: only oversized mini-PDFs cross the shuffle; HTML and
+    """Routing: only payloads at the bar cross the shuffle; HTML and
     small PDFs keep the no-shuffle plan (checked by result equality with
-    a split_bytes above every payload: the split branch is empty)."""
+    a split_bytes above every payload: the spread branch is empty)."""
     html = (b"<html><body><article><p>" + b"content words here " * 30
             + b"</p></article></body></html>")
     payloads = _mk_pdfs() + [html]
@@ -114,8 +122,9 @@ def test_small_and_html_docs_stay_on_narrow_path(spark):
 
 
 def test_extracted_df_schema_is_extract_schema(spark):
-    """extracted_df emits EXTRACT_SCHEMA on the plain and the tier plan,
-    whether or not the source carries the write's part key."""
+    """extracted_df emits EXTRACT_SCHEMA on the plain and the spread
+    plan, and so does the cut chain, whether or not the source carries
+    the write's part key."""
     from webextract.pipeline import with_part_id
     from webextract.udfs import EXTRACT_SCHEMA
     pages = _pages_df(spark, _mk_pdfs())
@@ -123,6 +132,7 @@ def test_extracted_df_schema_is_extract_schema(spark):
         for split_bytes in (None, 1):
             out = extracted_df(src, ALL_FORMATS, split_bytes=split_bytes)
             assert out.schema == EXTRACT_SCHEMA, (src.columns, split_bytes)
+        assert cut_df(src, ALL_FORMATS, 1).schema == EXTRACT_SCHEMA
 
 
 def test_split_spreads_segments(spark):
@@ -148,7 +158,7 @@ def test_split_spreads_segments(spark):
 def test_run_extract_with_split_tier_matches_default(spark, tmp_path):
     """Pipeline integration: run_extract(split_bytes=...) commits a
     table byte-identical to the default path, including lineage counts
-    (the tier is an execution strategy, not a semantic change)."""
+    (the spread is an execution strategy, not a semantic change)."""
     from webextract.icetable import IceTable
     from webextract.pipeline import run_extract
     from webextract.synth import pages_df
@@ -206,15 +216,15 @@ def test_corrupt_oversized_pdf_is_failure_row_not_task_failure(spark):
 
 def test_same_url_different_warc_ts_stay_separate(spark):
     """Round-2 review finding: a recrawled url (same url, different
-    warc_ts) is two documents through the split tier, like the 1:1
+    warc_ts) is two documents through the cut chain, like the 1:1
     normal path."""
     import datetime
     docs = _mk_pdfs()
     rows = [("pdf://same", datetime.datetime(2025, 1, 1), docs[0], "", "en"),
             ("pdf://same", datetime.datetime(2025, 6, 1), docs[4], "", "en")]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
-    got = (extracted_df(pages, ALL_FORMATS, split_bytes=1)
-           .select("url", "warc_ts", "text").collect())
+    got = cut_df(pages, ALL_FORMATS, 1).select(
+        "url", "warc_ts", "text").collect()
     assert len(got) == 2
     texts = {r.warc_ts.month: r.text for r in got}
     assert "Title 0" in texts[1] and "p6 r2" in texts[6]
@@ -222,7 +232,7 @@ def test_same_url_different_warc_ts_stay_separate(spark):
 
 def test_truncated_magic_payload_is_failure_row(spark):
     """Second-review finding: a MAGIC-prefixed payload too short for the
-    header must fail as a ROW through the split tier (admission peek
+    header must fail as a ROW through the cut chain (admission peek
     raises inside the guard), identical to the one-shot kernel."""
     _assert_identical(spark, [pdfmini.MAGIC, pdfmini.MAGIC + b"\x00"],
                       ALL_FORMATS)
@@ -254,3 +264,64 @@ def test_split_kernel_flushes_at_byte_budget(monkeypatch):
         got = list(kernel(iter([batch])))
         assert len(ref) == 1 and len(got) > 1, kernel.__name__
         assert [r for b in got for r in b.to_pylist()] == ref[0].to_pylist()
+
+
+def test_every_format_at_the_bar_through_run_extract(spark, tmp_path):
+    """Every admission outcome at the bar takes the job's spread: a
+    giant mini-PDF, HTML page, CSV and markdown page and an
+    unknown-format blob, each of at least ``2 * split_bytes`` bytes,
+    next to an empty and a NULL payload.  Each url is committed once,
+    its row equal to extract_document's byte for byte, and each part's
+    lineage counters are lineage_counters over its expected rows."""
+    import pyarrow as pa
+    from webextract.extract import extract_document
+    from webextract.icetable import IceTable
+    from webextract.pipeline import part_expr, run_extract
+    from webextract.udfs import (EXTRACT_ARROW, extracted_row,
+                                 lineage_counters)
+    split_bytes = 4096
+    payloads = {
+        "giant://pdf": pdfmini.write_pdf(
+            [[(10, 10 + 20 * j, 11, f"page {p} run {j} words here")
+              for j in range(6)] for p in range(40)]),
+        "giant://html": (b"<html><body><article><h1>Giant</h1>"
+                         + b"<p>alpha beta gamma delta epsilon</p>" * 300
+                         + b"</article></body></html>"),
+        "giant://csv": b"name,city,score\n" + b"".join(
+            b"row%d,Paris,%d\n" % (i, i) for i in range(600)),
+        "giant://md": b"# Giant markdown\n\n" + b"".join(
+            b"## Section %d\n\nSome body words for section %d.\n\n" % (i, i)
+            for i in range(200)),
+        "giant://blob": b"\x00\xff\xfejunk" * 1200,
+        "small://empty": b"",
+        "small://null": None,
+    }
+    for url, p in payloads.items():
+        assert url.startswith("small") or len(p) >= 2 * split_bytes, url
+    pages = spark.createDataFrame(
+        [(u, TS, p, "", "en") for u, p in payloads.items()], PAGES_SCHEMA)
+    root = str(tmp_path / "formats")
+    run_extract(spark, pages, root, opt=ALL_FORMATS, partitions=4,
+                waves=2, split_bytes=split_bytes)
+    table = IceTable(root)
+    want = {u: extracted_row(extract_document(p, ALL_FORMATS, u),
+                             {"url": u, "warc_ts": TS, "lang": "en"},
+                             len(p) if p else 0)
+            for u, p in payloads.items()}
+    assert {w["fmt"] for w in want.values()} >= {
+        "pdf", "html", "csv", "md", "unknown"}
+    rows = table.read(spark).withColumn("part_id", part_expr(4)).collect()
+    assert sorted(r.url for r in rows) == sorted(payloads)
+    by_part: dict[int, list] = {}
+    for r in rows:
+        got = r.asDict(recursive=True)
+        by_part.setdefault(got.pop("part_id"), []).append(want[r.url])
+        assert got == want[r.url], r.url
+    counters = {}
+    for c in table.lineage():
+        counters[c["part_id"]] = {k: c[k] for k in c if k not in (
+            "run_id", "part_id", "committed_at", "snapshot_id", "wall_ms")}
+    assert set(counters) == set(range(4))
+    for p, got in counters.items():
+        assert got == lineage_counters(pa.Table.from_pylist(
+            by_part.get(p, []), schema=EXTRACT_ARROW)), p

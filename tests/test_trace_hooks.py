@@ -1,8 +1,10 @@
-"""The benchmark's tracer (perfbench/trace.py) hooks the split tier by
+"""The benchmark's tracer (perfbench/trace.py) hooks the cut chain by
 module attribute: the kernel factories when the plan is built, and the
 per-format helpers inside the Python workers.  These tests pin that
-every hooked name exists and is still reached on the job path, so a
-refactor cannot silently zero a per-layer metric."""
+every hooked name exists and is still reached by ``split.tier_df``, so
+a refactor cannot silently break a hook.  The job itself spreads
+oversized documents whole (pipeline.extracted_df) and reaches only the
+plain kernel's factory."""
 
 from __future__ import annotations
 
@@ -47,7 +49,7 @@ def test_kernel_factories_resolve_and_build_the_plan(spark, monkeypatch):
     pages = spark.createDataFrame(
         [("pdf://0", TS, PDF, "", "en"), ("html://1", TS, HTML, "", "en")],
         PAGES_SCHEMA)
-    pipeline.extracted_df(pages, split_bytes=1)
+    split.tier_df(pages.filter(pipeline.oversized(1)), DEFAULT_OPTIONS, 1)
     assert set(calls) == {a for _, a in SPLIT_FACTORIES}, calls
 
 

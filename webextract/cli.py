@@ -65,9 +65,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--fail-after-wave", type=int, default=None,
                    help="inject a crash after wave K (resume testing)")
     p.add_argument("--split-bytes", type=int, default=None,
-                   help="cut every payload of at least twice this many "
-                        "bytes into pieces of at least this many bytes, "
-                        "parsed across tasks (split.py)")
+                   help="spread every payload of at least TWICE this "
+                        "many bytes (2 x B) over one task per core, by url "
+                        "hash, each parsed whole, instead of leaving it in "
+                        "its scan task; smaller payloads stay on the "
+                        "no-shuffle path")
     # --- conversion option surface (reference form fields, usage.md:14-41);
     # each dest is its ConvertOptions field (options_from_args) ---
     p.add_argument("--to-formats", type=_csv, default=",".join(D.to_formats))

@@ -1,4 +1,4 @@
-"""The HTML pieces of the oversized-document tier (split.py).
+"""The HTML pieces of the oversized-document cut chain (split.py).
 
 Boilerplate scoring is a document-GLOBAL decision, so a giant HTML page
 can only be split where semantics don't change — BETWEEN tag tokens,

@@ -8,9 +8,10 @@ coalescing.  Explicit choices we make (SURVEY.md §4.2):
   url-hash partitioning; the resume anti-filter and per-partition
   lineage key.  The write computes it from ``url``, which the kernels
   pass through unchanged, so extraction carries nothing of the write.
-* extraction is one narrow mapInArrow pass (no shuffle) outside the
-  oversized-document tier (split.py); the only other shuffle is the
-  final write layout.
+* extraction is one narrow mapInArrow pass (no shuffle).  With
+  ``split_bytes``, the payloads at its bar cross one shuffle that
+  spreads them over one task per core, through the same kernel
+  (extracted_df); the only other shuffle is the final write layout.
 * one Spark action per run: every part the run owns is extracted,
   shuffled by part_id and written by a write task that also counts the
   part's lineage counters and PUBLISHES the part (IceTable.stage_parts).
@@ -36,7 +37,6 @@ from .dom import parse_anchors, parse_metadata
 from .icetable import IceTable
 from .options import ConvertOptions, DEFAULT_OPTIONS
 from .session import cores
-from .split import tier_df
 from .udfs import (CHUNK_SCHEMA, EXTRACT_SCHEMA, LINEAGE_COUNTERS,
                    extract_input_cols, lineage_counters, make_chunk_kernel,
                    make_extract_kernel, row_kernel)
@@ -55,33 +55,53 @@ def with_part_id(df: DataFrame, partitions: int = DEFAULT_PARTITIONS) -> DataFra
     return df.withColumn("part_id", part_expr(partitions))
 
 
+def oversized(split_bytes: int):
+    """The routing predicate of ``split_bytes``: a payload of at least
+    ``2 * split_bytes`` bytes.  A NULL payload makes the comparison SQL
+    NULL, which a filter and its negation would both drop; coalesce
+    keeps it on the plain branch, where the kernel emits its skipped
+    verdict."""
+    return F.coalesce(F.length("html") >= F.lit(2 * split_bytes),
+                      F.lit(False))
+
+
 def extracted_df(pages: DataFrame, opt: ConvertOptions = DEFAULT_OPTIONS,
                  split_bytes: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, [text], [lang], ...) -> EXTRACT_SCHEMA.
 
-    A pure narrow map: scan splits feed the Arrow kernel directly — raw
-    HTML is NEVER shuffled (at 100 TB the payload shuffle IS the job
+    A pure narrow map: scan splits feed the Arrow kernel directly, so
+    raw HTML is not shuffled (at 100 TB the payload shuffle IS the job
     cost; measured 1.5-3× wall locally too).  The kernel's byte budget
     (udfs.row_kernel) bounds only its output batches: a skew bomb's
     whole input batch (≤ maxRecordsPerBatch rows) is in worker memory
     first.  Scan-split size is the knob for straggler bound
     (spark.sql.files.maxPartitionBytes).
 
-    ``split_bytes`` spreads a giant document over tasks: a payload of
-    at least ``2 * split_bytes`` bytes takes the fan-out tier
-    (split.tier_df), every other one this kernel."""
+    ``split_bytes`` spreads giant documents over tasks: every payload
+    at the bar (``oversized``) crosses ONE shuffle into ``cores``
+    partitions, hashed by url, instead of pinning the scan task that
+    read it, and the same kernel parses it whole.  Only those payloads
+    are shuffled; several can hash to one task.  The explicit partition
+    count keeps AQE from coalescing the few big rows back into one
+    task.  The spread trades CPU for the longest task: the source is
+    read twice and the big rows cross a shuffle, and in return a giant
+    page no longer shares its scan task with the split's other pages.
+    On a 4-vCPU host, with a 5-50 MB page among about 250 others in
+    its scan split, the longest task fell by 0.4-1.1 s and the job by
+    0.25-0.75 s, for up to 0.9 s more CPU; where the giants' splits
+    hold little else to move, it only costs.  (split.tier_df, which cuts
+    each document and merges its pieces, is kept off this plan: its
+    serial cut scan alone costs 0.45-0.7 of a whole parse.)"""
     src = pages.select(*extract_input_cols(pages.columns))
-    tier = None
-    if split_bytes is not None:
-        # coalesce: a NULL payload makes the predicate SQL NULL, which
-        # both filters would drop; it takes the kernel, which emits its
-        # skipped verdict
-        is_big = F.coalesce(F.length("html") >= F.lit(2 * split_bytes),
-                            F.lit(False))
-        tier = tier_df(src.filter(is_big), opt, split_bytes)
-        src = src.filter(~is_big)
-    out = src.mapInArrow(make_extract_kernel(opt), EXTRACT_SCHEMA)
-    return out if tier is None else out.unionByName(tier)
+    kernel = make_extract_kernel(opt)
+    if split_bytes is None:
+        return src.mapInArrow(kernel, EXTRACT_SCHEMA)
+    is_big = oversized(split_bytes)
+    big = (src.filter(is_big)
+           .repartition(cores(pages.sparkSession), F.col("url"))
+           .mapInArrow(kernel, EXTRACT_SCHEMA))
+    return (src.filter(~is_big).mapInArrow(kernel, EXTRACT_SCHEMA)
+            .unionByName(big))
 
 
 _LINKS_ARROW = pa.schema([
@@ -412,14 +432,13 @@ def run_extract(spark: SparkSession, pages: DataFrame, table_root: str,
     ``fail_after_wave=k`` returns after committing wave k of the parts
     computed, as a crash there would (tests only): the later waves'
     parts stay published.
-    ``split_bytes`` enables the oversized-document fan-out tier
-    (split.py): a payload of at least ``2 * split_bytes`` bytes is
-    page-split (mini-PDF) or cut-point-split (HTML, htmlsplit.py) into
-    pieces of at least about ``split_bytes``, parsed across tasks
-    instead of pinning one; smaller payloads and None keep the pure
-    no-shuffle plan.  A row's part comes from its url at the write
-    (write_wave).  ``cpus`` and ``html_split`` are accepted for
-    call-site compatibility and unused.
+    ``split_bytes`` spreads oversized documents: the payloads of at
+    least ``2 * split_bytes`` bytes are hashed by url over one task per
+    core (extracted_df), where the plain kernel parses each whole,
+    instead of pinning the scan tasks that read them; smaller payloads
+    and None keep the pure no-shuffle plan.  A row's part comes from
+    its url at the write (write_wave).  ``cpus`` and ``html_split`` are
+    accepted for call-site compatibility and unused.
     A resume with another ``partitions`` or other options than the
     table's last run raises ValueError before anything is written.
     Returns a summary: ``skipped_parts`` (the run's own parts, 0 to

@@ -160,10 +160,13 @@ def q_extract_pdf_text(spark, sf_dir):
 
 
 def q_extract_pdf_split(spark, sf_dir):
-    """C11 distributed oversized-doc tier (VERDICT item 7): every PDF
-    forced through split -> page fan-out -> merge (split_bytes=1) must
-    reproduce the one-shot conversion byte-identically — same oracle as
-    extract_pdf_text (reference examples/split_processing.py:73-118)."""
+    """C11 oversized-doc path (VERDICT item 7): every PDF forced through
+    the job's spread (split_bytes=1: each payload of 2+ bytes crosses
+    the url-hashed shuffle to the plain kernel) must reproduce the
+    one-shot conversion byte-identically — same oracle as
+    extract_pdf_text.  The page fan-out + merge of the reference's
+    examples/split_processing.py:73-118 is split.tier_df, off the job
+    path."""
     from .docpages import docs_to_pdf_pages
     pages = docs_to_pdf_pages(_read(spark, sf_dir, "documents"))
     return (_doc_id(extracted_df(pages, split_bytes=1))
@@ -255,11 +258,13 @@ def q_extract_mets_source(spark, sf_dir):
 
 def q_extract_html_split_tier(spark, sf_dir):
     """C11 html flavor (round-2 review item 9): the whole corpus forced
-    through the oversized-HTML cut tier — structural scan, seeded
-    segment parses, global-score merge — with split_bytes=256, a cut
-    about every 256 chars.  Byte-identical to the one-shot kernel, so the
-    oracle is extract_main_text's (the tier is an execution strategy,
-    not a semantic change)."""
+    through the job's oversized-document spread with split_bytes=256
+    (every page of 512+ bytes crosses the url-hashed shuffle to the
+    plain kernel).  Byte-identical to the one-shot kernel, so the
+    oracle is extract_main_text's (the spread is an execution strategy,
+    not a semantic change).  The cut chain — structural scan, seeded
+    segment parses, global-score merge — is split.tier_df, off the job
+    path."""
     pages = docs_to_pages(_read(spark, sf_dir, "documents"))
     out = _doc_id(extracted_df(pages, split_bytes=256))
     return (out.filter(F.col("status") == "success")

@@ -89,8 +89,9 @@ def job_session(spark: SparkSession) -> SparkSession:
 def cores(spark: SparkSession) -> int:
     """The job path's task fan-out, one task per core
     (``defaultParallelism``, ``cpus`` under get_spark): the wave write
-    runs ``min(parts, cores)`` tasks and the split tier repartitions
-    its segments into ``cores`` partitions."""
+    runs ``min(parts, cores)`` tasks, the oversized-document spread
+    repartitions its payloads into ``cores`` partitions, and the cut
+    chain (split.tier_df) its segments."""
     return spark.sparkContext.defaultParallelism
 
 

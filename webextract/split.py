@@ -1,16 +1,22 @@
-"""Distributed oversized-document tier: split -> fan-out -> merge.
+"""The cut chain for oversized documents: split -> fan-out -> merge.
 
 Operator C11's scale path (SURVEY.md §2.3/§4.1; reference precedent
 examples/split_processing.py:73-118 — page-range fan-out followed by
-``DoclingDocument.concatenate``).  The kernels' byte budget (udfs.py)
-bounds only the size of their output batches: a single 1 GB document
-still pins one task end-to-end, and its whole input batch sits in that
-worker's memory; this tier spreads its parse across the cluster.
-``pipeline.extracted_df(split_bytes=...)`` routes every payload of at
-least ``2 * split_bytes`` bytes here (``tier_df``).  The tier is one
-chain, parameterized by format; each kernel is a per-row function run
-by ``udfs.row_kernel``, and the merge emits plain EXTRACT rows (the
-write computes their part key from ``url``):
+``DoclingDocument.concatenate``).  ``tier_df`` cuts each document into
+pieces parsed across tasks and merges them back, byte-identical to the
+one-shot kernel.  The job does not run it: ``pipeline.extracted_df(
+split_bytes=...)`` spreads the payloads at the bar over one task per
+core and parses each whole, because cutting costs more than it saves
+(the serial cut scan alone costs 0.45-0.7 of a whole parse, measured
+in-process, and the chain adds two shuffles and a serial merge).  It
+stays, tested, while the benchmark's tracer (perfbench/trace.py) hooks
+its kernels by name, and as the way to parse one document on many
+cores once the cut scan is much cheaper than a parse.
+
+``tier_df`` unions two chains of the same shape, one for mini-PDFs
+(this module) and one for every other payload (htmlsplit.py), routed
+by the PDF magic prefix.  Each kernel is a per-row function run by
+``udfs.row_kernel``, and the merge emits plain EXTRACT rows:
 
 1. split kernel (narrow 1->N mapInArrow): document-level admission runs
    HERE, once, on the whole payload, through the one-shot path's own
@@ -21,9 +27,8 @@ write computes their part key from ``url``):
    crossing parser state (htmlsplit.py).
 2. ``repartition(url, seg_idx)`` — the ONE payload shuffle: it moves
    only the docs that get cut, those of at least ``2 * split_bytes``
-   bytes (everything smaller stays on the no-shuffle path), and turns
-   a straggler doc into N parallel tasks, one segment partition per
-   core.
+   bytes, and turns a straggler doc into N parallel tasks, one segment
+   partition per core.
 3. segment kernel (narrow): parses each segment into blocks and drops
    its payload, so only block blobs cross the merge shuffle.
 4. merge (groupBy(url, warc_ts, rid) + collect_list, then one batched
@@ -81,8 +86,9 @@ _SEGX_SCHEMA = from_arrow_schema(_SEGX_ARROW)
 def n_segments(payload: bytes, split_bytes: int) -> int:
     """Segments an oversized payload is cut into: each carries at least
     about ``split_bytes`` (a smaller piece only adds per-segment cost
-    after the fan-out), so a payload under twice that is not cut and
-    does not take the tier (pipeline.extracted_df)."""
+    after the fan-out), so a payload under twice that is not cut.  That
+    is also the bar at which the job spreads a payload whole
+    (pipeline.oversized)."""
     return max(1, len(payload) // split_bytes)
 
 
@@ -258,13 +264,13 @@ def make_merge_kernel(opt: ConvertOptions = DEFAULT_OPTIONS):
 
 def tier_df(big: DataFrame, opt: ConvertOptions, split_bytes: int
             ) -> DataFrame:
-    """The tier's EXTRACT rows for ``big``, the source rows that
-    pipeline.extracted_df routes here (at least ``2 * split_bytes``
-    bytes, the smallest payload n_segments cuts).  Mini-PDFs take the
-    page-split chain and all other payloads the cut-point chain
-    (htmlsplit.py), cut into pieces of at least about ``split_bytes``.
-    Both chains end in EXTRACT_SCHEMA, so downstream (waves, IceTable
-    commit, chunkers) is tier-oblivious."""
+    """The cut chain's EXTRACT rows for ``big``, source rows of at least
+    ``2 * split_bytes`` bytes (pipeline.oversized, the smallest payload
+    n_segments cuts).  Mini-PDFs take the page-split chain and all
+    other payloads the cut-point chain (htmlsplit.py), cut into pieces
+    of at least about ``split_bytes``; the two are unioned.  Both end
+    in EXTRACT_SCHEMA, byte-identical to the plain kernel's rows.  Not
+    on the job path: pipeline.extracted_df spreads these rows whole."""
     from . import htmlsplit
     is_pdf = (F.substring(F.col("html").cast("binary"), 1,
                           len(pdfmini.MAGIC)) == F.lit(pdfmini.MAGIC))
